@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{MergeResult, MutableParquetTable}
+import graft.sources.{Manifest, MergeResult, MutableParquetTable}
 import graft.streaming.CdcMergeSink
 
 /** Outcome of one optimistic commit: the version it landed as, how many
@@ -181,21 +181,21 @@ object OptimisticCommit {
               txnMarker: Option[(String, Long)] = None,
               testHookAfterStage: () => Unit = () => ()): Long = {
     val latest = CdcMergeSink.latestSnapshot(tableRoot)
-    val moreKeys = MutableParquetTable.manifestMoreKeys(latest)
+    val head = Manifest.read(latest).getOrElse(Manifest(key))
+    val moreKeys = head.moreKeys
     // a bucketed table's replace re-buckets: the layout is the table's
     // join contract, so INSERT OVERWRITE must not silently drop it
-    val bucketSpec = MutableParquetTable.manifestBuckets(latest)
+    val bucketSpec = head.buckets
     val dir = s"$tableRoot/.tx-${
       java.util.UUID.randomUUID().toString.take(12)}"
     // CHECK constraints and DEFAULT/GENERATED column contracts survive
     // a replace (they are the table's write contract, not a property of
     // its content) and gate/fill the new content
-    var checks = graft.sources.GraftChecks.manifestChecks(latest)
-    val defaults0 = graft.sources.GraftDefaults.manifestDefaults(latest)
-    val generated0 = graft.sources.GraftDefaults.manifestGenerated(latest)
+    var checks = head.checks
+    val defaults0 = head.defaults
+    val generated0 = head.generated
     val batchC = graft.sources.GraftDefaults.applyAndEnforce(batch,
-      defaults0, generated0,
-      MutableParquetTable.manifestSchema(latest), None,
+      defaults0, generated0, head.schema, None,
       s"INSERT OVERWRITE of $tableRoot")
     val emptyBatch = batchC.isEmpty
     if (emptyBatch) {
@@ -343,17 +343,15 @@ object OptimisticCommit {
     lastReplaceDirect = false
     val latest = CdcMergeSink.latestSnapshot(tableRoot)
     MutableParquetTable.requireFeaturesSupported(latest)
-    val moreKeys = {
-      val m = MutableParquetTable.manifestMoreKeys(latest)
-      if (m.nonEmpty) m else moreKeysDeclared
-    }
+    val head = Manifest.read(latest)
+    val moreKeys = head.map(_.moreKeys).filter(_.nonEmpty)
+      .getOrElse(moreKeysDeclared)
     if (insertIntoEmpty) {
       // the append form is valid only while the table is STILL empty —
       // a concurrent insert since analysis means this batch must merge,
       // not replace. Re-checked here; the single no-retry slot attempt
       // below closes the remaining race window.
-      val stillEmpty = MutableParquetTable.isCommitted(latest) &&
-        MutableParquetTable.manifestFileNames(latest).exists(_.isEmpty)
+      val stillEmpty = head.exists(_.files.isEmpty)
       if (!stillEmpty) return false
     }
     val ranges =
@@ -373,7 +371,7 @@ object OptimisticCommit {
     // back via the proof above.
     val context =
       s"${if (insertIntoEmpty) "INSERT INTO (empty)" else "INSERT OVERWRITE"} of $tableRoot"
-    var checks = graft.sources.GraftChecks.manifestChecks(latest)
+    var checks = head.map(_.checks).getOrElse(Map.empty)
     if (checks.nonEmpty)
       graft.sources.GraftChecks.enforce(
         spark.read.schema(schema).parquet(staged: _*), checks, context)
@@ -381,8 +379,8 @@ object OptimisticCommit {
     // storage, so GENERATED drift is validated here (fill-on-omission
     // applies on the DataFrame write surfaces); the contract is carried
     // into the manifest below
-    val defaultsD = graft.sources.GraftDefaults.manifestDefaults(latest)
-    val generatedD = graft.sources.GraftDefaults.manifestGenerated(latest)
+    val defaultsD = head.map(_.defaults).getOrElse(Map.empty)
+    val generatedD = head.map(_.generated).getOrElse(Map.empty)
     if (generatedD.nonEmpty)
       graft.sources.GraftDefaults.applyAndEnforce(
         spark.read.schema(schema).parquet(staged: _*), Map.empty,
@@ -406,9 +404,16 @@ object OptimisticCommit {
     }
     val bytes = staged.map(f => f.split('/').last ->
       java.nio.file.Files.size(java.nio.file.Paths.get(f))).toMap
-    MutableParquetTable.writeManifestFromRanges(stagingDir, key, moreKeys,
-      sorted.map(r => r.file.split('/').last -> r), Some(schema.json),
-      checks, Nil, bytes, defaults = defaultsD, generated = generatedD)
+    Manifest.write(stagingDir, Manifest(key,
+      keyType = Manifest.keyTypeOf(sorted.headOption.map(_.min)),
+      moreKeys = moreKeys,
+      files = sorted.map { r =>
+        val n = r.file.split('/').last
+        Manifest.entry(n, r, bytes.get(n))
+      },
+      schema = Some(schema),
+      committedAtMs = Some(System.currentTimeMillis()),
+      checks = checks, defaults = defaultsD, generated = generatedD))
     var attempts = 0
     var syncedFrom = latest
     testHookAfterStage()
@@ -885,58 +890,34 @@ object OptimisticCommit {
       : Option[Staged] = {
     val newBase = s"$tableRoot/v$newLast"
     def name(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-    val stagedRanges = MutableParquetTable.manifestRanges(st.dir, key)
-      .getOrElse(return None)
-    val newRanges = MutableParquetTable.manifestRanges(newBase, key)
-      .getOrElse(return None)
-    val stagedNames = MutableParquetTable.manifestFileNames(st.dir)
-      .getOrElse(return None)
-    val newNames = MutableParquetTable.manifestFileNames(newBase)
-      .getOrElse(return None)
-    if (stagedNames.size != stagedRanges.size ||
-        newNames.size != newRanges.size) return None // stat-less entries
-    if (Seq(st.dir, newBase).exists(d =>
-        MutableParquetTable.readManifest(d).exists(m =>
-          m.contains("\"dimRanges\"") || m.contains("\"buckets\"") ||
-            m.contains("\"tombstoneFile\""))))
+    val staged = Manifest.read(st.dir).getOrElse(return None)
+    val head = Manifest.read(newBase).getOrElse(return None)
+    if (staged.key != key || head.key != key) return None
+    val stagedRanges = staged.ranges(st.dir).getOrElse(return None)
+    val newRanges = head.ranges(newBase).getOrElse(return None)
+    if (staged.files.size != stagedRanges.size ||
+        head.files.size != newRanges.size) return None // stat-less entries
+    if (Seq(staged, head).exists(m => m.dimRanges.nonEmpty ||
+          m.buckets.isDefined || m.tombstoneRows > 0))
       // dim zone maps / bucket specs / tombstone sidecars: the re-merge
       // recomputes them against the new head correctly
       return None
-    if (MutableParquetTable.manifestMoreKeys(st.dir) !=
-        MutableParquetTable.manifestMoreKeys(newBase)) return None
-    // CHECK constraints: a rebase may only carry them when both chains
-    // agree — a concurrent ADD/DROP CONSTRAINT means this batch was
-    // validated against a stale contract, so re-merge (and re-validate)
-    val checks = graft.sources.GraftChecks.manifestChecks(st.dir)
-    if (checks != graft.sources.GraftChecks.manifestChecks(newBase))
-      return None
-    // DEFAULT/GENERATED column contracts: same rule — a concurrent
-    // contract change means this batch was filled/validated against a
-    // stale contract, so re-merge (which re-applies the new one)
-    val defaults = graft.sources.GraftDefaults.manifestDefaults(st.dir)
-    val generated = graft.sources.GraftDefaults.manifestGenerated(st.dir)
-    if (defaults != graft.sources.GraftDefaults.manifestDefaults(newBase) ||
-        generated != graft.sources.GraftDefaults.manifestGenerated(newBase))
-      return None
-    // dropped-column blocklist: carry only when both chains agree (a
-    // concurrent DROP COLUMN changes what the merged inventory protects)
-    val dropped = MutableParquetTable.manifestDroppedColumns(st.dir)
-    if (dropped != MutableParquetTable.manifestDroppedColumns(newBase))
-      return None
-    // the rename mapping must match too (implied by schema equality for
-    // any reachable history, but cheap to assert) — the rebuilt manifest
-    // re-declares it, so a silent mismatch would misalias columns
-    val renames = MutableParquetTable.manifestRenames(st.dir)
-    if (renames != MutableParquetTable.manifestRenames(newBase))
-      return None
-    // widened-column marker drift: a racing ALTER TYPE already fails the
-    // schema equality above; equal markers just carry through
-    val widened = MutableParquetTable.manifestWidened(st.dir)
-    if (widened != MutableParquetTable.manifestWidened(newBase))
-      return None
-    val schema = MutableParquetTable.manifestSchema(st.dir).map(_.json)
-    if (schema.isEmpty ||
-        schema != MutableParquetTable.manifestSchema(newBase).map(_.json))
+    // the table CONTRACT must agree between both chains, or this batch
+    // was validated against a stale one and must re-merge:
+    //  - composite identity;
+    //  - CHECK constraints (a concurrent ADD/DROP CONSTRAINT);
+    //  - DEFAULT/GENERATED contracts (the batch was filled/validated
+    //    under the old one; a re-merge re-applies the new one);
+    //  - the dropped-column blocklist (a concurrent DROP COLUMN changes
+    //    what the merged inventory protects);
+    //  - the rename mapping (implied by schema equality for any
+    //    reachable history, but the rebuilt manifest re-declares it, so
+    //    a silent mismatch would misalias columns);
+    //  - the widened-column marker and the schema itself.
+    def contract(m: Manifest) = (m.moreKeys, m.checks, m.defaults,
+      m.generated, m.droppedColumns, m.renames, m.widenedColumns,
+      m.schema.map(_.json))
+    if (staged.schema.isEmpty || contract(staged) != contract(head))
       return None
     val myDirty = st.merge.rewrittenFiles.map(name).toSet
     val myClean = st.merge.passthroughFiles.map(name).toSet
@@ -977,15 +958,14 @@ object OptimisticCommit {
           kept.map(r => MutableParquetTable.relativize(st.dir, r.file) -> r) ++
             myNew.map(r => name(r.file) -> r)
       }
-    MutableParquetTable.writeManifestFromRanges(st.dir, key,
-      MutableParquetTable.manifestMoreKeys(st.dir), entries, schema,
-      checks, dropped,
-      // sizes from BOTH chains' manifests (kept files from the new
-      // head, this writer's outputs from its staged manifest) — the
-      // rebase stays a zero-filesystem-call operation
-      MutableParquetTable.manifestBytesByName(newBase) ++
-        MutableParquetTable.manifestBytesByName(st.dir),
-      renames, widened, defaults, generated)
+    // sizes from BOTH chains' manifests (kept files from the new head,
+    // this writer's outputs from its staged manifest) — the rebase stays
+    // a zero-filesystem-call operation
+    val bytes = head.bytesByName ++ staged.bytesByName
+    Manifest.write(st.dir, staged.copy(
+      files = entries.sortBy(_._2.minBytes)(graft.sources.KeyBytes.ordering)
+        .map { case (e, r) => Manifest.entry(e, r, bytes.get(name(e))) },
+      committedAtMs = Some(System.currentTimeMillis())))
     Some(Staged(st.dir, Some(newLast),
       st.merge.copy(
         passthroughFiles = kept.map(_.file),

@@ -206,7 +206,7 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog
     if (checkProps.nonEmpty) {
       val latest = graft.streaming.CdcMergeSink.latestSnapshot(dir)
       val t = graft.GraftTable(SparkSession.active, dir,
-        MutableParquetTable.manifestKey(latest).getOrElse(
+        Manifest.read(latest).map(_.key).getOrElse(
           throw new IllegalStateException(
             s"$latest carries no merge key — not a graft table")))
       // ONE atomic commit + ONE validation scan for the whole statement
@@ -233,7 +233,7 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog
     if (colDrops.nonEmpty) {
       val latest = graft.streaming.CdcMergeSink.latestSnapshot(dir)
       val t = graft.GraftTable(SparkSession.active, dir,
-        MutableParquetTable.manifestKey(latest).getOrElse(
+        Manifest.read(latest).map(_.key).getOrElse(
           throw new IllegalStateException(
             s"$latest carries no merge key — not a graft table")))
       val drops = colDrops.map { case d: TableChange.DeleteColumn =>
@@ -252,7 +252,7 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog
     if (colTypes.nonEmpty) {
       val latest = graft.streaming.CdcMergeSink.latestSnapshot(dir)
       val t = graft.GraftTable(SparkSession.active, dir,
-        MutableParquetTable.manifestKey(latest).getOrElse(
+        Manifest.read(latest).map(_.key).getOrElse(
           throw new IllegalStateException(
             s"$latest carries no merge key — not a graft table")))
       colTypes.foreach { case u: TableChange.UpdateColumnType =>
@@ -271,7 +271,7 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog
     if (colRenames.nonEmpty) {
       val latest = graft.streaming.CdcMergeSink.latestSnapshot(dir)
       val t = graft.GraftTable(SparkSession.active, dir,
-        MutableParquetTable.manifestKey(latest).getOrElse(
+        Manifest.read(latest).map(_.key).getOrElse(
           throw new IllegalStateException(
             s"$latest carries no merge key — not a graft table")))
       colRenames.foreach { case r: TableChange.RenameColumn =>

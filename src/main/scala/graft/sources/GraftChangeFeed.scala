@@ -78,21 +78,20 @@ object GraftChangeFeed {
     * instead of a linear sweep from v0 — on a long-lived table the sweep
     * is O(versions) driver IO per resolution. */
   def versionAtOrAfter(root: String, tsMillis: Long): Option[Long] =
-    versionAtOrAfterWith(root, tsMillis, MutableParquetTable.readManifest)
+    versionAtOrAfterWith(root, tsMillis, Manifest.read)
 
   /** [[versionAtOrAfter]] with an injectable manifest reader — the test
     * seam that lets a spec count manifest reads (≤ ⌈log₂(versions)⌉+1). */
   private[graft] def versionAtOrAfterWith(
       root: String, tsMillis: Long,
-      readManifest: String => Option[String]): Option[Long] = {
+      readManifest: String => Option[Manifest]): Option[Long] = {
     val vs = CdcMergeSink.versions(root).toIndexedSeq
     // pre-`committedAtMs` manifests are older than any manifest carrying
     // the field (the field stamps every commit since it exists), so
     // treating them as -inf preserves the monotone order the search needs
     def timeOf(v: Long): Long =
-      readManifest(s"$root/v$v")
-        .flatMap("\"committedAtMs\":(\\d+)".r.findFirstMatchIn(_))
-        .map(_.group(1).toLong).getOrElse(Long.MinValue)
+      readManifest(s"$root/v$v").flatMap(_.committedAtMs)
+        .getOrElse(Long.MinValue)
     var lo = 0
     var hi = vs.length
     while (lo < hi) {
@@ -148,7 +147,7 @@ object GraftChangeFeed {
         // only for versions whose feed marker is absent — on a long
         // feed-heavy history the sweep costs stats, not manifest reads
         if (!Files.exists(Paths.get(root, "_changes", s"v$v", "_SUCCESS")) &&
-            MutableParquetTable.manifestFeedPending(s"$root/v$v"))
+            Manifest.read(s"$root/v$v").exists(_.feedPending))
           throw new IllegalStateException(
             s"change-data feed of version $v at $root was declared " +
               "(feedPending) but never finished writing — a crashed " +
@@ -251,7 +250,7 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
 
   private def hasFeed(v: Long): Boolean =
     declaredFeed.getOrElseUpdate(v,
-      MutableParquetTable.manifestFeedPending(s"$root/v$v"))
+      Manifest.read(s"$root/v$v").exists(_.feedPending))
 
   /** A committed version is CONSUMABLE when it either declared no feed
     * (plain commit — an empty batch, a gap) or its feed write finished

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StructType}
@@ -39,57 +37,16 @@ object GraftChecks {
         s"CHECK constraint '$name' ($expression) violated by $context; " +
           s"first failing row: $row")
 
-  private val mapRe =
-    "\"checks\":\\{((?:[^{}\"]|\"(?:[^\"\\\\]|\\\\.)*\")*)\\}".r
-  private val pairRe =
-    "\"((?:[^\"\\\\]|\\\\.)*)\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-
   /** The CHECK constraints a committed snapshot declares: name → SQL
     * expression, in declaration order. */
   def manifestChecks(snapshotDir: String): Map[String, String] =
-    MutableParquetTable.readManifest(snapshotDir) match {
-      case None => Map.empty
-      case Some(m) => parseChecks(m)
-    }
+    Manifest.read(snapshotDir).map(_.checks).getOrElse(Map.empty)
 
-  private[sources] def parseChecks(manifest: String): Map[String, String] =
-    mapRe.findFirstMatchIn(manifest) match {
-      case None => Map.empty
-      case Some(body) =>
-        // LinkedHashMap via ListMap: declaration order is reported order
-        scala.collection.immutable.ListMap(
-          pairRe.findAllMatchIn(body.group(1)).map { p =>
-            MutableParquetTable.unjs(p.group(1)) ->
-              MutableParquetTable.unjs(p.group(2))
-          }.toSeq: _*)
-    }
-
-  /** The manifest field for `checks` (with trailing comma), or "" when
-    * there are none. */
-  private[sources] def checksJsonField(checks: Map[String, String]): String =
-    if (checks.isEmpty) ""
-    else checks.map { case (n, e) =>
-      s"${MutableParquetTable.js(n)}:${MutableParquetTable.js(e)}"
-    }.mkString("\"checks\":{", ",", "},")
-
-  /** Re-stamp a committed/staged manifest's `checks` field in place
-    * (idempotent; empty map removes the field). */
+  /** Re-stamp a committed/staged manifest's `checks` in place
+    * (idempotent; an empty map removes the field). */
   private[graft] def annotateChecks(snapshotDir: String,
-                                    checks: Map[String, String]): Unit = {
-    val m = MutableParquetTable.readManifest(snapshotDir).getOrElse(
-      throw new IllegalStateException(
-        s"$snapshotDir has no manifest to stamp checks on"))
-    val stripped = mapRe.replaceFirstIn(m, "").replaceFirst("\\{,", "{")
-      .replaceFirst(",,", ",")
-    val json =
-      if (checks.isEmpty) stripped
-      else stripped.patch(1, checksJsonField(checks), 0)
-    val tmp = Paths.get(snapshotDir, MutableParquetTable.ManifestName + ".tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp,
-      Paths.get(snapshotDir, MutableParquetTable.ManifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+                                    checks: Map[String, String]): Unit =
+    Manifest.update(snapshotDir)(_.copy(checks = checks))
 
   /** Validate a check expression against a table schema: must parse,
     * resolve to a deterministic BOOLEAN over the table's columns (no

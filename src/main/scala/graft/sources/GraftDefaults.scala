@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -40,69 +38,21 @@ import org.apache.spark.sql.types.StructType
   * same write-contract layer as [[GraftChecks]]. */
 object GraftDefaults {
 
-  private def mapRe(field: String) =
-    ("\"" + field + "\":\\{((?:[^{}\"]|\"(?:[^\"\\\\]|\\\\.)*\")*)\\}").r
-  private val pairRe =
-    "\"((?:[^\"\\\\]|\\\\.)*)\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-
-  private def parseField(manifest: String, field: String): Map[String, String] =
-    mapRe(field).findFirstMatchIn(manifest) match {
-      case None => Map.empty
-      case Some(body) =>
-        scala.collection.immutable.ListMap(
-          pairRe.findAllMatchIn(body.group(1)).map { p =>
-            MutableParquetTable.unjs(p.group(1)) ->
-              MutableParquetTable.unjs(p.group(2))
-          }.toSeq: _*)
-    }
-
-  private def readField(snapshotDir: String,
-                        field: String): Map[String, String] =
-    MutableParquetTable.readManifest(snapshotDir) match {
-      case None => Map.empty
-      case Some(m) => parseField(m, field)
-    }
-
   /** column → DEFAULT expression of a committed snapshot. */
   def manifestDefaults(snapshotDir: String): Map[String, String] =
-    readField(snapshotDir, "defaults")
+    Manifest.read(snapshotDir).map(_.defaults).getOrElse(Map.empty)
 
   /** column → GENERATED ALWAYS AS expression of a committed snapshot. */
   def manifestGenerated(snapshotDir: String): Map[String, String] =
-    readField(snapshotDir, "generated")
+    Manifest.read(snapshotDir).map(_.generated).getOrElse(Map.empty)
 
-  private def jsonField(field: String, m: Map[String, String]): String =
-    if (m.isEmpty) ""
-    else m.map { case (n, e) =>
-      s"${MutableParquetTable.js(n)}:${MutableParquetTable.js(e)}"
-    }.mkString("\"" + field + "\":{", ",", "},")
-
-  /** Manifest fields (trailing comma each) for both contracts, or "". */
-  private[graft] def defaultsJsonFields(defaults: Map[String, String],
-                                        generated: Map[String, String]): String =
-    jsonField("defaults", defaults) + jsonField("generated", generated)
-
-  /** Re-stamp a committed/staged manifest's defaults/generated fields in
+  /** Re-stamp a committed/staged manifest's defaults/generated maps in
     * place (idempotent; empty maps remove the fields). */
   private[graft] def annotate(snapshotDir: String,
                               defaults: Map[String, String],
-                              generated: Map[String, String]): Unit = {
-    val m = MutableParquetTable.readManifest(snapshotDir).getOrElse(
-      throw new IllegalStateException(
-        s"$snapshotDir has no manifest to stamp column contracts on"))
-    val stripped = Seq("defaults", "generated").foldLeft(m) { (acc, f) =>
-      mapRe(f).replaceFirstIn(acc, "").replaceFirst("\\{,", "{")
-        .replaceFirst(",,", ",")
-    }
-    val json =
-      if (defaults.isEmpty && generated.isEmpty) stripped
-      else stripped.patch(1, defaultsJsonFields(defaults, generated), 0)
-    val tmp = Paths.get(snapshotDir, MutableParquetTable.ManifestName + ".tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp,
-      Paths.get(snapshotDir, MutableParquetTable.ManifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+                              generated: Map[String, String]): Unit =
+    Manifest.update(snapshotDir)(
+      _.copy(defaults = defaults, generated = generated))
 
   /** Validate a DEFAULT expression: parses, deterministic, and
     * CONSTANT — no column references (a default fills omitted input, so

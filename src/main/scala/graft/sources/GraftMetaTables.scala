@@ -51,23 +51,21 @@ object GraftMetaTables {
     StructField("max_key", StringType),
     StructField("size_bytes", LongType)))
 
-  private def manifestLong(m: String, field: String): Any =
-    s""""$field":(\\d+)""".r.findFirstMatchIn(m)
-      .map(_.group(1).toLong).orNull
+  private def boxed(v: Option[Long]): java.lang.Long =
+    v.map(java.lang.Long.valueOf).orNull
 
   def historyRows(root: String): Seq[Array[Any]] =
     CdcMergeSink.versions(root).map { v =>
-      val dir = s"$root/v$v"
-      val m = MutableParquetTable.readManifest(dir).getOrElse("")
-      val txn = MutableParquetTable.manifestTxn(dir)
+      val m = Manifest.read(s"$root/v$v")
+      val txn = m.flatMap(_.txn)
       Array[Any](v,
-        manifestLong(m, "committedAtMs"),
-        manifestLong(m, "fileCount"),
-        manifestLong(m, "totalRows"),
+        boxed(m.flatMap(_.committedAtMs)),
+        boxed(m.map(_.files.size.toLong)),
+        boxed(m.map(_.totalRows)),
         txn.map(t => UTF8String.fromString(t._1)).orNull,
-        txn.map(t => java.lang.Long.valueOf(t._2)).orNull,
-        MutableParquetTable.manifestFeedPending(dir),
-        MutableParquetTable.manifestTombstoneRows(dir))
+        boxed(txn.map(_._2)),
+        m.exists(_.feedPending),
+        m.map(_.tombstoneRows).getOrElse(0L))
     }
 
   /** One-row table summary (`SELECT * FROM cat.ns.t.detail` — the
@@ -89,35 +87,31 @@ object GraftMetaTables {
   def detailRows(root: String): Seq[Array[Any]] = {
     val versions = CdcMergeSink.versions(root)
     val latest = CdcMergeSink.latestSnapshot(root)
-    val m = MutableParquetTable.readManifest(latest).getOrElse("")
-    val key = MutableParquetTable.pruneManifestFiles(latest, None, None)
-      .map(_._1)
-    val moreKeys = MutableParquetTable.manifestMoreKeys(latest)
-    val sizeBytes = MutableParquetTable.manifestFileNames(latest)
-      .map(_.map { e =>
-        val p = java.nio.file.Paths.get(
-          MutableParquetTable.resolvePath(latest, e))
-        if (java.nio.file.Files.exists(p)) java.nio.file.Files.size(p) else 0L
-      }.sum).map(java.lang.Long.valueOf).orNull
+    val m = Manifest.read(latest)
+    // recorded sizes, one stat per entry that predates size recording
+    val sizeBytes = m.map { m =>
+      val recorded = m.bytesByName
+      m.fileNames.map(e =>
+        MutableParquetTable.recordedOrStatSize(latest, e, recorded)).sum
+    }
     Seq(Array[Any](
       UTF8String.fromString(root),
-      key.map(UTF8String.fromString).orNull,
-      if (moreKeys.isEmpty) null
-      else UTF8String.fromString(moreKeys.mkString(",")),
-      MutableParquetTable.manifestBuckets(latest)
-        .map(java.lang.Integer.valueOf).orNull,
+      m.map(x => UTF8String.fromString(x.key)).orNull,
+      m.map(_.moreKeys).filter(_.nonEmpty)
+        .map(k => UTF8String.fromString(k.mkString(","))).orNull,
+      m.flatMap(_.buckets).map(java.lang.Integer.valueOf).orNull,
       java.lang.Long.valueOf(versions.size.toLong + 1L), // + base
       versions.lastOption.map(java.lang.Long.valueOf).orNull,
-      manifestLong(m, "fileCount"),
-      manifestLong(m, "totalRows"),
-      MutableParquetTable.manifestTombstoneRows(latest),
-      sizeBytes,
-      manifestLong(m, "committedAtMs")))
+      boxed(m.map(_.files.size.toLong)),
+      boxed(m.map(_.totalRows)),
+      m.map(_.tombstoneRows).getOrElse(0L),
+      boxed(sizeBytes),
+      boxed(m.flatMap(_.committedAtMs))))
   }
 
   def filesRows(root: String): Seq[Array[Any]] = {
     val latest = CdcMergeSink.latestSnapshot(root)
-    MutableParquetTable.manifestRangesAnyKey(latest).getOrElse(Nil).map { r =>
+    Manifest.read(latest).flatMap(_.ranges(latest)).getOrElse(Nil).map { r =>
       val p = java.nio.file.Paths.get(r.file)
       Array[Any](UTF8String.fromString(r.file), r.rowCount,
         UTF8String.fromString(String.valueOf(r.min)),

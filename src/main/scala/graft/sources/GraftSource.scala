@@ -159,16 +159,20 @@ final class GraftBatchTable(spark: SparkSession, val snapshotDir: String,
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.TruncatableTable {
 
+  /** The snapshot's manifest, read once per relation (None for a bare
+    * `base` snapshot — writeSorted output has no manifest). */
+  private[sources] val manifest: Option[Manifest] = Manifest.read(snapshotDir)
+
   /** Deletion-tombstone count this snapshot declares (0 = none). */
-  private[graft] lazy val tombstoneRows: Long =
-    MutableParquetTable.manifestTombstoneRows(snapshotDir)
+  private[graft] val tombstoneRows: Long =
+    manifest.map(_.tombstoneRows).getOrElse(0L)
 
   /** Logical→physical column renames this snapshot declares (empty
     * usually). The advertised schema is LOGICAL; the parquet delegate
     * reads files under the physical names ([[GraftParquetScan.toBatch]]'s
     * positional alias). */
-  private[graft] lazy val renames: Map[String, String] =
-    MutableParquetTable.manifestRenames(snapshotDir)
+  private[graft] val renames: Map[String, String] =
+    manifest.map(_.renames).getOrElse(Map.empty)
 
   /** This table with the tombstone anti-join marked as applied — what
     * [[graft.plans.GraftTombstoneRule]] substitutes so its rewrite
@@ -178,10 +182,10 @@ final class GraftBatchTable(spark: SparkSession, val snapshotDir: String,
       tombstonesApplied = true)
 
   /** Manifest file list when committed; directory listing for a bare
-    * `base` snapshot (writeSorted output has no manifest). */
+    * `base` snapshot. */
   private[sources] val allFiles: Seq[String] =
-    MutableParquetTable.manifestFileNames(snapshotDir)
-      .map(_.map(n => MutableParquetTable.resolvePath(snapshotDir, n)))
+    manifest.map(_.fileNames.map(n =>
+        MutableParquetTable.resolvePath(snapshotDir, n)))
       .getOrElse {
         val s = java.nio.file.Files.list(java.nio.file.Paths.get(snapshotDir))
         try s.iterator().asScala.map(_.toString)
@@ -191,38 +195,37 @@ final class GraftBatchTable(spark: SparkSession, val snapshotDir: String,
 
   // a committed-EMPTY snapshot (CREATE TABLE before the first insert)
   // carries its schema in the manifest and legitimately lists no files
-  require(allFiles.nonEmpty ||
-      MutableParquetTable.manifestSchema(snapshotDir).isDefined,
+  require(allFiles.nonEmpty || manifest.exists(_.schema.isDefined),
     s"$snapshotDir holds no parquet files")
 
   /** The table's merge key, from the manifest (None for manifest-less
     * bare snapshots). Public: the SQL DML rule keys its CoW commit on it. */
-  val keyName: Option[String] =
-    MutableParquetTable.pruneManifestFiles(snapshotDir, None, None).map(_._1)
+  val keyName: Option[String] = manifest.map(_.key)
 
   /** Secondary key columns of a composite-identity table (empty for
     * single-key tables). */
-  val moreKeyNames: Seq[String] =
-    MutableParquetTable.manifestMoreKeys(snapshotDir)
+  val moreKeyNames: Seq[String] = manifest.map(_.moreKeys).getOrElse(Nil)
 
   /** Non-key zone maps ([[MutableParquetTable.attachDimRanges]]): extra
     * columns whose per-file bounds the manifest carries — static and
     * runtime filters on them prune files exactly like the key does. */
   private[sources] lazy val dimRanges
       : Map[String, Seq[MutableParquetTable.DimRange]] =
-    MutableParquetTable.manifestDimRanges(snapshotDir)
+    manifest.map(_.dims(snapshotDir)).getOrElse(Map.empty)
 
   /** Bucket count of a hash-bucketed layout ([[GraftBucket]]) — drives
     * the scan's reported KeyGroupedPartitioning (storage-partitioned
     * joins). */
-  private[sources] lazy val bucketSpec: Option[Int] =
-    MutableParquetTable.manifestBuckets(snapshotDir)
+  private[sources] val bucketSpec: Option[Int] = manifest.flatMap(_.buckets)
 
   /** Per-file row counts from the manifest's ranged entries (resolved
     * paths) — the scan's planner-statistics source. */
   private[sources] lazy val fileRowCounts: Map[String, Long] =
-    keyName.flatMap(k => MutableParquetTable.manifestRanges(snapshotDir, k))
-      .getOrElse(Nil).map(r => r.file -> r.rowCount).toMap
+    keyRanges.getOrElse(Nil).map(r => r.file -> r.rowCount).toMap
+
+  /** The manifest's typed key zone map (resolved files), when ranged. */
+  private[sources] lazy val keyRanges: Option[Seq[ParquetStats.FileKeyRange]] =
+    manifest.flatMap(_.ranges(snapshotDir))
 
   override def name(): String = s"graft:$snapshotDir"
 
@@ -248,7 +251,7 @@ final class GraftBatchTable(spark: SparkSession, val snapshotDir: String,
     * itself); single-file footer probe otherwise — never a probe of the
     * whole file list. */
   private val tableSchema: StructType =
-    MutableParquetTable.manifestSchema(snapshotDir)
+    manifest.flatMap(_.schema)
       .getOrElse(spark.read.parquet(allFiles.head).schema)
 
   override val schema: StructType =
@@ -381,11 +384,9 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftBatchTable)
     // and the zone-map bounds may be tombstoned keys — decline, the
     // scan + anti-join computes the logical answer
     if (table.tombstoneRows > 0) return None
-    lazy val count = MutableParquetTable.manifestExactRowCount(table.snapshotDir)
-    lazy val listed = MutableParquetTable.manifestFileNames(table.snapshotDir)
-    lazy val ranges = table.keyName.flatMap(k =>
-      MutableParquetTable.manifestRanges(table.snapshotDir, k)
-        .filter(rs => rs.nonEmpty && listed.exists(_.size == rs.size)))
+    lazy val count = table.manifest.flatMap(_.exactRowCount)
+    lazy val ranges = table.keyRanges.filter(rs =>
+      rs.nonEmpty && table.allFiles.size == rs.size)
     def keyField: Option[StructField] =
       table.keyName.map(k => table.schema(k))
     def keyRef(e: org.apache.spark.sql.connector.expressions.Expression): Boolean =
@@ -467,10 +468,9 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftBatchTable)
   private def prunableRanges: Option[Seq[ParquetStats.FileKeyRange]] = {
     if (filters.nonEmpty || table.tombstoneRows > 0) return None
     for {
-      names <- MutableParquetTable.manifestFileNames(table.snapshotDir)
-      key <- table.keyName
-      ranges <- MutableParquetTable.manifestRanges(table.snapshotDir, key)
-        if ranges.size == names.size && names.nonEmpty
+      m <- table.manifest
+      ranges <- table.keyRanges
+        if ranges.size == m.files.size && m.files.nonEmpty
     } yield ranges
   }
 
@@ -550,7 +550,8 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftBatchTable)
       val envPruned = table.keyName.flatMap { k =>
         val (lo, hi) = GraftScanBuilder.keyBounds(k, filters)
         if (lo.isEmpty && hi.isEmpty) None
-        else MutableParquetTable.pruneManifestFiles(table.snapshotDir, lo, hi).map(_._2)
+        else table.manifest.map(m =>
+          MutableParquetTable.pruneFiles(m, table.snapshotDir, lo, hi)._2)
       }.getOrElse(table.allFiles)
       // exact POINT-SET prune for a static `IN` on the key: the envelope
       // above collapses a scattered IN set to [min, max] — which spans
@@ -694,7 +695,7 @@ final class GraftParquetScan(spark: SparkSession,
     // manifest-recorded sizes first (zero filesystem calls — at scale a
     // per-file stat sweep per planning is the object-store anti-pattern);
     // pre-recording entries fall back to one stat each
-    val recorded = MutableParquetTable.manifestBytesByName(table.snapshotDir)
+    val recorded = table.manifest.map(_.bytesByName).getOrElse(Map.empty)
     val bytes = plannedFiles.iterator.map { f =>
       recorded.get(f.split('/').last).getOrElse {
         val p = java.nio.file.Paths.get(f)
@@ -762,7 +763,7 @@ final class GraftParquetScan(spark: SparkSession,
       if (rows.isPresent && plannedFiles.nonEmpty) {
         for {
           key <- table.keyName if required.fieldNames.contains(key)
-          all <- MutableParquetTable.manifestRanges(table.snapshotDir, key)
+          all <- table.keyRanges
         } {
           val planned = plannedFiles.toSet
           val ranges = all.filter(r => planned(r.file))
@@ -797,20 +798,21 @@ final class GraftParquetScan(spark: SparkSession,
       // LOGICAL names, matching the relation's attributes.
       if (plannedFiles.nonEmpty) {
         val planned = plannedFiles.toSet
-        MutableParquetTable.manifestDimEntriesRaw(table.snapshotDir)
-          .groupBy(_._2).foreach { case (dcol, es) =>
+        table.manifest.map(_.dimRanges).getOrElse(Nil)
+          .groupBy(_.column).foreach { case (dcol, es) =>
             val isStatColumn = required.fieldNames.contains(dcol) &&
               !table.keyName.contains(dcol) &&
               table.schema.fieldNames.contains(dcol)
             if (isStatColumn) {
-              val mine = es.filter(e => planned(e._1))
-              if (mine.map(_._1).toSet == planned &&
-                  mine.forall(_._3 == "long")) {
+              val mine = es.filter(e => planned(
+                MutableParquetTable.resolvePath(table.snapshotDir, e.file)))
+              if (mine.size == planned.size &&
+                  mine.forall(_.dtype == "long")) {
                 val dt = table.schema(dcol).dataType
                 val lo = internalOf(
-                  java.lang.Long.valueOf(mine.map(_._4.toLong).min), dt)
+                  java.lang.Long.valueOf(mine.map(_.min.toLong).min), dt)
                 val hi = internalOf(
-                  java.lang.Long.valueOf(mine.map(_._5.toLong).max), dt)
+                  java.lang.Long.valueOf(mine.map(_.max.toLong).max), dt)
                 if (lo != null && hi != null)
                   put(dcol, None, None, Some((lo, hi)))
               }

@@ -129,7 +129,7 @@ final class GraftStateStream(spark: SparkSession, root: String,
     startingVersion.map(_ - 1).getOrElse(math.max(snapshotVersion, -1L))
 
   private def hasFeed(v: Long): Boolean =
-    MutableParquetTable.manifestFeedPending(s"$root/v$v")
+    Manifest.read(s"$root/v$v").exists(_.feedPending)
 
   private def feedComplete(v: Long): Boolean =
     Files.exists(Paths.get(root, "_changes", s"v$v", "_SUCCESS"))

@@ -196,24 +196,17 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
       .map(_.toString).toList.sorted
     finally s.close()
     require(files.nonEmpty, s"nothing to commit in $outDir")
-    val dropped =
-      if (physicalRewrite) Nil
-      else MutableParquetTable.manifestDroppedColumns(dir)
+    val src = Manifest.read(dir)
     // a physical rewrite's outputs were written from LOGICAL frames, so
     // the rename mapping is materialized into the files and clears;
     // spliced bytes keep their physical names, so the mapping carries
-    val renames =
-      if (physicalRewrite) Map.empty[String, String]
-      else MutableParquetTable.manifestRenames(dir)
-    val widened =
-      if (physicalRewrite) Nil
-      else MutableParquetTable.manifestWidened(dir)
-    writeManifest(outDir, Nil, files,
-      schema orElse MutableParquetTable.manifestSchema(dir),
-      droppedOverride = Some(dropped),
-      renamesOverride = Some(renames),
+    def carried[A](f: Manifest => A, cleared: A): Option[A] =
+      Some(if (physicalRewrite) cleared else src.map(f).getOrElse(cleared))
+    writeManifest(outDir, Nil, files, schema orElse src.flatMap(_.schema),
+      droppedOverride = carried(_.droppedColumns, Nil),
+      renamesOverride = carried(_.renames, Map.empty[String, String]),
       bucketsOverride = bucketsOverride,
-      widenedOverride = Some(widened))
+      widenedOverride = carried(_.widenedColumns, Nil))
   }
 
   /** Route update keys to files: a key is owned by the last file (in key
@@ -316,18 +309,18 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
     // batch's upserted rows are validated (deletes can't violate, and
     // the table already satisfies its checks by induction) — one
     // batch-sized job, never a table scan
+    val src = Manifest.read(dir)
     val batch = GraftDefaults.applyAndEnforce(batchK,
-      GraftDefaults.manifestDefaults(dir),
-      GraftDefaults.manifestGenerated(dir),
-      MutableParquetTable.manifestSchema(dir), Some(opCol),
-      s"merge into $dir")
-    val declaredChecks = GraftChecks.manifestChecks(dir)
+      src.map(_.defaults).getOrElse(Map.empty),
+      src.map(_.generated).getOrElse(Map.empty),
+      src.flatMap(_.schema), Some(opCol), s"merge into $dir")
+    val declaredChecks = src.map(_.checks).getOrElse(Map.empty)
     if (declaredChecks.nonEmpty)
       GraftChecks.enforce(batch.where(col(opCol) =!= lit("delete")),
         declaredChecks, s"merge into $dir")
     // HASH-BUCKETED layout: routing is by bucket id, not key ranges —
     // the range/overlap machinery below assumes key-clustered files
-    MutableParquetTable.manifestBuckets(dir).foreach { n =>
+    src.flatMap(_.buckets).foreach { n =>
       return mergeBucketed(n, batch, opCol, snapshotDir)
     }
     val outDir = snapshotDir.getOrElse(s"$dir-v${System.currentTimeMillis()}")
@@ -644,28 +637,25 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
     * maintenance is per-bucket compaction. */
   def compactRange(lo: Any, hi: Any, targetBytes: Long,
                    outDir: String): Int = {
-    require(MutableParquetTable.manifestBuckets(dir).isEmpty,
+    val src = Manifest.get(dir, "only committed snapshots compact by range")
+    require(src.buckets.isEmpty,
       "range compaction needs a key-clustered layout — a bucketed " +
         "table's scoped maintenance is per-bucket (CALL system.compact)")
-    require(MutableParquetTable.manifestTombstoneRows(dir) == 0,
+    require(src.tombstoneRows == 0,
       "range compaction on a tombstoned snapshot would splice " +
         "logically-deleted rows and drop the sidecar — run " +
         "materializeTombstones() first")
     val all = MutableParquetTable.tableFiles(dir)
-    val (_, sel) = MutableParquetTable.pruneManifestFiles(
-      dir, Some(lo), Some(hi)).getOrElse(throw new IllegalStateException(
-        s"$dir has no manifest — only committed snapshots compact by range"))
+    val (_, sel) = MutableParquetTable.pruneFiles(src, dir, Some(lo), Some(hi))
     val selSet = sel.map(fileName).toSet
     val (picked, clean) = all.partition(f => selSet(fileName(f)))
     if (picked.isEmpty) return 0
     Files.createDirectories(Paths.get(outDir))
     val pt = passThroughClean(clean, outDir)
-    val schema = MutableParquetTable.manifestSchema(dir)
-    val dropped = MutableParquetTable.manifestDroppedColumns(dir)
-    val widened = MutableParquetTable.manifestWidened(dir)
-    val renames = MutableParquetTable.manifestRenames(dir)
+    val schema = src.schema
+    val renames = src.renames
     val newFiles: Seq[String] =
-      if (dropped.isEmpty && widened.isEmpty)
+      if (src.droppedColumns.isEmpty && src.widenedColumns.isEmpty)
         // zero-decode byte splice of just the selected files; `rc` prefix
         // keeps spliced names disjoint from passthrough-linked originals
         CompactionUtil.compactFilesBySize(spark, dir, outDir, picked,
@@ -675,7 +665,7 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
         // selected files' stale dropped bytes / narrow physicals are
         // shed; files outside the range still carry theirs, so the
         // markers persist via writeManifest's survivors rule
-        val recorded = MutableParquetTable.manifestBytesByName(dir)
+        val recorded = src.bytesByName
         val bytes = picked.map(f =>
           MutableParquetTable.recordedOrStatSize(dir, f, recorded)).sum
         val n = math.max(1L, math.min(4096L,
@@ -741,15 +731,16 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
       s"batch lacks table columns ${missingCols.mkString(", ")} — " +
         "upserts replace whole rows; project the missing columns " +
         "explicitly (e.g. as nulls) if that is intended")
+    val src = Manifest.read(dir)
     // bucketed layouts rewrite whole buckets — row-group splicing would
     // break the file-bucket invariant; the file-level merge branches to
     // the bucketed path itself
-    if (MutableParquetTable.manifestBuckets(dir).isDefined)
+    if (src.exists(_.buckets.isDefined))
       return merge(batch, opCol, snapshotDir)
     // deletion tombstones: raw row-group splices copy tombstoned rows
     // byte-for-byte and this path writes its own manifests per file —
     // the file-level merge subtracts/carries the sidecar correctly
-    if (MutableParquetTable.manifestTombstoneRows(dir) > 0)
+    if (src.exists(_.tombstoneRows > 0))
       return merge(batch, opCol, snapshotDir)
     // renamed columns: per-file splice merges would have to map the
     // batch's logical names onto each file's physical schema inside the
@@ -760,7 +751,7 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
     // a per-file splice would write the wide batch rows through the
     // file's narrow source schema (or mix physical shapes) — fall back
     // until a rewrite clears the marker
-    if (MutableParquetTable.manifestWidened(dir).nonEmpty)
+    if (src.exists(_.widenedColumns.nonEmpty))
       return merge(batch, opCol, snapshotDir)
     val ranges = sortedRanges()
     // an empty (or stat-less) table has nothing to splice — the
@@ -779,7 +770,7 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
         }) return merge(batch, opCol, snapshotDir)
     // CHECK constraints: validate the batch's upserts before any splice
     // stages (the file-level merge fallbacks above enforce in merge())
-    val fgChecks = GraftChecks.manifestChecks(dir)
+    val fgChecks = src.map(_.checks).getOrElse(Map.empty)
     if (fgChecks.nonEmpty)
       GraftChecks.enforce(batch.where(col(opCol) =!= lit("delete")),
         fgChecks, s"row-group merge into $dir")
@@ -893,9 +884,9 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
     if (cls.keep.isEmpty && cls.rewrite.isEmpty) {
       // the predicate provably matches the whole table: empty snapshot,
       // schema kept — structurally a truncate
+      val src = Manifest.read(dir)
       MutableParquetTable.commitEmpty(outDir, key, tableSchema, moreKeys,
-        MutableParquetTable.manifestBuckets(dir),
-        GraftChecks.manifestChecks(dir))
+        src.flatMap(_.buckets), src.map(_.checks).getOrElse(Map.empty))
       phase("manifest")
       return MergeResult(outDir, Nil, Nil, 0, phases.toMap,
         filesDropped = cls.drop.size)
@@ -1349,10 +1340,10 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
                             // droppedOverride
                             widenedOverride: Option[Seq[String]] = None)
       : Unit = {
+    val src = Manifest.read(dir).getOrElse(Manifest(key))
     val ranges = (carried ++
       ParquetStats.fileKeyRangesTypedFor(spark, newFiles, key))
       .sortBy(_.minBytes)(KeyBytes.ordering)
-    import MutableParquetTable.js
     // a referenced clean file's manifest entry is its path RELATIVE to
     // this snapshot dir (it physically lives in a prior snapshot); a
     // local file's entry is its bare name
@@ -1378,119 +1369,83 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
     // stat once at commit time. Entries that predate size recording stay
     // size-less rather than triggering a stat sweep of old versions;
     // consumers (planner stats, byte pacing) fall back per entry.
-    val srcBytes = MutableParquetTable.manifestBytesByName(dir)
-    def bytesField(absFile: String): String = {
+    val srcBytes = src.bytesByName
+    def bytesOf(absFile: String): Option[Long] = {
       val name = fileName(absFile)
       srcBytes.get(name).orElse {
         val local = Paths.get(outDir, name)
         if (Files.exists(local)) Some(Files.size(local)) else None
-      }.map(b => s""","bytes":$b""").getOrElse("")
+      }
     }
-    val files = (ranges.map { r =>
-      s"""{"file":${js(entryOf(r.file))},"minKey":${js(keyRepr(r.min))},""" +
-        s""""maxKey":${js(keyRepr(r.max))},"rows":${r.rowCount}""" +
-        s""","nullKeys":${r.nullKeys}${bytesField(r.file)}}"""
-    } ++ statless.map(n =>
-      s"""{"file":${js(n)}${
-        bytesField(MutableParquetTable.resolvePath(outDir, n))}}"""))
-      .mkString("[", ",", "]")
-    val keyType = ranges.headOption.map(_.min) match {
-      case Some(_: java.lang.Long) => "long"
-      case Some(_: Array[Byte])    => "binary"
-      case Some(_)                 => "string"
-      case None                    => "unknown"
-    }
-    // table schema embedded in the commit (StructType JSON, exact
-    // round-trip): readers construct relations from the manifest alone —
-    // zero footer probes (the V2 source's relation setup path). The merge
-    // paths pass the schema they already hold; the probe is only for
-    // externally-produced dirs (commitManifest)
-    val schemaJson = schema.map(_.json) orElse
+    val entries = ranges.map(r =>
+        Manifest.entry(entryOf(r.file), r, bytesOf(r.file))) ++
+      statless.map(n => Manifest.Entry(n,
+        bytes = bytesOf(MutableParquetTable.resolvePath(outDir, n))))
+    // table schema embedded in the commit: readers construct relations
+    // from the manifest alone — zero footer probes (the V2 source's
+    // relation setup path). The merge paths pass the schema they already
+    // hold; the probe is only for externally-produced dirs (commitManifest)
+    val schemaOut = schema orElse
       (ranges.headOption.map(_.file) orElse
         newFiles.headOption orElse
         statless.headOption.map(n => MutableParquetTable.resolvePath(outDir, n)))
-      .map(f => spark.read.parquet(f).schema.json)
+      .map(f => spark.read.parquet(f).schema)
     // carry non-key dim zone maps (attachDimRanges) through the merge:
     // passthrough files keep their source entries (re-addressed to the
     // new snapshot), rewritten/new files get a fresh footer sweep per dim
     // — so q74-style dim pruning survives table mutation
-    val srcDims = MutableParquetTable.manifestDimEntriesRaw(dir)
-    val dimsJson =
-      if (srcDims.isEmpty || dir == outDir) ""
+    val dims =
+      if (src.dimRanges.isEmpty || dir == outDir) Nil
       else {
-        val dims = srcDims.map(_._2).distinct
         val carriedNames: Map[String, String] =
           carried.map(r => fileName(r.file) -> entryOf(r.file)).toMap
-        val kept = srcDims.collect {
-          case (f, c, t, mn, mx) if carriedNames.contains(fileName(f)) =>
-            MutableParquetTable.dimEntryJson(carriedNames(fileName(f)), c, t, mn, mx)
-        }
+        val kept = src.dimRanges.flatMap(d =>
+          carriedNames.get(fileName(d.file)).map(e => d.copy(file = e)))
         // rewritten files carry the names this commit's mapping implies:
         // PHYSICAL for CoW merges (mapping carried), LOGICAL for a
         // physical rewrite (mapping pinned empty) — sweep accordingly
         val sweepNames = renamesOverride.getOrElse(renames)
-        val fresh = dims.flatMap { d =>
+        val fresh = src.dimRanges.map(_.column).distinct.flatMap { d =>
           ParquetStats.fileKeyRangesTypedFor(spark, newFiles,
-              sweepNames.getOrElse(d, d)).map { r =>
-            val (t, mn, mx) = MutableParquetTable.dimTypedRepr(r.min, r.max)
-            MutableParquetTable.dimEntryJson(fileName(r.file), d, t, mn, mx)
-          }
+              sweepNames.getOrElse(d, d))
+            .map(r => Manifest.dimEntry(fileName(r.file), d, r.min, r.max))
         }
-        s""""dimRanges":[${(kept ++ fresh).mkString(",")}],"""
+        kept ++ fresh
       }
-    // a bucketed layout is a property of the TABLE: carry the spec from
-    // the source snapshot so every commit stays bucketed (rebucket pins
-    // a new spec — or none — via the override)
-    val bucketsJson = bucketsOverride
-      .getOrElse(MutableParquetTable.manifestBuckets(dir))
-      .map(n => s""""buckets":$n,""").getOrElse("")
-    // CHECK constraints and DEFAULT/GENERATED column contracts are
-    // versioned table state: carry them forward like the bucket spec so
-    // every commit keeps enforcing them
-    val checksJson =
-      GraftChecks.checksJsonField(GraftChecks.manifestChecks(dir)) +
-        GraftDefaults.defaultsJsonFields(GraftDefaults.manifestDefaults(dir),
-          GraftDefaults.manifestGenerated(dir))
     // the dropped-column blocklist protects files that physically
     // predate a DROP COLUMN (re-adding the name would resurrect their
     // stale values); once NO source file survives into this snapshot —
     // carried and referenced both empty: a replace, or a merge that
-    // rewrote everything through the narrowed schema — it clears
-    val droppedJson = MutableParquetTable.droppedJsonField(
-      droppedOverride.getOrElse(
-        if (carried.isEmpty && refNames.isEmpty) Nil
-        else MutableParquetTable.manifestDroppedColumns(dir)))
-    // widened-column marker: same survivors rule — once no pre-widen file
-    // survives, every file physically carries the wide type and raw
-    // splices are safe again
-    val widenedJson = MutableParquetTable.widenedJsonField(
-      widenedOverride.getOrElse(
-        if (carried.isEmpty && refNames.isEmpty) Nil
-        else MutableParquetTable.manifestWidened(dir)))
-    // the rename mapping is versioned table state like checks/buckets;
-    // unlike the blocklist it survives an all-files rewrite too, because
-    // CoW rewrites write the PHYSICAL names (only commitManifest's
-    // physicalRewrite — replace/z-order, whose outputs were written from
-    // LOGICAL frames — pins it empty)
-    val renamesJson = MutableParquetTable.renamesJsonField(
-      renamesOverride.getOrElse(MutableParquetTable.manifestRenames(dir)))
-    val tombstonesJson = tombstones.filter(_ > 0).map(n =>
-      s""""tombstoneFile":${js(MutableParquetTable.TombstoneName)},""" +
-        s""""tombstoneRows":$n,""").getOrElse("")
-    val json =
-      s"""{"key":${js(key)},"keyType":"$keyType",""" + tombstonesJson +
-        (if (moreKeys.isEmpty) ""
-         else s""""moreKeys":${js(moreKeys.mkString(","))},""") +
-        bucketsJson + checksJson + droppedJson + widenedJson + renamesJson +
-        schemaJson.map(s => s""""schema":${js(s)},""").getOrElse("") +
-        dimsJson +
-        s""""committedAtMs":${System.currentTimeMillis()},""" +
-        s""""fileCount":${ranges.size + statless.size},""" +
-        s""""totalRows":${ranges.map(_.rowCount).sum},"files":$files}"""
-    val tmp = Paths.get(outDir, ManifestName + ".tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, Paths.get(outDir, ManifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    // rewrote everything through the narrowed schema — it clears. The
+    // widened-column marker follows the same survivors rule: once no
+    // pre-widen file survives, raw splices are safe again
+    val survivors = carried.nonEmpty || refNames.nonEmpty
+    Manifest.write(outDir, Manifest(key,
+      keyType = Manifest.keyTypeOf(ranges.headOption.map(_.min)),
+      moreKeys = moreKeys,
+      files = entries,
+      schema = schemaOut,
+      committedAtMs = Some(System.currentTimeMillis()),
+      tombstoneRows = tombstones.getOrElse(0L),
+      // a bucketed layout is a property of the TABLE: carry the spec
+      // from the source snapshot so every commit stays bucketed (rebucket
+      // pins a new spec — or none — via the override)
+      buckets = bucketsOverride.getOrElse(src.buckets),
+      // CHECK constraints and DEFAULT/GENERATED column contracts are
+      // versioned table state: carried like the bucket spec
+      checks = src.checks,
+      defaults = src.defaults,
+      generated = src.generated,
+      droppedColumns = droppedOverride.getOrElse(
+        if (survivors) src.droppedColumns else Nil),
+      widenedColumns = widenedOverride.getOrElse(
+        if (survivors) src.widenedColumns else Nil),
+      // the rename mapping survives an all-files rewrite too, because
+      // CoW rewrites write the PHYSICAL names (only commitManifest's
+      // physicalRewrite — whose outputs were written from LOGICAL frames
+      // — pins it empty)
+      renames = renamesOverride.getOrElse(src.renames),
+      dimRanges = dims))
   }
 }
 
@@ -1628,68 +1583,10 @@ object MutableParquetTable {
                   defaults: Map[String, String] = Map.empty,
                   generated: Map[String, String] = Map.empty): Unit = {
     Files.createDirectories(Paths.get(dir))
-    val json =
-      s"""{"key":${js(key)},"keyType":"unknown",""" +
-        (if (moreKeys.isEmpty) ""
-         else s""""moreKeys":${js(moreKeys.mkString(","))},""") +
-        buckets.map(n => s""""buckets":$n,""").getOrElse("") +
-        GraftChecks.checksJsonField(checks) +
-        GraftDefaults.defaultsJsonFields(defaults, generated) +
-        s""""schema":${js(schema.json)},""" +
-        s""""committedAtMs":${System.currentTimeMillis()},""" +
-        s""""fileCount":0,"totalRows":0,"files":[]}"""
-    val tmp = Paths.get(dir, ManifestName + ".tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, Paths.get(dir, ManifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Write `outDir`'s manifest from EXPLICIT (entry, range) pairs — no
-    * footer IO, no directory listing. The optimistic-commit rebase builds
-    * a conflict-resolved inventory from two existing manifests (the new
-    * head's kept files + this writer's rewrites) and commits it with this;
-    * same format and atomic temp-file rename as the merge path's writer. */
-  private[graft] def writeManifestFromRanges(outDir: String, key: String,
-      moreKeys: Seq[String],
-      entries: Seq[(String, ParquetStats.FileKeyRange)],
-      schemaJson: Option[String],
-      checks: Map[String, String] = Map.empty,
-      dropped: Seq[String] = Nil,
-      bytesByName: Map[String, Long] = Map.empty,
-      renames: Map[String, String] = Map.empty,
-      widened: Seq[String] = Nil,
-      defaults: Map[String, String] = Map.empty,
-      generated: Map[String, String] = Map.empty): Unit = {
-    val sorted = entries.sortBy(_._2.minBytes)(KeyBytes.ordering)
-    val keyType = sorted.headOption.map(_._2.min) match {
-      case Some(_: java.lang.Long) => "long"
-      case Some(_: Array[Byte])    => "binary"
-      case Some(_)                 => "string"
-      case None                    => "unknown"
-    }
-    val files = sorted.map { case (e, r) =>
-      val bf = bytesByName.get(e.split('/').last)
-        .map(b => s""","bytes":$b""").getOrElse("")
-      s"""{"file":${js(e)},"minKey":${js(keyRepr(r.min))},""" +
-        s""""maxKey":${js(keyRepr(r.max))},"rows":${r.rowCount}""" +
-        s""","nullKeys":${r.nullKeys}$bf}"""
-    }.mkString("[", ",", "]")
-    val json =
-      s"""{"key":${js(key)},"keyType":"$keyType",""" +
-        (if (moreKeys.isEmpty) ""
-         else s""""moreKeys":${js(moreKeys.mkString(","))},""") +
-        GraftChecks.checksJsonField(checks) +
-        GraftDefaults.defaultsJsonFields(defaults, generated) +
-        droppedJsonField(dropped) + widenedJsonField(widened) +
-        renamesJsonField(renames) +
-        schemaJson.map(s => s""""schema":${js(s)},""").getOrElse("") +
-        s""""committedAtMs":${System.currentTimeMillis()},""" +
-        s""""fileCount":${sorted.size},""" +
-        s""""totalRows":${sorted.map(_._2.rowCount).sum},"files":$files}"""
-    val tmp = Paths.get(outDir, ManifestName + ".tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, Paths.get(outDir, ManifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Manifest.write(dir, Manifest(key, moreKeys = moreKeys,
+      schema = Some(schema), committedAtMs = Some(System.currentTimeMillis()),
+      buckets = buckets, checks = checks, defaults = defaults,
+      generated = generated))
   }
 
   /** A snapshot directory is a committed, complete snapshot iff its
@@ -1709,12 +1606,6 @@ object MutableParquetTable {
     Set("tombstones", "buckets", "checks", "dimRanges", "references",
       "compositeKeys", "nestedKeys", "columnRenames")
 
-  /** Per-file BYTE SIZES recorded in the manifest (file NAME → bytes).
-    * Written at commit time — new/linked files stat once, carried and
-    * referenced entries inherit the source manifest's size — so readers
-    * (planner statistics, byte-paced streams, compaction planning) get
-    * exact sizes with ZERO filesystem calls. Entries written before
-    * size recording are simply absent; consumers fall back per entry. */
   /** A table file's byte size: the manifest-recorded value when present
     * (zero filesystem calls — the object-store discipline), else one
     * stat of the resolved path. The one lookup every size consumer
@@ -1727,13 +1618,14 @@ object MutableParquetTable {
       Files.size(Paths.get(
         if (file.startsWith("/")) file else resolvePath(snapshotDir, file))))
 
+  /** Per-file BYTE SIZES recorded in the manifest (file NAME → bytes).
+    * Written at commit time — new/linked files stat once, carried and
+    * referenced entries inherit the source manifest's size — so readers
+    * (planner statistics, byte-paced streams, compaction planning) get
+    * exact sizes with ZERO filesystem calls. Entries written before
+    * size recording are simply absent; consumers fall back per entry. */
   private[graft] def manifestBytesByName(snapshotDir: String): Map[String, Long] =
-    readManifest(snapshotDir).map { m =>
-      "\\{\"file\":\"((?:[^\"\\\\]|\\\\.)*)\"[^}]*?\"bytes\":(\\d+)".r
-        .findAllMatchIn(m)
-        .map(e => unjs(e.group(1)).split('/').last -> e.group(2).toLong)
-        .toMap
-    }.getOrElse(Map.empty)
+    Manifest.read(snapshotDir).map(_.bytesByName).getOrElse(Map.empty)
 
   /** Column names DROPPED from the table schema while files written
     * BEFORE the drop may still physically carry the old values (the
@@ -1743,16 +1635,9 @@ object MutableParquetTable {
     * (parquet reads columns by name), so schema widenings reject names
     * on this list. The list clears once no pre-drop file survives (a
     * replace/truncate, or a merge that rewrote every file through the
-    * narrowed schema). Stored comma-joined like `moreKeys`. */
+    * narrowed schema). */
   private[graft] def manifestDroppedColumns(snapshotDir: String): Seq[String] =
-    readManifest(snapshotDir).flatMap(m =>
-      "\"droppedColumns\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(m)
-        .map(x => unjs(x.group(1)))).toSeq
-      .flatMap(_.split(',')).filter(_.nonEmpty)
-
-  private[graft] def droppedJsonField(names: Seq[String]): String =
-    if (names.isEmpty) ""
-    else s""""droppedColumns":${js(names.mkString(","))},"""
+    Manifest.read(snapshotDir).map(_.droppedColumns).getOrElse(Nil)
 
   /** Columns WIDENED by a metadata-only `ALTER COLUMN ... TYPE` while
     * files written before the change may still carry the NARROW physical
@@ -1764,14 +1649,7 @@ object MutableParquetTable {
     * while any such file survives. Same survivors lifecycle as
     * [[manifestDroppedColumns]]: clears once no pre-widen file remains. */
   private[graft] def manifestWidened(snapshotDir: String): Seq[String] =
-    readManifest(snapshotDir).flatMap(m =>
-      "\"widenedColumns\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(m)
-        .map(x => unjs(x.group(1)))).toSeq
-      .flatMap(_.split(',')).filter(_.nonEmpty)
-
-  private[graft] def widenedJsonField(names: Seq[String]): String =
-    if (names.isEmpty) ""
-    else s""""widenedColumns":${js(names.mkString(","))},"""
+    Manifest.read(snapshotDir).map(_.widenedColumns).getOrElse(Nil)
 
   /** Schema widening (metadata ALTER or merge evolution) must not reuse
     * a DROPPED column name while files predating the drop survive — see
@@ -1856,29 +1734,11 @@ object MutableParquetTable {
     * [[toPhysicalNames]]). Empty for tables that never renamed (or whose
     * last full physical rewrite materialized the mapping). Merge keys
     * cannot be renamed, so routing/zone-map machinery never consults
-    * this. Stored as a JSON object `"renames":{"logical":"physical"}`;
-    * a non-empty map stamps the `columnRenames` required feature so a
-    * reader without this mapping refuses instead of silently returning
-    * physical names. */
+    * this. A non-empty map stamps the `columnRenames` required feature
+    * ([[Manifest]]) so a reader without this mapping refuses instead of
+    * silently returning physical names. */
   private[graft] def manifestRenames(snapshotDir: String): Map[String, String] =
-    readManifest(snapshotDir).flatMap(m =>
-      "\"renames\":\\{((?:[^}\"\\\\]|\"(?:[^\"\\\\]|\\\\.)*\"|\\\\.)*)\\}".r
-        .findFirstMatchIn(m).map(_.group(1))).map { body =>
-      "\"((?:[^\"\\\\]|\\\\.)*)\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        .findAllMatchIn(body)
-        .map(x => unjs(x.group(1)) -> unjs(x.group(2))).toMap
-    }.getOrElse(Map.empty)
-
-  private[graft] def renamesJsonField(renames: Map[String, String]): String =
-    if (renames.isEmpty) ""
-    else {
-      val body = renames.toSeq.sortBy(_._1)
-        .map { case (l, p) => s"${js(l)}:${js(p)}" }.mkString(",")
-      // the feature stamp rides with the field: any manifest declaring a
-      // rename refuses pre-rename readers (silent physical names would
-      // be wrong column names, possibly wrong semantics)
-      s""""requiredFeatures":["columnRenames"],"renames":{$body},"""
-    }
+    Manifest.read(snapshotDir).map(_.renames).getOrElse(Map.empty)
 
   /** `logical` with renamed fields mapped back to their on-file names —
     * the schema to hand parquet readers/writers. Positions and types are
@@ -1915,13 +1775,7 @@ object MutableParquetTable {
   /** The `requiredFeatures` a committed snapshot declares (empty for
     * all manifests written by this library version). */
   private[graft] def manifestRequiredFeatures(snapshotDir: String): Seq[String] =
-    readManifest(snapshotDir).flatMap { m =>
-      "\"requiredFeatures\":\\[((?:[^\\]\"]|\"(?:[^\"\\\\]|\\\\.)*\")*)\\]".r
-        .findFirstMatchIn(m).map(_.group(1))
-    }.map { body =>
-      "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(body)
-        .map(x => unjs(x.group(1))).toSeq
-    }.getOrElse(Nil)
+    Manifest.read(snapshotDir).map(_.requiredFeatures).getOrElse(Nil)
 
   /** Refuse to touch a snapshot that requires a feature this reader
     * does not implement — fail fast beats silently wrong rows. */
@@ -1936,23 +1790,10 @@ object MutableParquetTable {
           s"(supported: ${SupportedFeatures.toSeq.sorted.mkString(", ")})")
   }
 
-  /** A committed snapshot's leading merge key, when recorded. The raw
-    * `"key":"` pattern is unambiguous: nested occurrences (schema JSON,
-    * check expressions) live inside escaped strings, and the file
-    * entries' minKey/maxKey/keyType fields don't match it literally. */
-  def manifestKey(snapshotDir: String): Option[String] =
-    readManifest(snapshotDir).flatMap { m =>
-      "\"key\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        .findFirstMatchIn(m).map(x => unjs(x.group(1)))
-    }
-
   /** A committed snapshot's SECONDARY key columns (composite merge
     * identity beyond the leading routing key), when recorded. */
   def manifestMoreKeys(snapshotDir: String): Seq[String] =
-    readManifest(snapshotDir).flatMap { m =>
-      "\"moreKeys\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(m)
-        .map(x => unjs(x.group(1)).split(',').toSeq.filter(_.nonEmpty))
-    }.getOrElse(Nil)
+    Manifest.read(snapshotDir).map(_.moreKeys).getOrElse(Nil)
 
   /** Stage `toDir` as a METADATA-ONLY snapshot of `fromDir`: the manifest
     * is copied with every file entry re-addressed RELATIVE to `toDir`
@@ -1970,128 +1811,58 @@ object MutableParquetTable {
       newRenames: Option[Map[String, String]] = None,
       recordWidened: Seq[String] = Nil,
       stripDims: Seq[String] = Nil): Unit = {
-    val m0 = readManifest(fromDir).getOrElse(throw new IllegalStateException(
-      s"$fromDir has no manifest — only committed snapshots can change schema"))
+    val m = Manifest.get(fromDir, "only committed snapshots can change schema")
     // a WIDENING must not reuse a dropped name — top-level OR a nested
     // dotted path: pre-drop files still physically carry the old
     // column/field, and a by-name parquet read would resurrect their
     // stale values instead of null
-    val blocked = manifestDroppedColumns(fromDir)
     guardResurrected(fromDir, allFieldPaths(newSchema), newRenames,
       excludePhysical = recordDropped)
-    // volatile per-commit stamps never carry into a METADATA commit
-    // (same contract as stageRestoreManifest): no feed is written for
-    // it — a carried `feedPending` reads as a crashed commitWithFeed
-    // and stalls/refuses CDF readers — and a carried txn marker would
-    // re-declare another writer's epoch at the head
-    val mv = m0
-      .replaceFirst(
-        "\"txnApp\":\"(?:[^\"\\\\]|\\\\.)*\",\"txnEpoch\":-?\\d+,", "")
-      .replaceFirst("\"feedPending\":true,", "")
-    val md = if (recordDropped.isEmpty) mv else {
-      // record the newly dropped names (cumulative) and shed any dim
-      // zone-map entries on them — a pruning index over a column readers
-      // can no longer see is dead weight
-      val merged = (blocked ++ recordDropped).distinct
-      val f = droppedJsonField(merged)
-      val stripped = mv
-        .replaceAll("\"droppedColumns\":\"((?:[^\"\\\\]|\\\\.)*)\",", "")
-      val withField = stripped.replaceFirst("\\{",
-        scala.util.matching.Regex.quoteReplacement(s"{$f"))
-      recordDropped.foldLeft(withField)((acc, c) => stripDimEntries(acc, c))
-    }
-    // record newly widened columns (cumulative, the dropped-list shape):
-    // files predating the ALTER still carry the narrow physical type, so
-    // byte-splice maintenance must avoid mixing shapes until a rewrite
-    // clears the marker. Dim zone-map entries on the column are shed —
-    // their encodings were swept under the narrow type.
-    val mw = if (recordWidened.isEmpty) md else {
-      val merged = (manifestWidened(fromDir) ++ recordWidened).distinct
-      val f = widenedJsonField(merged)
-      val stripped = md
-        .replaceAll("\"widenedColumns\":\"((?:[^\"\\\\]|\\\\.)*)\",", "")
-      val withField = stripped.replaceFirst("\\{",
-        scala.util.matching.Regex.quoteReplacement(s"{$f"))
-      recordWidened.foldLeft(withField)((acc, c) => stripDimEntries(acc, c))
-    }
-    // extra dim-entry strips beyond the recorded marker names: dim
-    // zone-map entries are keyed by the LOGICAL name pushed filters use
-    // (attachDimRanges), while drop/widen markers record the PHYSICAL
-    // (birth) name — for a renamed-then-widened column the physical
-    // strip alone would leave live logical-name entries whose
-    // narrow-type-encoded bounds wrongly prune wide-typed filters
-    val mws = stripDims.foldLeft(mw)((acc, c) => stripDimEntries(acc, c))
-    // replace the logical→physical rename mapping (RENAME COLUMN commits
-    // and drops of renamed columns): strip the old field + its feature
-    // stamp, then re-emit the new map's field (which re-stamps when still
-    // non-empty)
-    val m = newRenames.fold(mws) { rn =>
-      val stripped = mws
-        .replaceAll("\"requiredFeatures\":\\[\"columnRenames\"\\],", "")
-        .replaceAll(
-          "\"renames\":\\{(?:[^}\"\\\\]|\"(?:[^\"\\\\]|\\\\.)*\"|\\\\.)*\\},",
-          "")
-      val f = renamesJsonField(rn)
-      if (f.isEmpty) stripped
-      else stripped.replaceFirst("\\{",
-        scala.util.matching.Regex.quoteReplacement(s"{$f"))
-    }
     Files.createDirectories(Paths.get(toDir))
     // the tombstone sidecar is snapshot-local (delta-sized) — copy it so
     // the staged manifest's tombstoneFile entry stays resolvable
     if (Files.isDirectory(Paths.get(fromDir, TombstoneName)))
       copyTombstoneDir(fromDir, toDir)
-    // both file inventory ("file") and dim zone-map ("dfile") entries
-    // re-address, so attached dim pruning survives the schema change
-    val readdressed = "\"(d?file)\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .replaceAllIn(m, mm => {
-        val abs = resolvePath(fromDir, unjs(mm.group(2)))
-        scala.util.matching.Regex.quoteReplacement(
-          s""""${mm.group(1)}":${js(relativize(toDir, abs))}""")
-      })
-    val schemaRe = "\"schema\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-    val newSchemaField = s""""schema":${js(newSchema.json)}"""
-    val withSchema =
-      if (schemaRe.findFirstIn(readdressed).isDefined)
-        schemaRe.replaceFirstIn(readdressed,
-          scala.util.matching.Regex.quoteReplacement(newSchemaField))
-      else readdressed.replaceFirst("\\{",
-        scala.util.matching.Regex.quoteReplacement(s"{$newSchemaField,"))
-    val tsRe = "\"committedAtMs\":\\d+".r
-    val now = s""""committedAtMs":${System.currentTimeMillis()}"""
-    val stamped =
-      if (tsRe.findFirstIn(withSchema).isDefined)
-        tsRe.replaceFirstIn(withSchema,
-          scala.util.matching.Regex.quoteReplacement(now))
-      else withSchema.replaceFirst("\\{",
-        scala.util.matching.Regex.quoteReplacement(s"{$now,"))
-    val tmp = Paths.get(toDir, ManifestName + ".tmp")
-    Files.writeString(tmp, stamped)
-    Files.move(tmp, Paths.get(toDir, ManifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Manifest.write(toDir, m
+      // volatile per-commit stamps never carry into a METADATA commit
+      // (same contract as stageRestoreManifest): no feed is written for
+      // it — a carried `feedPending` reads as a crashed commitWithFeed
+      // and stalls/refuses CDF readers — and a carried txn marker would
+      // re-declare another writer's epoch at the head
+      .withoutStamps
+      // newly dropped / widened names are recorded cumulatively: files
+      // predating the ALTER still carry the old column or the narrow
+      // physical type. Dim zone-map entries on them are shed — an index
+      // over a column readers can no longer see is dead weight, and
+      // widened bounds were swept under the narrow type. `stripDims`
+      // adds LOGICAL names: dim entries are keyed by the name pushed
+      // filters use, while the markers record the PHYSICAL (birth) name
+      .withoutDims(recordDropped ++ recordWidened ++ stripDims)
+      .copy(
+        droppedColumns = (m.droppedColumns ++ recordDropped).distinct,
+        widenedColumns = (m.widenedColumns ++ recordWidened).distinct,
+        // RENAME COLUMN commits (and drops of renamed columns) replace
+        // the logical→physical mapping
+        renames = newRenames.getOrElse(m.renames),
+        schema = Some(newSchema),
+        committedAtMs = Some(System.currentTimeMillis()))
+      // both file inventory and dim zone-map entries re-address, so
+      // attached dim pruning survives the schema change
+      .readdressed(fromDir, toDir))
   }
 
   /** Commit wall-clock time (epoch ms) of a snapshot — the manifest's
     * `committedAtMs` field; manifests written before the field existed
     * (and manifest-less base snapshots) fall back to filesystem mtime.
     * Timestamp time travel resolves against this. */
-  def committedAtMs(snapshotDir: String): Option[Long] = {
-    val fromField = readManifest(snapshotDir).flatMap(m =>
-      "\"committedAtMs\":(\\d+)".r.findFirstMatchIn(m).map(_.group(1).toLong))
-    fromField.orElse {
+  def committedAtMs(snapshotDir: String): Option[Long] =
+    Manifest.read(snapshotDir).flatMap(_.committedAtMs).orElse {
       val m = Paths.get(snapshotDir, ManifestName)
       val p = if (Files.exists(m)) m else Paths.get(snapshotDir)
       if (Files.exists(p))
         Some(Files.getLastModifiedTime(p).toMillis)
       else None
     }
-  }
-
-  /** Raw manifest JSON, if committed. */
-  def readManifest(snapshotDir: String): Option[String] =
-    if (isCommitted(snapshotDir))
-      Some(Files.readString(Paths.get(snapshotDir, ManifestName)))
-    else None
 
   /** Stamp a staged snapshot's manifest with the streaming TRANSACTION
     * MARKER (writer id + epoch) that makes epoch replay detectable: the
@@ -2101,18 +1872,8 @@ object MutableParquetTable {
     * Idempotent — an existing marker is replaced, so the optimistic
     * publish loop may re-stamp after a rebase rewrote the manifest. */
   private[graft] def annotateTxn(snapshotDir: String, app: String,
-                                 epoch: Long): Unit = {
-    val m = readManifest(snapshotDir).getOrElse(throw new IllegalStateException(
-      s"$snapshotDir has no $ManifestName to stamp a txn marker on"))
-    val stripped = m.replaceFirst(
-      "\"txnApp\":\"(?:[^\"\\\\]|\\\\.)*\",\"txnEpoch\":-?\\d+,", "")
-    val json = stripped.patch(1,
-      s""""txnApp":${js(app)},"txnEpoch":$epoch,""", 0)
-    val tmp = Paths.get(snapshotDir, ManifestName + ".tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, Paths.get(snapshotDir, ManifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+                                 epoch: Long): Unit =
+    Manifest.update(snapshotDir)(_.copy(txn = Some((app, epoch))))
 
   /** Stamp a staged snapshot's manifest with the FEED-PENDING flag:
     * this commit's writer will persist a row-level change feed under
@@ -2124,36 +1885,9 @@ object MutableParquetTable {
     * the feed write and silently consumes the version empty. Stamped
     * pre-publish (atomic with the commit), idempotent like
     * [[annotateTxn]]. */
-  private[graft] def annotateFeedPending(snapshotDir: String): Unit = {
-    val m = readManifest(snapshotDir).getOrElse(throw new IllegalStateException(
-      s"$snapshotDir has no $ManifestName to stamp feedPending on"))
-    if (m.contains("\"feedPending\":true")) return
-    val json = m.patch(1, "\"feedPending\":true,", 0)
-    val tmp = Paths.get(snapshotDir, ManifestName + ".tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, Paths.get(snapshotDir, ManifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private[graft] def annotateFeedPending(snapshotDir: String): Unit =
+    Manifest.update(snapshotDir)(_.copy(feedPending = true))
 
-  /** Whether a committed snapshot declared a persisted change feed. */
-  private[graft] def manifestFeedPending(snapshotDir: String): Boolean =
-    readManifest(snapshotDir).exists(_.contains("\"feedPending\":true"))
-
-  /** Stage a RESTORE snapshot at `stagedDir`: a manifest-only copy of
-    * `targetDir`'s state with every file entry re-addressed as a
-    * REFERENCE to its true physical holder — the rollback commit is
-    * metadata-priced at any table size (no data file is read or
-    * written). Entries that are themselves references re-resolve first,
-    * so a restored reference never chains through an intermediate
-    * snapshot that vacuum might later drop. The target's delta-sized
-    * tombstone sidecar (when present) is copied in — the sidecar is the
-    * one part of logical state that lives outside the manifest. Volatile
-    * per-commit stamps are stripped: txn markers (re-publishing an old
-    * epoch at the head would shadow newer markers for the same app in
-    * [[graft.streaming.CdcMergeSink.lastTxnEpoch]]'s newest-first walk),
-    * `feedPending` (no feed is written for a restore), and
-    * `committedAtMs` (re-stamped — commit times must stay monotone along
-    * the version chain for timestamp time travel). */
   /** Re-stamp a staged manifest's `committedAtMs` to NOW. Commit times
     * must be monotone along the version chain (timestamp time travel and
     * the change feed's binary search depend on it) — a staged snapshot
@@ -2180,56 +1914,36 @@ object MutableParquetTable {
       if staged < head
     } stampCommittedAt(stagedDir, head)
 
-  private def stampCommittedAt(stagedDir: String, ts: Long): Unit = {
-    val m = readManifest(stagedDir).getOrElse(return)
-    val re = "\"committedAtMs\":\\d+".r
-    val stamp = s""""committedAtMs":$ts"""
-    val updated =
-      if (re.findFirstIn(m).isDefined)
-        re.replaceFirstIn(m, scala.util.matching.Regex.quoteReplacement(stamp))
-      else m.replaceFirst("\\{",
-        scala.util.matching.Regex.quoteReplacement(s"{$stamp,"))
-    val tmp = Paths.get(stagedDir, ManifestName + ".tmp")
-    Files.writeString(tmp, updated)
-    Files.move(tmp, Paths.get(stagedDir, ManifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def stampCommittedAt(stagedDir: String, ts: Long): Unit =
+    Manifest.read(stagedDir).foreach(m =>
+      Manifest.write(stagedDir, m.copy(committedAtMs = Some(ts))))
 
+  /** Stage a RESTORE snapshot at `stagedDir`: a manifest-only copy of
+    * `targetDir`'s state with every file entry re-addressed as a
+    * REFERENCE to its true physical holder — the rollback commit is
+    * metadata-priced at any table size (no data file is read or
+    * written). Entries that are themselves references re-resolve first,
+    * so a restored reference never chains through an intermediate
+    * snapshot that vacuum might later drop. The target's delta-sized
+    * tombstone sidecar (when present) is copied in — the sidecar is the
+    * one part of logical state that lives outside the manifest. Volatile
+    * per-commit stamps are stripped: txn markers (re-publishing an old
+    * epoch at the head would shadow newer markers for the same app in
+    * [[graft.streaming.CdcMergeSink.lastTxnEpoch]]'s newest-first walk),
+    * `feedPending` (no feed is written for a restore), and
+    * `committedAtMs` (re-stamped — commit times must stay monotone along
+    * the version chain for timestamp time travel). */
   private[graft] def stageRestoreManifest(stagedDir: String,
                                           targetDir: String): Unit = {
-    val m0 = readManifest(targetDir).getOrElse(throw new IllegalStateException(
-      s"$targetDir has no $ManifestName — only manifest-committed " +
-        "snapshots can be restored to"))
-    var m = m0.replaceFirst(
-      "\"txnApp\":\"(?:[^\"\\\\]|\\\\.)*\",\"txnEpoch\":-?\\d+,", "")
-    m = m.replaceFirst("\"feedPending\":true,", "")
-    m = m.replaceFirst("\"committedAtMs\":\\d+,",
-      s""""committedAtMs":${System.currentTimeMillis()},""")
+    val m = Manifest.get(targetDir,
+      "only manifest-committed snapshots can be restored to")
     Files.createDirectories(Paths.get(stagedDir))
-    // both file inventory ("file") and dim zone-map ("dfile") entries
-    // re-address, so attached dim pruning survives the restore
-    val entryRe = "\"(d?file)\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-    val rewritten = entryRe.replaceAllIn(m, mm => {
-      val abs = resolvePath(targetDir, unjs(mm.group(2)))
-      java.util.regex.Matcher.quoteReplacement(
-        s""""${mm.group(1)}":${js(relativize(stagedDir, abs))}""")
-    })
-    if (rewritten.contains("\"tombstoneFile\":")) {
-      val from = Paths.get(targetDir, TombstoneName)
-      val to = Paths.get(stagedDir, TombstoneName)
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(from)
-      try walk.iterator().asScala.foreach { p =>
-        val dst = to.resolve(from.relativize(p))
-        if (Files.isDirectory(p)) Files.createDirectories(dst)
-        else Files.copy(p, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } finally walk.close()
-    }
-    val tmp = Paths.get(stagedDir, ManifestName + ".tmp")
-    Files.writeString(tmp, rewritten)
-    Files.move(tmp, Paths.get(stagedDir, ManifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    if (m.tombstoneRows > 0) copyTombstoneDir(targetDir, stagedDir)
+    // both file inventory and dim zone-map entries re-address, so
+    // attached dim pruning survives the restore
+    Manifest.write(stagedDir, m.withoutStamps
+      .copy(committedAtMs = Some(System.currentTimeMillis()))
+      .readdressed(targetDir, stagedDir))
   }
 
   /** DELETION TOMBSTONES — merge-on-read deletes. A snapshot may carry a
@@ -2279,9 +1993,7 @@ object MutableParquetTable {
 
   /** Tombstone count a committed snapshot declares (0 = none). */
   def manifestTombstoneRows(snapshotDir: String): Long =
-    readManifest(snapshotDir).flatMap(m =>
-      "\"tombstoneRows\":(\\d+)".r.findFirstMatchIn(m)
-        .map(_.group(1).toLong)).getOrElse(0L)
+    Manifest.read(snapshotDir).map(_.tombstoneRows).getOrElse(0L)
 
   /** The snapshot's tombstone key set (columns `__k0..__kn`), when it
     * declares one. */
@@ -2314,33 +2026,18 @@ object MutableParquetTable {
     * snapshot declares one. Bucketed snapshots keep one file set per
     * bucket (bucket id in the file name) instead of disjoint key ranges. */
   def manifestBuckets(snapshotDir: String): Option[Int] =
-    readManifest(snapshotDir).flatMap(m =>
-      "\"buckets\":(\\d+)".r.findFirstMatchIn(m).map(_.group(1).toInt))
+    Manifest.read(snapshotDir).flatMap(_.buckets)
 
   /** Stamp a committed snapshot's manifest with the bucket spec —
     * [[graft.GraftTable.create]] uses this right after the base commit
-    * (later merges then CARRY the field via [[writeManifest]]).
-    * Idempotent like [[annotateTxn]]. */
-  private[graft] def annotateBuckets(snapshotDir: String, n: Int): Unit = {
-    val m = readManifest(snapshotDir).getOrElse(throw new IllegalStateException(
-      s"$snapshotDir has no $ManifestName to stamp a bucket spec on"))
-    val stripped = m.replaceFirst("\"buckets\":\\d+,", "")
-    val json = stripped.patch(1, s""""buckets":$n,""", 0)
-    val tmp = Paths.get(snapshotDir, ManifestName + ".tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, Paths.get(snapshotDir, ManifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+    * (later merges then CARRY the field via [[writeManifest]]). */
+  private[graft] def annotateBuckets(snapshotDir: String, n: Int): Unit =
+    Manifest.update(snapshotDir)(_.copy(buckets = Some(n)))
 
   /** The streaming transaction marker a committed snapshot carries, if
     * any: (writer app id, epoch). */
   private[graft] def manifestTxn(snapshotDir: String): Option[(String, Long)] =
-    readManifest(snapshotDir).flatMap { m =>
-      for {
-        a <- "\"txnApp\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(m)
-        e <- "\"txnEpoch\":(-?\\d+)".r.findFirstMatchIn(m)
-      } yield (unjs(a.group(1)), e.group(1).toLong)
-    }
+    Manifest.read(snapshotDir).flatMap(_.txn)
 
   /** Read a committed snapshot STRICTLY through its manifest: only files
     * the manifest lists are scanned, so stray part files — a concurrent
@@ -2349,14 +2046,12 @@ object MutableParquetTable {
     * not the directory listing, defines the table. Throws if the snapshot
     * has no commit marker. */
   def readCommitted(spark: SparkSession, snapshotDir: String): DataFrame = {
-    val files = manifestFileNames(snapshotDir).getOrElse(
-      throw new IllegalStateException(
-        s"$snapshotDir has no $ManifestName — not a committed snapshot"))
-    if (files.isEmpty) {
+    val m = Manifest.get(snapshotDir)
+    if (m.files.isEmpty) {
       // a zero-file snapshot is a real table state (TRUNCATE, a delete
       // that covered everything, CREATE TABLE pre-insert): an empty
       // relation with the manifest's schema
-      val schema = manifestSchema(snapshotDir).getOrElse(
+      val schema = m.schema.getOrElse(
         throw new IllegalStateException(
           s"$snapshotDir manifest lists no files and embeds no schema"))
       return spark.createDataFrame(
@@ -2366,43 +2061,35 @@ object MutableParquetTable {
     // mixes physical shapes (old passthrough files lack the new columns),
     // and inference from one footer would read the wrong one. Renamed
     // columns read their on-file physical name, aliased back to logical.
-    val df = manifestSchema(snapshotDir).map(s =>
-        readFilesLogical(spark, files.map(n => resolvePath(snapshotDir, n)),
-          s, manifestRenames(snapshotDir)))
-      .getOrElse(spark.read
-        .parquet(files.map(n => resolvePath(snapshotDir, n)): _*))
-    // deletion tombstones subtract with a broadcast anti-join — vectorized
-    // scan + codegen intact, cost ∝ the delta-sized sidecar
-    if (manifestTombstoneRows(snapshotDir) == 0) df
-    else {
-      val keyName = manifestZoneMap(snapshotDir).map(_.keyName).getOrElse(
-        throw new IllegalStateException(
-          s"$snapshotDir declares tombstones but no key"))
-      applyTombstones(spark, snapshotDir, df,
-        keyName +: manifestMoreKeys(snapshotDir))
-    }
+    withTombstones(spark, m, snapshotDir,
+      readFiles(spark, m, m.fileNames.map(n => resolvePath(snapshotDir, n))))
   }
+
+  /** `files` read under the manifest's logical schema and rename mapping
+    * (footer inference when the manifest predates embedded schemas). */
+  private def readFiles(spark: SparkSession, m: Manifest,
+                        files: Seq[String]): DataFrame =
+    m.schema.map(s => readFilesLogical(spark, files, s, m.renames))
+      .getOrElse(spark.read.parquet(files: _*))
+
+  /** Deletion tombstones subtract with a broadcast anti-join — vectorized
+    * scan + codegen intact, cost ∝ the delta-sized sidecar. */
+  private def withTombstones(spark: SparkSession, m: Manifest,
+                             snapshotDir: String, df: DataFrame): DataFrame =
+    if (m.tombstoneRows == 0) df
+    else applyTombstones(spark, snapshotDir, df, m.key +: m.moreKeys)
 
   /** The table schema a committed snapshot's manifest embeds (None for
     * manifests written before schemas were recorded, and for uncommitted
-    * directories). Everything inside the embedded schema string is
-    * quote-escaped by [[js]], so the manifest's other regex readers can
-    * never match keys inside it. */
+    * directories). */
   def manifestSchema(snapshotDir: String): Option[org.apache.spark.sql.types.StructType] =
-    readManifest(snapshotDir).flatMap { m =>
-      "\"schema\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(m)
-        .map(x => org.apache.spark.sql.types.DataType.fromJson(unjs(x.group(1)))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
+    Manifest.read(snapshotDir).flatMap(_.schema)
 
   /** The file names a committed snapshot's manifest lists (None when the
     * snapshot has no commit marker). The manifest, not the directory
     * listing, defines the snapshot's contents. */
   def manifestFileNames(snapshotDir: String): Option[Seq[String]] =
-    readManifest(snapshotDir).map { m =>
-      "\"file\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        .findAllMatchIn(m).map(x => unjs(x.group(1))).toSeq
-    }
+    Manifest.read(snapshotDir).map(_.fileNames)
 
   /** Manifest-pruned range scan: select only the files whose key range
     * intersects [lo, hi] — decided purely from the manifest, ZERO footer
@@ -2413,52 +2100,13 @@ object MutableParquetTable {
     * Result ≡ `readCommitted(...).where(key between lo and hi)`. */
   def readRange(spark: SparkSession, snapshotDir: String,
                 lo: Any, hi: Any): DataFrame = {
-    val (keyName, files) =
-      pruneManifestFiles(snapshotDir, Some(lo), Some(hi))
-        .getOrElse(throw new IllegalStateException(
-          s"$snapshotDir has no $ManifestName — not a committed snapshot"))
+    val m = Manifest.get(snapshotDir)
+    val (keyName, files) = pruneFiles(m, snapshotDir, Some(lo), Some(hi))
     if (files.isEmpty)
       return readCommitted(spark, snapshotDir).where(lit(false))
-    val df = manifestSchema(snapshotDir).map(s =>
-        readFilesLogical(spark, files, s, manifestRenames(snapshotDir)))
-      .getOrElse(spark.read.parquet(files: _*))
-      .where(col(keyName) >= lit(lo) && col(keyName) <= lit(hi))
-    if (manifestTombstoneRows(snapshotDir) == 0) df
-    else applyTombstones(spark, snapshotDir, df,
-      keyName +: manifestMoreKeys(snapshotDir))
+    withTombstones(spark, m, snapshotDir, readFiles(spark, m, files)
+      .where(col(keyName) >= lit(lo) && col(keyName) <= lit(hi)))
   }
-
-  /** A snapshot's zone map parsed ONCE: key name, per-file encoded
-    * [min, max] bounds, and the stat-less (never-prunable) file names.
-    * All prune entry points share this so pruning on many values costs
-    * one manifest read, not one per value. */
-  private[sources] final case class ManifestZoneMap(
-      keyName: String,
-      ranged: Seq[(String, Array[Byte], Array[Byte])],
-      unprunable: Seq[String])
-
-  private[sources] def manifestZoneMap(snapshotDir: String): Option[ManifestZoneMap] =
-    readManifest(snapshotDir).map { m =>
-      val keyName = unjs("\"key\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        .findFirstMatchIn(m).get.group(1))
-      val entry =
-        ("\\{\"file\":\"((?:[^\"\\\\]|\\\\.)*)\",\"minKey\":\"((?:[^\"\\\\]|\\\\.)*)\"," +
-          "\"maxKey\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      val isLong = m.contains("\"keyType\":\"long\"")
-      val isBinary = m.contains("\"keyType\":\"binary\"")
-      def enc(s: String): Array[Byte] =
-        if (isLong) KeyBytes.fromLong(s.toLong)
-        else if (isBinary) hexDecode(s)
-        else KeyBytes.fromString(s)
-      val ranged = entry.findAllMatchIn(m)
-        .map(e => (unjs(e.group(1)), enc(unjs(e.group(2))), enc(unjs(e.group(3)))))
-        .toSeq
-      val rangedNames = ranged.map(_._1).toSet
-      val unprunable = "\"file\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        .findAllMatchIn(m).map(x => unjs(x.group(1))).toSeq
-        .filterNot(rangedNames)
-      ManifestZoneMap(keyName, ranged, unprunable)
-    }
 
   /** The manifest's key column name and the snapshot files whose key range
     * intersects [lo, hi] (either bound optional; None = unbounded) —
@@ -2468,17 +2116,17 @@ object MutableParquetTable {
     * data source's filter pushdown. */
   def pruneManifestFiles(snapshotDir: String, lo: Option[Any],
                          hi: Option[Any]): Option[(String, Seq[String])] =
-    manifestZoneMap(snapshotDir).map { zm =>
-      val loB = lo.map(KeyBytes.fromAny)
-      val hiB = hi.map(KeyBytes.fromAny)
-      val inRange = zm.ranged.collect {
-        case (f, mnB, mxB)
-            if hiB.forall(h => KeyBytes.compare(mnB, h) <= 0) &&
-               loB.forall(l => KeyBytes.compare(mxB, l) >= 0) => f
-      }
-      (zm.keyName,
-        (inRange ++ zm.unprunable).map(n => resolvePath(snapshotDir, n)))
-    }
+    Manifest.read(snapshotDir).map(pruneFiles(_, snapshotDir, lo, hi))
+
+  private[sources] def pruneFiles(m: Manifest, snapshotDir: String,
+                                  lo: Option[Any],
+                                  hi: Option[Any]): (String, Seq[String]) = {
+    val loB = lo.map(KeyBytes.fromAny)
+    val hiB = hi.map(KeyBytes.fromAny)
+    prunedBy(m, snapshotDir)(r =>
+      hiB.forall(h => KeyBytes.compare(r.minBytes, h) <= 0) &&
+        loB.forall(l => KeyBytes.compare(r.maxBytes, l) >= 0))
+  }
 
   /** Prune against a SET of point keys in one manifest pass: keeps the
     * files whose [min, max] contains at least one of `values`, plus the
@@ -2488,22 +2136,26 @@ object MutableParquetTable {
     * never one manifest re-read per key. */
   def pruneManifestFilesPoints(snapshotDir: String,
                                values: Seq[Any]): Option[(String, Seq[String])] =
-    manifestZoneMap(snapshotDir).map { zm =>
+    Manifest.read(snapshotDir).map { m =>
       val pts = values.map(KeyBytes.fromAny).sorted(KeyBytes.ordering).toArray
-      def anyIn(mnB: Array[Byte], mxB: Array[Byte]): Boolean = {
+      prunedBy(m, snapshotDir) { r =>
         // first point >= min, then check it is <= max
         var lo = 0; var hi = pts.length - 1; var ans = -1
         while (lo <= hi) {
           val mid = (lo + hi) >>> 1
-          if (KeyBytes.compare(pts(mid), mnB) >= 0) { ans = mid; hi = mid - 1 }
+          if (KeyBytes.compare(pts(mid), r.minBytes) >= 0) { ans = mid; hi = mid - 1 }
           else lo = mid + 1
         }
-        ans >= 0 && KeyBytes.compare(pts(ans), mxB) <= 0
+        ans >= 0 && KeyBytes.compare(pts(ans), r.maxBytes) <= 0
       }
-      val keep = zm.ranged.collect { case (f, mnB, mxB) if anyIn(mnB, mxB) => f }
-      (zm.keyName,
-        (keep ++ zm.unprunable).map(n => resolvePath(snapshotDir, n)))
     }
+
+  /** The key name and the resolved files whose range passes `keep`, plus
+    * every stat-less (never-prunable) entry. */
+  private def prunedBy(m: Manifest, snapshotDir: String)(
+      keep: ParquetStats.FileKeyRange => Boolean): (String, Seq[String]) =
+    (m.key, m.ranges(snapshotDir).getOrElse(Nil).filter(keep).map(_.file) ++
+      m.files.filter(_.range.isEmpty).map(e => resolvePath(snapshotDir, e.file)))
 
   /** The table's data files: a committed snapshot's MANIFEST inventory
     * (the commit defines the contents — a stray uncommitted file next to
@@ -2526,16 +2178,7 @@ object MutableParquetTable {
     * in the manifest, so its presence makes the metadata count partial).
     * Lets `COUNT(*)` answer from one JSON read with zero data IO. */
   def manifestExactRowCount(dir: String): Option[Long] =
-    for {
-      names <- manifestFileNames(dir)
-      ranges <- manifestRangesAnyKey(dir) if ranges.size == names.size
-    } yield ranges.map(_.rowCount).sum
-
-  private[sources] def manifestRangesAnyKey(dir: String) =
-    readManifest(dir).flatMap { m =>
-      "\"key\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(m)
-        .flatMap(k => manifestRanges(dir, unjs(k.group(1))))
-    }
+    Manifest.read(dir).flatMap(_.exactRowCount)
 
   /** The manifest's typed zone map, when `dir` is a committed snapshot
     * whose manifest key matches `key`: one [[ParquetStats.FileKeyRange]]
@@ -2546,34 +2189,7 @@ object MutableParquetTable {
     * matching the footer path (they are unroutable). */
   def manifestRanges(dir: String, key: String)
       : Option[Seq[ParquetStats.FileKeyRange]] =
-    readManifest(dir).flatMap { m =>
-      val keyName = unjs("\"key\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        .findFirstMatchIn(m).get.group(1))
-      val isLong = m.contains("\"keyType\":\"long\"")
-      val isBinary = m.contains("\"keyType\":\"binary\"")
-      val isString = m.contains("\"keyType\":\"string\"")
-      if (keyName != key || !(isLong || isBinary || isString)) None
-      else {
-        val entry =
-          ("\\{\"file\":\"((?:[^\"\\\\]|\\\\.)*)\",\"minKey\":\"((?:[^\"\\\\]|\\\\.)*)\"," +
-            "\"maxKey\":\"((?:[^\"\\\\]|\\\\.)*)\",\"rows\":(\\d+)" +
-            "(?:,\"nullKeys\":(-?\\d+))?").r
-        def typed(s: String): (Any, Array[Byte]) =
-          if (isLong) { val l = s.toLong; (java.lang.Long.valueOf(l), KeyBytes.fromLong(l)) }
-          else if (isBinary) { val b = hexDecode(s); (b, b) }
-          else (s, KeyBytes.fromString(s))
-        Some(entry.findAllMatchIn(m).map { e =>
-          val (mn, mnB) = typed(unjs(e.group(2)))
-          val (mx, mxB) = typed(unjs(e.group(3)))
-          ParquetStats.FileKeyRange(resolvePath(dir, unjs(e.group(1))), mn, mx,
-            mnB, mxB, e.group(4).toLong,
-            // absent = the manifest predates null-count recording (this
-            // writer always emits the field): UNKNOWN, not "known none" —
-            // consumers gating on nullKeys == 0 / >= 0 must decline
-            Option(e.group(5)).map(_.toLong).getOrElse(-1L))
-        }.toSeq)
-      }
-    }
+    Manifest.read(dir).filter(_.key == key).flatMap(_.ranges(dir))
 
   /** Attach per-file [min, max] ranges for NON-KEY columns (typically the
     * Z-order dims) to a committed snapshot's manifest, enabling file-level
@@ -2585,34 +2201,17 @@ object MutableParquetTable {
     * executor-parallel, zero data IO). */
   def attachDimRanges(spark: SparkSession, snapshotDir: String,
                       dims: Seq[String]): Unit = {
-    val m0 = readManifest(snapshotDir).getOrElse(throw new IllegalStateException(
-      s"$snapshotDir has no $ManifestName — not a committed snapshot"))
-    // strip a previous section (values are js-escaped; ']' inside them is
-    // pathological and unsupported by this splice)
-    val m = m0.replaceAll("\"dimRanges\":\\[[^\\]]*\\],", "")
-    val entries = manifestFileNames(snapshotDir).getOrElse(Nil)
+    val m = Manifest.get(snapshotDir)
     val resolvedToEntry =
-      entries.map(e => resolvePath(snapshotDir, e) -> e).toMap
+      m.fileNames.map(e => resolvePath(snapshotDir, e) -> e).toMap
     val files = resolvedToEntry.keys.toSeq.sorted
     // renamed dims: footers carry the column's PHYSICAL name — sweep by
     // it, record the entry under the LOGICAL name pushed filters use
-    val rn = manifestRenames(snapshotDir)
-    val dimJson = dims.flatMap { d =>
-      ParquetStats.fileKeyRangesTypedFor(spark, files, rn.getOrElse(d, d))
-        .map { r =>
-          val (tpe, mn, mx) = dimTypedRepr(r.min, r.max)
-          dimEntryJson(resolvedToEntry(r.file), d, tpe, mn, mx)
-        }
+    val entries = dims.flatMap { d =>
+      ParquetStats.fileKeyRangesTypedFor(spark, files, m.renames.getOrElse(d, d))
+        .map(r => Manifest.dimEntry(resolvedToEntry(r.file), d, r.min, r.max))
     }
-    val marker = "\"files\":"
-    val at = m.indexOf(marker)
-    require(at >= 0, "manifest missing files section")
-    val updated = m.substring(0, at) +
-      s""""dimRanges":[${dimJson.mkString(",")}],""" + m.substring(at)
-    val tmp = Paths.get(snapshotDir, ManifestName + ".tmp")
-    Files.writeString(tmp, updated)
-    Files.move(tmp, Paths.get(snapshotDir, ManifestName),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Manifest.write(snapshotDir, m.copy(dimRanges = entries))
   }
 
   /** Remove the dim zone-map entries on `dims` from a committed
@@ -2622,105 +2221,20 @@ object MutableParquetTable {
     * which prune nothing and mis-declare the layout to probes that
     * auto-detect it from the dim section). Atomic rewrite; a manifest
     * without matching entries is left untouched. */
-  def detachDimRanges(snapshotDir: String, dims: Seq[String]): Unit = {
-    val m0 = readManifest(snapshotDir).getOrElse(return)
-    val m = dims.foldLeft(m0)((acc, c) => stripDimEntries(acc, c))
-    if (m != m0) {
-      val tmp = Paths.get(snapshotDir, ManifestName + ".tmp")
-      Files.writeString(tmp, m)
-      Files.move(tmp, Paths.get(snapshotDir, ManifestName),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  def detachDimRanges(snapshotDir: String, dims: Seq[String]): Unit =
+    Manifest.read(snapshotDir).foreach { m =>
+      val stripped = m.withoutDims(dims)
+      if (stripped != m) Manifest.write(snapshotDir, stripped)
     }
-  }
 
   /** A non-key column's per-file bounds, encoded for [[KeyBytes]] order. */
   final case class DimRange(file: String, minBytes: Array[Byte],
                             maxBytes: Array[Byte])
 
-  /** Raw (un-decoded) dim entries of a snapshot's manifest: (resolved
-    * file, col, dtype, dmin, dmax) with the VALUE strings kept verbatim
-    * so merges can carry passthrough files' entries forward without a
-    * decode/re-encode round trip. */
-  private[sources] def manifestDimEntriesRaw(snapshotDir: String)
-      : Seq[(String, String, String, String, String)] =
-    readManifest(snapshotDir).map { m =>
-      val entry =
-        ("\\{\"dfile\":\"((?:[^\"\\\\]|\\\\.)*)\",\"dcol\":\"((?:[^\"\\\\]|\\\\.)*)\"," +
-          "\"dtype\":\"(\\w+)\",\"dmin\":\"((?:[^\"\\\\]|\\\\.)*)\"," +
-          "\"dmax\":\"((?:[^\"\\\\]|\\\\.)*)\"\\}").r
-      entry.findAllMatchIn(m).map { e =>
-        (resolvePath(snapshotDir, unjs(e.group(1))), unjs(e.group(2)),
-          e.group(3), unjs(e.group(4)), unjs(e.group(5)))
-      }.toSeq
-    }.getOrElse(Nil)
-
-  /** One manifest dim-entry JSON object. */
-  private[sources] def dimEntryJson(entryName: String, col: String,
-                                    dtype: String, dmin: String,
-                                    dmax: String): String =
-    s"""{"dfile":${js(entryName)},"dcol":${js(col)},""" +
-      s""""dtype":"$dtype","dmin":${js(dmin)},"dmax":${js(dmax)}}"""
-
-  /** Remove every dim zone-map entry on `colName` from a manifest JSON —
-    * a pruning index over a column readers can no longer see (DROP
-    * COLUMN) is dead weight. */
-  private[sources] def stripDimEntries(m: String, colName: String): String = {
-    // rebuild the dimRanges SECTION from its parsed entries rather than
-    // regex-repairing the whole manifest: a global `,]` → `]` cleanup
-    // would also rewrite a string KEY BOUND whose value happens to end
-    // in ",]" — silently lowering a zone-map bound. The entry pattern
-    // itself is safe manifest-wide (a raw `{"dfile":"` cannot occur
-    // inside a JSON string: its quotes would be escaped).
-    val head = "\"dimRanges\":["
-    val start = m.indexOf(head)
-    if (start < 0) return m
-    val entry =
-      ("\\{\"dfile\":\"((?:[^\"\\\\]|\\\\.)*)\",\"dcol\":\"((?:[^\"\\\\]|\\\\.)*)\"," +
-        "\"dtype\":\"(\\w+)\",\"dmin\":\"((?:[^\"\\\\]|\\\\.)*)\"," +
-        "\"dmax\":\"((?:[^\"\\\\]|\\\\.)*)\"\\}").r
-    val entries = entry.findAllMatchIn(m).toList
-    val sectionEnd = entries.lastOption.map(_.end)
-      .getOrElse(start + head.length)
-    // writeManifest emits the section compact: `"dimRanges":[e1,...,en],`
-    require(m.startsWith("],", sectionEnd),
-      s"malformed dimRanges section in manifest (at $sectionEnd)")
-    val kept = entries.collect {
-      case e if !unjs(e.group(2)).equalsIgnoreCase(colName) => e.matched
-    }
-    val section =
-      if (kept.isEmpty) "" // emptied list drops the whole field
-      else kept.mkString(head, ",", "],")
-    m.substring(0, start) + section + m.substring(sectionEnd + 2)
-  }
-
-  /** Serialize a typed range bound pair for the manifest. */
-  private[sources] def dimTypedRepr(min: Any, max: Any): (String, String, String) =
-    (min, max) match {
-      case (a: java.lang.Long, b: java.lang.Long) => ("long", a.toString, b.toString)
-      case (a: Array[Byte], b: Array[Byte]) =>
-        ("binary", a.map(x => f"$x%02x").mkString, b.map(x => f"$x%02x").mkString)
-      case (a, b) => ("string", a.toString, b.toString)
-    }
-
   /** The manifest's non-key zone maps: column -> per-file encoded bounds
     * (files resolved to absolute paths). Empty when never attached. */
   def manifestDimRanges(snapshotDir: String): Map[String, Seq[DimRange]] =
-    readManifest(snapshotDir).map { m =>
-      val entry =
-        ("\\{\"dfile\":\"((?:[^\"\\\\]|\\\\.)*)\",\"dcol\":\"((?:[^\"\\\\]|\\\\.)*)\"," +
-          "\"dtype\":\"(\\w+)\",\"dmin\":\"((?:[^\"\\\\]|\\\\.)*)\"," +
-          "\"dmax\":\"((?:[^\"\\\\]|\\\\.)*)\"\\}").r
-      entry.findAllMatchIn(m).map { e =>
-        val enc: String => Array[Byte] = e.group(3) match {
-          case "long"   => s => KeyBytes.fromLong(s.toLong)
-          case "binary" => hexDecode
-          case _        => KeyBytes.fromString
-        }
-        (unjs(e.group(2)),
-          DimRange(resolvePath(snapshotDir, unjs(e.group(1))),
-            enc(unjs(e.group(4))), enc(unjs(e.group(5)))))
-      }.toSeq.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    }.getOrElse(Map.empty)
+    Manifest.read(snapshotDir).map(_.dims(snapshotDir)).getOrElse(Map.empty)
 
   /** Type with all nested nullability flags (and field metadata)
     * erased — the drift check compares VALUE types only; nullability
@@ -2743,46 +2257,6 @@ object MutableParquetTable {
     try s.sorted(java.util.Comparator.reverseOrder())
       .iterator().asScala.foreach(Files.delete)
     finally s.close()
-  }
-
-  /** Manifest text form of a normalized key bound: longs and strings as
-    * themselves, binary keys as lowercase hex (lossless for arbitrary
-    * bytes, which UTF-8 text is not). */
-  private def keyRepr(v: Any): String = v match {
-    case b: Array[Byte] => b.map(x => f"$x%02x").mkString
-    case other          => other.toString
-  }
-
-  private def hexDecode(s: String): Array[Byte] =
-    s.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
-
-  /** Minimal JSON string escape for the manifest's self-written format. */
-  private[sources] def js(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  /** Inverse of [[js]] — manifest readers must unescape what the writer
-    * escaped, or string keys/file names containing quotes or backslashes
-    * would compare on the wrong bytes and silently mis-prune. */
-  private[sources] def unjs(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case 'u' =>
-            sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case other => sb += other; i += 2
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
   }
 
   /** Binary search over the key-ordered file mins: last file whose

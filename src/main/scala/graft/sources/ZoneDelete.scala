@@ -53,9 +53,9 @@ private[graft] object ZoneDelete {
     * resolved delete predicate `cond`. None when the directory has no
     * manifest (bare dirs carry no zone map — nothing to prove). */
   def classify(snapshotDir: String, cond: Expression): Option[Classification] =
-    MutableParquetTable.manifestZoneMap(snapshotDir).map { zm =>
+    Manifest.read(snapshotDir).map { m =>
       val dims: Map[String, Map[String, (Array[Byte], Array[Byte])]] =
-        MutableParquetTable.manifestDimRanges(snapshotDir).map {
+        m.dims(snapshotDir).map {
           case (c, rs) =>
             c.toLowerCase ->
               rs.map(r => r.file -> (r.minBytes, r.maxBytes)).toMap
@@ -65,7 +65,7 @@ private[graft] object ZoneDelete {
       val rw = Seq.newBuilder[String]
       def put(file: String, keyBounds: Option[(Array[Byte], Array[Byte])])
           : Unit = {
-        val t = eval(cond, zm.keyName, keyBounds,
+        val t = eval(cond, m.key, keyBounds,
           col => dims.get(col.toLowerCase).flatMap(_.get(file)))
         t match {
           case AllTrue  => drop += file
@@ -73,13 +73,10 @@ private[graft] object ZoneDelete {
           case Unknown  => rw += file
         }
       }
-      zm.ranged.foreach { case (name, mnB, mxB) =>
-        put(MutableParquetTable.resolvePath(snapshotDir, name),
-          Some((mnB, mxB)))
-      }
-      zm.unprunable.foreach { name =>
-        put(MutableParquetTable.resolvePath(snapshotDir, name), None)
-      }
+      m.ranges(snapshotDir).getOrElse(Nil).foreach(r =>
+        put(r.file, Some((r.minBytes, r.maxBytes))))
+      m.files.filter(_.range.isEmpty).foreach(e =>
+        put(MutableParquetTable.resolvePath(snapshotDir, e.file), None))
       Classification(drop.result(), keep.result(), rw.result())
     }
 

@@ -198,15 +198,7 @@ object AggView {
   }
 
   /** The table's merge key, read from the latest snapshot's manifest. */
-  private def keyOf(tableRoot: String): String = {
-    val latest = CdcMergeSink.latestSnapshot(tableRoot)
-    graft.sources.MutableParquetTable.readManifest(latest) match {
-      case Some(m) =>
-        "\"key\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(m)
-          .map(_.group(1)).getOrElse(
-            throw new IllegalStateException(s"manifest in $latest has no key"))
-      case None => throw new IllegalStateException(
-        s"$latest is not a committed merge snapshot")
-    }
-  }
+  private def keyOf(tableRoot: String): String =
+    graft.sources.Manifest.get(CdcMergeSink.latestSnapshot(tableRoot),
+      "not a committed merge snapshot").key
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.MutableParquetTable
+import graft.sources.{Manifest, MutableParquetTable}
 
 /** Streaming CDC apply: a change stream (upserts/deletes) continuously
   * merged into a key-sorted Parquet table through the copy-on-write path.
@@ -110,24 +110,16 @@ object CdcMergeSink {
   private[graft] def sidecarEpochs(tableRoot: String): Map[String, Long] = {
     val p = Paths.get(tableRoot, "_txns.json")
     if (!Files.exists(p)) return Map.empty
-    val json = new String(Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8)
-    "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*(-?\\d+)".r.findAllMatchIn(json)
-      .map(m => unescape(m.group(1)) -> m.group(2).toLong).toMap
+    import scala.jdk.CollectionConverters._
+    Manifest.mapper.readTree(p.toFile).properties.asScala
+      .map(e => e.getKey -> e.getValue.asLong).toMap
   }
 
-  private def escape(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
-
-  private def unescape(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-
   private def writeSidecar(tableRoot: String, epochs: Map[String, Long]): Unit = {
-    val body = epochs.toSeq.sortBy(_._1)
-      .map { case (a, e) => s""""${escape(a)}":$e""" }
-      .mkString("{", ",", "}")
+    val body = Manifest.mapper.createObjectNode()
+    epochs.toSeq.sortBy(_._1).foreach { case (a, e) => body.put(a, e) }
     val tmp = Paths.get(tableRoot, s".txns-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(tmp, body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Files.write(tmp, Manifest.mapper.writeValueAsBytes(body))
     Files.move(tmp, Paths.get(tableRoot, "_txns.json"),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)

@@ -160,4 +160,22 @@ class AggViewSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       AggView.refresh(spark, root, Seq("cat"), Seq.empty))
   }
+
+  test("a merge key named with a quote and a backslash maintains the view") {
+    val root = java.nio.file.Files.createTempDirectory("graft-aggvkey").toString
+    val key = "i\"d\\x"
+    val t = GraftTable.create(spark.range(0, 40).select(col("id").as(key),
+        concat(lit("g"), (col("id") % 3).cast("string")).as("cat"),
+        col("id").cast("double").as("v")),
+      root, key, numFiles = 2)
+    t.commit(Seq((5L, "g9", 50.0, "upsert"), (6L, "", 0.0, "delete"))
+      .toDF(key, "cat", "v", "op"))
+    // the view's change feed is keyed by the manifest key, which must
+    // come back unescaped
+    assert(AggView.refresh(spark, root, Seq("cat"), Seq("v")) === 1)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("cat").collect().map(_.toSeq).toSeq
+    assert(rows(AggView.read(spark, root)) === rows(IncrementalAgg.fullAgg(
+      CdcMergeSink.readAsOf(spark, root, 0L), Seq("cat"), Seq("v"))))
+  }
 }

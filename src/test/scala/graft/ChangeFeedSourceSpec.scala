@@ -267,13 +267,11 @@ class ChangeFeedSourceSpec extends SparkSpec {
       Thread.sleep(5) // distinct commit times
     }
     def timeOf(v: Long): Long =
-      graft.sources.MutableParquetTable.readManifest(s"$root/v$v")
-        .flatMap("\"committedAtMs\":(\\d+)".r.findFirstMatchIn(_))
-        .get.group(1).toLong
+      graft.sources.Manifest.read(s"$root/v$v").flatMap(_.committedAtMs).get
     val counted = new java.util.concurrent.atomic.AtomicInteger
-    def countingRead(dir: String): Option[String] = {
+    def countingRead(dir: String): Option[graft.sources.Manifest] = {
       counted.incrementAndGet()
-      graft.sources.MutableParquetTable.readManifest(dir)
+      graft.sources.Manifest.read(dir)
     }
     // correctness at every boundary, each within the logarithmic budget
     val budget = (math.log(8) / math.log(2)).ceil.toInt + 1 // = 4

@@ -188,11 +188,9 @@ class CowMergeSpec extends SparkSpec {
 
     // committed: manifest present, inventory consistent with the directory
     assert(MutableParquetTable.isCommitted(res.snapshotDir))
-    val manifest = MutableParquetTable.readManifest(res.snapshotDir).get
-    assert(manifest.contains("\"key\":\"c_custkey\""))
-    val totalRows = "\"totalRows\":(\\d+)".r
-      .findFirstMatchIn(manifest).get.group(1).toLong
-    assert(totalRows === c.count())
+    val manifest = graft.sources.Manifest.read(res.snapshotDir).get
+    assert(manifest.key === "c_custkey")
+    assert(manifest.totalRows === c.count())
 
     // simulated crash: snapshot dir with data files but no manifest —
     // must read as partial, while the committed snapshot stays readable
@@ -201,7 +199,7 @@ class CowMergeSpec extends SparkSpec {
       Files.copy(p, Paths.get(crashed, p.getFileName.toString))
     }
     assert(!MutableParquetTable.isCommitted(crashed))
-    assert(MutableParquetTable.readManifest(crashed).isEmpty)
+    assert(graft.sources.Manifest.read(crashed).isEmpty)
     assert(spark.read.parquet(res.snapshotDir).count() === c.count())
 
     // trusted read: a stray part file dropped into the snapshot dir (a

@@ -387,7 +387,7 @@ class DropColumnSpec extends SparkSpec {
     t.commit(Seq(("aaa", 5L, "x2", "upsert"))
       .toDF("k", "v", "extra", "op")) // v0
     MutableParquetTable.attachDimRanges(spark, s"$root/v0", Seq("extra"))
-    t.dropColumn("extra") // v1 — stripDimEntries rewrites the manifest
+    t.dropColumn("extra") // v1 — the drop sheds the column's dim entries
     val ranges = MutableParquetTable.manifestRanges(s"$root/v1", "k").get
     assert(ranges.exists(_.maxBytes.sameElements(
         graft.sources.KeyBytes.fromString("zzz,]"))),
@@ -397,5 +397,22 @@ class DropColumnSpec extends SparkSpec {
     t.commit(Seq(("zzz,]", 9L, "upsert")).toDF("k", "v", "op")) // v2
     assert(t.read().where(col("k") === "zzz,]").head().getLong(1) === 9L)
     assert(t.read().count() === 2)
+  }
+
+  test("a dropped column whose name holds a comma stays blocklisted") {
+    val root = freshRoot()
+    val t = GraftTable.create(
+      (0L until 20L).map(i => (i, i * 10, s"e$i")).toDF("k", "v", "a,b"),
+      root, "k", numFiles = 2)
+    t.dropColumn("a,b") // v0
+    // re-adding the name would resurrect the pre-drop values still in
+    // the files (k=7 would read "e7" where it must read null)
+    val e = intercept[IllegalArgumentException] {
+      t.commit(Seq((1L, 1L, "zz", "upsert")).toDF("k", "v", "a,b", "op"))
+    }
+    assert(e.getMessage.contains("DROPPED"), e.getMessage)
+    assert(MutableParquetTable.manifestDroppedColumns(s"$root/v0") ===
+      Seq("a,b"))
+    assert(t.read().schema.fieldNames.toSeq === Seq("k", "v"))
   }
 }

@@ -108,11 +108,14 @@ object OptimisticCommit {
               .getOrElse(s"$tableRoot/base")
             val dir = s"$tableRoot/.tx-${
               java.util.UUID.randomUUID().toString.take(12)}"
-            val t = MutableParquetTable(spark, baseDir, key, passthrough,
-              MutableParquetTable.manifestMoreKeys(baseDir))
+            // the base manifest is read once and handed down: the handle,
+            // the merge and its manifest writer all use this value
+            val base = Manifest.read(baseDir)
+            val t = MutableParquetTable.opened(spark, baseDir, key,
+              passthrough, base)
             // a FAILING merge (bad batch, not a crash) must not leave
             // per-attempt staging debris behind for vacuum to find
-            val mr = try t.merge(collapsed, opCol, Some(dir))
+            val mr = try t.mergeFrom(base, collapsed, opCol, Some(dir))
               catch { case e: Throwable => deleteQuietly(dir); throw e }
             Staged(dir, baseV, mr)
         }

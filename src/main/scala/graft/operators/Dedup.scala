@@ -1113,9 +1113,13 @@ object Dedup {
     * pairs frame CONCURRENTLY with the index commit (guide §2.6: the
     * pair write and the commit touch independent storage) and joined
     * before returning — the streaming sink's per-epoch pair append
-    * rides the commit's tail instead of serializing after it. Failure
-    * semantics match the sequential form: both sides have quiesced
-    * before any exception propagates. */
+    * rides the commit's tail instead of serializing after it. Both sides
+    * have quiesced before any exception propagates; when both fail, the
+    * commit's exception propagates with the sink's attached as
+    * suppressed. The sink may have appended its pairs before a commit
+    * failed, so its output is at-least-once: a retried epoch appends
+    * them again, and consumers must tolerate duplicates. A sink needs
+    * `emitPairs` (the seeding path computes no pairs to hand it). */
   def dedupIncremental(indexRoot: String, newDocs: DataFrame,
                        textCol: String, idCol: String,
                        shingleK: Int = 3, bands: Int = 8,
@@ -1128,6 +1132,8 @@ object Dedup {
                        emitPairs: Boolean = true,
                        pairsSink: Option[DataFrame => Unit] = None)
       : IncrementalDedup = {
+    require(pairsSink.isEmpty || emitPairs,
+      "a pairsSink needs emitPairs = true — the seeding path finds no pairs")
     val spark = newDocs.sparkSession
     val numHashes = bands * rowsPerBand
     val newRows = minHashIndexRows(newDocs, textCol, idCol, shingleK,
@@ -1210,7 +1216,16 @@ object Dedup {
       val version =
         try commitIndex(spark, indexRoot, newRows, exists,
           extendIndex, probeLayout, Seq("band", "bucket"), indexFiles)
-        finally sinkF.foreach(f => Overlap.awaitAll(Seq(f)))
+        catch { case e: Throwable =>
+          // the sink still quiesces; its failure must not replace the
+          // commit's
+          sinkF.foreach(f => try Overlap.awaitAll(Seq(f)) catch {
+            case sinkError: Throwable if sinkError ne e =>
+              e.addSuppressed(sinkError)
+          })
+          throw e
+        }
+      sinkF.foreach(f => Overlap.awaitAll(Seq(f)))
       IncrementalDedup(pairs, version, overflow)
     } finally { newRows.unpersist(blocking = false): Unit }
   }

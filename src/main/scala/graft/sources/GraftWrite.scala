@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
@@ -56,22 +56,7 @@ final class GraftWriteBuilder(spark: SparkSession, table: GraftBatchTable,
         "root (no base/) — writes need the version chain"))
     val key = table.keyName.getOrElse(throw new IllegalStateException(
       s"${table.snapshotDir} has no manifest key to merge on"))
-    // ParquetWriteSupport reads its settings from the task-side
-    // Configuration; resolve them HERE from the session's SQLConf (which
-    // knows the defaults) — Configuration.get of an unset key is null and
-    // the write support does not re-default
-    import org.apache.spark.sql.internal.SQLConf
-    val hc = spark.sessionState.newHadoopConf()
-    val sc = spark.sessionState.conf
-    Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT,
-        SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED,
-        SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
-      .foreach(e => hc.set(e.key, sc.getConf(e).toString))
-    // micros timestamps (stat-carrying) + no rebase, matching every
-    // other engine write path
-    hc.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
-    hc.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key, "CORRECTED")
-    hc.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key, "CORRECTED")
+    val hc = GraftDataWriter.hadoopConf(spark)
     new GraftWrite(root, key, info.schema(), new SerializableConfiguration(hc),
       replace, info.queryId(),
       info.options().getOrDefault("opColumn", "op"),
@@ -343,6 +328,10 @@ final class GraftDataWriter(path: String, schema: StructType,
 
   private var writer: ParquetWriter[InternalRow] = _
 
+  /** The written file's footer — valid after a [[commit]] that staged a
+    * file, without reading the file back. */
+  def footer: ParquetMetadata = writer.getFooter
+
   private def open(): ParquetWriter[InternalRow] = {
     val c = new Configuration(conf)
     ParquetWriteSupport.setSchema(schema, c)
@@ -378,3 +367,26 @@ final class GraftDataWriter(path: String, schema: StructType,
 }
 
 case object GraftNothingStaged extends WriterCommitMessage
+
+object GraftDataWriter {
+
+  /** The session's Hadoop configuration with the settings
+    * ParquetWriteSupport reads on the task side, resolved here from the
+    * session's SQLConf (which knows the defaults) — Configuration.get of
+    * an unset key is null and the write support does not re-default.
+    * Timestamps are written as micros (stat-carrying) with no rebase,
+    * matching every other engine write path. */
+  def hadoopConf(spark: SparkSession): Configuration = {
+    import org.apache.spark.sql.internal.SQLConf
+    val hc = spark.sessionState.newHadoopConf()
+    val sc = spark.sessionState.conf
+    Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT,
+        SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED,
+        SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
+      .foreach(e => hc.set(e.key, sc.getConf(e).toString))
+    hc.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
+    hc.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key, "CORRECTED")
+    hc.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key, "CORRECTED")
+    hc
+  }
+}

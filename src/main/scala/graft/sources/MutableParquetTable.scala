@@ -86,7 +86,9 @@ final case class MergeResult(
   * at row-group granularity inside one file (raw passthrough,
   * ParquetRewriter.java:312-322); at cluster scale the natural CoW unit is
   * the *file* — clean files are passed through as metadata-only links and
-  * never opened, dirty files are rewritten by a distributed merge job.
+  * never opened, and each dirty file is rewritten by ONE sorted pass that
+  * merges in the batch rows it owns ([[CowRewrite]]): at most one task per
+  * executor slot, and the batch is the only data that is shuffled.
   *
   * Keys may be any numeric type or strings — the reference's canonical key
   * is a uuid `Binary` under signed-lexicographic order (README.md:26-43,
@@ -96,9 +98,10 @@ final case class MergeResult(
   *
   * Layout invariant (README.md:21): files hold disjoint key ranges, each
   * internally sorted — produced by [[ParquetTable.writeSorted]] and
-  * PRESERVED by `merge`: rewritten data is sliced at the neighboring clean
-  * files' range boundaries (per dirty run), so no output file ever spans a
-  * passthrough file's range and chained merges keep routing correct.
+  * PRESERVED by `merge`: a dirty file's output holds its own rows plus the
+  * batch keys it owns (the keys below the next file's minimum), so no
+  * output ever spans another file's range and chained merges keep routing
+  * correct.
   * Dirty-file detection = footer key ranges (the reference's loadStats zone
   * map, ParquetRewriter.java:239-251) binary-searched against the update
   * keys (the seekToKey routing of ParquetRewriter.java:263-283, made
@@ -114,20 +117,26 @@ final case class MergeResult(
   *
   * Scale notes (100 TB): footer stats are read on executors; the per-file
   * ranges involved in routing are tiny (one row per file) and broadcast;
-  * only dirty files are scanned, and the rewrite job is one task per dirty
-  * file's worth of data. A no-op merge touches zero data files
-  * (noChangesTest analog, ParquetRewriterTests.java:318-323).
+  * only dirty files are scanned, in at most `defaultParallelism` tasks of
+  * contiguous dirty files balanced by bytes, and the tasks report their
+  * outputs' zone maps, so the commit reads no footers back. A no-op merge
+  * touches zero data files (noChangesTest analog,
+  * ParquetRewriterTests.java:318-323).
   */
-final class MutableParquetTable(spark: SparkSession, val dir: String,
-    val key: String,
-    val passthrough: MutableParquetTable.Passthrough = MutableParquetTable.Link,
-    val moreKeys: Seq[String] = Nil) {
+final class MutableParquetTable private (spark: SparkSession, val dir: String,
+    val key: String, val passthrough: MutableParquetTable.Passthrough,
+    val moreKeys: Seq[String], opened: Option[Manifest]) {
+
+  def this(spark: SparkSession, dir: String, key: String,
+           passthrough: MutableParquetTable.Passthrough = MutableParquetTable.Link,
+           moreKeys: Seq[String] = Nil) =
+    this(spark, dir, key, passthrough, moreKeys, Manifest.read(dir))
 
   import MutableParquetTable._
 
   // fail fast before any read or mutation of a snapshot whose manifest
   // requires features this library version does not implement
-  MutableParquetTable.requireFeaturesSupported(dir)
+  MutableParquetTable.requireFeaturesSupported(dir, opened)
 
   /** Full merge identity: `key` is the LEADING column — it alone drives
     * file routing, zone maps, and slicing (files are sorted by the whole
@@ -216,32 +225,31 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
   def dirtyFiles(updateKeys: DataFrame): Seq[String] =
     routedFiles(sortedRanges(), updateKeys)
 
-  private def sortedRanges(): Seq[ParquetStats.FileKeyRange] =
+  private def sortedRanges(src: Option[Manifest] = Manifest.read(dir))
+      : Seq[ParquetStats.FileKeyRange] =
     // committed snapshots carry their zone map in the manifest — trust it
     // (the committed-read discipline) and skip the per-file footer probes;
     // bare directories fall back to footer IO
-    MutableParquetTable.manifestRanges(dir, key)
+    src.filter(_.key == key).flatMap(_.ranges(dir))
       .getOrElse(ParquetStats.fileKeyRangesTyped(spark, dir, key))
       .sortBy(_.minBytes)(KeyBytes.ordering)
 
   private def routedFiles(ranges: Seq[ParquetStats.FileKeyRange],
                           updateKeys: DataFrame): Seq[String] = {
     if (ranges.isEmpty) return Seq.empty
-    val mins: Array[(String, Array[Byte])] =
-      ranges.map(r => (r.file, r.minBytes)).toArray
-    val bcast = spark.sparkContext.broadcast(mins)
+    val bcast = spark.sparkContext.broadcast(ranges.map(_.minBytes).toArray)
     val keyName = updateKeys.columns.head
     import spark.implicits._
     // per-partition dedup into a local set, then a driver union — one
-    // map-only stage, no shuffle: at most #files distinct names leave each
-    // partition, so the collect is bounded by partitions × files
+    // map-only stage, no shuffle: at most #files distinct owners leave
+    // each partition, so the collect is bounded by partitions × files
     def routeAll[T](ds: Dataset[T])(enc: T => Array[Byte]): Seq[String] =
       ds.mapPartitions { it =>
-          val rs = bcast.value
-          val seen = scala.collection.mutable.HashSet.empty[String]
-          it.foreach(k => seen += route(enc(k), rs))
+          val mins = bcast.value
+          val seen = scala.collection.mutable.HashSet.empty[Int]
+          it.foreach(k => seen += CowRewrite.ownerOf(enc(k), mins))
           seen.iterator
-        }.collect().toSeq
+        }.collect().toSeq.map(i => ranges(i).file)
     val routed: Seq[String] =
       updateKeys.schema.head.dataType match {
         case StringType =>
@@ -270,8 +278,8 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
     * NO file (a true insert), and a key's holders are ALL marked dirty.
     * Cost ∝ one key-column scan of the table per merge — at large scale a
     * few percent of the bytes a full rewrite would touch. */
-  private def holderFileNames(batch: DataFrame,
-                              allFiles: Seq[String]): Set[String] = {
+  private def holderFileNames(batch: DataFrame, allFiles: Seq[String],
+                              tableSchema: StructType): Set[String] = {
     // aliased key expressions on both sides: handles top-level AND nested
     // (dotted-path) keys with one semi-join shape — same discipline as
     // MergeOps/carryTombstonesMinus
@@ -289,11 +297,21 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
 
   /** Copy-on-write merge. `batch` = base schema + op column.
     * Writes a new snapshot directory: clean files hard-linked (fallback:
-    * copied) without ever being opened; dirty files re-merged and rewritten
-    * sorted, sliced at clean-file range boundaries; manifest written last
-    * as the commit marker. Returns the merge summary. */
+    * copied) without ever being opened; on the key-clustered layout each
+    * dirty file is rewritten by one sorted pass that merges in the batch
+    * rows it owns ([[CowRewrite]]) — one job of at most
+    * `defaultParallelism` tasks, in which the batch is the only shuffle;
+    * manifest written last as the commit marker, from the zone maps the
+    * rewrite tasks report. Returns the merge summary. */
   def merge(batch0: DataFrame, opCol: String = "op",
-            snapshotDir: Option[String] = None): MergeResult = {
+            snapshotDir: Option[String] = None): MergeResult =
+    mergeFrom(Manifest.read(dir), batch0, opCol, snapshotDir)
+
+  /** [[merge]] against `src`, this snapshot's manifest as the caller
+    * already read it — the only manifest read of the merge. */
+  private[graft] def mergeFrom(src: Option[Manifest], batch0: DataFrame,
+                               opCol: String,
+                               snapshotDir: Option[String]): MergeResult = {
     // composite keys reject nulls per row (codegen'd branch, no extra
     // pass): a null in any key column would silently fail to match its
     // base row (SQL null-join semantics) and leave stale duplicates
@@ -309,7 +327,6 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
     // batch's upserted rows are validated (deletes can't violate, and
     // the table already satisfies its checks by induction) — one
     // batch-sized job, never a table scan
-    val src = Manifest.read(dir)
     val batch = GraftDefaults.applyAndEnforce(batchK,
       src.map(_.defaults).getOrElse(Map.empty),
       src.map(_.generated).getOrElse(Map.empty),
@@ -318,10 +335,16 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
     if (declaredChecks.nonEmpty)
       GraftChecks.enforce(batch.where(col(opCol) =!= lit("delete")),
         declaredChecks, s"merge into $dir")
+    // this merge's schema and rename mapping come from `src`, not from
+    // the handle's own lazily read copies
+    val tableSchema = src.flatMap(_.schema)
+      .getOrElse(spark.read.parquet(dir).schema)
+    val renames = src.map(_.renames).getOrElse(Map.empty[String, String])
     // HASH-BUCKETED layout: routing is by bucket id, not key ranges —
     // the range/overlap machinery below assumes key-clustered files
     src.flatMap(_.buckets).foreach { n =>
-      return mergeBucketed(n, batch, opCol, snapshotDir)
+      return mergeBucketed(n, batch, opCol, snapshotDir, src, tableSchema,
+        renames)
     }
     val outDir = snapshotDir.getOrElse(s"$dir-v${System.currentTimeMillis()}")
     Files.createDirectories(Paths.get(outDir))
@@ -334,36 +357,25 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
       mark = now
     }
 
-    val ranges = sortedRanges()
+    val ranges = sortedRanges(src)
     phase("ranges")
-    val allFiles = MutableParquetTable.tableFiles(dir)
+    val allFiles = MutableParquetTable.tableFiles(dir, src)
     // OVERLAPPED layouts (z-order or any non-key-clustered file set):
-    // per-file key ranges intersect, so owner-routing plus non-cut
-    // expansion would cascade the whole overlapping cluster dirty — every
-    // merge a full rewrite. Route exactly instead: one key-column scan
-    // joined to the batch keys finds the true holder files.
+    // per-file key ranges intersect, so owner-routing would cascade the
+    // whole overlapping cluster dirty — every merge a full rewrite. Route
+    // exactly instead: one key-column scan joined to the batch keys finds
+    // the true holder files.
     val overlapped = ranges.size > 1 && (0 until ranges.size - 1).exists(i =>
       KeyBytes.compare(ranges(i).maxBytes, ranges(i + 1).minBytes) >= 0)
     // dirty/clean split by FILE NAME: footer stats yield `file:/…` URIs
     // while the local listing yields the caller's path form (possibly
     // relative) — comparing full paths would silently classify every file
-    // clean AND re-merge the dirty ones (duplicate rows)
+    // clean AND re-merge the dirty ones (duplicate rows). On the
+    // key-clustered layout every file boundary is a cut (max < next min),
+    // so a key's owner is the one file that can hold it.
     val dirtyNames =
-      if (overlapped) holderFileNames(batch, allFiles)
-      else {
-        val routed = routedFiles(ranges, batch.select(key)).map(fileName).toSet
-        // non-cut expansion (see KeyBytes.expandNonCut): the run slices
-        // below are key-range filters, so a key straddling a file boundary
-        // (repeated keys — out of the primary-key contract, matching the
-        // reference's unique-key requirement) would otherwise lose rows or
-        // leave stale copies beside a replacement
-        KeyBytes.expandNonCut(ranges.size,
-            i => ranges(i).minBytes, i => ranges(i).maxBytes,
-            ranges.zipWithIndex.collect {
-              case (r, i) if routed(fileName(r.file)) => i
-            }.toSet)
-          .map(i => fileName(ranges(i).file))
-      }
+      if (overlapped) holderFileNames(batch, allFiles, tableSchema)
+      else routedFiles(ranges, batch.select(key)).map(fileName).toSet
     phase("route")
     val (dirty, clean) = allFiles.partition(f => dirtyNames.contains(fileName(f)))
 
@@ -406,7 +418,9 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
       else if (newFields.isEmpty) tableSchema
       else StructType(tableSchema.fields ++ newFields.map(_.copy(nullable = true)))
 
+    val tombstones = MutableParquetTable.tombstoneDf(spark, dir, src)
     var inserted = 0
+    var written = Seq.empty[CowRewrite.Written]
     // overlapped layout with NO holder files: upserts are all genuine
     // inserts (the exact join proved every batch key absent from every
     // file) and need a new file; a delete-only probe of absent keys
@@ -415,26 +429,29 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
       if (overlapped && dirty.isEmpty && clean.nonEmpty)
         !batch.where(col(opCol) =!= lit("delete")).isEmpty
       else dirty.nonEmpty || clean.isEmpty
-    if (needRewrite) {
-      // distributed re-merge of just the dirty slice; explicit schema, so
-      // no per-merge footer-inference job runs. Deletion tombstones are
-      // subtracted from the base read: tombstoned rows must neither
-      // survive the rewrite physically nor count as matched base rows
-      val base = MutableParquetTable.applyTombstones(spark, dir,
+    if (needRewrite && ranges.nonEmpty && !overlapped) {
+      // KEY-CLUSTERED layout: one sorted pass per dirty file; rewritten
+      // files carry PHYSICAL column names (renamed tables), and tombstoned
+      // keys of dirty files act as deletes
+      written = CowRewrite.run(spark, outDir, keys, ranges, dirtyNames,
+        src.map(_.bytesByName).getOrElse(Map.empty), batch, opCol,
+        mergedSchema, renames, tombstones)
+      inserted = written.size
+    } else if (needRewrite) {
+      // the empty table and the overlapped layout re-merge relationally;
+      // explicit schema, so no per-merge footer-inference job runs.
+      // Deletion tombstones are subtracted from the base read: tombstoned
+      // rows must neither survive the rewrite physically nor count as
+      // matched base rows
+      val base0 =
         if (dirty.nonEmpty)
           MutableParquetTable.readFilesLogical(spark, dirty, mergedSchema,
             renames)
         else spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          batchData.schema),
-        keys)
-      // Output partitioning is DETERMINISTIC (known run boundaries →
-      // bucket → probe-hash partition id), so the merge join streams
-      // straight into the write exchange with no range-sampling pass.
-      // Persist only when several runs each re-slice the merged set;
-      // the common contiguous-dirty case is one pass end to end.
-      // rewritten files carry PHYSICAL column names (renamed tables):
-      // slicing/sorting below touch only key columns, which never rename
+          batchData.schema)
+      val base = tombstones.fold(base0)(withoutKeys(base0, _, keys))
+      // rewritten files carry PHYSICAL column names (renamed tables)
       val merged0 = MutableParquetTable.toPhysicalNames(
         MergeOps.applyMutationsMulti(base, batch, keys, opCol), renames)
       if (ranges.isEmpty) {
@@ -443,14 +460,13 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
             .write.mode("append").parquet(outDir)
         }
         inserted = 1
-      } else if (overlapped) {
-        // OVERLAPPED layout: the run-slicing below depends on disjoint
-        // file ranges, which this layout does not have. Rewrite all
-        // holder files (plus inserts) as ONE range-partitioned run:
-        // output files are key-disjoint among THEMSELVES (range exchange
-        // + in-partition sort); they may still overlap the untouched
-        // files, but routing on an overlapped layout is always the exact
-        // holder join above, which needs no range invariant.
+      } else {
+        // OVERLAPPED layout: rewrite all holder files (plus inserts) as
+        // ONE range-partitioned run: output files are key-disjoint among
+        // THEMSELVES (range exchange + in-partition sort); they may still
+        // overlap the untouched files, but routing on an overlapped
+        // layout is always the exact holder join above, which needs no
+        // range invariant.
         val nOut = math.max(1, dirty.size)
         val merged = if (nOut > 1)
           merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -462,151 +478,32 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
             .write.mode("append").parquet(outDir)
         } finally if (nOut > 1) merged.unpersist(false)
         inserted += nOut
-      } else {
-        // Maximal runs of CONSECUTIVE dirty files in global key order.
-        // Each run is rewritten separately, sliced to
-        // [run.head.min, nextFile.min): when dirty files are
-        // non-contiguous (files 1 and 3 dirty, 2 clean), one merged
-        // write could otherwise span clean file 2's range — a later merge
-        // would then route keys inside that spanning file to file 2,
-        // leaving stale rows behind. Slicing at the clean boundaries
-        // preserves the disjoint-range invariant across chained merges.
-        val dirtyIdx = ranges.zipWithIndex.collect {
-          case (r, i) if dirtyNames.contains(fileName(r.file)) => i
-        }
-        val runs = dirtyIdx.foldLeft(Vector.empty[Vector[Int]]) {
-          case (acc, i) if acc.nonEmpty && acc.last.last == i - 1 =>
-            acc.init :+ (acc.last :+ i)
-          case (acc, i) => acc :+ Vector(i)
-        }
-        val merged =
-          if (runs.size > 1)
-            merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else merged0
-        try {
-          // bounds come from footer stats in the NORMALIZED key domain
-          // (epoch days/micros for date/timestamp keys), so all range
-          // comparisons use the normalized column
-          val nk = MutableParquetTable.normalizedKeyCol(
-            MutableParquetTable.fieldTypeAt(merged.schema, key), col(key))
-          def writeRun(run: Vector[Int], target: String): Unit = {
-            val lower = if (run.head == 0) None else Some(ranges(run.head).min)
-            val upper = if (run.last == ranges.size - 1) None
-                        else Some(ranges(run.last + 1).min)
-            // single run ⇒ the slice is provably the whole merged set
-            // (dirty-file rows lie in their own ranges ⊂ [lower, upper);
-            // batch keys route into the run ⇒ lower <= k < upper), so skip
-            // the filter pass over the merged data
-            val slice = if (runs.size == 1) merged else (lower, upper) match {
-              case (Some(lo), Some(up)) =>
-                merged.where(nk >= lit(lo) && nk < lit(up))
-              case (Some(lo), None) => merged.where(nk >= lit(lo))
-              case (None, Some(up)) => merged.where(nk < lit(up))
-              case (None, None)     => merged
-            }
-            // file i of the run owns [min_i, min_{i+1}) — the ORIGINAL
-            // dirty files' boundaries, so the rewritten layout mirrors the
-            // one it replaces. Bucket by binary-search-equivalent count of
-            // crossed boundaries, then map bucket → partition through the
-            // probe table (bucket i lands EXACTLY in partition i), giving
-            // disjoint sorted files with zero sampling.
-            def out(body: => Unit): Unit =
-              ParquetTable.withMicrosTimestamps(spark)(body)
-            if (run.size == 1) out {
-              slice.repartition(1).sortWithinPartitions(keys.map(col): _*)
-                .write.mode("append").parquet(target)
-            } else {
-              val bounds = run.tail.map(i => ranges(i).min)
-              // bucket = count of run boundaries <= key. Long-normalized
-              // domains (integral/date/timestamp keys) route through the
-              // codegen'd binary search — the HOF filter evaluates an
-              // interpreted lambda per BOUNDARY per row, O(dirtyFiles)
-              // work that dominates wide rewrites; strings/binary keep
-              // the HOF form (boundary counts there are small and the
-              // comparison is type-dispatched anyway)
-              val longDomain = bounds.forall(_.isInstanceOf[java.lang.Long])
-              val bucket =
-                if (longDomain)
-                  // cast: some normalized domains are INT-typed columns
-                  // (epoch days) against Long boundary stats — widening
-                  // preserves order and equality
-                  org.apache.spark.sql.classic.GraftShims.column(
-                    graft.plans.SearchSortedLong(
-                      org.apache.spark.sql.classic.GraftShims.expression(
-                        nk.cast("long")),
-                      bounds.map(_.asInstanceOf[java.lang.Long].longValue).toArray))
-                else {
-                  val boundsCol = array(bounds.map(lit(_)): _*)
-                  size(filter(boundsCol, b => nk >= b))
-                }
-              val probes = MutableParquetTable.partitionProbes(run.size)
-              out {
-                slice
-                  .withColumn("__graft_part",
-                    element_at(lit(probes), bucket + 1))
-                  .repartition(run.size, col("__graft_part"))
-                  .drop("__graft_part")
-                  .sortWithinPartitions(keys.map(col): _*)
-                  .write.mode("append").parquet(target)
-              }
-            }
-          }
-          if (runs.size == 1) {
-            writeRun(runs.head, outDir)
-          } else {
-            // CONCURRENT run jobs: scattered-dirty merges would otherwise
-            // serialize one Spark job per run and idle the cluster between
-            // them. Jobs cannot share one output dir (each committer's
-            // cleanup deletes the shared _temporary), so every run writes
-            // a dot-staging dir (invisible to readers) and its files move
-            // into the snapshot under run-unique names — driver-side
-            // renames, metadata-priced.
-            import scala.concurrent.{Await, Future}
-            import scala.concurrent.ExecutionContext.Implicits.global
-            val jobs = runs.zipWithIndex.map { case (run, i) => Future {
-              val staging = s"$outDir/.staging-run-$i"
-              writeRun(run, staging)
-              import scala.jdk.CollectionConverters._
-              val st = Files.list(Paths.get(staging))
-              val parts = try st.iterator().asScala
-                .filter(_.getFileName.toString.endsWith(".parquet")).toList
-              finally st.close()
-              parts.foreach { p =>
-                Files.move(p,
-                  Paths.get(outDir, s"run$i-${p.getFileName.toString}"),
-                  StandardCopyOption.ATOMIC_MOVE)
-              }
-              deleteDir(Paths.get(staging))
-            }}
-            Await.result(Future.sequence(jobs),
-              scala.concurrent.duration.Duration.Inf)
-          }
-          inserted += runs.map(_.size).sum
-        } finally if (runs.size > 1) merged.unpersist(false)
       }
     }
     phase("rewrite")
 
     // manifest: passthrough files carry their already-read ranges (their
-    // bytes are untouched — hard links); footer IO is paid only for the
-    // files this merge actually wrote. A no-op merge writes its manifest
-    // with ZERO additional IO — still metadata-only end to end.
+    // bytes are untouched — hard links) and the rewrite's outputs the
+    // ranges their tasks reported; footer IO is paid only for files the
+    // relational paths wrote. A no-op merge writes its manifest with
+    // ZERO additional IO — still metadata-only end to end.
     val cleanNames = clean.map(fileName).toSet
     val carried = ranges.filter(r => cleanNames.contains(fileName(r.file)))
+    val reported = written.map(w => fileName(w.file)).toSet
     val newFiles = {
       import scala.jdk.CollectionConverters._
       val s = Files.list(Paths.get(outDir))
       try s.iterator().asScala
         .filter(p => MutableParquetTable.isDataFileName(p.getFileName.toString))
         .map(_.toString).toList
-        .filterNot(f => cleanNames.contains(fileName(f)))
+        .filterNot(f => cleanNames.contains(fileName(f)) || reported(fileName(f)))
       finally s.close()
     }
     // tombstones carried = source sidecar minus this batch's keys
     // (upserts resurrect; rewritten files already dropped their rows)
-    val ts = carryTombstonesMinus(batch, outDir)
+    val ts = carryTombstonesMinus(batch, outDir, tombstones)
     writeManifest(outDir, carried, newFiles, Some(mergedSchema), pt.refNames,
-      tombstones = ts)
+      tombstones = ts, source = src, written = written)
     phase("manifest")
     MergeResult(outDir, dirty, clean, inserted, phases.toMap,
       filesHardLinked = pt.linked, filesReferenced = pt.referenced,
@@ -1153,9 +1050,9 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
     * sidecar minus this batch's keys (an upsert RESURRECTS its key; a
     * batch delete is applied physically by the rewrite). Writes the new
     * sidecar into `outDir` and returns its row count (None = none). */
-  private def carryTombstonesMinus(batch: DataFrame,
-                                   outDir: String): Option[Long] =
-    MutableParquetTable.tombstoneDf(spark, dir).map { old =>
+  private def carryTombstonesMinus(batch: DataFrame, outDir: String,
+                                   tombstones: Option[DataFrame]): Option[Long] =
+    tombstones.map { old =>
       val batchKeys = MutableParquetTable.asTombstoneKeys(batch, keys)
         .distinct()
       val kept = old.join(broadcast(batchKeys),
@@ -1190,7 +1087,9 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
     * min/max (buckets span the key space, so range pruning degrades —
     * the trade the layout buys its shuffle-free joins with). */
   private def mergeBucketed(n: Int, batch: DataFrame, opCol: String,
-                            snapshotDir: Option[String]): MergeResult = {
+                            snapshotDir: Option[String], src: Option[Manifest],
+                            tableSchema: StructType,
+                            renames: Map[String, String]): MergeResult = {
     val outDir = snapshotDir.getOrElse(s"$dir-v${System.currentTimeMillis()}")
     Files.createDirectories(Paths.get(outDir))
     var mark = System.nanoTime()
@@ -1200,7 +1099,7 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
       phases(name) = (now - mark) / 1000000L
       mark = now
     }
-    val allFiles = MutableParquetTable.tableFiles(dir)
+    val allFiles = MutableParquetTable.tableFiles(dir, src)
     def bucketOf(f: String): Int =
       GraftBucket.bucketOfName(fileName(f)).getOrElse(
         throw new IllegalStateException(
@@ -1240,15 +1139,16 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
 
     val needRewrite = dirty.nonEmpty ||
       !batch.where(col(opCol) =!= lit("delete")).isEmpty
+    val tombstones = MutableParquetTable.tombstoneDf(spark, dir, src)
     if (needRewrite) {
-      val base = MutableParquetTable.applyTombstones(spark, dir,
+      val base0 =
         if (dirty.nonEmpty)
           MutableParquetTable.readFilesLogical(spark, dirty, mergedSchema,
             renames)
         else spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          batchData.schema),
-        keys)
+          batchData.schema)
+      val base = tombstones.fold(base0)(withoutKeys(base0, _, keys))
       val merged = MutableParquetTable.toPhysicalNames(
         MergeOps.applyMutationsMulti(base, batch, keys, opCol), renames)
       GraftBucket.writeBucketed(merged, outDir, key, moreKeys, n)
@@ -1264,12 +1164,12 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
         .filterNot(f => cleanNames.contains(fileName(f))).toList.sorted
       finally s.close()
     }
-    val ranges = sortedRanges()
+    val ranges = sortedRanges(src)
     val carried = ranges.filter(r => !dirtyBuckets.contains(
       GraftBucket.bucketOfName(fileName(r.file)).getOrElse(-1)))
-    val ts = carryTombstonesMinus(batch, outDir)
+    val ts = carryTombstonesMinus(batch, outDir, tombstones)
     writeManifest(outDir, carried, newFiles, Some(mergedSchema), pt.refNames,
-      tombstones = ts)
+      tombstones = ts, source = src)
     phase("manifest")
     MergeResult(outDir, dirty, clean, newFiles.size, phases.toMap,
       filesHardLinked = pt.linked, filesReferenced = pt.referenced,
@@ -1338,10 +1238,16 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
                             bucketsOverride: Option[Option[Int]] = None,
                             // widened-column marker, same contract as
                             // droppedOverride
-                            widenedOverride: Option[Seq[String]] = None)
+                            widenedOverride: Option[Seq[String]] = None,
+                            // this snapshot's manifest, when the caller
+                            // has already read it
+                            source: Option[Manifest] = Manifest.read(dir),
+                            // outputs whose zone map and size their
+                            // writers reported: no footer sweep, no stat
+                            written: Seq[CowRewrite.Written] = Nil)
       : Unit = {
-    val src = Manifest.read(dir).getOrElse(Manifest(key))
-    val ranges = (carried ++
+    val src = source.getOrElse(Manifest(key))
+    val ranges = (carried ++ written.flatMap(_.range) ++
       ParquetStats.fileKeyRangesTypedFor(spark, newFiles, key))
       .sortBy(_.minBytes)(KeyBytes.ordering)
     // a referenced clean file's manifest entry is its path RELATIVE to
@@ -1369,7 +1275,8 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
     // stat once at commit time. Entries that predate size recording stay
     // size-less rather than triggering a stat sweep of old versions;
     // consumers (planner stats, byte pacing) fall back per entry.
-    val srcBytes = src.bytesByName
+    val srcBytes = written.map(w => fileName(w.file) -> w.bytes).toMap ++
+      src.bytesByName
     def bytesOf(absFile: String): Option[Long] = {
       val name = fileName(absFile)
       srcBytes.get(name).orElse {
@@ -1404,9 +1311,10 @@ final class MutableParquetTable(spark: SparkSession, val dir: String,
         // rewritten files carry the names this commit's mapping implies:
         // PHYSICAL for CoW merges (mapping carried), LOGICAL for a
         // physical rewrite (mapping pinned empty) — sweep accordingly
-        val sweepNames = renamesOverride.getOrElse(renames)
+        val sweepNames = renamesOverride.getOrElse(src.renames)
         val fresh = src.dimRanges.map(_.column).distinct.flatMap { d =>
-          ParquetStats.fileKeyRangesTypedFor(spark, newFiles,
+          ParquetStats.fileKeyRangesTypedFor(spark,
+              newFiles ++ written.map(_.file),
               sweepNames.getOrElse(d, d))
             .map(r => Manifest.dimEntry(fileName(r.file), d, r.min, r.max))
         }
@@ -1473,31 +1381,6 @@ object MutableParquetTable {
   case object Link extends Passthrough
   case object Reference extends Passthrough
 
-  /** Probe table for deterministic hash routing: `probes(i)` is a long
-    * whose Spark hash-partition id over `n` partitions is exactly `i`, so
-    * `repartition(n, probeColumn)` places bucket i alone in partition i —
-    * range partitioning by KNOWN boundaries with no sampling pass. Probes
-    * are found by evaluating Spark's own `Pmod(Murmur3Hash(x), n)`
-    * expression, so they can never drift from the executor-side
-    * partitioner. Coupon-collector search: ~n·ln n evaluations, cached. */
-  private val probeCache =
-    new scala.collection.concurrent.TrieMap[Int, Array[Long]]
-  private[sources] def partitionProbes(n: Int): Array[Long] =
-    probeCache.getOrElseUpdate(n, {
-      import org.apache.spark.sql.catalyst.expressions.{Literal => CLit, Murmur3Hash, Pmod}
-      val out = new Array[Long](n)
-      val found = new Array[Boolean](n)
-      var remaining = n
-      var x = 0L
-      while (remaining > 0) {
-        val p = Pmod(new Murmur3Hash(Seq(CLit(x))), CLit(n))
-          .eval(null).asInstanceOf[Int]
-        if (!found(p)) { found(p) = true; out(p) = x; remaining -= 1 }
-        x += 1
-      }
-      out
-    })
-
   /** Key column normalized to the zone-map domain: the SAME values
     * [[KeyBytes]] encodes and parquet footers store physically — epoch
     * days for DATE (int32), epoch micros for TIMESTAMP (int64), long for
@@ -1543,6 +1426,15 @@ object MutableParquetTable {
             passthrough: Passthrough = Link,
             moreKeys: Seq[String] = Nil): MutableParquetTable =
     new MutableParquetTable(spark, dir, key, passthrough, moreKeys)
+
+  /** A handle on the snapshot at `dir` whose manifest `m` the caller
+    * already read (composite key members taken from it), so opening the
+    * handle reads nothing more. */
+  private[graft] def opened(spark: SparkSession, dir: String, key: String,
+                            passthrough: Passthrough,
+                            m: Option[Manifest]): MutableParquetTable =
+    new MutableParquetTable(spark, dir, key, passthrough,
+      m.map(_.moreKeys).getOrElse(Nil), m)
 
   /** Resolve a manifest `file` entry against its snapshot dir, textually
     * normalizing `.`/`..` segments — entries may be bare names (local
@@ -1779,8 +1671,12 @@ object MutableParquetTable {
 
   /** Refuse to touch a snapshot that requires a feature this reader
     * does not implement — fail fast beats silently wrong rows. */
-  private[graft] def requireFeaturesSupported(snapshotDir: String): Unit = {
-    val unknown = manifestRequiredFeatures(snapshotDir)
+  private[graft] def requireFeaturesSupported(snapshotDir: String): Unit =
+    requireFeaturesSupported(snapshotDir, Manifest.read(snapshotDir))
+
+  private[graft] def requireFeaturesSupported(snapshotDir: String,
+                                              m: Option[Manifest]): Unit = {
+    val unknown = m.map(_.requiredFeatures).getOrElse(Nil)
       .filterNot(SupportedFeatures)
     if (unknown.nonEmpty)
       throw new IllegalStateException(
@@ -1998,7 +1894,12 @@ object MutableParquetTable {
   /** The snapshot's tombstone key set (columns `__k0..__kn`), when it
     * declares one. */
   def tombstoneDf(spark: SparkSession, snapshotDir: String): Option[DataFrame] =
-    if (manifestTombstoneRows(snapshotDir) > 0)
+    tombstoneDf(spark, snapshotDir, Manifest.read(snapshotDir))
+
+  /** Same, for the snapshot whose manifest `m` the caller already read. */
+  private[graft] def tombstoneDf(spark: SparkSession, snapshotDir: String,
+                                 m: Option[Manifest]): Option[DataFrame] =
+    if (m.exists(_.tombstoneRows > 0))
       Some(spark.read.parquet(s"$snapshotDir/$TombstoneName"))
     else None
 
@@ -2007,14 +1908,15 @@ object MutableParquetTable {
     * snapshot declares none. */
   def applyTombstones(spark: SparkSession, snapshotDir: String,
                       df: DataFrame, keys: Seq[String]): DataFrame =
-    tombstoneDf(spark, snapshotDir) match {
-      case None => df
-      case Some(ts) =>
-        df.join(broadcast(ts),
-          keys.zipWithIndex.map { case (k, i) =>
-            df(k) === ts(s"__k$i") }.reduce(_ && _),
-          "left_anti")
-    }
+    tombstoneDf(spark, snapshotDir).fold(df)(withoutKeys(df, _, keys))
+
+  /** `df` minus the rows whose key tuple is in the tombstone set `ts`. */
+  private[graft] def withoutKeys(df: DataFrame, ts: DataFrame,
+                                 keys: Seq[String]): DataFrame =
+    df.join(broadcast(ts),
+      keys.zipWithIndex.map { case (k, i) =>
+        df(k) === ts(s"__k$i") }.reduce(_ && _),
+      "left_anti")
 
   /** Key tuple projected to the tombstone sidecar's positional column
     * names. */
@@ -2162,7 +2064,11 @@ object MutableParquetTable {
     * the snapshot is invisible, same discipline as [[readCommitted]]),
     * or the directory listing for bare parquet dirs. */
   private[graft] def tableFiles(dir: String): List[String] =
-    manifestFileNames(dir) match {
+    tableFiles(dir, Manifest.read(dir))
+
+  /** Same, for the snapshot whose manifest `m` the caller already read. */
+  private[graft] def tableFiles(dir: String, m: Option[Manifest]): List[String] =
+    m.map(_.fileNames) match {
       case Some(names) => names.map(n => resolvePath(dir, n)).toList.sorted
       case None =>
         import scala.jdk.CollectionConverters._
@@ -2257,17 +2163,5 @@ object MutableParquetTable {
     try s.sorted(java.util.Comparator.reverseOrder())
       .iterator().asScala.foreach(Files.delete)
     finally s.close()
-  }
-
-  /** Binary search over the key-ordered file mins: last file whose
-    * min <= key, else the first file. */
-  private def route(kb: Array[Byte], rs: Array[(String, Array[Byte])]): String = {
-    var lo = 0; var hi = rs.length - 1; var ans = 0
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      if (KeyBytes.compare(rs(mid)._2, kb) <= 0) { ans = mid; lo = mid + 1 }
-      else hi = mid - 1
-    }
-    rs(ans)._1
   }
 }

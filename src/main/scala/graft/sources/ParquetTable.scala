@@ -277,64 +277,76 @@ object ParquetStats {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
       .fromPath(new org.apache.hadoop.fs.Path(f), conf)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks
-      (0 until blocks.size()).map { i =>
-        val b = blocks.get(i)
-        val colMeta = (0 until b.getColumns.size())
-          .map(b.getColumns.get)
-          .find(_.getPath.toDotString == keyCol)
-        val st = colMeta.map(_.getStatistics).filter(s => s != null && s.hasNonNullValue)
-        // a BINARY column without the String annotation is a RAW binary
-        // key: its stats bytes must never round-trip through UTF-8 (lossy
-        // for arbitrary bytes — replacement chars would corrupt ordering)
-        val isRawBinary = colMeta.exists { c =>
-          c.getPrimitiveType.getPrimitiveTypeName ==
-            org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY &&
-          !c.getPrimitiveType.getLogicalTypeAnnotation.isInstanceOf[
-            org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-        }
-        val minS = if (isRawBinary) null else st.map(_.minAsString()).orNull
-        val maxS = if (isRawBinary) null else st.map(_.maxAsString()).orNull
-        // null count from the UNFILTERED stats (an all-null group has no
-        // min/max but a real numNulls); -1 = writer did not record it
-        val nullKeys: java.lang.Long = colMeta.map(_.getStatistics)
-          .filter(s => s != null && s.isNumNullsSet)
-          .map(s => java.lang.Long.valueOf(s.getNumNulls))
-          .getOrElse(java.lang.Long.valueOf(-1L))
-        // fractional key stats are left out of BOTH lanes: a truncating
-        // longValue would route keys to the wrong files (KeyBytes.fromAny
-        // rejects such keys outright at merge time)
-        val minL = st.map(_.genericGetMin).collect {
-          case n: java.lang.Integer => java.lang.Long.valueOf(n.longValue)
-          case n: java.lang.Long => n
-          case n: java.lang.Short => java.lang.Long.valueOf(n.longValue)
-          case n: java.lang.Byte => java.lang.Long.valueOf(n.longValue) }.orNull
-        val maxL = st.map(_.genericGetMax).collect {
-          case n: java.lang.Integer => java.lang.Long.valueOf(n.longValue)
-          case n: java.lang.Long => n
-          case n: java.lang.Short => java.lang.Long.valueOf(n.longValue)
-          case n: java.lang.Byte => java.lang.Long.valueOf(n.longValue) }.orNull
-        val minB = if (!isRawBinary) null else st.map(_.genericGetMin).collect {
-          case b2: org.apache.parquet.io.api.Binary => b2.getBytes }.orNull
-        val maxB = if (!isRawBinary) null else st.map(_.genericGetMax).collect {
-          case b2: org.apache.parquet.io.api.Binary => b2.getBytes }.orNull
-        Row(f, i, b.getRowCount, b.getTotalByteSize, b.getCompressedSize,
-          minS, maxS, minL, maxL, minB, maxB, nullKeys)
-      }
-    } finally reader.close()
+    try footerRows(f, keyCol, reader.getFooter)
+    finally reader.close()
   }
+
+  /** One [[keyStatsSchema]] row per row group of `footer` (the footer of
+    * file `f`) — the same rows whether the footer was read back from
+    * storage or taken from the writer that just closed the file. */
+  private[graft] def footerRows(f: String, keyCol: String,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): Seq[Row] = {
+    val blocks = footer.getBlocks
+    (0 until blocks.size()).map { i =>
+      val b = blocks.get(i)
+      val colMeta = (0 until b.getColumns.size())
+        .map(b.getColumns.get)
+        .find(_.getPath.toDotString == keyCol)
+      val st = colMeta.map(_.getStatistics).filter(s => s != null && s.hasNonNullValue)
+      // a BINARY column without the String annotation is a RAW binary
+      // key: its stats bytes must never round-trip through UTF-8 (lossy
+      // for arbitrary bytes — replacement chars would corrupt ordering)
+      val isRawBinary = colMeta.exists { c =>
+        c.getPrimitiveType.getPrimitiveTypeName ==
+          org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY &&
+        !c.getPrimitiveType.getLogicalTypeAnnotation.isInstanceOf[
+          org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation]
+      }
+      val minS = if (isRawBinary) null else st.map(_.minAsString()).orNull
+      val maxS = if (isRawBinary) null else st.map(_.maxAsString()).orNull
+      // null count from the UNFILTERED stats (an all-null group has no
+      // min/max but a real numNulls); -1 = writer did not record it
+      val nullKeys: java.lang.Long = colMeta.map(_.getStatistics)
+        .filter(s => s != null && s.isNumNullsSet)
+        .map(s => java.lang.Long.valueOf(s.getNumNulls))
+        .getOrElse(java.lang.Long.valueOf(-1L))
+      // fractional key stats are left out of BOTH lanes: a truncating
+      // longValue would route keys to the wrong files (KeyBytes.fromAny
+      // rejects such keys outright at merge time)
+      val minL = st.map(_.genericGetMin).collect {
+        case n: java.lang.Integer => java.lang.Long.valueOf(n.longValue)
+        case n: java.lang.Long => n
+        case n: java.lang.Short => java.lang.Long.valueOf(n.longValue)
+        case n: java.lang.Byte => java.lang.Long.valueOf(n.longValue) }.orNull
+      val maxL = st.map(_.genericGetMax).collect {
+        case n: java.lang.Integer => java.lang.Long.valueOf(n.longValue)
+        case n: java.lang.Long => n
+        case n: java.lang.Short => java.lang.Long.valueOf(n.longValue)
+        case n: java.lang.Byte => java.lang.Long.valueOf(n.longValue) }.orNull
+      val minB = if (!isRawBinary) null else st.map(_.genericGetMin).collect {
+        case b2: org.apache.parquet.io.api.Binary => b2.getBytes }.orNull
+      val maxB = if (!isRawBinary) null else st.map(_.genericGetMax).collect {
+        case b2: org.apache.parquet.io.api.Binary => b2.getBytes }.orNull
+      Row(f, i, b.getRowCount, b.getTotalByteSize, b.getCompressedSize,
+        minS, maxS, minL, maxL, minB, maxB, nullKeys)
+    }
+  }
+
+  /** [[rowGroupSchema]] plus the key column's per-group bounds: string
+    * form, long form (integral/date/timestamp), raw bytes (binary keys),
+    * and the null count. */
+  val keyStatsSchema: StructType = StructType(rowGroupSchema.fields ++ Seq(
+    StructField("minKey", StringType, nullable = true),
+    StructField("maxKey", StringType, nullable = true),
+    StructField("minKeyLong", LongType, nullable = true),
+    StructField("maxKeyLong", LongType, nullable = true),
+    StructField("minKeyBinary", BinaryType, nullable = true),
+    StructField("maxKeyBinary", BinaryType, nullable = true),
+    StructField("nullKeys", LongType, nullable = true)))
 
   def keyStats(spark: SparkSession, path: String, keyCol: String): DataFrame = {
     val files = listFiles(spark, path)
-    val schema = StructType(rowGroupSchema.fields ++ Seq(
-      StructField("minKey", StringType, nullable = true),
-      StructField("maxKey", StringType, nullable = true),
-      StructField("minKeyLong", LongType, nullable = true),
-      StructField("maxKeyLong", LongType, nullable = true),
-      StructField("minKeyBinary", BinaryType, nullable = true),
-      StructField("maxKeyBinary", BinaryType, nullable = true),
-      StructField("nullKeys", LongType, nullable = true)))
+    val schema = keyStatsSchema
     if (files.size <= driverReadThreshold) {
       val hconf = spark.sparkContext.hadoopConfiguration
       val rows = parFlatMap(files)(f => footerRows(f, keyCol, hconf))
@@ -385,61 +397,65 @@ object ParquetStats {
                          keyCol: String): Seq[FileKeyRange] =
     fileKeyRangesTypedFor(spark, listFiles(spark, path), keyCol)
 
+  private def ofTyped(f: String, minL: Option[Long], maxL: Option[Long],
+                      minS: Option[String], maxS: Option[String],
+                      minB: Option[Array[Byte]], maxB: Option[Array[Byte]],
+                      rows: Long, nulls: Long): Option[FileKeyRange] =
+    (minL, maxL) match {
+      case (Some(lo), Some(hi)) => Some(FileKeyRange(f, lo, hi,
+        KeyBytes.fromLong(lo), KeyBytes.fromLong(hi), rows, nulls))
+      case _ => (minB, maxB) match {
+        case (Some(lo), Some(hi)) => Some(FileKeyRange(f, lo, hi,
+          KeyBytes.fromBinary(lo), KeyBytes.fromBinary(hi), rows, nulls))
+        case _ => (minS, maxS) match {
+          case (Some(lo), Some(hi)) => Some(FileKeyRange(f, lo, hi,
+            KeyBytes.fromString(lo), KeyBytes.fromString(hi), rows, nulls))
+          case _ => None
+        }
+      }
+    }
+
+  // string bounds compared under byte order — consistent with Spark's
+  // UTF8String sort and parquet's UNSIGNED stats order
+  private def byteMin(xs: Seq[String]) =
+    xs.reduce((a, b) => if (KeyBytes.compare(
+      KeyBytes.fromString(a), KeyBytes.fromString(b)) <= 0) a else b)
+  private def byteMax(xs: Seq[String]) =
+    xs.reduce((a, b) => if (KeyBytes.compare(
+      KeyBytes.fromString(a), KeyBytes.fromString(b)) >= 0) a else b)
+  private def byteMinB(xs: Seq[Array[Byte]]) =
+    xs.reduce((a, b) => if (KeyBytes.compare(a, b) <= 0) a else b)
+  private def byteMaxB(xs: Seq[Array[Byte]]) =
+    xs.reduce((a, b) => if (KeyBytes.compare(a, b) >= 0) a else b)
+
+  /** File `f`'s zone-map entry from its [[footerRows]]; None when the
+    * key has no stats in any row group (an all-null key column). */
+  private[graft] def fromGroupRows(f: String, rgs: Seq[Row]): Option[FileKeyRange] = {
+    val minLs = rgs.flatMap(r => Option(r.get(7)).map(_.asInstanceOf[Long]))
+    val maxLs = rgs.flatMap(r => Option(r.get(8)).map(_.asInstanceOf[Long]))
+    val minSs = rgs.flatMap(r => Option(r.getString(5)))
+    val maxSs = rgs.flatMap(r => Option(r.getString(6)))
+    val minBs = rgs.flatMap(r => Option(r.get(9)).map(_.asInstanceOf[Array[Byte]]))
+    val maxBs = rgs.flatMap(r => Option(r.get(10)).map(_.asInstanceOf[Array[Byte]]))
+    // unknown (−1) in ANY row group poisons the file's null count —
+    // a partial sum would understate nulls and mislead the top-k prune
+    val nullsPerGroup = rgs.map(r =>
+      Option(r.get(11)).map(_.asInstanceOf[Long]).getOrElse(-1L))
+    ofTyped(f,
+      minLs.minOption, maxLs.maxOption,
+      if (minSs.isEmpty) None else Some(byteMin(minSs)),
+      if (maxSs.isEmpty) None else Some(byteMax(maxSs)),
+      if (minBs.isEmpty) None else Some(byteMinB(minBs)),
+      if (maxBs.isEmpty) None else Some(byteMaxB(maxBs)),
+      rgs.map(_.getLong(2)).sum,
+      if (nullsPerGroup.contains(-1L)) -1L else nullsPerGroup.sum)
+  }
+
   /** Same, over an explicit file list — lets callers that already know
     * most files' ranges (e.g. the merge path's untouched passthrough
     * files) pay footer IO only for the files they actually wrote. */
   def fileKeyRangesTypedFor(spark: SparkSession, files: Seq[String],
                             keyCol: String): Seq[FileKeyRange] = {
-    def ofTyped(f: String, minL: Option[Long], maxL: Option[Long],
-                minS: Option[String], maxS: Option[String],
-                minB: Option[Array[Byte]], maxB: Option[Array[Byte]],
-                rows: Long, nulls: Long): Option[FileKeyRange] =
-      (minL, maxL) match {
-        case (Some(lo), Some(hi)) => Some(FileKeyRange(f, lo, hi,
-          KeyBytes.fromLong(lo), KeyBytes.fromLong(hi), rows, nulls))
-        case _ => (minB, maxB) match {
-          case (Some(lo), Some(hi)) => Some(FileKeyRange(f, lo, hi,
-            KeyBytes.fromBinary(lo), KeyBytes.fromBinary(hi), rows, nulls))
-          case _ => (minS, maxS) match {
-            case (Some(lo), Some(hi)) => Some(FileKeyRange(f, lo, hi,
-              KeyBytes.fromString(lo), KeyBytes.fromString(hi), rows, nulls))
-            case _ => None
-          }
-        }
-      }
-    // per-file aggregation of the footerRows schema, shared by both
-    // branches; string bounds compared under byte order — consistent with
-    // Spark's UTF8String sort and parquet's UNSIGNED stats order
-    def byteMin(xs: Seq[String]) =
-      xs.reduce((a, b) => if (KeyBytes.compare(
-        KeyBytes.fromString(a), KeyBytes.fromString(b)) <= 0) a else b)
-    def byteMax(xs: Seq[String]) =
-      xs.reduce((a, b) => if (KeyBytes.compare(
-        KeyBytes.fromString(a), KeyBytes.fromString(b)) >= 0) a else b)
-    def byteMinB(xs: Seq[Array[Byte]]) =
-      xs.reduce((a, b) => if (KeyBytes.compare(a, b) <= 0) a else b)
-    def byteMaxB(xs: Seq[Array[Byte]]) =
-      xs.reduce((a, b) => if (KeyBytes.compare(a, b) >= 0) a else b)
-    def fromGroupRows(f: String, rgs: Seq[Row]): Option[FileKeyRange] = {
-      val minLs = rgs.flatMap(r => Option(r.get(7)).map(_.asInstanceOf[Long]))
-      val maxLs = rgs.flatMap(r => Option(r.get(8)).map(_.asInstanceOf[Long]))
-      val minSs = rgs.flatMap(r => Option(r.getString(5)))
-      val maxSs = rgs.flatMap(r => Option(r.getString(6)))
-      val minBs = rgs.flatMap(r => Option(r.get(9)).map(_.asInstanceOf[Array[Byte]]))
-      val maxBs = rgs.flatMap(r => Option(r.get(10)).map(_.asInstanceOf[Array[Byte]]))
-      // unknown (−1) in ANY row group poisons the file's null count —
-      // a partial sum would understate nulls and mislead the top-k prune
-      val nullsPerGroup = rgs.map(r =>
-        Option(r.get(11)).map(_.asInstanceOf[Long]).getOrElse(-1L))
-      ofTyped(f,
-        minLs.minOption, maxLs.maxOption,
-        if (minSs.isEmpty) None else Some(byteMin(minSs)),
-        if (maxSs.isEmpty) None else Some(byteMax(maxSs)),
-        if (minBs.isEmpty) None else Some(byteMinB(minBs)),
-        if (maxBs.isEmpty) None else Some(byteMaxB(maxBs)),
-        rgs.map(_.getLong(2)).sum,
-        if (nullsPerGroup.contains(-1L)) -1L else nullsPerGroup.sum)
-    }
     if (files.size <= driverReadThreshold) {
       val hconf = spark.sparkContext.hadoopConfiguration
       parFlatMap(files)(f => fromGroupRows(f, footerRows(f, keyCol, hconf)))

@@ -37,9 +37,11 @@ final case class RowGroupRewrite(
   * cluster scale file-granularity passthrough is metadata-only; this
   * utility is the escalation for fat files with narrow dirty ranges —
   * amortizing rewrite cost within a file the way the reference amortizes
-  * it within one (README.md:109-111). At scale, run one instance per dirty
-  * file from a foreachPartition over the routed file list; per-file work is
-  * sequential IO plus one small Spark merge job.
+  * it within one (README.md:109-111). The file-level merge already runs
+  * one sorted pass per dirty file inside one job's tasks ([[CowRewrite]]);
+  * this utility instead runs one small Spark merge job per dirty file
+  * (`mergeFineGrained` submits them concurrently), and its per-file work
+  * is sequential IO plus that job.
   *
   * Key routing (reference seekToKey semantics): group g owns keys in
   * [min_g, min_{g+1}); the first group also owns everything below, the

@@ -304,6 +304,29 @@ class DedupSpec extends SparkSpec {
     df.select(col("id_a"), col("id_b")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  test("incremental dedup refuses a pairs sink on the seeding path") {
+    val root = java.nio.file.Files.createTempDirectory("graft-incdd-sink").toString + "/idx"
+    val e = intercept[IllegalArgumentException](
+      Dedup.dedupIncremental(root, corpus(), "text", "doc_id",
+        emitPairs = false, pairsSink = Some(_ => ())))
+    assert(e.getMessage.contains("emitPairs"))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root)),
+      "nothing may be committed")
+  }
+
+  test("incremental dedup: a failing sink is suppressed under the failing commit") {
+    // the index root sits under a regular file, so the commit cannot
+    // create it; the sink fails on its own
+    val blocker = java.nio.file.Files.createTempFile("graft-incdd", ".blk")
+    val sinkError = new IllegalStateException("sink failed")
+    val e = intercept[Throwable](
+      Dedup.dedupIncremental(s"$blocker/idx", corpus(), "text", "doc_id",
+        bands = 16, rowsPerBand = 2,
+        pairsSink = Some(_ => throw sinkError)))
+    assert(e ne sinkError, "the sink's failure replaced the commit's")
+    assert(e.getSuppressed.contains(sinkError), e.toString)
+  }
+
   test("incremental dedup == batch LSH on the union, restricted to new-touching pairs") {
     val docs = corpus()
     val oldDocs = docs.where(col("doc_id") % 2 === 0) // 0, 2, 4

@@ -188,34 +188,6 @@ class PlansSpec extends SparkSpec {
     assert(sawMultiChunk)
   }
 
-  test("native sorted-bounds search matches the HOF boundary count (merge router)") {
-    val s = spark; import s.implicits._
-    val bounds = Array(10L, 20L, 30L, 45L)
-    // hits, misses, below-first, above-last, and null
-    val vals = Seq[java.lang.Long](5L, 10L, 11L, 20L, 29L, 30L, 31L, 45L,
-      46L, 1000L, null)
-    val df = vals.toDF("v")
-    val native = org.apache.spark.sql.classic.GraftShims.column(
-      graft.plans.SearchSortedLong(
-        org.apache.spark.sql.classic.GraftShims.expression(col("v")), bounds))
-    val boundsCol = array(bounds.map(lit(_)): _*)
-    val hof = size(filter(boundsCol, b => col("v") >= b))
-    val got = df.select(col("v"), native.as("n"), hof.as("h")).collect()
-    got.foreach { r =>
-      if (r.isNullAt(0)) assert(r.isNullAt(1), "null in, null out")
-      else assert(r.getInt(1) === r.getInt(2),
-        s"value ${r.getLong(0)}: native ${r.getInt(1)} != hof ${r.getInt(2)}")
-    }
-    // wide-boundary sanity at the codegen path (one row per bucket)
-    val wide = (0L until 127L).map(_ * 3 + 1).toArray
-    val nat2 = org.apache.spark.sql.classic.GraftShims.column(
-      graft.plans.SearchSortedLong(
-        org.apache.spark.sql.classic.GraftShims.expression(col("id")), wide))
-    val counts = spark.range(0, 400)
-      .select(nat2.as("b")).groupBy("b").count().collect()
-    assert(counts.map(_.getInt(0)).toSet === (0 to 127).toSet)
-  }
-
   test("extensions class registers the function at session build time") {
     // same registry mechanism the spark.sql.extensions config path uses
     val ext = new org.apache.spark.sql.SparkSessionExtensions

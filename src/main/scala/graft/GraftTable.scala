@@ -782,138 +782,63 @@ final class GraftTable private (val spark: SparkSession, val root: String,
     * as the NEXT version — storage maintenance that keeps time travel,
     * replay idempotency, and manifest reads intact. Rows are unchanged,
     * so the pre/post change feed is empty (it does pay a full-table diff
-    * across the compaction boundary: every file name changes). Returns
-    * the new version id. */
+    * across the compaction boundary: every file name changes). Staged
+    * privately and published by the one slot claim every version takes
+    * ([[OptimisticCommit.commitRewrite]]): safe beside concurrent
+    * writers, re-run against the new head when one wins the slot first.
+    * Returns the new version id. */
   def compact(targetBytes: Long,
               moreKeys: Seq[String] =
                 graft.sources.MutableParquetTable.manifestMoreKeys(
-                  CdcMergeSink.latestSnapshot(root))): Long = {
-    val next = versions.lastOption.map(_ + 1).getOrElse(0L)
-    val latest = CdcMergeSink.latestSnapshot(root)
-    require(
-      graft.sources.MutableParquetTable.manifestTombstoneRows(latest) == 0,
-      "compact on a tombstoned snapshot would splice logically-deleted " +
-        "rows byte-for-byte and drop the sidecar — run " +
-        "materializeTombstones() (SQL: CALL <catalog>.system." +
-        "materialize_tombstones) first")
-    val target = s"$root/v$next"
-    val buckets = graft.sources.MutableParquetTable.manifestBuckets(latest)
-    val schema = graft.sources.MutableParquetTable.manifestSchema(latest)
-    val dropped =
-      graft.sources.MutableParquetTable.manifestDroppedColumns(latest)
-    val widened =
-      graft.sources.MutableParquetTable.manifestWidened(latest)
-    if (dropped.nonEmpty || widened.nonEmpty) {
-      // PURGE rewrite: files predating a metadata-only DROP COLUMN still
-      // physically carry the dropped values, so a raw byte splice would
-      // keep them on disk forever — and files predating an ALTER TYPE
-      // widening carry the NARROW physical type, which a splice must not
-      // mix with wide-typed row groups in one file. Rewrite through the
-      // LOGICAL schema instead — the stale bytes are gone and both
-      // markers clear: compact IS the documented remedy for re-ADDing a
-      // dropped name (guardResurrected's error message).
-      val state = CdcMergeSink.readAsOf(spark, root, Long.MaxValue)
-      buckets match {
-        case Some(n) =>
-          graft.sources.GraftBucket.writeBucketed(state, target, key,
-            moreKeys, n)
-        case None =>
-          val recorded =
-            graft.sources.MutableParquetTable.manifestBytesByName(latest)
-          val totalBytes = graft.sources.MutableParquetTable
-            .tableFiles(latest)
-            .map(f => graft.sources.MutableParquetTable
-              .recordedOrStatSize(latest, f, recorded)).sum
-          val n = math.max(1L, math.min(4096L,
-            (totalBytes + targetBytes - 1) / math.max(1L, targetBytes))).toInt
-          ParquetTable.withMicrosTimestamps(spark) {
-            ParquetTable.writeSortedBy(state, target, key +: moreKeys, n)
-          }
+                  CdcMergeSink.latestSnapshot(root))): Long =
+    OptimisticCommit.commitRewrite(root, "compact") { (latest, target) =>
+      val m = graft.sources.Manifest.read(latest)
+        .getOrElse(graft.sources.Manifest(key))
+      require(m.tombstoneRows == 0,
+        "compact on a tombstoned snapshot would splice logically-deleted " +
+          "rows byte-for-byte and drop the sidecar — run " +
+          "materializeTombstones() (SQL: CALL <catalog>.system." +
+          "materialize_tombstones) first")
+      if (m.droppedColumns.nonEmpty || m.widenedColumns.nonEmpty) {
+        // PURGE rewrite: files predating a metadata-only DROP COLUMN still
+        // physically carry the dropped values, so a raw byte splice would
+        // keep them on disk forever — and files predating an ALTER TYPE
+        // widening carry the NARROW physical type, which a splice must not
+        // mix with wide-typed row groups in one file. Rewrite through the
+        // LOGICAL schema instead — the stale bytes are gone and both
+        // markers clear: compact IS the documented remedy for re-ADDing a
+        // dropped name (guardResurrected's error message).
+        writeLogical(latest, target, m.buckets, targetBytes, moreKeys)
+        graft.sources.MutableParquetTable(spark, latest, key, moreKeys = moreKeys)
+          .commitManifest(target, m.schema, physicalRewrite = true)
+      } else {
+        // a hash-bucketed table folds PER BUCKET (outputs keep the bucket
+        // name encoding, so the SPJ file-bucket invariant survives); plain
+        // tables pack contiguously in key order
+        if (m.buckets.isDefined)
+          graft.sources.CompactionUtil.compactBucketedDir(spark, latest,
+            target, targetBytes)
+        else
+          graft.sources.CompactionUtil.compactDirBySize(spark, latest, target,
+            targetBytes)
+        // moreKeys defaults to the manifest-discovered composite identity —
+        // dropping it here would silently narrow row identity to the
+        // leading key for every later merge. The explicit schema keeps the
+        // commit on the LOGICAL schema (spliced footers may predate
+        // metadata ALTERs).
+        graft.sources.MutableParquetTable(spark, latest, key, moreKeys = moreKeys)
+          .commitManifest(target, m.schema)
       }
-      graft.sources.MutableParquetTable(spark, latest, key, moreKeys = moreKeys)
-        .commitManifest(target, schema, physicalRewrite = true)
-    } else {
-      // a hash-bucketed table folds PER BUCKET (outputs keep the bucket
-      // name encoding, so the SPJ file-bucket invariant survives); plain
-      // tables pack contiguously in key order
-      if (buckets.isDefined)
-        graft.sources.CompactionUtil.compactBucketedDir(spark, latest, target,
-          targetBytes)
-      else
-        graft.sources.CompactionUtil.compactDirBySize(spark, latest, target,
-          targetBytes)
-      // moreKeys defaults to the manifest-discovered composite identity —
-      // dropping it here would silently narrow row identity to the leading
-      // key for every later merge. The explicit schema keeps the commit on
-      // the LOGICAL schema (spliced footers may predate metadata ALTERs).
-      graft.sources.MutableParquetTable(spark, latest, key, moreKeys = moreKeys)
-        .commitManifest(target, schema)
+      true
     }
-    next
-  }
 
-  /** Range-scoped [[compact]]: fold ONLY the files whose key interval
-    * intersects `[lo, hi]`, pass everything else through metadata-only —
-    * the maintenance shape a 100 TB table actually needs (the write-hot
-    * range accumulates small merge outputs; the cold bulk stays
-    * untouched, unread, and unlinked beyond a manifest entry). Commits
-    * as the next version; a range selecting nothing is a NO-OP returning
-    * the current version (no empty commit). Cost: one manifest zone-map
-    * pass to select, byte-splice of the selected files (or the purging
-    * rewrite while DROP/widen markers are live — markers clear exactly
-    * when the range covered every file), footer reads for the new files
-    * only. Tombstoned snapshots and bucketed layouts refuse, as
-    * [[compact]]. */
-  def compactRange(lo: Any, hi: Any, targetBytes: Long,
-                   moreKeys: Seq[String] =
-                     graft.sources.MutableParquetTable.manifestMoreKeys(
-                       CdcMergeSink.latestSnapshot(root))): Long = {
-    val latest = CdcMergeSink.latestSnapshot(root)
-    val cur = versions.lastOption.getOrElse(-1L)
-    val next = cur + 1
-    val target = s"$root/v$next"
-    val t = graft.sources.MutableParquetTable(spark, latest, key,
-      moreKeys = moreKeys)
-    val folded = t.compactRange(lo, hi, targetBytes, target)
-    if (folded == 0) {
-      // nothing selected: compactRange returned before staging anything
-      val p = java.nio.file.Paths.get(target)
-      if (java.nio.file.Files.exists(p))
-        graft.sources.MutableParquetTable.deleteDir(p)
-      return cur
-    }
-    next
-  }
-
-  /** Change the table's hash-bucket layout, committed as the NEXT
-    * version: `Some(n)` re-buckets to n buckets (adding SPJ to a plain
-    * table, or changing a bucketed table's fixed count — the one layout
-    * parameter CREATE pins forever otherwise), `None` de-buckets back to
-    * the key-sorted range layout. Necessarily a FULL REWRITE (the bucket
-    * function changes every row's placement), through the LOGICAL
-    * schema — so like the purging compact it also materializes dropped
-    * columns, renames, and tombstones away (blocklist/mapping/sidecar
-    * all clear). Time travel keeps the old layout readable; every later
-    * merge routes by the new spec. Returns the new version id. */
-  def rebucket(buckets: Option[Int], targetBytes: Long = 128L << 20,
-               moreKeys: Seq[String] =
-                 graft.sources.MutableParquetTable.manifestMoreKeys(
-                   CdcMergeSink.latestSnapshot(root))): Long = {
-    buckets.foreach(n => require(n > 0,
-      s"bucket count must be positive (got $n) — use None to de-bucket"))
-    val next = versions.lastOption.map(_ + 1).getOrElse(0L)
-    val latest = CdcMergeSink.latestSnapshot(root)
-    val schema = graft.sources.MutableParquetTable.manifestSchema(latest)
-    val target = s"$root/v$next"
-    val state = CdcMergeSink.readAsOf(spark, root, Long.MaxValue)
-    if (state.isEmpty) {
-      // an empty table re-buckets at metadata price: commit an empty
-      // snapshot declaring the new spec (contract carried)
-      graft.sources.MutableParquetTable.commitEmpty(target, key,
-        schema.getOrElse(state.schema), moreKeys, buckets,
-        graft.sources.GraftChecks.manifestChecks(latest))
-      return next
-    }
+  /** Rewrite the snapshot at `latest` through its LOGICAL schema into
+    * `target`: hash-bucketed into `buckets` buckets, else key-sorted into
+    * files of ~`targetBytes` (sized from the recorded file bytes). */
+  private def writeLogical(latest: String, target: String,
+                           buckets: Option[Int], targetBytes: Long,
+                           moreKeys: Seq[String]): Unit = {
+    val state = CdcMergeSink.readSnapshot(spark, latest)
     buckets match {
       case Some(n) =>
         graft.sources.GraftBucket.writeBucketed(state, target, key,
@@ -931,10 +856,64 @@ final class GraftTable private (val spark: SparkSession, val root: String,
           ParquetTable.writeSortedBy(state, target, key +: moreKeys, n)
         }
     }
-    graft.sources.MutableParquetTable(spark, latest, key, moreKeys = moreKeys)
-      .commitManifest(target, schema, physicalRewrite = true,
-        bucketsOverride = Some(buckets))
-    next
+  }
+
+  /** Range-scoped [[compact]]: fold ONLY the files whose key interval
+    * intersects `[lo, hi]`, pass everything else through metadata-only —
+    * the maintenance shape a 100 TB table actually needs (the write-hot
+    * range accumulates small merge outputs; the cold bulk stays
+    * untouched, unread, and unlinked beyond a manifest entry). Commits
+    * as the next version through the same slot claim as [[compact]]; a
+    * range selecting nothing is a NO-OP returning the current version
+    * (no empty commit), and a fold that fails leaves nothing behind.
+    * Cost: one manifest zone-map pass to select, byte-splice of the
+    * selected files (or the purging rewrite while DROP/widen markers are
+    * live — markers clear exactly when the range covered every file),
+    * footer reads for the new files only. Tombstoned snapshots and
+    * bucketed layouts refuse, as [[compact]]. */
+  def compactRange(lo: Any, hi: Any, targetBytes: Long,
+                   moreKeys: Seq[String] =
+                     graft.sources.MutableParquetTable.manifestMoreKeys(
+                       CdcMergeSink.latestSnapshot(root))): Long =
+    OptimisticCommit.commitRewrite(root, "compactRange") { (latest, target) =>
+      graft.sources.MutableParquetTable(spark, latest, key, moreKeys = moreKeys)
+        .compactRange(lo, hi, targetBytes, target) > 0
+    }
+
+  /** Change the table's hash-bucket layout, committed as the NEXT
+    * version: `Some(n)` re-buckets to n buckets (adding SPJ to a plain
+    * table, or changing a bucketed table's fixed count — the one layout
+    * parameter CREATE pins forever otherwise), `None` de-buckets back to
+    * the key-sorted range layout. Necessarily a FULL REWRITE (the bucket
+    * function changes every row's placement), through the LOGICAL
+    * schema — so like the purging compact it also materializes dropped
+    * columns, renames, and tombstones away (blocklist/mapping/sidecar
+    * all clear). Time travel keeps the old layout readable; every later
+    * merge routes by the new spec. Published by the same slot claim as
+    * [[compact]]. Returns the new version id. */
+  def rebucket(buckets: Option[Int], targetBytes: Long = 128L << 20,
+               moreKeys: Seq[String] =
+                 graft.sources.MutableParquetTable.manifestMoreKeys(
+                   CdcMergeSink.latestSnapshot(root))): Long = {
+    buckets.foreach(n => require(n > 0,
+      s"bucket count must be positive (got $n) — use None to de-bucket"))
+    OptimisticCommit.commitRewrite(root, "rebucket") { (latest, target) =>
+      val schema = graft.sources.MutableParquetTable.manifestSchema(latest)
+      val state = CdcMergeSink.readSnapshot(spark, latest)
+      if (state.isEmpty)
+        // an empty table re-buckets at metadata price: commit an empty
+        // snapshot declaring the new spec (contract carried)
+        graft.sources.MutableParquetTable.commitEmpty(target, key,
+          schema.getOrElse(state.schema), moreKeys, buckets,
+          graft.sources.GraftChecks.manifestChecks(latest))
+      else {
+        writeLogical(latest, target, buckets, targetBytes, moreKeys)
+        graft.sources.MutableParquetTable(spark, latest, key, moreKeys = moreKeys)
+          .commitManifest(target, schema, physicalRewrite = true,
+            bucketsOverride = Some(buckets))
+      }
+      true
+    }
   }
 
   /** Drop versions beyond the newest `keepLast`; returns dropped ids. */

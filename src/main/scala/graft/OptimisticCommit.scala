@@ -17,49 +17,57 @@ final case class ConcurrentCommit(version: Long, attempts: Int,
 
 /** Multi-writer OPTIMISTIC CONCURRENCY for the version chain.
   *
-  * The single-writer commit path computed `next = latest + 1` and merged
-  * straight into `root/v<next>` — two concurrent writers would race to
-  * the same slot and the later manifest write would silently clobber the
-  * earlier snapshot. This protocol makes `commit` safe under any number
-  * of concurrent writers (threads or separate drivers on a shared
+  * Every version of a table — merge commits, replace, restore, zone-map
+  * deletes and updates, tombstone deletes, schema/CHECK/DEFAULT changes
+  * and the maintenance rewrites (`compact`, `compactRange`, `rebucket`,
+  * `CALL system.zorder`, `Dedup.rebuildIndexLayout`) — claims its slot
+  * through ONE publish loop ([[publish]]), safe under any number of
+  * concurrent writers (threads or separate drivers on a shared
   * filesystem) with no locks and no wait-for-predecessor coupling:
   *
-  *  1. STAGE — merge against the latest committed snapshot into a
-  *     private `root/.tx-<uuid>` directory (invisible to readers: the
-  *     version listing matches `v\d+` only). Merges by different writers
-  *     run fully concurrent — contention costs nothing until publish.
-  *     The staged dir is a complete snapshot INCLUDING its manifest, and
-  *     it sits directly under the table root so both hard links (same
-  *     filesystem) and `../vN/...` reference entries (same depth) are
-  *     already in final form.
+  *  1. STAGE — write the new snapshot against the latest committed one
+  *     into a private `root/.tx-<uuid>` directory (invisible to readers:
+  *     the version listing matches `v\d+` only). Writers stage fully
+  *     concurrent — contention costs nothing until publish. The staged
+  *     dir is a complete snapshot INCLUDING its manifest (and any dim
+  *     zone maps), and it sits directly under the table root so both
+  *     hard links (same filesystem) and `../vN/...` reference entries
+  *     (same depth) are already in final form.
   *  2. PUBLISH — one atomic rename of the staged dir to `root/v<n>`,
   *     n = my base version + 1. The rename either wins the slot or
-  *     fails because a competing commit won it first; because staged
+  *     fails because a competing writer won it first; because staged
   *     dirs carry their manifest, a published version is committed the
-  *     instant it becomes visible. This is the protocol's only atomic
-  *     primitive — on an object store swap it for a conditional PUT
-  *     (if-none-match) of the manifest at the versioned key.
-  *  3. On conflict — REBASE or RETRY. A competing commit advanced the
-  *     head past my base, so my staged snapshot's passthrough inventory
-  *     is stale. If the intervening commits provably touched a disjoint
-  *     set of files ([[OptimisticCommit.tryRebase]]), the staged
-  *     rewrite is still valid and re-publishing costs METADATA ONLY: a
-  *     manifest rebuilt against the new head. Otherwise the staging dir
-  *     is discarded and the merge re-runs against the new head —
-  *     write-write conflicts on the same keys/files are inherently
-  *     serial in a CoW table.
+  *     instant it becomes visible and is never edited afterwards. This is
+  *     the protocol's only atomic primitive — on an object store swap it
+  *     for a conditional PUT (if-none-match) of the manifest at the
+  *     versioned key.
+  *  3. On a lost race — each entry point decides what its staged
+  *     snapshot is worth against the new head:
+  *     - a merge [[commit]] REBASES when the intervening commits provably
+  *       touched a disjoint set of files ([[tryRebase]]: a manifest
+  *       rebuilt against the new head, metadata only), else restages —
+  *       write-write conflicts on the same files are inherently serial
+  *       in a CoW table;
+  *     - [[replace]], [[restore]] and [[replaceStagedDirect]] stage
+  *       content that does not depend on the base, so the same dir is
+  *       RE-AIMED at the new head's successor slot after a restamp;
+  *     - everything else RESTAGES against the new head.
   *
   * Crash safety: a writer dying at any point leaves either a partial
   * `.tx-` dir (invisible; swept by [[CdcMergeSink.vacuum]] after a
-  * retention window) or a fully committed version. There is no state a
-  * crashed writer can leave that blocks other writers or corrupts a
-  * reader — the slot-claim IS the commit.
+  * retention window) or a fully committed version; a writer that fails
+  * (bad batch, violated CHECK, unreadable file) deletes its staged dir.
+  * There is no state a crashed or failed writer can leave that blocks
+  * other writers or corrupts a reader — the slot-claim IS the commit.
+  * An uncommitted `v<n>` on the slot was not made by this protocol
+  * (a crashed direct `applyBatch` target, foreign debris): every claim
+  * refuses it with a [[BlockedSlotException]] and leaves it untouched.
   *
   * Serialization semantics: commits linearize in version order; each
-  * version's snapshot is its batch applied to the PREDECESSOR version
-  * (re-merge) or a provably-equivalent file swap (rebase). Overlapping
-  * writers therefore see last-committer-wins per key, exactly as if they
-  * had run sequentially in version order.
+  * version's snapshot is its operation applied to the PREDECESSOR
+  * version (restage) or a provably-equivalent file swap (rebase).
+  * Overlapping writers therefore see last-committer-wins per key,
+  * exactly as if they had run sequentially in version order.
   *
   * The reference is single-process and single-writer by construction
   * (one ParquetRewriter per sorted file, README.md:45-48); multi-writer
@@ -69,100 +77,199 @@ object OptimisticCommit {
   /** The next version slot is occupied by an UNCOMMITTED directory this
     * protocol did not produce (a crashed direct `applyBatch` target or
     * foreign debris) — publishing over it could destroy another writer's
-    * in-progress work, so the commit refuses instead. */
+    * in-progress work, so the claim refuses instead. */
   final class BlockedSlotException(msg: String) extends RuntimeException(msg)
+
+  /** Publish attempts before a writer gives up on a contended chain. */
+  private val MaxAttempts = 20
+
+  /** One publish attempt: the version its snapshot is staged against
+    * (−1 = the base snapshot), that version's dir, and the staging dir. */
+  private final case class Attempt(base: Long, baseDir: String, dir: String)
+
+  /** What a lost publish race does with the staged snapshot. */
+  private sealed trait OnLost[+A]
+  /** Discard the staged dir and stage again against the new head. */
+  private case object Restage extends OnLost[Nothing]
+  /** Publish the same staged dir at the new head's successor slot. */
+  private final case class Reaim[A](result: A) extends OnLost[A]
+  /** Give up without publishing (the operation already landed, or no
+    * longer applies to the new head). */
+  private case object Stop extends OnLost[Nothing]
+
+  private def restage[A](at: Attempt, a: A, head: Long): OnLost[A] = Restage
+
+  /** The landed version and the winning attempt's result; a `None`
+    * result published nothing and `version` is the head it stopped at. */
+  private final case class Published[A](version: Long, result: Option[A],
+                                        attempts: Int)
+
+  private def head(tableRoot: String): Long =
+    CdcMergeSink.versions(tableRoot).lastOption.getOrElse(-1L)
+
+  private def snapshotDir(tableRoot: String, v: Long): String =
+    if (v < 0) s"$tableRoot/base" else s"$tableRoot/v$v"
+
+  /** THE slot claim. Looks up the head, has `stage` write a complete
+    * snapshot against it into a fresh `.tx-` dir (None = nothing to
+    * publish), and renames that dir onto the head's successor slot. A
+    * lost race first refuses an uncommitted slot, then asks `lost` what
+    * the staged snapshot is worth against the new head. Every staged dir
+    * that does not publish is deleted on every exit, exceptions
+    * included — except `callerDir`, which its owner stages into and
+    * cleans up. */
+  private def publish[A](tableRoot: String, what: String,
+                         callerDir: Option[String] = None)(
+      stage: Attempt => Option[A])(
+      lost: (Attempt, A, Long) => OnLost[A]): Published[A] = {
+    var attempts = 0
+    var staged: Option[(Attempt, A)] = None
+    var unpublished: Option[String] = None
+    try {
+      while (attempts < MaxAttempts) {
+        attempts += 1
+        val (at, result) = staged match {
+          case Some(s) => s
+          case None =>
+            val base = head(tableRoot)
+            val at = Attempt(base, snapshotDir(tableRoot, base),
+              callerDir.getOrElse(s"$tableRoot/.tx-${
+                java.util.UUID.randomUUID().toString.take(12)}"))
+            if (callerDir.isEmpty) unpublished = Some(at.dir)
+            stage(at) match {
+              case Some(r) => (at, r)
+              case None => return Published(base, None, attempts)
+            }
+        }
+        val target = s"$tableRoot/v${at.base + 1}"
+        if (tryPublish(at.dir, at.baseDir, target)) {
+          unpublished = None
+          return Published(at.base + 1, Some(result), attempts)
+        }
+        // slot taken: with staged dirs publishing manifest-complete, any
+        // committed successor means a competitor won the race; an
+        // UNCOMMITTED one was not made by this protocol — refuse
+        val now = head(tableRoot)
+        if (now <= at.base)
+          throw new BlockedSlotException(
+            s"$target exists but is not a committed snapshot — a crashed " +
+              "direct applyBatch target or foreign directory is blocking " +
+              "the version chain; remove it (vacuum) and retry")
+        lost(at, result, now) match {
+          case Restage =>
+            unpublished.foreach(deleteQuietly)
+            staged = None
+          case Reaim(r) =>
+            staged = Some((Attempt(now, snapshotDir(tableRoot, now), at.dir), r))
+          case Stop => return Published(now, None, attempts)
+        }
+      }
+      throw new IllegalStateException(
+        s"$what on $tableRoot lost the publish race $MaxAttempts times — " +
+          "pathological contention; serialize writers")
+    } finally unpublished.foreach(deleteQuietly)
+  }
+
+  /** True when a zombie twin of this streaming writer already published
+    * its (app, epoch): exactly-once under WRITER RACES, not just replays.
+    * The pre-commit lastTxnEpoch check is check-then-act, so it is re-run
+    * atomically with every lost race (the analog of Delta's
+    * SetTransaction conflict check) — publishing a second marker past
+    * the winner would apply the epoch twice. */
+  private def epochLanded(tableRoot: String,
+                          txnMarker: Option[(String, Long)]): Boolean =
+    txnMarker.exists { case (app, epoch) =>
+      CdcMergeSink.lastTxnEpoch(tableRoot, app).exists(_ >= epoch) }
 
   /** Commit `batch` as the table's next version, safe under concurrent
     * writers. Returns the landed version (or the current latest for an
     * empty batch) plus attempt telemetry. `testHookAfterStage` runs
-    * between staging and publish — a deterministic seam for conflict
-    * tests; production callers leave the default. `txnMarker` (writer
-    * app id, epoch) is stamped into the committed manifest so a
-    * streaming sink's replayed epoch is detectable
+    * between staging (or a rebase) and publish — a deterministic seam
+    * for conflict tests; production callers leave the default.
+    * `txnMarker` (writer app id, epoch) is stamped into the committed
+    * manifest so a streaming sink's replayed epoch is detectable
     * ([[graft.streaming.CdcMergeSink.lastTxnEpoch]]) — the marker
-    * survives rebase (re-stamped before every publish attempt). */
+    * survives rebase (re-stamped before every publish attempt). A lost
+    * race rebases metadata-only when it can ([[tryRebase]]), else
+    * re-merges against the new head. */
   def commit(spark: SparkSession, tableRoot: String, key: String,
              batch: DataFrame, opCol: String = "op",
              seqCol: Option[String] = None,
              passthrough: MutableParquetTable.Passthrough =
                MutableParquetTable.Link,
-             maxAttempts: Int = 20,
              testHookAfterStage: () => Unit = () => (),
              txnMarker: Option[(String, Long)] = None,
              feedPending: Boolean = false): ConcurrentCommit = {
     val collapsed = CdcMergeSink.collapse(batch, key, seqCol)
     if (collapsed.isEmpty)
-      return ConcurrentCommit(
-        CdcMergeSink.versions(tableRoot).lastOption.getOrElse(-1L), 0, 0, None)
-    var attempts = 0
+      return ConcurrentCommit(head(tableRoot), 0, 0, None)
+    // stamp before EVERY publish attempt: a rebase rewrites the staged
+    // manifest and would otherwise drop the markers
+    def ready(dir: String, mr: MergeResult): MergeResult = {
+      testHookAfterStage()
+      txnMarker.foreach { case (a, e) =>
+        MutableParquetTable.annotateTxn(dir, a, e) }
+      if (feedPending) MutableParquetTable.annotateFeedPending(dir)
+      mr
+    }
     var rebases = 0
-    var staged: Option[Staged] = None
-    try {
-      while (attempts < maxAttempts) {
-        attempts += 1
-        val st = staged match {
-          case Some(s) => s // a successful rebase re-publishes as-is
-          case None =>
-            val baseV = CdcMergeSink.versions(tableRoot).lastOption
-            val baseDir = baseV.map(v => s"$tableRoot/v$v")
-              .getOrElse(s"$tableRoot/base")
-            val dir = s"$tableRoot/.tx-${
-              java.util.UUID.randomUUID().toString.take(12)}"
-            // the base manifest is read once and handed down: the handle,
-            // the merge and its manifest writer all use this value
-            val base = Manifest.read(baseDir)
-            val t = MutableParquetTable.opened(spark, baseDir, key,
-              passthrough, base)
-            // a FAILING merge (bad batch, not a crash) must not leave
-            // per-attempt staging debris behind for vacuum to find
-            val mr = try t.mergeFrom(base, collapsed, opCol, Some(dir))
-              catch { case e: Throwable => deleteQuietly(dir); throw e }
-            Staged(dir, baseV, mr)
-        }
-        staged = Some(st)
-        testHookAfterStage()
-        // stamp before EVERY publish attempt: a rebase rewrites the
-        // staged manifest and would otherwise drop the markers
-        txnMarker.foreach { case (a, e) =>
-          MutableParquetTable.annotateTxn(st.dir, a, e) }
-        if (feedPending) MutableParquetTable.annotateFeedPending(st.dir)
-        val target = st.baseVersion.getOrElse(-1L) + 1
-        val targetDir = s"$tableRoot/v$target"
-        if (tryPublish(st.dir, targetDir)) {
-          staged = None
-          return ConcurrentCommit(target, attempts, rebases,
-            Some(st.merge.copy(snapshotDir = targetDir)))
-        }
-        // slot taken: with staged dirs publishing manifest-complete, any
-        // committed v<target> means a competitor won the race; an
-        // UNCOMMITTED v<target> was not made by this protocol — refuse
-        val nowLast = CdcMergeSink.versions(tableRoot).lastOption
-          .getOrElse(-1L)
-        if (nowLast < target)
-          throw new BlockedSlotException(
-            s"$targetDir exists but is not a committed snapshot — a " +
-              "crashed direct applyBatch target or foreign directory is " +
-              "blocking the version chain; remove it (vacuum) and retry")
-        // exactly-once under WRITER RACES, not just replays: a zombie
-        // driver of the same streaming query (failover) may have
-        // committed this very (app, epoch) while we were staged — the
-        // pre-commit lastTxnEpoch check is check-then-act, so it must be
-        // re-run atomically with every publish retry (the analog of
-        // Delta's SetTransaction conflict check). Rebasing past the
-        // winner and publishing a second marker would apply the epoch
-        // twice.
-        txnMarker.foreach { case (app, epoch) =>
-          if (CdcMergeSink.lastTxnEpoch(tableRoot, app).exists(_ >= epoch))
-            return ConcurrentCommit(nowLast, attempts, rebases, None)
-        }
-        staged = tryRebase(tableRoot, st, nowLast, key, passthrough)
-        if (staged.isDefined) rebases += 1
-        else deleteQuietly(st.dir) // re-merge from scratch
+    val p = publish[MergeResult](tableRoot, "commit") { at =>
+      // the base manifest is read once and handed down: the handle, the
+      // merge and its manifest writer all use this value
+      val base = Manifest.read(at.baseDir)
+      Some(ready(at.dir, MutableParquetTable.opened(spark, at.baseDir, key,
+        passthrough, base).mergeFrom(base, collapsed, opCol, Some(at.dir))))
+    } { (at, mr, now) =>
+      if (epochLanded(tableRoot, txnMarker)) Stop
+      else tryRebase(tableRoot, at.dir, mr, now, key, passthrough) match {
+        case Some(rebased) => rebases += 1; Reaim(ready(at.dir, rebased))
+        case None => Restage
       }
-      throw new IllegalStateException(
-        s"commit on $tableRoot lost the publish race $maxAttempts times — " +
-          "pathological contention; raise maxAttempts or serialize writers")
-    } finally staged.foreach(s => deleteQuietly(s.dir))
+    }
+    ConcurrentCommit(p.version, p.attempts, rebases,
+      p.result.map(_.copy(snapshotDir = s"$tableRoot/v${p.version}")))
+  }
+
+  /** The write contract a replace's staged manifest carries: CHECK
+    * constraints and DEFAULT/GENERATED column contracts. */
+  private final case class Contract(checks: Map[String, String],
+                                    defaults: Map[String, String],
+                                    generated: Map[String, String])
+
+  private def contractOf(m: Option[Manifest]): Contract =
+    Contract(m.map(_.checks).getOrElse(Map.empty),
+      m.map(_.defaults).getOrElse(Map.empty),
+      m.map(_.generated).getOrElse(Map.empty))
+
+  /** Re-aim a base-independent staged snapshot at the head `headDir`: a
+    * replace's CONTENT does not depend on the base, but its CONTRACT
+    * does. Publishing past a racing `ALTER TABLE ADD CONSTRAINT` with
+    * the stale checks would erase the constraint from the chain forever,
+    * unvalidated, so newly-added checks are enforced over the staged
+    * content and the staged manifest takes the head's set ([[tryRebase]]
+    * declines on the same drift; a replace can re-validate instead
+    * because its content is self-contained — a violation throws). A
+    * DEFAULT/GENERATED drift cannot be re-stamped (the staged files were
+    * filled under the old contract): None. The winner's commit stamp is
+    * newer than the staged one, so the stamp is renewed to keep commit
+    * times monotone along the chain (timestamp travel, feed binary
+    * search); txn marker fields are untouched. */
+  private def reaimed(headDir: String, stagedDir: String, c: Contract,
+                      content: => Option[DataFrame],
+                      context: String): Option[Contract] = {
+    val now = contractOf(Manifest.read(headDir))
+    if (now.defaults != c.defaults || now.generated != c.generated)
+      return None
+    if (now.checks != c.checks) {
+      val added = now.checks.filterNot { case (n, e) =>
+        c.checks.get(n).contains(e) }
+      if (added.nonEmpty) content.foreach(df =>
+        graft.sources.GraftChecks.enforce(df, added,
+          s"$context (constraint added concurrently)"))
+      graft.sources.GraftChecks.annotateChecks(stagedDir, now.checks)
+    }
+    MutableParquetTable.restampCommittedAt(stagedDir)
+    Some(now)
   }
 
   /** Commit `batch` as the table's next version REPLACING all current
@@ -172,152 +279,78 @@ object OptimisticCommit {
     * routes by), manifest-complete, then published with the same atomic
     * slot-claim as [[commit]]. Unlike a merge, the content does not
     * depend on the base version, so a lost publish race needs NO rebase
-    * or re-merge: the same staged dir simply re-aims at the new head's
-    * successor slot. An empty batch commits an empty snapshot (truncate).
+    * or re-merge: the same staged dir is re-aimed at the new head's
+    * successor slot ([[reaimed]]: a racing CHECK change is enforced and
+    * carried, a racing DEFAULT/GENERATED change fails the replace). An
+    * empty batch commits an empty snapshot (truncate).
     *
     * `numFiles` 0 sizes the output from the batch plan's statistics at
     * ~128 MB per file (exact when the batch reads staged parquet, as the
     * V2 write path does); pass it explicitly to pin the layout. */
   def replace(spark: SparkSession, tableRoot: String, key: String,
               batch: DataFrame, numFiles: Int = 0,
-              maxAttempts: Int = 20,
               txnMarker: Option[(String, Long)] = None,
               testHookAfterStage: () => Unit = () => ()): Long = {
-    val latest = CdcMergeSink.latestSnapshot(tableRoot)
-    val head = Manifest.read(latest).getOrElse(Manifest(key))
-    val moreKeys = head.moreKeys
-    // a bucketed table's replace re-buckets: the layout is the table's
-    // join contract, so INSERT OVERWRITE must not silently drop it
-    val bucketSpec = head.buckets
-    val dir = s"$tableRoot/.tx-${
-      java.util.UUID.randomUUID().toString.take(12)}"
-    // CHECK constraints and DEFAULT/GENERATED column contracts survive
-    // a replace (they are the table's write contract, not a property of
-    // its content) and gate/fill the new content
-    var checks = head.checks
-    val defaults0 = head.defaults
-    val generated0 = head.generated
-    val batchC = graft.sources.GraftDefaults.applyAndEnforce(batch,
-      defaults0, generated0, head.schema, None,
-      s"INSERT OVERWRITE of $tableRoot")
-    val emptyBatch = batchC.isEmpty
-    if (emptyBatch) {
-      MutableParquetTable.commitEmpty(dir, key, batchC.schema, moreKeys,
-        bucketSpec, checks, defaults0, generated0)
-    } else {
-      if (checks.nonEmpty)
-        graft.sources.GraftChecks.enforce(batchC, checks,
-          s"INSERT OVERWRITE of $tableRoot")
-      bucketSpec match {
-        case Some(nb) =>
-          graft.sources.GraftBucket.writeBucketed(batchC, dir, key,
-            moreKeys, nb)
-        case None =>
-          val n =
-            if (numFiles > 0) numFiles
-            else {
-              val bytes = batchC.queryExecution.optimizedPlan.stats.sizeInBytes
-              val target = BigInt(128L * 1024 * 1024)
-              ((bytes + target - 1) / target).min(BigInt(4096)).max(BigInt(1)).toInt
+    val context = s"INSERT OVERWRITE of $tableRoot"
+    var emptyBatch = false
+    publish[Contract](tableRoot, "replace") { at =>
+      val head = Manifest.read(at.baseDir).getOrElse(Manifest(key))
+      val moreKeys = head.moreKeys
+      // CHECK constraints and DEFAULT/GENERATED column contracts survive
+      // a replace (they are the table's write contract, not a property
+      // of its content) and gate/fill the new content
+      val batchC = graft.sources.GraftDefaults.applyAndEnforce(batch,
+        head.defaults, head.generated, head.schema, None, context)
+      emptyBatch = batchC.isEmpty
+      if (emptyBatch) {
+        MutableParquetTable.commitEmpty(at.dir, key, batchC.schema, moreKeys,
+          head.buckets, head.checks, head.defaults, head.generated)
+      } else {
+        if (head.checks.nonEmpty)
+          graft.sources.GraftChecks.enforce(batchC, head.checks, context)
+        // a bucketed table's replace re-buckets: the layout is the
+        // table's join contract, so INSERT OVERWRITE must not silently
+        // drop it
+        head.buckets match {
+          case Some(nb) =>
+            graft.sources.GraftBucket.writeBucketed(batchC, at.dir, key,
+              moreKeys, nb)
+          case None =>
+            val n =
+              if (numFiles > 0) numFiles
+              else {
+                val bytes = batchC.queryExecution.optimizedPlan.stats.sizeInBytes
+                val target = BigInt(128L * 1024 * 1024)
+                ((bytes + target - 1) / target).min(BigInt(4096)).max(BigInt(1)).toInt
+              }
+            graft.sources.ParquetTable.withMicrosTimestamps(spark) {
+              graft.sources.ParquetTable.writeSortedBy(batchC, at.dir,
+                key +: moreKeys, n)
             }
-          graft.sources.ParquetTable.withMicrosTimestamps(spark) {
-            graft.sources.ParquetTable.writeSortedBy(batchC, dir,
-              key +: moreKeys, n)
-          }
-      }
-      MutableParquetTable(spark, latest, key, moreKeys = moreKeys)
-        // replace content is entirely new bytes written through the
-        // batch schema — no pre-drop file survives, blocklist clears
-        .commitManifest(dir, Some(batchC.schema), physicalRewrite = true)
-    }
-    // re-aims only re-stamp committedAtMs, never the txn fields, so one
-    // marker stamp up front is durable across publish attempts
-    txnMarker.foreach { case (a, e) =>
-      MutableParquetTable.annotateTxn(dir, a, e) }
-    var attempts = 0
-    var syncedFrom = latest
-    testHookAfterStage()
-    try {
-      while (attempts < maxAttempts) {
-        attempts += 1
-        val target =
-          CdcMergeSink.versions(tableRoot).lastOption.getOrElse(-1L) + 1
-        val targetDir = s"$tableRoot/v$target"
-        // a racing ALTER ... CONSTRAINT moved the table contract while
-        // we were staging (or since the last attempt) — carry and
-        // enforce it BEFORE claiming the slot, or it silently vanishes
-        // from the chain. Checked against the PUBLISH base, not just on
-        // lost races: the drift window opens the moment `checks` was
-        // read above.
-        val headDir =
-          if (target == 0) s"$tableRoot/base" else s"$tableRoot/v${target - 1}"
-        if (headDir != syncedFrom) {
-          checks = resyncChecks(headDir, dir, checks,
-            if (emptyBatch) None else Some(spark.read.parquet(dir)),
-            s"INSERT OVERWRITE of $tableRoot")
-          // a DEFAULT/GENERATED contract change affects CONTENT (the
-          // staged files were filled under the old contract), so unlike
-          // checks it cannot be re-stamped — fail the replace instead
-          if (graft.sources.GraftDefaults.manifestDefaults(headDir)
-                != defaults0 ||
-              graft.sources.GraftDefaults.manifestGenerated(headDir)
-                != generated0)
-            throw new IllegalStateException(
-              s"concurrent DEFAULT/GENERATED column change on $tableRoot " +
-                "during INSERT OVERWRITE — re-run the statement under " +
-                "the new contract")
-          syncedFrom = headDir
         }
-        if (tryPublish(dir, targetDir)) return target
-        val nowLast = CdcMergeSink.versions(tableRoot).lastOption
-          .getOrElse(-1L)
-        if (nowLast < target)
-          throw new BlockedSlotException(
-            s"$targetDir exists but is not a committed snapshot — a " +
-              "crashed direct applyBatch target or foreign directory is " +
-              "blocking the version chain; remove it (vacuum) and retry")
-        // same writer-race guard as [[commit]]: a zombie twin of this
-        // streaming query may have published this epoch's replace while
-        // we were staged — re-applying it would double the epoch
-        txnMarker.foreach { case (app, epoch) =>
-          if (CdcMergeSink.lastTxnEpoch(tableRoot, app).exists(_ >= epoch))
-            return nowLast
-        }
-        // the winner's stamp is newer than this staged one — re-stamp so
-        // commit times stay monotone along the chain (timestamp travel /
-        // feed binary search). The txn marker fields are untouched.
-        MutableParquetTable.restampCommittedAt(dir)
+        MutableParquetTable(spark, at.baseDir, key, moreKeys = moreKeys)
+          // replace content is entirely new bytes written through the
+          // batch schema — no pre-drop file survives, blocklist clears
+          .commitManifest(at.dir, Some(batchC.schema), physicalRewrite = true)
       }
-      throw new IllegalStateException(
-        s"replace on $tableRoot lost the publish race $maxAttempts times — " +
-          "pathological contention; raise maxAttempts or serialize writers")
-    } finally deleteQuietly(dir)
-  }
-
-  /** Re-read the publish base's CHECK contract and, when it drifted from
-    * `current`, enforce the newly-added checks over the staged content
-    * and restamp the staged manifest. A replace's CONTENT is
-    * base-independent, but its CONTRACT is not: publishing past a racing
-    * `ALTER TABLE ADD CONSTRAINT` with the stale checks map would erase
-    * the constraint from the chain forever, unvalidated — and the drift
-    * window opens the moment the contract is first read, not only on a
-    * lost rename. [[tryRebase]] declines on the same drift; replace can
-    * re-validate instead because the staged content is self-contained.
-    * Returns the contract now carried (a violation throws, failing the
-    * replace). */
-  private def resyncChecks(headDir: String,
-                           stagedDir: String,
-                           current: Map[String, String],
-                           content: => Option[DataFrame],
-                           context: String): Map[String, String] = {
-    val head = graft.sources.GraftChecks.manifestChecks(headDir)
-    if (head == current) return current
-    val added = head.filterNot { case (n, e) => current.get(n).contains(e) }
-    if (added.nonEmpty) content.foreach(df =>
-      graft.sources.GraftChecks.enforce(df, added,
-        s"$context (constraint added concurrently)"))
-    graft.sources.GraftChecks.annotateChecks(stagedDir, head)
-    head
+      // re-aims only re-stamp committedAtMs, never the txn fields, so one
+      // marker stamp up front is durable across publish attempts
+      txnMarker.foreach { case (a, e) =>
+        MutableParquetTable.annotateTxn(at.dir, a, e) }
+      testHookAfterStage()
+      Some(contractOf(Some(head)))
+    } { (at, c, now) =>
+      // same writer-race guard as [[commit]]: a zombie twin of this
+      // streaming query may have published this epoch's replace while
+      // we were staged — re-applying it would double the epoch
+      if (epochLanded(tableRoot, txnMarker)) Stop
+      else Reaim(reaimed(snapshotDir(tableRoot, now), at.dir, c,
+          if (emptyBatch) None else Some(spark.read.parquet(at.dir)), context)
+        .getOrElse(throw new IllegalStateException(
+          s"concurrent DEFAULT/GENERATED column change on $tableRoot " +
+            "during INSERT OVERWRITE — re-run the statement under the new " +
+            "contract")))
+    }.version
   }
 
   /** Test/diagnostic seam: whether the most recent V2 replace published
@@ -331,12 +364,15 @@ object OptimisticCommit {
     * — PROVE it from their footers (one sweep of the new files only),
     * enforce the table's CHECK constraints over them, write the manifest
     * INTO the staging dir and publish it by the same atomic slot claim
-    * every commit uses. Returns false — caller falls back to the legacy
+    * every commit uses (the staging dir stays the caller's: it is never
+    * deleted here). Returns false — caller falls back to the legacy
     * re-read + re-sort replace — when the proof fails: overlapping
     * ranges (a planner that did not honor the distribution) or
-    * stat-less files. The replace contract holds either way: checks
-    * carried and enforced, dropped-column blocklist cleared (all-new
-    * files), bucketed layouts decline upstream. */
+    * stat-less files; also when a lost race moved the DEFAULT/GENERATED
+    * contract, or (`insertIntoEmpty`) when the table is no longer empty.
+    * The replace contract holds either way: checks carried and enforced,
+    * dropped-column blocklist cleared (all-new files), bucketed layouts
+    * decline upstream. */
   def replaceStagedDirect(spark: SparkSession, tableRoot: String,
                           key: String, moreKeysDeclared: Seq[String],
                           stagingDir: String, staged: Seq[String],
@@ -344,19 +380,6 @@ object OptimisticCommit {
                           insertIntoEmpty: Boolean = false,
                           testHookAfterStage: () => Unit = () => ()): Boolean = {
     lastReplaceDirect = false
-    val latest = CdcMergeSink.latestSnapshot(tableRoot)
-    MutableParquetTable.requireFeaturesSupported(latest)
-    val head = Manifest.read(latest)
-    val moreKeys = head.map(_.moreKeys).filter(_.nonEmpty)
-      .getOrElse(moreKeysDeclared)
-    if (insertIntoEmpty) {
-      // the append form is valid only while the table is STILL empty —
-      // a concurrent insert since analysis means this batch must merge,
-      // not replace. Re-checked here; the single no-retry slot attempt
-      // below closes the remaining race window.
-      val stillEmpty = head.exists(_.files.isEmpty)
-      if (!stillEmpty) return false
-    }
     val ranges =
       graft.sources.ParquetStats.fileKeyRangesTypedFor(spark, staged, key)
     if (ranges.size != staged.size) return false // stat-less file(s)
@@ -374,99 +397,65 @@ object OptimisticCommit {
     // back via the proof above.
     val context =
       s"${if (insertIntoEmpty) "INSERT INTO (empty)" else "INSERT OVERWRITE"} of $tableRoot"
-    var checks = head.map(_.checks).getOrElse(Map.empty)
-    if (checks.nonEmpty)
-      graft.sources.GraftChecks.enforce(
-        spark.read.schema(schema).parquet(staged: _*), checks, context)
-    // the SQL INSERT path supplies every column by the time rows reach
-    // storage, so GENERATED drift is validated here (fill-on-omission
-    // applies on the DataFrame write surfaces); the contract is carried
-    // into the manifest below
-    val defaultsD = head.map(_.defaults).getOrElse(Map.empty)
-    val generatedD = head.map(_.generated).getOrElse(Map.empty)
-    if (generatedD.nonEmpty)
-      graft.sources.GraftDefaults.applyAndEnforce(
-        spark.read.schema(schema).parquet(staged: _*), Map.empty,
-        generatedD, Some(schema), None, context)
-    // crashed-task debris: a task that died mid-write (JVM kill — its
-    // abort() never ran) left a partial/duplicate file in the staging
-    // dir that no commit message names. The manifest below lists only
-    // committed files, but the publish renames the WHOLE dir — sweep
-    // non-committed data files first, or they ship into the published
-    // snapshot (corrupting the direct spark.read.parquet(dir) view and
-    // leaking bytes no vacuum ever reclaims).
-    locally {
-      import scala.jdk.CollectionConverters._
-      val committed = staged.map(f => f.split('/').last).toSet
-      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(stagingDir))
-      try ls.iterator().asScala
-        .filter(p => MutableParquetTable.isDataFileName(p.getFileName.toString)
-          && !committed(p.getFileName.toString))
-        .foreach(java.nio.file.Files.delete)
-      finally ls.close()
-    }
-    val bytes = staged.map(f => f.split('/').last ->
-      java.nio.file.Files.size(java.nio.file.Paths.get(f))).toMap
-    Manifest.write(stagingDir, Manifest(key,
-      keyType = Manifest.keyTypeOf(sorted.headOption.map(_.min)),
-      moreKeys = moreKeys,
-      files = sorted.map { r =>
-        val n = r.file.split('/').last
-        Manifest.entry(n, r, bytes.get(n))
-      },
-      schema = Some(schema),
-      committedAtMs = Some(System.currentTimeMillis()),
-      checks = checks, defaults = defaultsD, generated = generatedD))
-    var attempts = 0
-    var syncedFrom = latest
-    testHookAfterStage()
-    while (attempts < 20) {
-      attempts += 1
-      val target =
-        CdcMergeSink.versions(tableRoot).lastOption.getOrElse(-1L) + 1
-      // the table CONTRACT may have moved even though the content is
-      // base-independent: a racing ALTER ... ADD CONSTRAINT must gate
-      // this content and survive into this manifest, or it is silently
-      // erased from the chain forever. Checked against the publish base
-      // on EVERY attempt (the drift window opens at the checks read
-      // above, not at a lost rename).
-      val headDir =
-        if (target == 0) s"$tableRoot/base" else s"$tableRoot/v${target - 1}"
-      if (headDir != syncedFrom) {
-        // an empty-insert that raced ANY commit falls back to the merge
-        // below anyway; only full replaces re-validate and re-aim
-        if (insertIntoEmpty) return false
-        checks = resyncChecks(headDir, stagingDir, checks,
-          Some(spark.read.schema(schema).parquet(staged: _*)), context)
-        // a DEFAULT/GENERATED contract drift falls back to the legacy
-        // replace, which re-reads the new head's contract
-        if (graft.sources.GraftDefaults.manifestDefaults(headDir)
-              != defaultsD ||
-            graft.sources.GraftDefaults.manifestGenerated(headDir)
-              != generatedD)
-          return false
-        syncedFrom = headDir
+    def content = spark.read.schema(schema).parquet(staged: _*)
+    val p = publish[Contract](tableRoot, "direct replace",
+        callerDir = Some(stagingDir)) { at =>
+      val head = Manifest.read(at.baseDir)
+      MutableParquetTable.requireFeaturesSupported(at.baseDir, head)
+      // the append form is valid only while the table is STILL empty —
+      // a concurrent insert since analysis means this batch must merge,
+      // not replace
+      if (insertIntoEmpty && !head.exists(_.files.isEmpty)) None
+      else {
+        val c = contractOf(head)
+        if (c.checks.nonEmpty)
+          graft.sources.GraftChecks.enforce(content, c.checks, context)
+        // the SQL INSERT path supplies every column by the time rows
+        // reach storage, so GENERATED drift is validated here
+        // (fill-on-omission applies on the DataFrame write surfaces); the
+        // contract is carried into the manifest below
+        if (c.generated.nonEmpty)
+          graft.sources.GraftDefaults.applyAndEnforce(content, Map.empty,
+            c.generated, Some(schema), None, context)
+        // crashed-task debris: a task that died mid-write (JVM kill — its
+        // abort() never ran) left a partial/duplicate file in the staging
+        // dir that no commit message names. The manifest below lists only
+        // committed files, but the publish renames the WHOLE dir — sweep
+        // non-committed data files first, or they ship into the published
+        // snapshot (corrupting the direct spark.read.parquet(dir) view and
+        // leaking bytes no vacuum ever reclaims).
+        val committed = staged.map(f => f.split('/').last).toSet
+        MutableParquetTable.dataFiles(stagingDir)
+          .filterNot(f => committed(f.split('/').last))
+          .foreach(f => Files.delete(Paths.get(f)))
+        val bytes = staged.map(f => f.split('/').last ->
+          Files.size(Paths.get(f))).toMap
+        Manifest.write(stagingDir, Manifest(key,
+          keyType = Manifest.keyTypeOf(sorted.headOption.map(_.min)),
+          moreKeys = head.map(_.moreKeys).filter(_.nonEmpty)
+            .getOrElse(moreKeysDeclared),
+          files = sorted.map { r =>
+            val n = r.file.split('/').last
+            Manifest.entry(n, r, bytes.get(n))
+          },
+          schema = Some(schema),
+          committedAtMs = Some(System.currentTimeMillis()),
+          checks = c.checks, defaults = c.defaults, generated = c.generated))
+        testHookAfterStage()
+        Some(c)
       }
-      if (tryPublish(stagingDir, s"$tableRoot/v$target")) {
-        lastReplaceDirect = true
-        return true
-      }
+    } { (at, c, now) =>
       // a lost race invalidates the EMPTINESS the append form proved —
       // the batch must merge against whatever won. Replace semantics
-      // (the content IS the next state regardless of the head) re-aim.
-      if (insertIntoEmpty) return false
-      val nowLast = CdcMergeSink.versions(tableRoot).lastOption
-        .getOrElse(-1L)
-      if (nowLast < target)
-        throw new BlockedSlotException(
-          s"$tableRoot/v$target exists but is not a committed snapshot — " +
-            "remove it (vacuum) and retry")
-      // the winner's stamp is newer — keep commit times monotone
-      MutableParquetTable.restampCommittedAt(stagingDir)
+      // (the content IS the next state regardless of the head) re-aim;
+      // a DEFAULT/GENERATED drift falls back to the legacy replace,
+      // which re-reads the new head's contract
+      if (insertIntoEmpty) Stop
+      else reaimed(snapshotDir(tableRoot, now), at.dir, c, Some(content),
+        context).fold[OnLost[Contract]](Stop)(Reaim(_))
     }
-    throw new IllegalStateException(
-      s"direct replace on $tableRoot lost the publish race 20 times — " +
-        "pathological contention; serialize writers")
+    lastReplaceDirect = p.result.isDefined
+    lastReplaceDirect
   }
 
   /** Commit the table's next version whose LOGICAL STATE is exactly that
@@ -480,10 +469,9 @@ object OptimisticCommit {
     * readable via time travel, and vacuum reference-counts the restored
     * files like any other referenced snapshot. Publishes with the same
     * atomic slot-claim as [[commit]]; like [[replace]], the content does
-    * not depend on the base version, so a lost race just re-aims the
-    * same staged dir at the new head's successor slot. */
-  def restore(spark: SparkSession, tableRoot: String, toVersion: Long,
-              maxAttempts: Int = 20): Long = {
+    * not depend on the base version, so a lost race re-aims the same
+    * staged dir at the new head's successor slot after a restamp. */
+  def restore(spark: SparkSession, tableRoot: String, toVersion: Long): Long = {
     val targetDir =
       if (toVersion < 0) s"$tableRoot/base"
       else {
@@ -493,31 +481,26 @@ object OptimisticCommit {
             s"base${vs.map(v => s", v$v").mkString}")
         s"$tableRoot/v$toVersion"
       }
-    val dir = s"$tableRoot/.tx-${
-      java.util.UUID.randomUUID().toString.take(12)}"
-    MutableParquetTable.stageRestoreManifest(dir, targetDir)
-    var attempts = 0
-    try {
-      while (attempts < maxAttempts) {
-        attempts += 1
-        val target =
-          CdcMergeSink.versions(tableRoot).lastOption.getOrElse(-1L) + 1
-        val targetSlot = s"$tableRoot/v$target"
-        if (tryPublish(dir, targetSlot)) return target
-        val nowLast = CdcMergeSink.versions(tableRoot).lastOption
-          .getOrElse(-1L)
-        if (nowLast < target)
-          throw new BlockedSlotException(
-            s"$targetSlot exists but is not a committed snapshot — a " +
-              "crashed direct applyBatch target or foreign directory is " +
-              "blocking the version chain; remove it (vacuum) and retry")
-        // keep commit times monotone across re-aims (see [[replace]])
-        MutableParquetTable.restampCommittedAt(dir)
-      }
-      throw new IllegalStateException(
-        s"restore on $tableRoot lost the publish race $maxAttempts times " +
-          "— pathological contention; raise maxAttempts or serialize writers")
-    } finally deleteQuietly(dir)
+    publish[Unit](tableRoot, "restore") { at =>
+      Some(MutableParquetTable.stageRestoreManifest(at.dir, targetDir))
+    } { (at, _, _) =>
+      // keep commit times monotone across re-aims (see [[reaimed]])
+      MutableParquetTable.restampCommittedAt(at.dir)
+      Reaim(())
+    }.version
+  }
+
+  /** Stage `op` of the head opened with its one manifest read into the
+    * attempt's dir, restaged per publish attempt. */
+  private def restagedOp(spark: SparkSession, tableRoot: String, key: String,
+                         passthrough: MutableParquetTable.Passthrough,
+                         what: String)(
+      op: (MutableParquetTable, String) => MergeResult): (Long, MergeResult) = {
+    val p = publish[MergeResult](tableRoot, what) { at =>
+      Some(op(MutableParquetTable.opened(spark, at.baseDir, key, passthrough,
+        Manifest.read(at.baseDir)), at.dir))
+    }(restage)
+    (p.version, p.result.get.copy(snapshotDir = s"$tableRoot/v${p.version}"))
   }
 
   /** Commit a zone-map `DELETE WHERE` as the table's next version
@@ -530,37 +513,10 @@ object OptimisticCommit {
     * concurrent writers like [[commit]]. Returns (version, summary). */
   def deleteWhere(spark: SparkSession, tableRoot: String, key: String,
                   cond: org.apache.spark.sql.Column,
-                  passthrough: graft.sources.MutableParquetTable.Passthrough =
-                    graft.sources.MutableParquetTable.Link,
-                  maxAttempts: Int = 20)
-      : (Long, graft.sources.MergeResult) = {
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val baseV = CdcMergeSink.versions(tableRoot).lastOption
-      val latest = baseV.map(v => s"$tableRoot/v$v")
-        .getOrElse(s"$tableRoot/base")
-      val moreKeys = MutableParquetTable.manifestMoreKeys(latest)
-      val dir = s"$tableRoot/.tx-${
-        java.util.UUID.randomUUID().toString.take(12)}"
-      val res = new MutableParquetTable(spark, latest, key, passthrough,
-        moreKeys).deleteWhere(cond, dir)
-      val target = baseV.getOrElse(-1L) + 1
-      val targetDir = s"$tableRoot/v$target"
-      if (tryPublish(dir, targetDir))
-        return (target, res.copy(snapshotDir = targetDir))
-      deleteQuietly(dir)
-      val nowLast = CdcMergeSink.versions(tableRoot).lastOption
-        .getOrElse(-1L)
-      if (nowLast < target)
-        throw new BlockedSlotException(
-          s"$targetDir exists but is not a committed snapshot — " +
-            "remove it (vacuum) and retry")
-    }
-    throw new IllegalStateException(
-      s"deleteWhere on $tableRoot lost the publish race $maxAttempts " +
-        "times — pathological contention; raise maxAttempts or serialize writers")
-  }
+                  passthrough: MutableParquetTable.Passthrough =
+                    MutableParquetTable.Link): (Long, MergeResult) =
+    restagedOp(spark, tableRoot, key, passthrough, "deleteWhere")(
+      _.deleteWhere(cond, _))
 
   /** Commit a TOMBSTONE delete as the table's next version
     * ([[graft.sources.MutableParquetTable.deleteKeysTombstone]]): every
@@ -571,37 +527,10 @@ object OptimisticCommit {
     * is sidecar-sized). Returns (version, summary). */
   def deleteKeysTombstone(spark: SparkSession, tableRoot: String, key: String,
                           deleteKeys: DataFrame,
-                          passthrough: graft.sources.MutableParquetTable.Passthrough =
-                            graft.sources.MutableParquetTable.Link,
-                          maxAttempts: Int = 20)
-      : (Long, graft.sources.MergeResult) = {
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val baseV = CdcMergeSink.versions(tableRoot).lastOption
-      val latest = baseV.map(v => s"$tableRoot/v$v")
-        .getOrElse(s"$tableRoot/base")
-      val moreKeys = MutableParquetTable.manifestMoreKeys(latest)
-      val dir = s"$tableRoot/.tx-${
-        java.util.UUID.randomUUID().toString.take(12)}"
-      val res = new MutableParquetTable(spark, latest, key, passthrough,
-        moreKeys).deleteKeysTombstone(deleteKeys, dir)
-      val target = baseV.getOrElse(-1L) + 1
-      val targetDir = s"$tableRoot/v$target"
-      if (tryPublish(dir, targetDir))
-        return (target, res.copy(snapshotDir = targetDir))
-      deleteQuietly(dir)
-      val nowLast = CdcMergeSink.versions(tableRoot).lastOption
-        .getOrElse(-1L)
-      if (nowLast < target)
-        throw new BlockedSlotException(
-          s"$targetDir exists but is not a committed snapshot — " +
-            "remove it (vacuum) and retry")
-    }
-    throw new IllegalStateException(
-      s"tombstone delete on $tableRoot lost the publish race $maxAttempts " +
-        "times — pathological contention; raise maxAttempts or serialize writers")
-  }
+                          passthrough: MutableParquetTable.Passthrough =
+                            MutableParquetTable.Link): (Long, MergeResult) =
+    restagedOp(spark, tableRoot, key, passthrough, "tombstone delete")(
+      _.deleteKeysTombstone(deleteKeys, _))
 
   /** Commit a zone-map `UPDATE ... WHERE` as the table's next version
     * ([[graft.sources.MutableParquetTable.updateWhere]]): proven-clean
@@ -611,37 +540,10 @@ object OptimisticCommit {
   def updateWhere(spark: SparkSession, tableRoot: String, key: String,
                   cond: org.apache.spark.sql.Column,
                   sets: Seq[(String, org.apache.spark.sql.Column)],
-                  passthrough: graft.sources.MutableParquetTable.Passthrough =
-                    graft.sources.MutableParquetTable.Link,
-                  maxAttempts: Int = 20)
-      : (Long, graft.sources.MergeResult) = {
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val baseV = CdcMergeSink.versions(tableRoot).lastOption
-      val latest = baseV.map(v => s"$tableRoot/v$v")
-        .getOrElse(s"$tableRoot/base")
-      val moreKeys = MutableParquetTable.manifestMoreKeys(latest)
-      val dir = s"$tableRoot/.tx-${
-        java.util.UUID.randomUUID().toString.take(12)}"
-      val res = new MutableParquetTable(spark, latest, key, passthrough,
-        moreKeys).updateWhere(cond, sets, dir)
-      val target = baseV.getOrElse(-1L) + 1
-      val targetDir = s"$tableRoot/v$target"
-      if (tryPublish(dir, targetDir))
-        return (target, res.copy(snapshotDir = targetDir))
-      deleteQuietly(dir)
-      val nowLast = CdcMergeSink.versions(tableRoot).lastOption
-        .getOrElse(-1L)
-      if (nowLast < target)
-        throw new BlockedSlotException(
-          s"$targetDir exists but is not a committed snapshot — " +
-            "remove it (vacuum) and retry")
-    }
-    throw new IllegalStateException(
-      s"updateWhere on $tableRoot lost the publish race $maxAttempts " +
-        "times — pathological contention; raise maxAttempts or serialize writers")
-  }
+                  passthrough: MutableParquetTable.Passthrough =
+                    MutableParquetTable.Link): (Long, MergeResult) =
+    restagedOp(spark, tableRoot, key, passthrough, "updateWhere")(
+      _.updateWhere(cond, sets, _))
 
   /** Commit a SCHEMA CHANGE as the table's next version with ZERO data
     * IO: the staged snapshot references every current file in place
@@ -653,22 +555,16 @@ object OptimisticCommit {
     * manifest rewrite, never a table rewrite. */
   def commitSchema(tableRoot: String,
                    newSchema: org.apache.spark.sql.types.StructType,
-                   maxAttempts: Int = 20,
                    recordDropped: Seq[String] = Nil,
                    expectedSchema: Option[org.apache.spark.sql.types.StructType] = None,
                    expectedChecks: Option[Map[String, String]] = None,
                    newRenames: Option[Map[String, String]] = None,
                    recordWidened: Seq[String] = Nil,
-                   stripDims: Seq[String] = Nil): Long = {
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val baseV = CdcMergeSink.versions(tableRoot).lastOption
-      val latest = baseV.map(v => s"$tableRoot/v$v")
-        .getOrElse(s"$tableRoot/base")
+                   stripDims: Seq[String] = Nil): Long =
+    publish[Unit](tableRoot, "schema change") { at =>
       // drift guards (the commitChecks expectedChecks pattern): the
       // caller computed `newSchema` and ran its guards against a head it
-      // read BEFORE this loop. Restaging that result onto a head whose
+      // read BEFORE this claim. Restaging that result onto a head whose
       // schema moved (a concurrent ADD COLUMNS / merge evolution) would
       // silently ERASE the concurrently-added column — guardResurrected
       // cannot catch it, the column was never dropped. A concurrently
@@ -676,7 +572,7 @@ object OptimisticCommit {
       // as a ghost contract failing every later write. Fail instead;
       // the caller re-reads and re-derives.
       expectedSchema.foreach { exp =>
-        val head = MutableParquetTable.manifestSchema(latest)
+        val head = MutableParquetTable.manifestSchema(at.baseDir)
         if (head.exists(_ != exp))
           throw new IllegalStateException(
             s"concurrent schema change on $tableRoot (this change was " +
@@ -684,33 +580,37 @@ object OptimisticCommit {
               s"head now carries ${head.map(_.fieldNames.mkString("[", ",", "]"))
                 .getOrElse("<none>")}) — re-read the table and retry")
       }
-      expectedChecks.foreach { exp =>
-        val headChecks = graft.sources.GraftChecks.manifestChecks(latest)
-        if (headChecks != exp)
-          throw new IllegalStateException(
-            s"concurrent CHECK-constraint change on $tableRoot (this " +
-              s"schema change was validated against ${exp.keySet.toSeq.sorted
-                .mkString("{", ",", "}")}, head now declares ${headChecks
-                .keySet.toSeq.sorted.mkString("{", ",", "}")}) — re-read " +
-              "the table and retry")
-      }
-      val dir = s"$tableRoot/.tx-${
-        java.util.UUID.randomUUID().toString.take(12)}"
-      MutableParquetTable.stageSchemaChange(latest, dir, newSchema,
-        recordDropped, newRenames, recordWidened, stripDims)
-      val target = baseV.getOrElse(-1L) + 1
-      if (tryPublish(dir, s"$tableRoot/v$target")) return target
-      deleteQuietly(dir)
-      val nowLast = CdcMergeSink.versions(tableRoot).lastOption
-        .getOrElse(-1L)
-      if (nowLast < target)
-        throw new BlockedSlotException(
-          s"$tableRoot/v$target exists but is not a committed snapshot — " +
-            "remove it (vacuum) and retry")
+      expectedChecks.foreach(requireChecks(tableRoot, at.baseDir, _,
+        "schema change was validated"))
+      Some(MutableParquetTable.stageSchemaChange(at.baseDir, at.dir,
+        newSchema, recordDropped, newRenames, recordWidened, stripDims))
+    }(restage).version
+
+  /** Fail on a CHECK-constraint set that moved since the caller read it. */
+  private def requireChecks(tableRoot: String, headDir: String,
+                            expected: Map[String, String],
+                            what: String): Unit = {
+    val headChecks = graft.sources.GraftChecks.manifestChecks(headDir)
+    if (headChecks != expected)
+      throw new IllegalStateException(
+        s"concurrent CHECK-constraint change on $tableRoot (this $what " +
+          s"against ${expected.keySet.toSeq.sorted.mkString("{", ",", "}")}, " +
+          s"head now declares ${headChecks.keySet.toSeq.sorted
+            .mkString("{", ",", "}")}) — re-read the table and retry")
+  }
+
+  /** Re-run the caller's validation scan when the head moved past the
+    * version it validated: rows committed CONCURRENTLY by a data writer
+    * were only checked against the OLD contract — otherwise a table
+    * could declare a contract its rows violate, silently and permanently
+    * (the "existing rows satisfy checks by induction" invariant every
+    * later write trusts). */
+  private def revalidator(validatedVersion: Option[Long],
+                          revalidate: Long => Unit): Long => Unit = {
+    var validatedAt = validatedVersion
+    base => validatedAt.foreach { v =>
+      if (base != v) { revalidate(base); validatedAt = Some(base) }
     }
-    throw new IllegalStateException(
-      s"schema change on $tableRoot lost the publish race $maxAttempts " +
-        "times — pathological contention; raise maxAttempts or serialize writers")
   }
 
   /** Commit a CHECK-CONSTRAINT change (add or drop) as the table's next
@@ -722,59 +622,24 @@ object OptimisticCommit {
     * under concurrent writers like [[commitSchema]] — with two guards
     * the plain restage would miss:
     *
-    *  - `validatedVersion`/`revalidate`: rows committed CONCURRENTLY by
-    *    a data writer were only checked against the OLD contract, so a
-    *    lost race onto a moved base re-runs the caller's validation scan
-    *    against the new head before staging — otherwise a table could
-    *    declare a check its rows violate, silently and permanently (the
-    *    "existing rows satisfy checks by induction" invariant every
-    *    later write trusts).
+    *  - `validatedVersion`/`revalidate`: a restage onto a moved base
+    *    re-runs the caller's validation scan against the new head before
+    *    staging ([[revalidator]]).
     *  - `expectedChecks`: a concurrent CONSTRAINT change (another
     *    add/drop winning a slot first) would be stomped by restaging the
     *    caller's stale target set; detected and failed instead. */
   def commitChecks(tableRoot: String, checks: Map[String, String],
-                   maxAttempts: Int = 20,
                    validatedVersion: Option[Long] = None,
                    revalidate: Long => Unit = _ => (),
                    expectedChecks: Option[Map[String, String]] = None): Long = {
-    var attempts = 0
-    var validatedAt = validatedVersion
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val baseV = CdcMergeSink.versions(tableRoot).lastOption
-      val latest = baseV.map(v => s"$tableRoot/v$v")
-        .getOrElse(s"$tableRoot/base")
-      expectedChecks.foreach { exp =>
-        val headChecks = graft.sources.GraftChecks.manifestChecks(latest)
-        if (headChecks != exp)
-          throw new IllegalStateException(
-            s"concurrent CHECK-constraint change on $tableRoot (this " +
-              s"change was computed against ${exp.keySet.toSeq.sorted
-                .mkString("{", ",", "}")}, head now declares " +
-              s"${headChecks.keySet.toSeq.sorted.mkString("{", ",", "}")}" +
-              ") — re-read the table and retry")
-      }
-      validatedAt.foreach { v =>
-        val now = baseV.getOrElse(-1L)
-        if (now != v) { revalidate(now); validatedAt = Some(now) }
-      }
-      val dir = s"$tableRoot/.tx-${
-        java.util.UUID.randomUUID().toString.take(12)}"
-      graft.sources.GraftChecks.stageChecksChange(latest, dir, checks)
-      val target = baseV.getOrElse(-1L) + 1
-      if (tryPublish(dir, s"$tableRoot/v$target")) return target
-      deleteQuietly(dir)
-      val nowLast = CdcMergeSink.versions(tableRoot).lastOption
-        .getOrElse(-1L)
-      if (nowLast < target)
-        throw new BlockedSlotException(
-          s"$tableRoot/v$target exists but is not a committed snapshot — " +
-            "remove it (vacuum) and retry")
-    }
-    throw new IllegalStateException(
-      s"constraint change on $tableRoot lost the publish race " +
-        s"$maxAttempts times — pathological contention; raise " +
-        "maxAttempts or serialize writers")
+    val validated = revalidator(validatedVersion, revalidate)
+    publish[Unit](tableRoot, "constraint change") { at =>
+      expectedChecks.foreach(requireChecks(tableRoot, at.baseDir, _,
+        "change was computed"))
+      validated(at.base)
+      Some(graft.sources.GraftChecks.stageChecksChange(at.baseDir, at.dir,
+        checks))
+    }(restage).version
   }
 
   /** Commit a DEFAULT/GENERATED column-contract change as a
@@ -786,74 +651,55 @@ object OptimisticCommit {
   def commitColumnContracts(tableRoot: String,
                             defaults: Map[String, String],
                             generated: Map[String, String],
-                            maxAttempts: Int = 20,
                             validatedVersion: Option[Long] = None,
                             revalidate: Long => Unit = _ => (),
                             expected: Option[(Map[String, String],
                               Map[String, String])] = None): Long = {
-    var attempts = 0
-    var validatedAt = validatedVersion
-    while (attempts < maxAttempts) {
-      attempts += 1
-      val baseV = CdcMergeSink.versions(tableRoot).lastOption
-      val latest = baseV.map(v => s"$tableRoot/v$v")
-        .getOrElse(s"$tableRoot/base")
+    val validated = revalidator(validatedVersion, revalidate)
+    publish[Unit](tableRoot, "column-contract change") { at =>
       expected.foreach { case (expD, expG) =>
-        val headD = graft.sources.GraftDefaults.manifestDefaults(latest)
-        val headG = graft.sources.GraftDefaults.manifestGenerated(latest)
+        val headD = graft.sources.GraftDefaults.manifestDefaults(at.baseDir)
+        val headG = graft.sources.GraftDefaults.manifestGenerated(at.baseDir)
         if (headD != expD || headG != expG)
           throw new IllegalStateException(
             s"concurrent DEFAULT/GENERATED column change on $tableRoot — " +
               "re-read the table and retry")
       }
-      validatedAt.foreach { v =>
-        val now = baseV.getOrElse(-1L)
-        if (now != v) { revalidate(now); validatedAt = Some(now) }
-      }
-      val dir = s"$tableRoot/.tx-${
-        java.util.UUID.randomUUID().toString.take(12)}"
-      graft.sources.GraftDefaults.stageDefaultsChange(latest, dir,
-        defaults, generated)
-      val target = baseV.getOrElse(-1L) + 1
-      if (tryPublish(dir, s"$tableRoot/v$target")) return target
-      deleteQuietly(dir)
-      val nowLast = CdcMergeSink.versions(tableRoot).lastOption
-        .getOrElse(-1L)
-      if (nowLast < target)
-        throw new BlockedSlotException(
-          s"$tableRoot/v$target exists but is not a committed snapshot — " +
-            "remove it (vacuum) and retry")
-    }
-    throw new IllegalStateException(
-      s"column-contract change on $tableRoot lost the publish race " +
-        s"$maxAttempts times — pathological contention; raise " +
-        "maxAttempts or serialize writers")
+      validated(at.base)
+      Some(graft.sources.GraftDefaults.stageDefaultsChange(at.baseDir, at.dir,
+        defaults, generated))
+    }(restage).version
   }
 
-  /** A staged-but-unpublished snapshot: its dir, the version it was
-    * merged against (None = the base snapshot), and the merge summary. */
-  private final case class Staged(dir: String, baseVersion: Option[Long],
-                                  merge: MergeResult)
+  /** Publish a maintenance REWRITE of the head — compaction,
+    * re-bucketing, re-layout — as the table's next version.
+    * `stage(headDir, dir)` writes a complete snapshot derived from the
+    * head at `headDir` into the private `dir` — manifest and any dim
+    * zone maps included, so the published manifest is never edited
+    * afterwards — or returns false when there is nothing to commit (the
+    * head version is returned then). Restaged on a lost race: the
+    * rewrite read the old head. */
+  private[graft] def commitRewrite(tableRoot: String, what: String)(
+      stage: (String, String) => Boolean): Long =
+    publish[Unit](tableRoot, what) { at =>
+      if (stage(at.baseDir, at.dir)) Some(()) else None
+    }(restage).version
 
   /** Atomic slot claim. True = this staged dir is now the committed
     * version. False = the slot is already occupied (conflict). Errors
     * that are not slot-occupancy propagate.
     *
     * Before the rename, the staged stamp is CLAMPED to the predecessor
-    * slot's commit time ([[MutableParquetTable.clampCommittedAt]]): a
+    * `head`'s commit time ([[MutableParquetTable.clampCommittedAt]]): a
     * multi-process writer with a lagging clock can win its first attempt
     * and would otherwise publish a non-monotone `committedAtMs`, which
     * breaks the binary search behind timestamp travel / change-feed
     * resolution and makes retention vacuum undercount recent versions.
-    * Centralized here so every publish path (merge, replace, schema,
-    * checks, restore, delete, update) inherits the invariant. */
-  private def tryPublish(staging: String, target: String): Boolean = {
-    "^(.*)/v(\\d+)$".r.findFirstMatchIn(target).foreach { m =>
-      val n = m.group(2).toLong
-      val head =
-        if (n == 0) s"${m.group(1)}/base" else s"${m.group(1)}/v${n - 1}"
-      MutableParquetTable.clampCommittedAt(staging, head)
-    }
+    * Every version passes through here ([[publish]]), so every one
+    * inherits the invariant. */
+  private def tryPublish(staging: String, head: String,
+                         target: String): Boolean = {
+    MutableParquetTable.clampCommittedAt(staging, head)
     try {
       Files.move(Paths.get(staging), Paths.get(target),
         StandardCopyOption.ATOMIC_MOVE)
@@ -887,16 +733,16 @@ object OptimisticCommit {
     *    disjoint-range layout invariant routing depends on, and catches
     *    gap-expansion collisions (two merges growing adjacent files into
     *    the same key gap). */
-  private def tryRebase(tableRoot: String, st: Staged, newLast: Long,
-                        key: String,
+  private def tryRebase(tableRoot: String, dir: String, merge: MergeResult,
+                        newLast: Long, key: String,
                         passthrough: MutableParquetTable.Passthrough)
-      : Option[Staged] = {
+      : Option[MergeResult] = {
     val newBase = s"$tableRoot/v$newLast"
     def name(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-    val staged = Manifest.read(st.dir).getOrElse(return None)
+    val staged = Manifest.read(dir).getOrElse(return None)
     val head = Manifest.read(newBase).getOrElse(return None)
     if (staged.key != key || head.key != key) return None
-    val stagedRanges = staged.ranges(st.dir).getOrElse(return None)
+    val stagedRanges = staged.ranges(dir).getOrElse(return None)
     val newRanges = head.ranges(newBase).getOrElse(return None)
     if (staged.files.size != stagedRanges.size ||
         head.files.size != newRanges.size) return None // stat-less entries
@@ -922,8 +768,8 @@ object OptimisticCommit {
       m.schema.map(_.json))
     if (staged.schema.isEmpty || contract(staged) != contract(head))
       return None
-    val myDirty = st.merge.rewrittenFiles.map(name).toSet
-    val myClean = st.merge.passthroughFiles.map(name).toSet
+    val myDirty = merge.rewrittenFiles.map(name).toSet
+    val myClean = merge.passthroughFiles.map(name).toSet
     val headNames = newRanges.map(r => name(r.file)).toSet
     if (!myDirty.subsetOf(headNames)) return None
     val kept = newRanges.filterNot(r => myDirty(name(r.file)))
@@ -935,8 +781,8 @@ object OptimisticCommit {
     if (overlaps) return None
 
     // conflict provably disjoint — swap inventories
-    var linked = st.merge.filesHardLinked
-    var copied = st.merge.filesCopied
+    var linked = merge.filesHardLinked
+    var copied = merge.filesCopied
     val keptByName = kept.map(r => name(r.file) -> r).toMap
     val entries: Seq[(String, graft.sources.ParquetStats.FileKeyRange)] =
       passthrough match {
@@ -944,9 +790,9 @@ object OptimisticCommit {
           // drop links of clean files the intervening commits rewrote,
           // link in their replacements; files kept by both stay as-is
           (myClean -- keptByName.keySet).foreach(n =>
-            Files.deleteIfExists(Paths.get(st.dir, n)))
+            Files.deleteIfExists(Paths.get(dir, n)))
           keptByName.foreach { case (n, r) =>
-            val dst = Paths.get(st.dir, n)
+            val dst = Paths.get(dir, n)
             if (!Files.exists(dst)) {
               try { Files.createLink(dst, Paths.get(r.file)); linked += 1 }
               catch { case _: Exception =>
@@ -958,25 +804,24 @@ object OptimisticCommit {
           (kept ++ myNew).map(r => name(r.file) -> r)
         case MutableParquetTable.Reference =>
           // pure manifest surgery: zero filesystem operations
-          kept.map(r => MutableParquetTable.relativize(st.dir, r.file) -> r) ++
+          kept.map(r => MutableParquetTable.relativize(dir, r.file) -> r) ++
             myNew.map(r => name(r.file) -> r)
       }
     // sizes from BOTH chains' manifests (kept files from the new head,
     // this writer's outputs from its staged manifest) — the rebase stays
     // a zero-filesystem-call operation
     val bytes = head.bytesByName ++ staged.bytesByName
-    Manifest.write(st.dir, staged.copy(
+    Manifest.write(dir, staged.copy(
       files = entries.sortBy(_._2.minBytes)(graft.sources.KeyBytes.ordering)
         .map { case (e, r) => Manifest.entry(e, r, bytes.get(name(e))) },
       committedAtMs = Some(System.currentTimeMillis())))
-    Some(Staged(st.dir, Some(newLast),
-      st.merge.copy(
-        passthroughFiles = kept.map(_.file),
-        filesHardLinked = linked, filesCopied = copied,
-        filesReferenced = passthrough match {
-          case MutableParquetTable.Reference => kept.size
-          case _ => st.merge.filesReferenced
-        })))
+    Some(merge.copy(
+      passthroughFiles = kept.map(_.file),
+      filesHardLinked = linked, filesCopied = copied,
+      filesReferenced = passthrough match {
+        case MutableParquetTable.Reference => kept.size
+        case _ => merge.filesReferenced
+      }))
   }
 
   private def deleteQuietly(dir: String): Unit =

@@ -1237,64 +1237,64 @@ object Dedup {
     * batch wants to flip to the probe layout without re-sketching the
     * corpus). Full rewrite through the rebucket discipline: read the
     * latest state, recompute `idx_key` under the target layout, write
-    * key-sorted as `v<next>`, and commit — time travel keeps the old
-    * layout readable, every later probe/merge sees the new one.
+    * key-sorted into a private staging dir, and publish it by the one
+    * slot claim every version takes
+    * ([[graft.OptimisticCommit.commitRewrite]]; re-run against the new
+    * head when a concurrent writer wins the slot) — time travel keeps
+    * the old layout readable, every later probe/merge sees the new one.
     *
     * The probe layout's dim zone maps on (band, bucket|chunk) are
-    * attached after the commit; flipping back to the ingest layout sheds
-    * them (the physical rewrite carries no dim entries, and
-    * [[probePrunedIndex]] auto-detects the layout from their absence).
-    * Works on both index families — MinHash (`bucket`) and Hamming
-    * (`chunk`) — detected from the index's own columns. Results of any
-    * later probe are layout-independent; only the IO shape changes.
+    * attached to the staged snapshot before it publishes; flipping back
+    * to the ingest layout sheds them (the physical rewrite carries no
+    * dim entries, and [[probePrunedIndex]] auto-detects the layout from
+    * their absence). Works on both index families — MinHash (`bucket`)
+    * and Hamming (`chunk`) — detected from the index's own columns.
+    * Results of any later probe are layout-independent; only the IO
+    * shape changes.
     *
     * `files = 0` keeps the current file count. Returns the new version.
     * Exposed in SQL as `CALL <cat>.system.rebuild_index(...)`
     * ([[graft.sources.GraftProcedures]]). */
   def rebuildIndexLayout(spark: SparkSession, indexRoot: String,
-                         probeLayout: Boolean, files: Int = 0): Long = {
-    import graft.sources.{MutableParquetTable, ParquetTable}
-    import graft.streaming.CdcMergeSink
-    val latest = CdcMergeSink.latestSnapshot(indexRoot)
-    val state = CdcMergeSink.readAsOf(spark, indexRoot, Long.MaxValue)
-    val cols = state.columns.toSet
-    require(Set("idx_key", "doc_id", "band").subsetOf(cols),
-      s"$indexRoot is not a graft signature index " +
-        "(idx_key/doc_id/band columns required)")
-    val bucketCol =
-      if (cols.contains("bucket")) "bucket"
-      else if (cols.contains("chunk")) "chunk"
-      else throw new IllegalArgumentException(
-        s"$indexRoot has neither a bucket nor a chunk banding column")
-    val next = CdcMergeSink.versions(indexRoot).lastOption
-      .map(_ + 1).getOrElse(0L)
-    val target = s"$indexRoot/v$next"
-    val schema = MutableParquetTable.manifestSchema(latest)
-    if (state.isEmpty) {
-      MutableParquetTable.commitEmpty(target, "idx_key",
-        schema.getOrElse(state.schema),
-        checks = graft.sources.GraftChecks.manifestChecks(latest))
-      return next
+                         probeLayout: Boolean, files: Int = 0): Long =
+    graft.OptimisticCommit.commitRewrite(indexRoot, "rebuildIndexLayout") {
+      (latest, target) =>
+        import graft.sources.{MutableParquetTable, ParquetTable}
+        val state = graft.streaming.CdcMergeSink.readSnapshot(spark, latest)
+        val cols = state.columns.toSet
+        require(Set("idx_key", "doc_id", "band").subsetOf(cols),
+          s"$indexRoot is not a graft signature index " +
+            "(idx_key/doc_id/band columns required)")
+        val bucketCol =
+          if (cols.contains("bucket")) "bucket"
+          else if (cols.contains("chunk")) "chunk"
+          else throw new IllegalArgumentException(
+            s"$indexRoot has neither a bucket nor a chunk banding column")
+        val schema = MutableParquetTable.manifestSchema(latest)
+        if (state.isEmpty)
+          MutableParquetTable.commitEmpty(target, "idx_key",
+            schema.getOrElse(state.schema),
+            checks = graft.sources.GraftChecks.manifestChecks(latest))
+        else {
+          val relaid = state.withColumn("idx_key", idxKey(probeLayout, bucketCol))
+          val n = if (files > 0) files else math.max(1,
+            MutableParquetTable.manifestFileNames(latest).map(_.size).getOrElse(1))
+          ParquetTable.withMicrosTimestamps(spark) {
+            ParquetTable.writeSortedBy(relaid, target, Seq("idx_key"), n)
+          }
+          MutableParquetTable(spark, latest, "idx_key")
+            .commitManifest(target, schema, physicalRewrite = true)
+          // probe layout declares itself through the dim zone maps (probes
+          // auto-detect from their presence) — attach on the way in, shed
+          // on the way out (commitManifest carries the old entries forward)
+          if (probeLayout)
+            MutableParquetTable.attachDimRanges(spark, target,
+              Seq("band", bucketCol))
+          else
+            MutableParquetTable.detachDimRanges(target, Seq("band", bucketCol))
+        }
+        true
     }
-    val relaid = state.withColumn("idx_key", idxKey(probeLayout, bucketCol))
-    val n = if (files > 0) files else math.max(1,
-      MutableParquetTable.manifestFileNames(latest).map(_.size).getOrElse(1))
-    ParquetTable.withMicrosTimestamps(spark) {
-      ParquetTable.writeSortedBy(relaid, target, Seq("idx_key"), n)
-    }
-    MutableParquetTable(spark, latest, "idx_key")
-      .commitManifest(target, schema, physicalRewrite = true)
-    // probe layout declares itself through the dim zone maps (probes
-    // auto-detect from their presence) — attach on the way in, shed on
-    // the way out (commitManifest carries the old entries forward)
-    if (probeLayout)
-      MutableParquetTable.attachDimRanges(spark,
-        CdcMergeSink.latestSnapshot(indexRoot), Seq("band", bucketCol))
-    else
-      MutableParquetTable.detachDimRanges(
-        CdcMergeSink.latestSnapshot(indexRoot), Seq("band", bucketCol))
-    next
-  }
 
   /** BLOOM-FILTER membership probe — the join-free "seen before" test
     * for ingest gating at scale: ONE map-side pass over `corpus` builds

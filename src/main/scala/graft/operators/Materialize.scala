@@ -18,6 +18,14 @@ import org.apache.spark.sql.{Column, DataFrame}
   * scalars are read back from the checkpointed blocks with one
   * node-sized aggregate job (the `Dataset.observe` delivery guarantee is
   * only pinned for the localCheckpoint path).
+  *
+  * Reliable mode writes one checkpoint per materialization and never
+  * deletes it: iterative operators (pageRank, SCC, connected components
+  * checkpoint every superstep) would fill the checkpoint store over a
+  * long session. Start such sessions with
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (a
+  * SparkContext setting, fixed at start-up), so Spark's context cleaner
+  * deletes a checkpoint once its frame is garbage-collected.
   */
 object Materialize {
 

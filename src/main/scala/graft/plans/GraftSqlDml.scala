@@ -395,8 +395,8 @@ final case class GraftDeleteCommand(delete: DeleteFromTable)
       }
     if (!usedTombstones) {
       val latest = graft.streaming.CdcMergeSink.latestSnapshot(root)
-      val zoneWorthwhile = graft.sources.ZoneDelete
-        .classify(latest, delete.condition)
+      val zoneWorthwhile = graft.sources.Manifest.read(latest)
+        .map(graft.sources.ZoneDelete.classify(_, latest, delete.condition))
         .exists(c => c.total == 0 || c.provenFraction >= 0.5)
       if (zoneWorthwhile) {
         GraftDmlRule.lastDeleteStrategy = "zone"
@@ -444,8 +444,8 @@ final case class GraftUpdateCommand(update: UpdateTable)
     val assignsKey = update.assignments.exists(a =>
       keys.exists(_.equalsIgnoreCase(assignmentName(a))))
     val latest = graft.streaming.CdcMergeSink.latestSnapshot(root)
-    val zoneWorthwhile = !assignsKey && graft.sources.ZoneDelete
-      .classify(latest, cond)
+    val zoneWorthwhile = !assignsKey && graft.sources.Manifest.read(latest)
+      .map(graft.sources.ZoneDelete.classify(_, latest, cond))
       .exists(c => c.total == 0 || c.keep.size * 2 >= c.total)
     if (zoneWorthwhile) {
       GraftDmlRule.lastUpdateStrategy = "zone"

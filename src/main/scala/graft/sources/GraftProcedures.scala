@@ -506,7 +506,11 @@ object GraftProcedures {
     * merges detect that and switch to exact holder routing (one
     * key-column scan joined to the batch keys marks only the files that
     * really hold a batch key dirty), so mutations on a z-ordered table
-    * stay proportional to the touched files, not the table. */
+    * stay proportional to the touched files, not the table. The rewrite
+    * and its dim zone maps are staged privately and published by the one
+    * slot claim every version takes ([[graft.OptimisticCommit]]): safe
+    * beside concurrent writers, re-run against the new head when one
+    * wins the slot first. */
   private final class ZOrderProc(root: String) extends Proc(root) {
     override def name(): String = "zorder"
     override def description(): String =
@@ -542,23 +546,28 @@ object GraftProcedures {
         val asked = input.getInt(2)
         if (asked > 0) asked else math.max(1, cur)
       }
-      val state = CdcMergeSink.readAsOf(spark, dir, Long.MaxValue)
-      require(state.limit(1).count() > 0, "cannot z-order an empty table")
-      val next = CdcMergeSink.versions(dir).lastOption.map(_ + 1).getOrElse(0L)
-      val target = s"$dir/v$next"
-      ZOrder.writeZOrdered(state, target, dims, nFiles)
-      // commit with the SOURCE snapshot as the carry anchor (moreKeys +
-      // any prior dim sections), then attach fresh per-file ranges for
-      // the union of prior dims and the curve dims
-      MutableParquetTable(spark, latest, key,
-        moreKeys = MutableParquetTable.manifestMoreKeys(latest))
-        // the curve rewrite reads through the logical schema, so dropped
-        // columns' stale bytes are purged — blocklist clears
-        .commitManifest(target, physicalRewrite = true)
-      val allDims = (MutableParquetTable.manifestDimRanges(latest).keys.toSeq
-        ++ dims).distinct.sorted
-      MutableParquetTable.attachDimRanges(spark, target, allDims)
-      Seq(row(next, nFiles, dims.mkString(",")))
+      // staged privately and published by the one slot claim every
+      // version takes: the dim zone maps are attached BEFORE the publish,
+      // so the published manifest is never edited afterwards
+      val v = graft.OptimisticCommit.commitRewrite(dir, "zorder") {
+        (head, target) =>
+          val state = CdcMergeSink.readSnapshot(spark, head)
+          require(state.limit(1).count() > 0, "cannot z-order an empty table")
+          ZOrder.writeZOrdered(state, target, dims, nFiles)
+          // commit with the SOURCE snapshot as the carry anchor (moreKeys
+          // + any prior dim sections), then attach fresh per-file ranges
+          // for the union of prior dims and the curve dims
+          MutableParquetTable(spark, head, key,
+            moreKeys = MutableParquetTable.manifestMoreKeys(head))
+            // the curve rewrite reads through the logical schema, so
+            // dropped columns' stale bytes are purged — blocklist clears
+            .commitManifest(target, physicalRewrite = true)
+          val allDims = (MutableParquetTable.manifestDimRanges(head).keys.toSeq
+            ++ dims).distinct.sorted
+          MutableParquetTable.attachDimRanges(spark, target, allDims)
+          true
+      }
+      Seq(row(v, nFiles, dims.mkString(",")))
     }
   }
 

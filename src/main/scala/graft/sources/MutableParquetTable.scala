@@ -48,13 +48,9 @@ final case class MergeResult(
   def bytesWritten: Long = {
     val linked = passthroughFiles
       .map(f => java.nio.file.Paths.get(f).getFileName.toString).toSet
-    import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.list(java.nio.file.Paths.get(snapshotDir))
-    try s.iterator().asScala
-      .filter(p => MutableParquetTable.isDataFileName(p.getFileName.toString))
+    MutableParquetTable.dataFiles(snapshotDir).map(java.nio.file.Paths.get(_))
       .filterNot(p => linked(p.getFileName.toString))
       .map(java.nio.file.Files.size).sum
-    finally s.close()
   }
 
   /** Fraction of the source table's bytes the CoW left untouched — the
@@ -160,13 +156,17 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
 
   def read(): DataFrame = spark.read.parquet(dir)
 
+  /** This snapshot's manifest: the value read when the handle opened it
+    * (committed snapshots are immutable), else — a dir committed after
+    * the handle opened it — read now. */
+  private def manifest: Option[Manifest] = opened.orElse(Manifest.read(dir))
+
   /** Table schema, resolved once per table handle: from the manifest when
     * this dir is a committed snapshot (zero IO), else one footer probe.
     * Reused by every merge — the dirty-file scan and the manifest embed
     * pass it explicitly, so no per-merge schema-inference jobs run. */
   private lazy val tableSchema: org.apache.spark.sql.types.StructType =
-    MutableParquetTable.manifestSchema(dir)
-      .getOrElse(spark.read.parquet(dir).schema)
+    manifest.flatMap(_.schema).getOrElse(spark.read.parquet(dir).schema)
 
   /** Logical→physical rename mapping ([[MutableParquetTable.manifestRenames]]):
     * data files keep renamed columns' birth names, so every full-width
@@ -174,7 +174,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     * physical names back. Key columns are never renamed — routing, zone
     * maps, slicing and tombstones stay mapping-free. */
   private lazy val renames: Map[String, String] =
-    MutableParquetTable.manifestRenames(dir)
+    manifest.map(_.renames).getOrElse(Map.empty)
 
   /** Per-file [minKey, maxKey] from footers only. */
   def fileRanges(): DataFrame = ParquetStats.fileKeyRanges(spark, dir, key)
@@ -198,14 +198,9 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
                        = None,
                      physicalRewrite: Boolean = false,
                      bucketsOverride: Option[Option[Int]] = None): Unit = {
-    import scala.jdk.CollectionConverters._
-    val s = Files.list(Paths.get(outDir))
-    val files = try s.iterator().asScala
-      .filter(p => MutableParquetTable.isDataFileName(p.getFileName.toString))
-      .map(_.toString).toList.sorted
-    finally s.close()
+    val files = dataFiles(outDir)
     require(files.nonEmpty, s"nothing to commit in $outDir")
-    val src = Manifest.read(dir)
+    val src = manifest
     // a physical rewrite's outputs were written from LOGICAL frames, so
     // the rename mapping is materialized into the files and clears;
     // spliced bytes keep their physical names, so the mapping carries
@@ -225,7 +220,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
   def dirtyFiles(updateKeys: DataFrame): Seq[String] =
     routedFiles(sortedRanges(), updateKeys)
 
-  private def sortedRanges(src: Option[Manifest] = Manifest.read(dir))
+  private def sortedRanges(src: Option[Manifest] = manifest)
       : Seq[ParquetStats.FileKeyRange] =
     // committed snapshots carry their zone map in the manifest — trust it
     // (the committed-read discipline) and skip the per-file footer probes;
@@ -305,7 +300,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     * rewrite tasks report. Returns the merge summary. */
   def merge(batch0: DataFrame, opCol: String = "op",
             snapshotDir: Option[String] = None): MergeResult =
-    mergeFrom(Manifest.read(dir), batch0, opCol, snapshotDir)
+    mergeFrom(manifest, batch0, opCol, snapshotDir)
 
   /** [[merge]] against `src`, this snapshot's manifest as the caller
     * already read it — the only manifest read of the merge. */
@@ -349,14 +344,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     val outDir = snapshotDir.getOrElse(s"$dir-v${System.currentTimeMillis()}")
     Files.createDirectories(Paths.get(outDir))
 
-    var mark = System.nanoTime()
-    val phases = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      phases(name) = (now - mark) / 1000000L
-      mark = now
-    }
-
+    val phase = new PhaseClock
     val ranges = sortedRanges(src)
     phase("ranges")
     val allFiles = MutableParquetTable.tableFiles(dir, src)
@@ -364,9 +352,13 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     // per-file key ranges intersect, so owner-routing would cascade the
     // whole overlapping cluster dirty — every merge a full rewrite. Route
     // exactly instead: one key-column scan joined to the batch keys finds
-    // the true holder files.
-    val overlapped = ranges.size > 1 && (0 until ranges.size - 1).exists(i =>
-      KeyBytes.compare(ranges(i).maxBytes, ranges(i + 1).minBytes) >= 0)
+    // the true holder files. Files with no zone map entry (no key stats,
+    // e.g. INT96 timestamp keys written outside the engine) can hold any
+    // key, so owner-routing over the ranged files alone would miss them:
+    // they take the same exact route.
+    val overlapped = ranges.size < allFiles.size ||
+      ranges.size > 1 && (0 until ranges.size - 1).exists(i =>
+        KeyBytes.compare(ranges(i).maxBytes, ranges(i + 1).minBytes) >= 0)
     // dirty/clean split by FILE NAME: footer stats yield `file:/…` URIs
     // while the local listing yields the caller's path form (possibly
     // relative) — comparing full paths would silently classify every file
@@ -393,7 +385,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     val batchData = batch.drop(opCol)
     val missingCols = tableSchema.fieldNames
       .filterNot(batchData.schema.fieldNames.contains)
-    require(missingCols.isEmpty || ranges.isEmpty,
+    require(missingCols.isEmpty || allFiles.isEmpty,
       s"batch lacks table columns ${missingCols.mkString(", ")} — " +
         "upserts replace whole rows, so every existing column is required")
     // evolution adds columns, never retypes them: a drifted existing
@@ -404,7 +396,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       tableSchema.fieldNames.contains(f.name) &&
         MutableParquetTable.stripNullability(tableSchema(f.name).dataType) !=
           MutableParquetTable.stripNullability(f.dataType))
-    require(drifted.isEmpty || ranges.isEmpty,
+    require(drifted.isEmpty || allFiles.isEmpty,
       "batch column types drift from the table schema: " +
         drifted.map(f => s"${f.name} ${tableSchema(f.name).dataType
           .simpleString}->${f.dataType.simpleString}").mkString(", ") +
@@ -414,7 +406,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     if (newFields.nonEmpty)
       MutableParquetTable.guardResurrected(dir, newFields.map(_.name).toSeq)
     val mergedSchema =
-      if (ranges.isEmpty && clean.isEmpty) batchData.schema
+      if (allFiles.isEmpty) batchData.schema
       else if (newFields.isEmpty) tableSchema
       else StructType(tableSchema.fields ++ newFields.map(_.copy(nullable = true)))
 
@@ -429,7 +421,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       if (overlapped && dirty.isEmpty && clean.nonEmpty)
         !batch.where(col(opCol) =!= lit("delete")).isEmpty
       else dirty.nonEmpty || clean.isEmpty
-    if (needRewrite && ranges.nonEmpty && !overlapped) {
+    if (needRewrite && allFiles.nonEmpty && !overlapped) {
       // KEY-CLUSTERED layout: one sorted pass per dirty file; rewritten
       // files carry PHYSICAL column names (renamed tables), and tombstoned
       // keys of dirty files act as deletes
@@ -454,7 +446,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       // rewritten files carry PHYSICAL column names (renamed tables)
       val merged0 = MutableParquetTable.toPhysicalNames(
         MergeOps.applyMutationsMulti(base, batch, keys, opCol), renames)
-      if (ranges.isEmpty) {
+      if (allFiles.isEmpty) {
         ParquetTable.withMicrosTimestamps(spark) {
           merged0.repartition(1).sortWithinPartitions(keys.map(col): _*)
             .write.mode("append").parquet(outDir)
@@ -490,22 +482,14 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     val cleanNames = clean.map(fileName).toSet
     val carried = ranges.filter(r => cleanNames.contains(fileName(r.file)))
     val reported = written.map(w => fileName(w.file)).toSet
-    val newFiles = {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(Paths.get(outDir))
-      try s.iterator().asScala
-        .filter(p => MutableParquetTable.isDataFileName(p.getFileName.toString))
-        .map(_.toString).toList
-        .filterNot(f => cleanNames.contains(fileName(f)) || reported(fileName(f)))
-      finally s.close()
-    }
+    val newFiles = writtenFiles(outDir, cleanNames ++ reported)
     // tombstones carried = source sidecar minus this batch's keys
     // (upserts resurrect; rewritten files already dropped their rows)
     val ts = carryTombstonesMinus(batch, outDir, tombstones)
     writeManifest(outDir, carried, newFiles, Some(mergedSchema), pt.refNames,
       tombstones = ts, source = src, written = written)
     phase("manifest")
-    MergeResult(outDir, dirty, clean, inserted, phases.toMap,
+    MergeResult(outDir, dirty, clean, inserted, phase.millis,
       filesHardLinked = pt.linked, filesReferenced = pt.referenced,
       filesCopied = pt.copied)
   }
@@ -534,7 +518,8 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     * maintenance is per-bucket compaction. */
   def compactRange(lo: Any, hi: Any, targetBytes: Long,
                    outDir: String): Int = {
-    val src = Manifest.get(dir, "only committed snapshots compact by range")
+    val src = manifest.getOrElse(throw new IllegalStateException(
+      s"$dir has no $ManifestName — only committed snapshots compact by range"))
     require(src.buckets.isEmpty,
       "range compaction needs a key-clustered layout — a bucketed " +
         "table's scoped maintenance is per-bucket (CALL system.compact)")
@@ -542,7 +527,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       "range compaction on a tombstoned snapshot would splice " +
         "logically-deleted rows and drop the sidecar — run " +
         "materializeTombstones() first")
-    val all = MutableParquetTable.tableFiles(dir)
+    val all = MutableParquetTable.tableFiles(dir, Some(src))
     val (_, sel) = MutableParquetTable.pruneFiles(src, dir, Some(lo), Some(hi))
     val selSet = sel.map(fileName).toSet
     val (picked, clean) = all.partition(f => selSet(fileName(f)))
@@ -577,14 +562,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
             .sortWithinPartitions(keys.map(col): _*)
             .write.mode("append").parquet(outDir)
         }
-        import scala.jdk.CollectionConverters._
-        val s = Files.list(Paths.get(outDir))
-        try s.iterator().asScala
-          .filter(p => MutableParquetTable.isDataFileName(
-            p.getFileName.toString))
-          .map(_.toString).toList
-          .filterNot(f => clean.map(fileName).toSet(fileName(f)))
-        finally s.close()
+        writtenFiles(outDir, clean.map(fileName).toSet)
       }
     val cleanNames = clean.map(fileName).toSet
     val carried = sortedRanges().filter(r => cleanNames(fileName(r.file)))
@@ -628,7 +606,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       s"batch lacks table columns ${missingCols.mkString(", ")} — " +
         "upserts replace whole rows; project the missing columns " +
         "explicitly (e.g. as nulls) if that is intended")
-    val src = Manifest.read(dir)
+    val src = manifest
     // bucketed layouts rewrite whole buckets — row-group splicing would
     // break the file-bucket invariant; the file-level merge branches to
     // the bucketed path itself
@@ -674,7 +652,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     val outDir = snapshotDir.getOrElse(s"$dir-v${System.currentTimeMillis()}")
     Files.createDirectories(Paths.get(outDir))
     val dirtyNames = routedFiles(ranges, batch.select(key)).map(fileName).toSet
-    val allFiles = MutableParquetTable.tableFiles(dir)
+    val allFiles = MutableParquetTable.tableFiles(dir, src)
     val (dirty, clean) = allFiles.partition(f => dirtyNames.contains(fileName(f)))
     val pt = passThroughClean(clean, outDir)
 
@@ -742,6 +720,20 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       filesCopied = pt.copied)
   }
 
+  /** `cond` resolved against this table's schema with zero IO, and every
+    * file of this snapshot classified under it from the manifest's zone
+    * maps ([[ZoneDelete]]); a bare dir proves nothing — rewrite all. */
+  private def classify(cond: org.apache.spark.sql.Column)
+      : ZoneDelete.Classification = {
+    val probe = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
+    val resolved = probe.where(cond).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+    }.getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
+    manifest.map(ZoneDelete.classify(_, dir, resolved)).getOrElse(
+      ZoneDelete.Classification(Nil, Nil, dataFiles(dir)))
+  }
+
   /** Metadata-priced `DELETE WHERE`: classify every file of this
     * snapshot under `cond` from the manifest's zone maps alone
     * ([[ZoneDelete]]) — provably all-matching files are DROPPED (zero
@@ -760,32 +752,18 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     * rewriting (see [[ZoneDelete]]'s conservativeness contract). */
   def deleteWhere(cond: org.apache.spark.sql.Column,
                   outDir: String): MergeResult = {
-    var mark = System.nanoTime()
-    val phases = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      phases(name) = (now - mark) / 1000000L
-      mark = now
-    }
-    // resolve the predicate against this table's schema with zero IO
-    val probe = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
-    val resolved = probe.where(cond).queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }.getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
-    val cls = ZoneDelete.classify(dir, resolved).getOrElse(
-      // no manifest (bare dir): nothing provable — rewrite everything
-      ZoneDelete.Classification(Nil, Nil, MutableParquetTable.tableFiles(dir)))
+    val phase = new PhaseClock
+    val cls = classify(cond)
     phase("classify")
     Files.createDirectories(Paths.get(outDir))
     if (cls.keep.isEmpty && cls.rewrite.isEmpty) {
       // the predicate provably matches the whole table: empty snapshot,
       // schema kept — structurally a truncate
-      val src = Manifest.read(dir)
+      val src = manifest
       MutableParquetTable.commitEmpty(outDir, key, tableSchema, moreKeys,
         src.flatMap(_.buckets), src.map(_.checks).getOrElse(Map.empty))
       phase("manifest")
-      return MergeResult(outDir, Nil, Nil, 0, phases.toMap,
+      return MergeResult(outDir, Nil, Nil, 0, phase.millis,
         filesDropped = cls.drop.size)
     }
     val pt = passThroughClean(cls.keep, outDir)
@@ -794,64 +772,20 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     // not deleted, exactly SQL WHERE semantics (and exactly what the
     // batch-merge delete path does by filtering TRUE rows into the batch)
     val keepFilter = !coalesce(cond, lit(false))
-    var inserted = 0
-    if (cls.rewrite.nonEmpty) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val jobs = cls.rewrite.zipWithIndex.map { case (f, i) => Future {
-        val kept = MutableParquetTable.readFilesLogical(spark, Seq(f),
-            tableSchema, renames)
-          .where(keepFilter)
-        if (kept.isEmpty) 0 // residual emptied the file — drop it too
-        else {
-          // per-file staging dirs: concurrent jobs cannot share one
-          // output dir (committer cleanup races on _temporary)
-          val staging = s"$outDir/.staging-del-$i"
-          ParquetTable.withMicrosTimestamps(spark) {
-            MutableParquetTable.toPhysicalNames(kept, renames)
-              .repartition(1).sortWithinPartitions(keys.map(col): _*)
-              .write.mode("append").parquet(staging)
-          }
-          import scala.jdk.CollectionConverters._
-          val st = Files.list(Paths.get(staging))
-          val parts = try st.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toList
-          finally st.close()
-          // a bucketed source file's rows stay in their bucket (deletes
-          // never move rows) — the rewrite keeps its b<id>- name prefix
-          // so the file-bucket invariant survives zone deletes
-          val bp = MutableParquetTable.bucketPrefixOf(f)
-          parts.foreach { p =>
-            Files.move(p,
-              Paths.get(outDir, s"${bp}del$i-${p.getFileName.toString}"),
-              StandardCopyOption.ATOMIC_MOVE)
-          }
-          MutableParquetTable.deleteDir(Paths.get(staging))
-          parts.size
-        }
-      }}
-      inserted = Await.result(Future.sequence(jobs),
-        scala.concurrent.duration.Duration.Inf).sum
-    }
+    // a file the residual empties is dropped too
+    val inserted = rewriteEach(cls.rewrite, outDir, "del")(rows =>
+      Some(rows.where(keepFilter)).filterNot(_.isEmpty))
     phase("rewrite")
     val keepNames = cls.keep.map(fileName).toSet
     val carried = sortedRanges().filter(r => keepNames(fileName(r.file)))
-    val newFiles = {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(Paths.get(outDir))
-      try s.iterator().asScala
-        .filter(p => MutableParquetTable.isDataFileName(p.getFileName.toString))
-        .map(_.toString).toList
-        .filterNot(f => keepNames.contains(fileName(f)))
-      finally s.close()
-    }
+    val newFiles = writtenFiles(outDir, keepNames)
     // tombstoned rows may survive a residual rewrite physically (the
     // keep-filter tests only `cond`) — the carried sidecar keeps hiding
     // them; key membership never changes on this path
     writeManifest(outDir, carried, newFiles, Some(tableSchema), pt.refNames,
       tombstones = carryTombstonesVerbatim(outDir))
     phase("manifest")
-    MergeResult(outDir, cls.rewrite, cls.keep, inserted, phases.toMap,
+    MergeResult(outDir, cls.rewrite, cls.keep, inserted, phase.millis,
       filesHardLinked = pt.linked, filesReferenced = pt.referenced,
       filesCopied = pt.copied, filesDropped = cls.drop.size)
   }
@@ -879,20 +813,8 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
         s"UPDATE target column $n is not in the table schema " +
           tableSchema.fieldNames.mkString("(", ", ", ")"))
     }
-    var mark = System.nanoTime()
-    val phases = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      phases(name) = (now - mark) / 1000000L
-      mark = now
-    }
-    val probe = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
-    val resolved = probe.where(cond).queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }.getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
-    val cls = ZoneDelete.classify(dir, resolved).getOrElse(
-      ZoneDelete.Classification(Nil, Nil, MutableParquetTable.tableFiles(dir)))
+    val phase = new PhaseClock
+    val cls = classify(cond)
     phase("classify")
     Files.createDirectories(Paths.get(outDir))
     val pt = passThroughClean(cls.keep, outDir)
@@ -914,65 +836,60 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     // untouched rows satisfy the checks by induction) across the files
     // being rewritten, before any rewrite stages. Cost ∝ intersecting
     // files — the same files the rewrite reads anyway.
-    val updChecks = GraftChecks.manifestChecks(dir)
+    val updChecks = manifest.map(_.checks).getOrElse(Map.empty)
     if (updChecks.nonEmpty && rewrite.nonEmpty)
       GraftChecks.enforce(
         MutableParquetTable.readFilesLogical(spark, rewrite, tableSchema,
             renames)
           .where(hit).select(projection: _*),
         updChecks, s"UPDATE on $dir")
-    var inserted = 0
-    if (rewrite.nonEmpty) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val jobs = rewrite.zipWithIndex.map { case (f, i) => Future {
-        val staging = s"$outDir/.staging-upd-$i"
-        ParquetTable.withMicrosTimestamps(spark) {
-          MutableParquetTable.toPhysicalNames(
-            MutableParquetTable.readFilesLogical(spark, Seq(f), tableSchema,
-                renames)
-              .select(projection: _*), renames)
-            .repartition(1).sortWithinPartitions(keys.map(col): _*)
-            .write.mode("append").parquet(staging)
-        }
-        import scala.jdk.CollectionConverters._
-        val st = Files.list(Paths.get(staging))
-        val parts = try st.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).toList
-        finally st.close()
-        // in-place updates keep rows in their bucket — preserve the
-        // b<id>- prefix (file-bucket invariant) through the rewrite
-        val bp = MutableParquetTable.bucketPrefixOf(f)
-        parts.foreach { p =>
-          Files.move(p,
-            Paths.get(outDir, s"${bp}upd$i-${p.getFileName.toString}"),
-            StandardCopyOption.ATOMIC_MOVE)
-        }
-        MutableParquetTable.deleteDir(Paths.get(staging))
-        parts.size
-      }}
-      inserted = Await.result(Future.sequence(jobs),
-        scala.concurrent.duration.Duration.Inf).sum
-    }
+    val inserted = rewriteEach(rewrite, outDir, "upd")(rows =>
+      Some(rows.select(projection: _*)))
     phase("rewrite")
     val keepNames = cls.keep.map(fileName).toSet
     val carried = sortedRanges().filter(r => keepNames(fileName(r.file)))
-    val newFiles = {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(Paths.get(outDir))
-      try s.iterator().asScala
-        .filter(p => MutableParquetTable.isDataFileName(p.getFileName.toString))
-        .map(_.toString).toList
-        .filterNot(f => keepNames.contains(fileName(f)))
-      finally s.close()
-    }
+    val newFiles = writtenFiles(outDir, keepNames)
     // in-place updates never change key membership — carry verbatim
     writeManifest(outDir, carried, newFiles, Some(tableSchema), pt.refNames,
       tombstones = carryTombstonesVerbatim(outDir))
     phase("manifest")
-    MergeResult(outDir, rewrite, cls.keep, inserted, phases.toMap,
+    MergeResult(outDir, rewrite, cls.keep, inserted, phase.millis,
       filesHardLinked = pt.linked, filesReferenced = pt.referenced,
       filesCopied = pt.copied)
+  }
+
+  /** Rewrite each of `files` IN PLACE into `outDir`: its logical rows
+    * through `rows` (None = nothing left, the file is dropped), key-sorted
+    * into one file named `<tag><i>-…`. One Spark job per file, run
+    * concurrently, each in its own staging dir (concurrent jobs cannot
+    * share one output dir — committer cleanup races on _temporary). Rows
+    * keep their identity and position, so they also stay in their bucket:
+    * a bucketed file's `b<id>-` name prefix carries over (the file-bucket
+    * invariant). Returns the number of files written. */
+  private def rewriteEach(files: Seq[String], outDir: String, tag: String)(
+      rows: DataFrame => Option[DataFrame]): Int = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val jobs = files.zipWithIndex.map { case (f, i) => Future {
+      rows(MutableParquetTable.readFilesLogical(spark, Seq(f), tableSchema,
+          renames)).fold(0) { out =>
+        val staging = s"$outDir/.staging-$tag-$i"
+        ParquetTable.withMicrosTimestamps(spark) {
+          MutableParquetTable.toPhysicalNames(out, renames)
+            .repartition(1).sortWithinPartitions(keys.map(col): _*)
+            .write.mode("append").parquet(staging)
+        }
+        val parts = dataFiles(staging).map(Paths.get(_))
+        val bp = MutableParquetTable.bucketPrefixOf(f)
+        parts.foreach(p => Files.move(p,
+          Paths.get(outDir, s"$bp$tag$i-${p.getFileName}"),
+          StandardCopyOption.ATOMIC_MOVE))
+        MutableParquetTable.deleteDir(Paths.get(staging))
+        parts.size
+      }
+    }}
+    Await.result(Future.sequence(jobs),
+      scala.concurrent.duration.Duration.Inf).sum
   }
 
   /** MERGE-ON-READ delete: commit `deleteKeys`' key tuples as DELETION
@@ -990,14 +907,8 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     require(!keys.exists(_.contains(".")),
       "tombstone deletes are not supported on nested merge-key paths — " +
         "use the CoW delete (merge with op=delete)")
-    var mark = System.nanoTime()
-    val phases = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      phases(name) = (now - mark) / 1000000L
-      mark = now
-    }
-    val allFiles = MutableParquetTable.tableFiles(dir)
+    val phase = new PhaseClock
+    val allFiles = MutableParquetTable.tableFiles(dir, manifest)
     Files.createDirectories(Paths.get(outDir))
     val pt = passThroughClean(allFiles, outDir)
     phase("link")
@@ -1006,7 +917,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     val newTs = deleteKeys.select(keys.zipWithIndex.map { case (k, i) =>
       col(k).cast(MutableParquetTable.fieldTypeAt(tableSchema, k))
         .as(s"__k$i") }: _*).distinct()
-    val merged = MutableParquetTable.tombstoneDf(spark, dir) match {
+    val merged = MutableParquetTable.tombstoneDf(spark, dir, manifest) match {
       case Some(old) => old.unionByName(newTs).distinct()
       case None => newTs
     }
@@ -1015,7 +926,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     writeManifest(outDir, sortedRanges(), Nil, Some(tableSchema),
       pt.refNames, tombstones = Some(n))
     phase("manifest")
-    MergeResult(outDir, Nil, allFiles, 0, phases.toMap,
+    MergeResult(outDir, Nil, allFiles, 0, phase.millis,
       filesHardLinked = pt.linked, filesReferenced = pt.referenced,
       filesCopied = pt.copied)
   }
@@ -1066,7 +977,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     * delete/update rewrite rows in place and never change key
     * membership). */
   private def carryTombstonesVerbatim(outDir: String): Option[Long] = {
-    val n = MutableParquetTable.manifestTombstoneRows(dir)
+    val n = manifest.map(_.tombstoneRows).getOrElse(0L)
     if (n == 0) None
     else {
       MutableParquetTable.copyTombstoneDir(dir, outDir)
@@ -1092,13 +1003,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
                             renames: Map[String, String]): MergeResult = {
     val outDir = snapshotDir.getOrElse(s"$dir-v${System.currentTimeMillis()}")
     Files.createDirectories(Paths.get(outDir))
-    var mark = System.nanoTime()
-    val phases = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def phase(name: String): Unit = {
-      val now = System.nanoTime()
-      phases(name) = (now - mark) / 1000000L
-      mark = now
-    }
+    val phase = new PhaseClock
     val allFiles = MutableParquetTable.tableFiles(dir, src)
     def bucketOf(f: String): Int =
       GraftBucket.bucketOfName(fileName(f)).getOrElse(
@@ -1154,16 +1059,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       GraftBucket.writeBucketed(merged, outDir, key, moreKeys, n)
     }
     phase("rewrite")
-    val newFiles = {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(Paths.get(outDir))
-      val cleanNames = clean.map(fileName).toSet
-      try s.iterator().asScala
-        .filter(p => MutableParquetTable.isDataFileName(p.getFileName.toString))
-        .map(_.toString)
-        .filterNot(f => cleanNames.contains(fileName(f))).toList.sorted
-      finally s.close()
-    }
+    val newFiles = writtenFiles(outDir, clean.map(fileName).toSet)
     val ranges = sortedRanges(src)
     val carried = ranges.filter(r => !dirtyBuckets.contains(
       GraftBucket.bucketOfName(fileName(r.file)).getOrElse(-1)))
@@ -1171,10 +1067,15 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     writeManifest(outDir, carried, newFiles, Some(mergedSchema), pt.refNames,
       tombstones = ts, source = src)
     phase("manifest")
-    MergeResult(outDir, dirty, clean, newFiles.size, phases.toMap,
+    MergeResult(outDir, dirty, clean, newFiles.size, phase.millis,
       filesHardLinked = pt.linked, filesReferenced = pt.referenced,
       filesCopied = pt.copied)
   }
+
+  /** The data files in `outDir` this commit wrote itself: everything
+    * but the pass-through names `passed`. */
+  private def writtenFiles(outDir: String, passed: Set[String]): List[String] =
+    dataFiles(outDir).filterNot(f => passed(fileName(f)))
 
   private final case class PassThroughResult(linked: Int, copied: Int,
       referenced: Int, refNames: Map[String, String])
@@ -1241,7 +1142,7 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
                             widenedOverride: Option[Seq[String]] = None,
                             // this snapshot's manifest, when the caller
                             // has already read it
-                            source: Option[Manifest] = Manifest.read(dir),
+                            source: Option[Manifest] = manifest,
                             // outputs whose zone map and size their
                             // writers reported: no footer sweep, no stat
                             written: Seq[CowRewrite.Written] = Nil)
@@ -1259,16 +1160,10 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     // possible) can't be range-pruned, but they ARE part of the snapshot:
     // list them without bounds so readCommitted/readRange never lose them
     val rangedNames = ranges.map(r => fileName(r.file)).toSet
-    val statless = {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(Paths.get(outDir))
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(MutableParquetTable.isDataFileName)
-        .filterNot(rangedNames).toList.sorted
-      finally s.close()
-    } ++ refNames.collect { // referenced stat-less files are listed too
-      case (base, rel) if !rangedNames(base) => rel
-    }.toList.sorted
+    val statless = dataFiles(outDir).map(fileName).filterNot(rangedNames) ++
+      refNames.collect { // referenced stat-less files are listed too
+        case (base, rel) if !rangedNames(base) => rel
+      }.toList.sorted
     // per-file byte sizes: carried/referenced entries inherit the SOURCE
     // manifest's recorded size (zero filesystem calls — the object-store
     // discipline), files physically present in outDir (new + linked)
@@ -2070,14 +1965,32 @@ object MutableParquetTable {
   private[graft] def tableFiles(dir: String, m: Option[Manifest]): List[String] =
     m.map(_.fileNames) match {
       case Some(names) => names.map(n => resolvePath(dir, n)).toList.sorted
-      case None =>
-        import scala.jdk.CollectionConverters._
-        val s = Files.list(Paths.get(dir))
-        try s.iterator().asScala
-          .filter(p => isDataFileName(p.getFileName.toString))
-          .map(_.toString).toList.sorted
-        finally s.close()
+      case None => dataFiles(dir)
     }
+
+  /** The data files physically present in `dir`, sorted — the directory
+    * listing, whatever a manifest there says. */
+  private[graft] def dataFiles(dir: String): List[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(Paths.get(dir))
+    try s.iterator().asScala
+      .filter(p => isDataFileName(p.getFileName.toString))
+      .map(_.toString).toList.sorted
+    finally s.close()
+  }
+
+  /** Wall millis per named phase of one commit, each phase ending where
+    * the next begins — [[MergeResult.phaseMillis]]. */
+  private final class PhaseClock {
+    private var mark = System.nanoTime()
+    private val phases = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    def apply(name: String): Unit = {
+      val now = System.nanoTime()
+      phases(name) = (now - mark) / 1000000L
+      mark = now
+    }
+    def millis: Map[String, Long] = phases.toMap
+  }
 
   /** Exact table row count from the manifest alone — Some only when every
     * listed file carries a ranged entry (a stat-less file's rows are not

@@ -49,11 +49,10 @@ private[graft] object ZoneDelete {
       if (total == 0) 1.0 else (drop.size + keep.size).toDouble / total
   }
 
-  /** Classify every manifest-listed file of `snapshotDir` under the
-    * resolved delete predicate `cond`. None when the directory has no
-    * manifest (bare dirs carry no zone map — nothing to prove). */
-  def classify(snapshotDir: String, cond: Expression): Option[Classification] =
-    Manifest.read(snapshotDir).map { m =>
+  /** Classify every file `m` (the manifest of `snapshotDir`) lists under
+    * the resolved delete predicate `cond`. */
+  def classify(m: Manifest, snapshotDir: String,
+               cond: Expression): Classification = {
       val dims: Map[String, Map[String, (Array[Byte], Array[Byte])]] =
         m.dims(snapshotDir).map {
           case (c, rs) =>
@@ -78,7 +77,7 @@ private[graft] object ZoneDelete {
       m.files.filter(_.range.isEmpty).foreach(e =>
         put(MutableParquetTable.resolvePath(snapshotDir, e.file), None))
       Classification(drop.result(), keep.result(), rw.result())
-    }
+  }
 
   /** Evaluate `cond` for one file. `keyBounds` None = stat-less file (key
     * evidence unavailable); `dimBoundsOf(col)` None = no dim entry for

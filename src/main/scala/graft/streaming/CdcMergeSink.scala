@@ -129,20 +129,17 @@ object CdcMergeSink {
     * newest committed version at-or-before it (or the base snapshot when
     * none is). Snapshots are immutable (CoW + hard links), so history
     * reads cost nothing beyond keeping the version dirs around. */
-  def readAsOf(spark: SparkSession, tableRoot: String, batchId: Long): DataFrame = {
-    val at = versions(tableRoot).takeWhile(_ <= batchId).lastOption
-    at match {
-      case Some(v) =>
-        MutableParquetTable.readCommitted(spark, s"$tableRoot/v$v")
-      case None =>
-        // a committed base reads manifest-trusted — a CLONE's base holds
-        // only reference entries (zero local data files), which a plain
-        // directory read cannot see
-        if (MutableParquetTable.isCommitted(s"$tableRoot/base"))
-          MutableParquetTable.readCommitted(spark, s"$tableRoot/base")
-        else spark.read.parquet(s"$tableRoot/base")
-    }
-  }
+  def readAsOf(spark: SparkSession, tableRoot: String, batchId: Long): DataFrame =
+    readSnapshot(spark, resolveAsOf(tableRoot, batchId))
+
+  /** The table state a snapshot dir holds: manifest-trusted when
+    * committed — a CLONE's base holds only reference entries (zero local
+    * data files), which a plain directory read cannot see — else the
+    * directory (a bare base). */
+  private[graft] def readSnapshot(spark: SparkSession, dir: String): DataFrame =
+    if (MutableParquetTable.isCommitted(dir))
+      MutableParquetTable.readCommitted(spark, dir)
+    else spark.read.parquet(dir)
 
   /** The snapshot directory an as-of read resolves to. */
   private def resolveAsOf(tableRoot: String, batchId: Long): String =

@@ -221,6 +221,122 @@ class ConcurrentCommitSpec extends SparkSpec {
     assert(e.getMessage.contains("v0"))
   }
 
+  private def txDirs(root: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(Paths.get(root))
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(".tx-")).toList
+    finally s.close()
+  }
+
+  /** Every file under `dir` with its bytes, relative names sorted. */
+  private def contents(dir: java.nio.file.Path): Seq[(String, Seq[Byte])] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      .map(p => dir.relativize(p).toString -> Files.readAllBytes(p).toSeq)
+      .sortBy(_._1)
+    finally s.close()
+  }
+
+  test("every slot claim refuses an uncommitted next slot and leaves no staging dir") {
+    import spark.implicits._
+    val wh = Files.createTempDirectory("graft-occ-wh").toString
+    spark.conf.set("spark.sql.catalog.gocc",
+      classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gocc.root", wh)
+    // k, v, w over 40 rows in 2 files, plus one commit (v0) so a restore
+    // has a version to go back to
+    def plain(root: String): GraftTable = {
+      val t = GraftTable.create(spark.range(0, 40).select(col("id").as("k"),
+        (col("id") * 2).as("v"), col("id").as("w")), root, "k", numFiles = 2)
+      t.commit(Seq((1L, 11L, 1L, "upsert")).toDF("k", "v", "w", "op"))
+      t
+    }
+    def signatureIndex(root: String): GraftTable = {
+      graft.operators.Dedup.dedupIncremental(root,
+        Seq((0L, "the quick brown fox jumps over the lazy dog"),
+          (1L, "columnar storage formats with vectorized execution"))
+          .toDF("doc_id", "text"), "text", "doc_id", bands = 16,
+        rowsPerBand = 2)
+      GraftTable(spark, root, "idx_key")
+    }
+    val claims: Seq[(String, String => GraftTable, GraftTable => Any)] = Seq(
+      ("commit", plain, _.commit(Seq((2L, 22L, 2L, "upsert"))
+        .toDF("k", "v", "w", "op"))),
+      ("replace", plain, _.replace(spark.range(0, 5)
+        .select(col("id").as("k"), col("id").as("v"), col("id").as("w")))),
+      ("restoreTo", plain, _.restoreTo(-1L)),
+      ("deleteWhere", plain, _.deleteWhere(col("k") < 5)),
+      ("updateWhere", plain, _.updateWhere(col("k") < 5, "v" -> lit(0L))),
+      ("deleteKeys", plain, _.deleteKeys(Seq(3L).toDF("k"))),
+      ("addColumn", plain, t => OptimisticCommit.commitSchema(t.root,
+        t.read().schema.add("x", org.apache.spark.sql.types.LongType))),
+      ("addCheck", plain, _.addCheck("v_ok", "v IS NOT NULL")),
+      ("setColumnDefault", plain, _.setColumnDefault("v", "0")),
+      ("compact (splice)", plain, _.compact(1L << 20)),
+      ("compact (purge)", r => { val t = plain(r); t.dropColumn("w"); t },
+        _.compact(1L << 20)),
+      ("compactRange", plain, _.compactRange(0L, 10L, 1L << 20)),
+      ("rebucket", plain, _.rebucket(Some(2))),
+      ("zorder", plain, t => spark.sql("CALL gocc.system.zorder(table => " +
+        s"'ns.${Paths.get(t.root).getFileName}', dims => 'v,w')").collect()),
+      ("rebuildIndexLayout", signatureIndex, t =>
+        graft.operators.Dedup.rebuildIndexLayout(spark, t.root,
+          probeLayout = true)))
+    claims.zipWithIndex.foreach { case ((label, mk, claim), i) =>
+      val t = mk(s"$wh/ns/t$i")
+      val before = t.versions
+      // a crashed direct writer's target: exists, non-empty, no manifest
+      val slot = Paths.get(t.root, s"v${before.lastOption.getOrElse(-1L) + 1}")
+      Files.createDirectories(slot)
+      Files.writeString(slot.resolve("junk.parquet"), "not parquet")
+      val planted = contents(slot)
+      val e = intercept[Throwable](claim(t))
+      assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[OptimisticCommit.BlockedSlotException]),
+        s"$label: expected BlockedSlotException, got $e")
+      assert(contents(slot) === planted, s"$label wrote into the planted slot")
+      assert(txDirs(t.root).isEmpty, s"$label left a staging dir")
+      assert(t.versions === before, label)
+    }
+  }
+
+  test("a CHECK-violating updateWhere leaves no staging dir behind") {
+    val root = freshRoot()
+    val t = mkTable(root)
+    t.addCheck("v_pos", "v >= 0")
+    intercept[graft.sources.GraftChecks.CheckViolation] {
+      t.updateWhere(col("k") < 10, "v" -> lit(-1L))
+    }
+    assert(txDirs(root).isEmpty)
+    assert(t.versions === Seq(0L))
+  }
+
+  test("a compactRange whose fold throws leaves the next slot free") {
+    val root = freshRoot()
+    val t = mkTable(root) // 4 files: [0,49] [50,99] [100,149] [150,199]
+    // truncate the one file the range selects: the splice fails reading
+    // its footer, after the other files have passed through
+    val picked = graft.sources.MutableParquetTable
+      .pruneManifestFiles(s"$root/base", Some(0L), Some(10L)).get._2
+    assert(picked.size === 1)
+    java.nio.channels.FileChannel.open(Paths.get(picked.head),
+      java.nio.file.StandardOpenOption.WRITE).truncate(16).close()
+    intercept[Exception](t.compactRange(0L, 10L, 1L << 20))
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(Paths.get(root))
+    val versionDirs = try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.matches("v\\d+")).toList finally s.close()
+    assert(versionDirs.isEmpty, s"uncommitted version dirs: $versionDirs")
+    assert(txDirs(root).isEmpty)
+    // the next commit routes to an intact file and lands
+    import spark.implicits._
+    assert(t.commit(Seq((195L, -195L, "upsert")).toDF("k", "v", "op")) === 0L)
+    assert(t.readRange(190L, 199L).where(col("k") === 195L)
+      .head().getLong(1) === -195L)
+  }
+
   test("a zombie twin of the same (app, epoch) cannot apply an epoch twice") {
     val root = freshRoot()
     mkTable(root, n = 20, files = 2)

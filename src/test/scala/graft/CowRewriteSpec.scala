@@ -247,6 +247,46 @@ class CowRewriteSpec extends SparkSpec {
     }
   }
 
+  test("a bare dir with stat-less files applies every batch") {
+    val s = spark; import s.implicits._
+    // INT96 timestamps carry no footer stats, so those files have no zone
+    // map entry: every file stat-less, and one among ranged files
+    Seq("all stat-less" -> Seq(true, true, true),
+        "one stat-less" -> Seq(false, true, false)).foreach {
+      case (label, int96) =>
+        val dir = Files.createTempDirectory("graft-cowrw-statless").toString
+        int96.zipWithIndex.foreach { case (legacy, j) =>
+          withSQLConf("spark.sql.parquet.outputTimestampType" ->
+              (if (legacy) "INT96" else "TIMESTAMP_MICROS")) {
+            spark.range(j * 100L, (j + 1) * 100L, 2)
+              .select(timestamp_seconds(col("id")).as("k"), col("id").as("v"))
+              .coalesce(1).sortWithinPartitions("k")
+              .write.mode("append").parquet(dir)
+          }
+        }
+        // step 1 touches files 0 and 1; step 2 file 2, plus inserts
+        // below, between and above the existing keys
+        val steps = Seq(
+          Seq((10L, -10L, "upsert"), (20L, 0L, "delete"), (11L, -11L, "upsert"),
+            (150L, -150L, "upsert"), (160L, 0L, "delete")),
+          Seq((250L, -250L, "upsert"), (260L, 0L, "delete"),
+            (251L, -251L, "upsert"), (301L, -301L, "upsert")))
+        steps.zipWithIndex.foldLeft(dir) { case (snap, (ops, i)) =>
+          val batch = ops.toDF("s", "v", "op")
+            .select(timestamp_seconds(col("s")).as("k"), col("v"), col("op"))
+          val state = (if (i == 0) spark.read.parquet(snap)
+            else MutableParquetTable.readCommitted(spark, snap)).localCheckpoint()
+          val res = MutableParquetTable(spark, snap, "k").merge(batch)
+          val expect = MergeOps.applyMutationsMulti(state, batch, Seq("k"))
+          val got = MutableParquetTable.readCommitted(spark, res.snapshotDir)
+          assert(got.count() === expect.count(), s"$label step $i")
+          assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty,
+            s"$label step $i")
+          res.snapshotDir
+        }
+    }
+  }
+
   test("a task run twice leaves one final-named output per dirty input") {
     val shape = single("string")
     val t = seed(Files.createTempDirectory("graft-cowrw-retry").toString, shape)

@@ -4127,10 +4127,11 @@ object SparkEntry {
     * the batch recompute over the FULL corpus, which is exactly what
     * the oracle (the q147 scorer) replays. Proves seed + ingest +
     * index-served scoring ≡ recompute: tf/df/dl from the index, N and
-    * avgdl from the MAINTAINED stats AggView (one row, caught up
-    * delta-priced at each ingest — exact longs, so the view path's
-    * scores are bit-identical to the doclen scan's), postings
-    * term-filtered with dim zone-map file pruning before IO. */
+    * avgdl from the stats AggView (one row, caught up delta-priced by
+    * this probe itself — the ingest commits only the tables; exact
+    * longs, so the view path's scores are bit-identical to the doclen
+    * scan's), postings term-filtered with dim zone-map file pruning
+    * before IO. */
   def q185_bm25_indexed(s: SparkSession, dir: String): DataFrame = {
     val docs = documents(s, dir).select(col("doc_id"), col("text"))
     val root = java.nio.file.Files

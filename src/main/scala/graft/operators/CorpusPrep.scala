@@ -1036,9 +1036,9 @@ object CorpusPrep {
 
   /** Doc-length rows for the companion `doclen` table (EVERY doc, empty
     * ones included — they count in N and avgdl, the q147 lens rule).
-    * `grp` is the constant group key the maintained corpus-stats
-    * AggView hangs off (cnt = N, sum_dl; both exact longs, so
-    * sum_dl/cnt is bit-identical to the scan path's avg). */
+    * `grp` is the constant group key the corpus-stats AggView hangs off
+    * (cnt = N, sum_dl; both exact longs, so sum_dl/cnt is bit-identical
+    * to the scan path's avg). */
   private def bm25LenRows(docs: DataFrame, textCol: String,
                           idCol: String): DataFrame =
     docs.select(col(idCol).cast("long").as("doc_id"),
@@ -1067,7 +1067,9 @@ object CorpusPrep {
     * and `doclen` keyed by doc id (exact N/avgdl without scanning
     * text). At 100 TB the postings table is the tokenized corpus
     * (≪ raw text), `doclen` is 16 bytes/doc, and probe IO is
-    * ∝ postings of the queried terms. */
+    * ∝ postings of the queried terms. No corpus-stats view is built
+    * here: the one reader of that view
+    * ([[bm25TopKIndexed]] with `statsFromView`) refreshes it. */
   def bm25SeedIndex(indexRoot: String, docs: DataFrame, textCol: String,
                     idCol: String, indexFiles: Int = 0): Unit = {
     val spark = docs.sparkSession
@@ -1096,12 +1098,7 @@ object CorpusPrep {
     val doclenSide = Future {
       val lens = bm25LenRows(docs, textCol, idCol)
       graft.GraftTable.create(lens, s"$indexRoot/doclen", "doc_id",
-        statsFiles(lens, 16))
-      // corpus stats (N, Σdl) as a maintained view — per-ingest cost is
-      // the batch's delta, and a probe reads ONE row instead of scanning
-      // doclen
-      graft.streaming.AggView.refresh(spark, s"$indexRoot/doclen",
-        Seq("grp"), Seq("dl")): Unit
+        statsFiles(lens, 16)): Unit
     }
     Overlap.awaitAll(Seq(postingsSide, doclenSide)): Unit
   }
@@ -1117,13 +1114,17 @@ object CorpusPrep {
     * its REMOVED terms stale (upserts can't know them) — the FAISS
     * add_with_ids trade: document-update/delete drift is remedied by
     * rebuild ([[bm25SeedIndex]]), not per-batch retraining. Returns the
-    * postings-table version. */
+    * postings-table version.
+    *
+    * An ingest commits the two tables and nothing else: the corpus-stats
+    * view over `doclen` is not maintained here but caught up by its one
+    * reader ([[bm25TopKIndexed]] with `statsFromView`), so index
+    * maintenance stays off the ingest's critical path. */
   def bm25IndexIngest(indexRoot: String, newDocs: DataFrame,
                       textCol: String, idCol: String): Long = {
     val spark = newDocs.sparkSession
-    // doclen-commit→view-refresh and the postings commit touch
-    // INDEPENDENT tables — overlap them (guide §2.6, bounded pool);
-    // each side's commit chain is unchanged, and awaitAll holds the
+    // the doclen and postings commits touch INDEPENDENT tables —
+    // overlap them (guide §2.6, bounded pool); awaitAll holds the
     // failure until both sides have quiesced
     import scala.concurrent.Future
     import Overlap.ec
@@ -1131,10 +1132,6 @@ object CorpusPrep {
       graft.GraftTable(spark, s"$indexRoot/doclen", "doc_id")
         .commit(bm25LenRows(newDocs, textCol, idCol)
           .withColumn("op", lit("upsert"))): Unit
-      // catch the stats view up — delta-priced (the change feed of the
-      // batch just committed)
-      graft.streaming.AggView.refresh(spark, s"$indexRoot/doclen",
-        Seq("grp"), Seq("dl")): Unit
     }
     val postingsVersion = Future {
       graft.GraftTable(spark, s"$indexRoot/postings", "idx_key")
@@ -1153,8 +1150,13 @@ object CorpusPrep {
     * `doclen` table — or, with `statsFromView`, read as ONE maintained
     * [[graft.streaming.AggView]] row (cnt, sum_dl — exact longs, so
     * sum_dl/cnt is bit-identical to the scan path's avg and scores
-    * cannot drift between the two). Nothing here touches document
-    * text. */
+    * cannot drift between the two). The view is refreshed HERE, by the
+    * query that reads it: the refresh catches up every doclen version
+    * committed since the last read (one change feed + one delta
+    * aggregate per version; nothing when already current), and it is
+    * idempotent and safe beside a concurrent refresher
+    * ([[graft.streaming.AggView.refresh]] publishes each version
+    * atomically). Nothing here touches document text. */
   def bm25TopKIndexed(spark: SparkSession, indexRoot: String,
                       query: Seq[String], k: Int,
                       k1: Double = 1.2, b: Double = 0.75,
@@ -1168,12 +1170,14 @@ object CorpusPrep {
         col("tf").cast("double").as("__tf"),
         col("dl").cast("double").as("__dl"))
     val stats =
-      if (statsFromView)
+      if (statsFromView) {
+        graft.streaming.AggView.refresh(spark, s"$indexRoot/doclen",
+          Seq("grp"), Seq("dl"))
         graft.streaming.AggView.read(spark, s"$indexRoot/doclen")
           .select(col("cnt").cast("double").as("__n"),
             (col("sum_dl").cast("double") / col("cnt").cast("double"))
               .as("__avgdl"))
-      else spark.read.format("graft").load(s"$indexRoot/doclen")
+      } else spark.read.format("graft").load(s"$indexRoot/doclen")
         .agg(count(lit(1)).cast("double").as("__n"),
           avg(col("dl").cast("double")).as("__avgdl"))
     val df = post.groupBy(col("__t"))

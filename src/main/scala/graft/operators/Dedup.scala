@@ -923,8 +923,18 @@ object Dedup {
     *
     * Returned pairs (id_a < id_b, hamming): batch-vs-corpus AND
     * batch-internal. Exact recall for maxHamming <= chunks-1, as
-    * [[hammingPairs]]. Re-ingesting a batch is idempotent (same id →
-    * same idx_keys upsert). */
+    * [[hammingPairs]].
+    *
+    * The index commit runs BESIDE the pair probe
+    * ([[probeBesideCommit]]): the probe's index relation is pinned to
+    * the pre-ingest snapshot before the commit starts, and the CoW
+    * commit never touches the pinned files. Retry contract: re-ingesting
+    * a batch is idempotent (same id → same idx_keys upsert), and a
+    * re-ingest after the commit landed returns the same pairs — the
+    * batch's own rows in the index pair only with themselves (excluded)
+    * or with batch rows the self-join pairs anyway (with no
+    * `maxBucketWidth` cap). So an ingest whose probe failed after its
+    * commit is retried as is. */
   def hammingIncremental(indexRoot: String, fps: DataFrame,
                          idCol: String, hashCol: String,
                          maxHamming: Int = 2, chunks: Int = 4,
@@ -975,12 +985,10 @@ object Dedup {
           bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming"))
         .distinct()
         .where(col("hamming") <= maxHamming)
-        // materialize before the index commit mutates what a lazy plan
-        // would re-read (the probe must see the PRE-ingest index)
-        .transform(Materialize.ck)
-      val version = commitIndex(spark, indexRoot, newRows, exists,
-        extendIndex, probeLayout, Seq("band", "chunk"), indexFiles)
-      IncrementalDedup(pairs, version, overflow)
+      val (found, version) = probeBesideCommit(pairs, None)(
+        commitIndex(spark, indexRoot, newRows, exists, extendIndex,
+          probeLayout, Seq("band", "chunk"), indexFiles))
+      IncrementalDedup(found, version, overflow)
     } finally { newRows.unpersist(blocking = false): Unit }
   }
 
@@ -1001,9 +1009,13 @@ object Dedup {
                                probed: DataFrame, bucketCol: String,
                                cap: Int = 1 << 16)
       : (DataFrame, Option[Array[org.apache.spark.sql.Row]]) = {
+    // ONE head resolution: the relation pins the pre-ingest snapshot
+    // when it is created, and the layout check reads that relation's own
+    // manifest — so the probe reads the pre-ingest index by
+    // construction, whatever a concurrent commit publishes meanwhile
     val index = spark.read.format("graft").load(indexRoot)
-    val snap = graft.streaming.CdcMergeSink.latestSnapshot(indexRoot)
-    val dims = graft.sources.MutableParquetTable.manifestDimRanges(snap).keySet
+    val dims = graft.sources.GraftSource.manifestOf(index)
+      .map(_.dimRanges.map(_.column).toSet).getOrElse(Set.empty[String])
     if (!dims.contains("band") || !dims.contains(bucketCol)) (index, None)
     else {
       val pts = probed.limit(cap + 1).collect()
@@ -1077,6 +1089,43 @@ object Dedup {
         .commit(newRows.withColumn("op", lit("upsert")))
     }
 
+  /** The tail of an incremental ingest, with index maintenance off the
+    * result's critical path: `commit` runs on the bounded overlap pool
+    * while the caller's thread materializes `pairs`, hands them to
+    * `pairsSink`, and then waits for the commit (guide §2.6).
+    *
+    * Safe because `pairs` reads a PINNED index: its graft relation was
+    * created — and so fixed its snapshot dir and file list — before the
+    * commit was submitted ([[probePrunedIndex]]), and a commit is
+    * copy-on-write, publishing a new version without touching the
+    * pinned files.
+    *
+    * Nothing is still in flight when an exception propagates. When the
+    * commit fails, its exception propagates with a probe or sink
+    * failure attached as suppressed; otherwise the probe's or sink's
+    * does. Returns the materialized pairs and the commit's version. */
+  private def probeBesideCommit(pairs: DataFrame,
+                                pairsSink: Option[DataFrame => Unit])
+                               (commit: => Long): (DataFrame, Long) = {
+    // every Throwable is held (an interrupt included) until the commit
+    // has quiesced
+    def held[T](body: => T): Either[Throwable, T] =
+      try Right(body) catch { case e: Throwable => Left(e) }
+    val committed = scala.concurrent.Future(commit)(Overlap.ec)
+    val found = held {
+      val ck = Materialize.ck(pairs)
+      pairsSink.foreach(_(ck))
+      ck
+    }
+    (held(Overlap.awaitAll(Seq(committed)).head), found) match {
+      case (Left(e), other) =>
+        other.left.foreach(s => if (s ne e) e.addSuppressed(s))
+        throw e
+      case (_, Left(e)) => throw e
+      case (Right(v), Right(p)) => (p, v)
+    }
+  }
+
   /** One INCREMENTAL dedup ingest against the persisted index at
     * `indexRoot` (a graft table, created on first use): sketch the new
     * batch map-side, probe the index for collisions, verify candidates
@@ -1109,17 +1158,32 @@ object Dedup {
     * form for a pure index-SEEDING ingest whose caller discards the
     * pair stream; the committed index is identical.
     *
-    * `pairsSink`, when set, is invoked with the (already materialized)
-    * pairs frame CONCURRENTLY with the index commit (guide §2.6: the
-    * pair write and the commit touch independent storage) and joined
-    * before returning — the streaming sink's per-epoch pair append
-    * rides the commit's tail instead of serializing after it. Both sides
-    * have quiesced before any exception propagates; when both fail, the
-    * commit's exception propagates with the sink's attached as
-    * suppressed. The sink may have appended its pairs before a commit
-    * failed, so its output is at-least-once: a retried epoch appends
-    * them again, and consumers must tolerate duplicates. A sink needs
-    * `emitPairs` (the seeding path computes no pairs to hand it). */
+    * The index commit runs CONCURRENTLY with the pair probe
+    * ([[probeBesideCommit]], guide §2.6): the probe's index relation is
+    * resolved and pinned to the pre-ingest snapshot first, then the
+    * commit is submitted to the overlap pool while this thread
+    * materializes the pairs. The CoW commit publishes a new version and
+    * never touches the pinned files, so the probe sees the pre-ingest
+    * index by construction.
+    *
+    * `pairsSink`, when set, is invoked with the materialized pairs
+    * frame while the commit may still be running, and the commit is
+    * joined before returning — the streaming sink's per-epoch pair
+    * append rides the commit's tail instead of serializing after it.
+    * Every side has quiesced before any exception propagates; when the
+    * commit and the sink both fail, the commit's exception propagates
+    * with the sink's attached as suppressed. The sink may have appended
+    * its pairs before a commit failed, so its output is at-least-once:
+    * a retried epoch appends them again, and consumers must tolerate
+    * duplicates. A sink needs `emitPairs` (the seeding path computes no
+    * pairs to hand it).
+    *
+    * Retry contract: a failed ingest is retried as is. When the probe
+    * failed after the commit landed, the retry probes an index that
+    * already holds the batch and returns the same pairs: the batch's
+    * own index rows pair only with themselves (excluded) or with batch
+    * rows the batch self-join pairs anyway, with the same signatures
+    * (with no `maxBucketWidth` cap, which bounds only the self-join). */
   def dedupIncremental(indexRoot: String, newDocs: DataFrame,
                        textCol: String, idCol: String,
                        shingleK: Int = 3, bands: Int = 8,
@@ -1203,30 +1267,12 @@ object Dedup {
         .select(col("id_a"), col("id_b"), agree)
         .distinct()
         .where(col("est_jaccard") >= threshold)
-        // materialize before the index commit mutates what a lazy plan
-        // would re-read (the probe must see the PRE-ingest index)
-        .transform(Materialize.ck)
       // `extendIndex = false` probes WITHOUT committing (a dry-run /
-      // bench separation of pairs-finding from index maintenance).
-      // The pairs consumer (if any) runs concurrently with the commit —
-      // pairs are checkpointed above, so the sink never re-reads the
-      // index the commit is mutating.
-      val sinkF = pairsSink.map(f =>
-        scala.concurrent.Future(f(pairs))(Overlap.ec))
-      val version =
-        try commitIndex(spark, indexRoot, newRows, exists,
-          extendIndex, probeLayout, Seq("band", "bucket"), indexFiles)
-        catch { case e: Throwable =>
-          // the sink still quiesces; its failure must not replace the
-          // commit's
-          sinkF.foreach(f => try Overlap.awaitAll(Seq(f)) catch {
-            case sinkError: Throwable if sinkError ne e =>
-              e.addSuppressed(sinkError)
-          })
-          throw e
-        }
-      sinkF.foreach(f => Overlap.awaitAll(Seq(f)))
-      IncrementalDedup(pairs, version, overflow)
+      // bench separation of pairs-finding from index maintenance)
+      val (found, version) = probeBesideCommit(pairs, pairsSink)(
+        commitIndex(spark, indexRoot, newRows, exists, extendIndex,
+          probeLayout, Seq("band", "bucket"), indexFiles))
+      IncrementalDedup(found, version, overflow)
     } finally { newRows.unpersist(blocking = false): Unit }
   }
 

@@ -136,6 +136,18 @@ object GraftSource {
         s"${MutableParquetTable.committedAtMs(s"$root/base").getOrElse(-1L)}"))
   }
 
+  /** The manifest the graft relation read by `df` was resolved from
+    * (None when `df` reads no committed graft snapshot). A relation
+    * pins its snapshot when it is created, so metadata taken from here
+    * describes exactly the files the rows come from, without a second
+    * head lookup. */
+  def manifestOf(df: org.apache.spark.sql.DataFrame): Option[Manifest] =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+          if r.table.isInstanceOf[GraftBatchTable] =>
+        r.table.asInstanceOf[GraftBatchTable].manifest
+    }.flatten
+
   /** Files the most recent scan actually planned — test/telemetry hook
     * for asserting manifest pruning. Volatile global rather than
     * thread-local: runtime-filtered scans plan their partitions on AQE

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,10 +13,13 @@ import graft.operators.IncrementalAgg
   * ([[IncrementalAgg.applyDelta]]) — never by rescanning the table.
   *
   * Layout: `tableRoot/aggview/v<batchId>` mirrors the table's version dirs;
-  * a view version is committed by Spark's `_SUCCESS` marker. Refresh is
-  * idempotent and crash-safe the same way the sink is: an existing
-  * committed view version is never rewritten, a half-written one is
-  * rebuilt.
+  * a view version is committed by Spark's `_SUCCESS` marker. Each version
+  * is written into a hidden stage dir under `aggview/` and published by
+  * one atomic rename onto `v<batchId>`, so a `v<batchId>` is never seen
+  * half-written. Refresh is idempotent, crash-safe and safe beside a
+  * concurrent refresher: an existing committed view version is never
+  * rewritten (a refresher that loses the rename adopts the winner's), and
+  * an uncommitted one left by a crash is replaced.
   *
   * Scale shape: per refresh step, one change feed (cost ∝ files the merge
   * touched) + one delta aggregation (cost ∝ changed rows) + a join against
@@ -48,22 +51,68 @@ object AggView {
 
   private def checkOrWriteSpec(tableRoot: String, spec: String): Unit = {
     val p = Paths.get(s"$tableRoot/aggview/_spec")
-    if (Files.exists(p)) {
-      val existing = Files.readString(p)
-      require(existing == spec,
-        s"aggview at $tableRoot was built with [$existing], refresh asked " +
-          s"for [$spec] — delete $tableRoot/aggview to rebuild under a new spec")
-    } else {
+    if (!Files.exists(p)) {
+      // temp file + atomic rename: a concurrent refresher never reads a
+      // partly written spec
       Files.createDirectories(p.getParent)
-      Files.writeString(p, spec)
+      val tmp = p.resolveSibling(s".spec-${java.util.UUID.randomUUID}")
+      Files.writeString(tmp, spec)
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
+    }
+    val existing = Files.readString(p)
+    require(existing == spec,
+      s"aggview at $tableRoot was built with [$existing], refresh asked " +
+        s"for [$spec] — delete $tableRoot/aggview to rebuild under a new spec")
+  }
+
+  /** Publish a view version: `write` stages it in a hidden dir beside
+    * `dir` (committed there by Spark's `_SUCCESS`), and one atomic rename
+    * makes it `dir`. An uncommitted `dir` left by a crash is set aside
+    * first. Returns false when a concurrent refresher published `dir`
+    * first: the caller then adopts the winner's version. The stage is
+    * gone on every exit. */
+  private def publish(dir: Path)(write: String => Unit): Boolean = {
+    val stage = dir.resolveSibling(
+      s".stage-${dir.getFileName}-${java.util.UUID.randomUUID}")
+    var published = false
+    try {
+      write(stage.toString)
+      while (!published && !committed(dir.toString)) {
+        if (Files.exists(dir)) setAside(dir)
+        else try {
+          Files.move(stage, dir, StandardCopyOption.ATOMIC_MOVE)
+          published = true
+        } catch {
+          // a racer's rename landed first: the loop re-checks `dir`
+          case _: java.io.IOException if Files.exists(dir) =>
+        }
+      }
+      published
+    } finally if (!published && Files.exists(stage))
+      CdcMergeSink.deleteRecursively(stage)
+  }
+
+  /** Remove an uncommitted view dir: one atomic rename to a private
+    * name (so at most one refresher takes it), then delete it there. A
+    * winner's publish that landed between the caller's check and the
+    * rename is put back, never deleted. */
+  private def setAside(dir: Path): Unit = {
+    val aside = dir.resolveSibling(
+      s".stale-${dir.getFileName}-${java.util.UUID.randomUUID}")
+    val taken =
+      try { Files.move(dir, aside, StandardCopyOption.ATOMIC_MOVE); true }
+      catch { case _: java.nio.file.NoSuchFileException => false }
+    if (taken) {
+      if (committed(aside.toString))
+        try Files.move(aside, dir, StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: java.io.IOException if committed(dir.toString) =>
+          // another equal version took the slot meanwhile
+          CdcMergeSink.deleteRecursively(aside)
+        }
+      else CdcMergeSink.deleteRecursively(aside)
     }
   }
 
-  /** Bring the view up to date with every committed table version: each
-    * missing step applies that step's change feed to the previous view.
-    * The first step seeds from a full aggregation of the base snapshot
-    * (the only full pass the view ever pays). Returns the number of
-    * versions materialized. */
   /** Attach the per-group HLL sketch column `hll_<c>` of a second
     * maintained frame to the core view rows (null-safe group equality —
     * a NULL group key is a group like any other; both frames drop
@@ -85,7 +134,12 @@ object AggView {
       .select(core.columns.map(core(_)).toIndexedSeq :+ col(skCol): _*)
   }
 
-  /** Bring the view up to date (see object scaladoc). With `hllCol`,
+  /** Bring the view up to date with every committed table version: each
+    * missing step applies that step's change feed to the previous view.
+    * The first step seeds from a full aggregation of the base snapshot
+    * (the only full pass the view ever pays). Returns the number of
+    * versions this call published (a version a concurrent refresher
+    * published first is adopted, not counted). With `hllCol`,
     * the view additionally maintains a per-group DISTINCT-COUNT sketch
     * column `hll_<col>` ([[IncrementalAgg.applyDeltaWithHll]]):
     * insert-only steps merge sketches delta-priced, retraction-touched
@@ -107,16 +161,6 @@ object AggView {
     var prevAgg: Option[DataFrame] = None
     var prevV: Long = -1L // sentinel: resolves to the base snapshot
     var built = 0
-    def coreCols(df: DataFrame) = {
-      val h = hllCol match {
-        case Some(c) => df.drop(s"hll_$c")
-        case None => df
-      }
-      quantileCol match {
-        case Some(c) => h.drop(s"qsk_$c")
-        case None => h
-      }
-    }
     def full(df: DataFrame) = {
       val core =
         if (extremaCols.isEmpty) IncrementalAgg.fullAgg(df, groupCols, sumCols)
@@ -153,38 +197,36 @@ object AggView {
         val feed = graft.operators.Materialize.ck(
           CdcMergeSink.changeFeed(spark, tableRoot, prevV, v,
             keyOf(tableRoot)))
+        // every branch takes the checkpointed `base` itself — the delta
+        // operators select the columns they need and emit only their
+        // own, and a projection here would make their ckIfLazy copy the
+        // blocks once more
         val core =
           if (extremaCols.isEmpty)
-            IncrementalAgg.applyDelta(coreCols(base), feed, groupCols, sumCols)
-          else IncrementalAgg.applyDeltaWithExtrema(coreCols(base), feed,
+            IncrementalAgg.applyDelta(base, feed, groupCols, sumCols)
+          else IncrementalAgg.applyDeltaWithExtrema(base, feed,
             CdcMergeSink.readAsOf(spark, tableRoot, v),
             groupCols, sumCols, extremaCols)
         val withH = hllCol match {
           case None => core
           case Some(c) =>
             // the sketch delta re-derives its bookkeeping cnt from the
-            // previous view's cnt (the applyDeltaWithHll contract needs
-            // prev (groupCols, cnt, hll_c))
-            val prevSketch = base.select(
-              groupCols.map(col) :+ col("cnt") :+ col(s"hll_$c"): _*)
-            val hllNext = IncrementalAgg.applyDeltaWithHll(prevSketch, feed,
+            // previous view's cnt
+            val hllNext = IncrementalAgg.applyDeltaWithHll(base, feed,
               CdcMergeSink.readAsOf(spark, tableRoot, v), groupCols, c)
             withHllColumn(core, hllNext, groupCols, c)
         }
         val next = quantileCol match {
           case None => withH
           case Some(c) =>
-            val prevSketch = base.select(
-              groupCols.map(col) :+ col("cnt") :+ col(s"qsk_$c"): _*)
-            val qNext = IncrementalAgg.applyDeltaWithQuantile(prevSketch,
+            val qNext = IncrementalAgg.applyDeltaWithQuantile(base,
               feed, CdcMergeSink.readAsOf(spark, tableRoot, v), groupCols,
               c, keyOf(tableRoot))
             withSketchColumn(withH, qNext, groupCols, s"qsk_$c")
         }
-        // overwrite handles a crashed half-write; _SUCCESS commits
-        next.coalesce(1).write.mode("overwrite").parquet(dir)
+        if (publish(Paths.get(dir))(next.coalesce(1).write.parquet(_)))
+          built += 1
         prevAgg = Some(spark.read.parquet(dir)); prevV = v
-        built += 1
       }
     }
     built

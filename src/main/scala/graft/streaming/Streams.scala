@@ -443,10 +443,12 @@ object Streams {
     * [[annIndexSink]]: each micro-batch of arriving documents is
     * tokenized map-side and upserted into the persisted inverted index
     * ([[graft.operators.CorpusPrep.bm25IndexIngest]] — postings +
-    * doclen CoW merges), so freshly-landed documents are servable by
-    * [[graft.operators.CorpusPrep.bm25TopKIndexed]] one commit after
-    * they arrive. Per-epoch cost ∝ batch + the dirty posting files its
-    * terms route to. The index must be seeded first
+    * doclen CoW merges, nothing else), so freshly-landed documents are
+    * servable by [[graft.operators.CorpusPrep.bm25TopKIndexed]] one
+    * commit after they arrive. Per-epoch cost ∝ batch + the dirty
+    * posting files its terms route to; the corpus-stats view is not
+    * maintained per epoch but caught up by the `statsFromView` query
+    * that reads it. The index must be seeded first
     * ([[graft.operators.CorpusPrep.bm25SeedIndex]]); the append-only
     * contract is the batch operator's.
     *

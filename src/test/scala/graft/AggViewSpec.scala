@@ -178,4 +178,75 @@ class AggViewSpec extends SparkSpec {
     assert(rows(AggView.read(spark, root)) === rows(IncrementalAgg.fullAgg(
       CdcMergeSink.readAsOf(spark, root, 0L), Seq("cat"), Seq("v"))))
   }
+
+  /** A table with a 200-row base in 4 groups and two committed batches
+    * (inserts, a retraction, a group move, an update). */
+  private def tableWithTwoBatches(root: String): Unit = {
+    val base = spark.range(0, 200).select(col("id"),
+      concat(lit("g"), (col("id") % 4).cast("string")).as("cat"),
+      (col("id") * 13 % 97).cast("double").as("v"),
+      concat(lit("t"), (col("id") % 9).cast("string")).as("t"))
+    ParquetTable.writeSorted(base, s"$root/base", "id", 4)
+    CdcMergeSink.applyBatch(spark,
+      Seq((500L, "g0", 777.0, "tNew", "upsert"), (3L, "", 0.0, "", "delete"),
+        (5L, "g9", 5.0, "t5", "upsert")).toDF("id", "cat", "v", "t", "op"),
+      root, "id", batchId = 0L)
+    CdcMergeSink.applyBatch(spark,
+      Seq((501L, "g9", 1.5, "tZ", "upsert"), (7L, "g3", 8.0, "t7", "upsert"))
+        .toDF("id", "cat", "v", "t", "op"),
+      root, "id", batchId = 1L)
+  }
+
+  private def viewEntries(root: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(s"$root/aggview"))
+    try s.iterator().asScala.map(_.getFileName.toString).toList.sorted
+    finally s.close()
+  }
+
+  test("two concurrent refreshes both return, publish each version once, and leave no stage") {
+    val root = java.nio.file.Files.createTempDirectory("graft-aggvcc").toString
+    tableWithTwoBatches(root)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val refreshes = (1 to 2).map(_ => scala.concurrent.Future {
+        start.await()
+        AggView.refresh(spark, root, Seq("cat"), Seq("v"))
+      }(ec))
+      start.countDown()
+      val built = refreshes.map(f => scala.concurrent.Await.result(f,
+        scala.concurrent.duration.Duration(5, "min")))
+      // every version is published by exactly one of them
+      assert(built.sum === 2, s"published per refresher: $built")
+    } finally pool.shutdown()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("cat").collect().map(_.toSeq).toSeq
+    Seq(0L, 1L).foreach { v =>
+      assert(rows(spark.read.parquet(s"$root/aggview/v$v")) ===
+        rows(IncrementalAgg.fullAgg(CdcMergeSink.readAsOf(spark, root, v),
+          Seq("cat"), Seq("v"))), s"view version $v")
+    }
+    assert(viewEntries(root) === Seq("_spec", "v0", "v1"))
+  }
+
+  test("sketch columns take no extra checkpoint job per refresh step") {
+    val work = java.nio.file.Files.createTempDirectory("graft-aggvck").toString
+    val (plain, sketched) = (s"$work/plain", s"$work/sketched")
+    tableWithTwoBatches(plain)
+    tableWithTwoBatches(sketched)
+    def checkpoints(refresh: => Int): Int = {
+      val (built, jobs) = JobLog.recording(spark)(refresh)
+      assert(built === 2)
+      jobs.count(_.names.exists(_.startsWith("localCheckpoint")))
+    }
+    val plainCk = checkpoints(
+      AggView.refresh(spark, plain, Seq("cat"), Seq("v")))
+    val sketchedCk = checkpoints(AggView.refresh(spark, sketched,
+      Seq("cat"), Seq("v"), hllCol = Some("t"), quantileCol = Some("v")))
+    // per step: the previous view and the change feed, once each
+    assert(plainCk === 4)
+    assert(sketchedCk === plainCk)
+  }
 }

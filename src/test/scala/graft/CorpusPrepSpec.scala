@@ -841,6 +841,51 @@ class CorpusPrepSpec extends SparkSpec with TableDrivenPropertyChecks {
     assert(scores === scores.sorted.reverse)
   }
 
+  test("bm25 stats view: ingests build none; the statsFromView probe refreshes it and scores exactly") {
+    val corpus = docs(
+      1L -> "data data data merge other words here",
+      2L -> "merge window data something else entirely goes on",
+      3L -> "window window merge data data then more",
+      4L -> "nothing relevant at all in this one",
+      5L -> "data merge window data window tail",
+      6L -> "",
+      7L -> "window data late arrival")
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-bm25view").toString + "/idx"
+    CorpusPrep.bm25SeedIndex(root,
+      corpus.where(col("doc_id") <= 3), "text", "doc_id")
+    CorpusPrep.bm25IndexIngest(root,
+      corpus.where(col("doc_id") > 3 && col("doc_id") <= 5), "text", "doc_id")
+    CorpusPrep.bm25IndexIngest(root,
+      corpus.where(col("doc_id") > 5), "text", "doc_id")
+    val aggview = java.nio.file.Paths.get(s"$root/doclen/aggview")
+    def viewDirs: Seq[String] =
+      if (!java.nio.file.Files.exists(aggview)) Nil
+      else {
+        import scala.jdk.CollectionConverters._
+        val s = java.nio.file.Files.list(aggview)
+        try s.iterator().asScala.map(_.getFileName.toString).toList.sorted
+        finally s.close()
+      }
+    assert(!viewDirs.exists(_.matches("v\\d+")),
+      s"an ingest built stats view versions: $viewDirs")
+
+    val q = Seq("data", "merge", "window")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val fromView = rows(CorpusPrep.bm25TopKIndexed(spark, root, q, 10,
+      statsFromView = true))
+    assert(fromView === rows(CorpusPrep.bm25TopKIndexed(spark, root, q, 10)))
+    assert(fromView === rows(CorpusPrep.bm25TopK(corpus, "text", "doc_id", q, 10)))
+    // the probe caught the view up to the latest doclen version, and
+    // left no stage dir behind
+    val doclenVs = graft.streaming.CdcMergeSink.versions(s"$root/doclen")
+    assert(doclenVs.nonEmpty)
+    assert(graft.streaming.AggView.viewVersions(s"$root/doclen").lastOption ===
+      doclenVs.lastOption)
+    assert(viewDirs.forall(d => d.matches("v\\d+") || d == "_spec"), viewDirs)
+  }
+
   test("bm25 index: seed + ingest + indexed probe equals the batch recompute") {
     val corpus = docs(
       1L -> "data data data merge other words here",

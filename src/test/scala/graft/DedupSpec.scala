@@ -414,6 +414,42 @@ class DedupSpec extends SparkSpec {
     assert(spark.read.format("graft").load(root).count() === n1 + 16)
   }
 
+  test("retrying an ingest whose commit already landed returns the same pairs") {
+    val s = spark; import s.implicits._
+    def rowSet(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+    // MinHash: the retry probes an index that already holds the batch
+    val docs = corpus()
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-incdd-retry").toString + "/idx"
+    Dedup.dedupIncremental(root, docs.where(col("doc_id") % 2 === 0),
+      "text", "doc_id", bands = 16, rowsPerBand = 2, emitPairs = false)
+    val batch = docs.where(col("doc_id") % 2 === 1)
+    val first = Dedup.dedupIncremental(root, batch, "text", "doc_id",
+      bands = 16, rowsPerBand = 2)
+    val retry = Dedup.dedupIncremental(root, batch, "text", "doc_id",
+      bands = 16, rowsPerBand = 2)
+    assert(retry.indexVersion === first.indexVersion + 1)
+    assert(rowSet(first.pairs).nonEmpty)
+    assert(rowSet(retry.pairs) === rowSet(first.pairs),
+      "the retry must return exactly the first attempt's pairs")
+
+    // Hamming: a batch with an internal pair and a corpus neighbor
+    def fp(bits: Long*) = bits.foldLeft(0L)((a, b) => a | (1L << b))
+    val hroot = java.nio.file.Files
+      .createTempDirectory("graft-inchm-retry").toString + "/idx"
+    Dedup.hammingIncremental(hroot,
+      Seq(10L -> fp(1, 5, 9, 40), 30L -> fp(0, 16, 32, 48))
+        .toDF("media_id", "dhash"), "media_id", "dhash", maxHamming = 1)
+    val fresh = Seq(11L -> fp(1, 5, 9, 40, 63), 20L -> fp(2, 22, 44),
+      21L -> fp(2, 22, 44)).toDF("media_id", "dhash")
+    val h1 = Dedup.hammingIncremental(hroot, fresh, "media_id", "dhash",
+      maxHamming = 1)
+    val h2 = Dedup.hammingIncremental(hroot, fresh, "media_id", "dhash",
+      maxHamming = 1)
+    assert(rowSet(h1.pairs) === Set(Seq(10L, 11L, 1), Seq(20L, 21L, 0)))
+    assert(rowSet(h2.pairs) === rowSet(h1.pairs))
+  }
+
   test("incremental Hamming dedup == batch hammingPairs on the union, restricted to new-touching pairs") {
     val s = spark; import s.implicits._
     // 64-bit fingerprints with planted near-dups: 10/11 identical,

@@ -4131,7 +4131,10 @@ object SparkEntry {
     * this probe itself — the ingest commits only the tables; exact
     * longs, so the view path's scores are bit-identical to the doclen
     * scan's), postings term-filtered with dim zone-map file pruning
-    * before IO. */
+    * before IO. Besides the view's refresh and read, the probe runs
+    * three jobs: one stats pass (df per term, N, Σdl) whose results
+    * enter the scoring query as literals, then the scoring shuffle and
+    * the top-k. */
   def q185_bm25_indexed(s: SparkSession, dir: String): DataFrame = {
     val docs = documents(s, dir).select(col("doc_id"), col("text"))
     val root = java.nio.file.Files
@@ -4602,8 +4605,9 @@ object SparkEntry {
         col("n_events"), col("sum_value"))
       .orderBy(col("user_id"), col("session_start"))
 
-  /** Typed UDAF: exact top-3 orders per status via a bounded-heap
-    * Aggregator (map-side partial top-k, k rows per group shuffled). */
+  /** Native aggregate: exact top-3 orders per status via [[Udx.topK]]
+    * (the bounded top-k [[graft.plans.TopKAggregate]]: map-side partial
+    * top-k, at most k entries per group shuffled). */
   def q49_topk_udaf(s: SparkSession, dir: String): DataFrame = {
     val top3 = Udx.topK(3)
     orders(s, dir)

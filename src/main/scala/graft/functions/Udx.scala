@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.classic.GraftShims
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -13,34 +14,21 @@ import org.apache.spark.sql.functions._
   */
 object Udx {
 
-  // ---- typed UDAF: bounded top-k heap --------------------------------
+  // ---- native aggregate: bounded top-k --------------------------------
 
-  final case class Scored(score: Double, id: Long)
-
-  /** Exact top-k as an `Aggregator`: the buffer is the current top-k,
-    * ordered by (score desc, id asc) — k·log k per merge, constant memory,
-    * spill-free; the distributed form of a bounded priority queue. Use
-    * instead of window row_number when k << group size: the partial
-    * aggregation discards non-contenders map-side, so the shuffle carries
-    * k rows per group instead of all of them. */
-  final class TopKAggregator(k: Int) extends Aggregator[Scored, Seq[Scored], Seq[Scored]] {
-    private def ord: Ordering[Scored] =
-      Ordering.by((s: Scored) => (-s.score, s.id))
-    override def zero: Seq[Scored] = Seq.empty
-    override def reduce(buf: Seq[Scored], a: Scored): Seq[Scored] =
-      (buf :+ a).sorted(ord).take(k)
-    override def merge(b1: Seq[Scored], b2: Seq[Scored]): Seq[Scored] =
-      (b1 ++ b2).sorted(ord).take(k)
-    override def finish(r: Seq[Scored]): Seq[Scored] = r.sorted(ord)
-    override def bufferEncoder: Encoder[Seq[Scored]] = ExpressionEncoder()
-    override def outputEncoder: Encoder[Seq[Scored]] = ExpressionEncoder()
-  }
-
-  /** Column form: `topK(3)(col("score"), col("id"))` inside an agg. */
-  def topK(k: Int): (Column, Column) => Column = {
-    val fn = udaf(new TopKAggregator(k))
-    (score, id) => fn(score, id)
-  }
+  /** Column form of exact per-group top-k: `topK(3)(col("score"),
+    * col("id"))` inside an agg yields `array<struct<score: double, id:
+    * bigint>>`, best first by (score desc, id asc); rows with a null score
+    * or id are skipped. Built directly on the native
+    * [[graft.plans.TopKAggregate]] (no session registration): its buffer is
+    * the current top-k in two fixed arrays, so the partial aggregation
+    * discards non-contenders map-side and the shuffle carries at most k
+    * entries per group — use instead of a window `row_number` when
+    * k << group size. */
+  def topK(k: Int): (Column, Column) => Column =
+    (score, id) => GraftShims.column(graft.plans.TopKAggregate(
+      GraftShims.expression(score.cast("double")),
+      GraftShims.expression(id.cast("long")), k).toAggregateExpression())
 
   // ---- typed UDAF: k-minimum-values distinct sketch --------------------
 

@@ -1144,19 +1144,34 @@ object CorpusPrep {
   /** BM25 top-k served FROM the persisted index — bit-identical scoring
     * to [[bm25TopK]] (same Column expression shapes, so the q147 oracle
     * replays this path verbatim) with the corpus stages replaced by
-    * index reads: postings arrive term-filtered (dim zone maps prune
-    * files before IO), df comes from the probed postings (exact — a
-    * term's df is its posting count), and N/avgdl aggregate the compact
-    * `doclen` table — or, with `statsFromView`, read as ONE maintained
-    * [[graft.streaming.AggView]] row (cnt, sum_dl — exact longs, so
-    * sum_dl/cnt is bit-identical to the scan path's avg and scores
-    * cannot drift between the two). The view is refreshed HERE, by the
-    * query that reads it: the refresh catches up every doclen version
-    * committed since the last read (one change feed + one delta
-    * aggregate per version; nothing when already current), and it is
-    * idempotent and safe beside a concurrent refresher
-    * ([[graft.streaming.AggView.refresh]] publishes each version
-    * atomically). Nothing here touches document text. */
+    * index reads, in three Spark jobs:
+    *
+    *  - one pass over the term-filtered postings (dim zone maps prune
+    *    files before IO) and the corpus-stats relation yields each query
+    *    term's df (exact — a term's df is its posting count), N and Σdl.
+    *    Partial counts are taken map-side and merged on the driver
+    *    (≤ one entry per query term plus three longs);
+    *  - the scoring query takes N, avgdl = Σdl / N and each term's df as
+    *    literals: one postings scan, one shuffle, the top-k — no
+    *    broadcast and no second postings scan. Σdl is an exact long, so
+    *    the quotient equals the scan path's double `avg` (Σdl < 2^53).
+    *
+    * The stats relation is the compact `doclen` table — or, with
+    * `statsFromView`, ONE maintained [[graft.streaming.AggView]] row
+    * (cnt, sum_dl — exact longs, so scores cannot drift between the two).
+    * The view is refreshed HERE, by the query that reads it: the refresh
+    * catches up every doclen version committed since the last read (one
+    * change feed + one delta aggregate per version; nothing when already
+    * current), and it is idempotent and safe beside a concurrent
+    * refresher ([[graft.streaming.AggView.refresh]] publishes each
+    * version atomically). A freshly seeded index has no version beyond
+    * `base` and so no view; its stats come from `doclen` itself.
+    *
+    * Both passes read the postings relation created here, which pins its
+    * snapshot, so an ingest landing between this call and the result's
+    * evaluation cannot mix snapshots. When no query term is in the
+    * index the result is an empty frame and no scoring job runs.
+    * Nothing here touches document text. */
   def bm25TopKIndexed(spark: SparkSession, indexRoot: String,
                       query: Seq[String], k: Int,
                       k1: Double = 1.2, b: Double = 0.75,
@@ -1169,33 +1184,73 @@ object CorpusPrep {
       .select(col("term").as("__t"), col("doc_id"),
         col("tf").cast("double").as("__tf"),
         col("dl").cast("double").as("__dl"))
+    // stats rows: (no term, docs counted, their dl sum, docs with a dl) —
+    // the doclen scan's count(1) and avg(dl) semantics, or the view's cnt
+    // and sum_dl
+    val doclen = s"$indexRoot/doclen"
+    val fromView = statsFromView && {
+      graft.streaming.AggView.refresh(spark, doclen, Seq("grp"), Seq("dl"))
+      // a freshly seeded index has no version beyond base, so no view
+      graft.streaming.AggView.viewVersions(doclen).nonEmpty
+    }
+    val noTerm = lit(null).cast("string")
     val stats =
-      if (statsFromView) {
-        graft.streaming.AggView.refresh(spark, s"$indexRoot/doclen",
-          Seq("grp"), Seq("dl"))
-        graft.streaming.AggView.read(spark, s"$indexRoot/doclen")
-          .select(col("cnt").cast("double").as("__n"),
-            (col("sum_dl").cast("double") / col("cnt").cast("double"))
-              .as("__avgdl"))
-      } else spark.read.format("graft").load(s"$indexRoot/doclen")
-        .agg(count(lit(1)).cast("double").as("__n"),
-          avg(col("dl").cast("double")).as("__avgdl"))
-    val df = post.groupBy(col("__t"))
-      .agg(count(lit(1)).cast("double").as("__df"))
+      if (fromView) graft.streaming.AggView.read(spark, doclen)
+        .select(noTerm, col("cnt").cast("long").as("__n"),
+          col("sum_dl").cast("long").as("__sdl"),
+          col("cnt").cast("long").as("__ndl"))
+      else spark.read.format("graft").load(doclen)
+        .select(noTerm, lit(1L).as("__n"), col("dl").cast("long").as("__sdl"),
+          lit(1L).as("__ndl"))
+    val Bm25Stats(dfs, n, sumDl, nDl) = bm25Stats(post, stats)
+    val avgdl =
+      if (nDl == 0) lit(null).cast("double") else lit(sumDl.toDouble / nDl)
+    val df = dfs.foldLeft(lit(null).cast("double")) { case (c, (t, d)) =>
+      when(col("__t") === t, lit(d.toDouble)).otherwise(c) }
     val idf = log(lit(1.0) +
-      (col("__n") - col("__df") + 0.5) / (col("__df") + 0.5))
-    post
-      .join(broadcast(df), "__t")
-      .crossJoin(broadcast(stats))
+      (lit(n.toDouble) - df + 0.5) / (df + 0.5))
+    val scored = post
       .select(col("doc_id"),
         (idf * (col("__tf") * lit(k1 + 1)) /
           (col("__tf") + lit(k1) * (lit(1 - b) +
-            lit(b) * col("__dl") / col("__avgdl")))).as("__s"))
+            lit(b) * col("__dl") / avgdl))).as("__s"))
       .groupBy(col("doc_id"))
       .agg(round(sum(col("__s")), 6).as("bm25"))
       .orderBy(col("bm25").desc, col("doc_id"))
       .limit(k)
+    // limit(0) plans as an empty local relation: no job
+    if (dfs.isEmpty) scored.limit(0) else scored
   }
+
+  /** Per-term posting counts plus the corpus stats (N, Σdl, docs with a
+    * dl) behind one [[bm25TopKIndexed]] probe. */
+  private final case class Bm25Stats(df: Map[String, Long], n: Long,
+                                     sumDl: Long, nDl: Long)
+
+  /** ONE job over `post` (term-filtered postings, `__t` first) and
+    * `stats` (rows of (null, n, Σdl, nDl), a null Σdl counting in n
+    * only): each partition folds its rows into a [[Bm25Stats]], the
+    * driver merges them. */
+  private def bm25Stats(post: DataFrame, stats: DataFrame): Bm25Stats =
+    post.select(col("__t"), lit(0L), lit(0L), lit(0L)).union(stats)
+      .queryExecution.toRdd.mapPartitions { it =>
+        val df = scala.collection.mutable.HashMap.empty[String, Long]
+        var n = 0L; var sumDl = 0L; var nDl = 0L
+        it.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val t = r.getUTF8String(0).toString
+            df(t) = df.getOrElse(t, 0L) + 1L
+          } else {
+            n += r.getLong(1)
+            if (!r.isNullAt(2)) { sumDl += r.getLong(2); nDl += r.getLong(3) }
+          }
+        }
+        Iterator(Bm25Stats(df.toMap, n, sumDl, nDl))
+      }.fold(Bm25Stats(Map.empty, 0L, 0L, 0L)) { (a, c) =>
+        Bm25Stats(c.df.foldLeft(a.df) { case (m, (t, x)) =>
+          m.updated(t, m.getOrElse(t, 0L) + x) },
+          a.n + c.n, a.sumDl + c.sumDl, a.nDl + c.nDl)
+      }
 
   // ---- salient terms (tf-idf) --------------------------------------------
 

@@ -29,29 +29,25 @@ object Similarity {
     if (native) call_function(graft.plans.CosineSimilarity.name, a, b)
     else cosine(a, b)
 
-  /** Final ranking stage shared by every search variant: per-query top-k
-    * of the scored candidates via the bounded-heap Aggregator
-    * ([[Udx.TopKAggregator]]) instead of a `row_number` window.
+  /** Final ranking stage shared by every search variant (brute force,
+    * LSH, IVF, PQ and their reranks): per-query top-k of the scored
+    * candidates via the native bounded top-k aggregate ([[Udx.topK]],
+    * [[graft.plans.TopKAggregate]]) instead of a `row_number` window.
     *
     * Why not a window: `Window.partitionBy(query_id)` shuffles EVERY scored
     * candidate into at most |queries| tasks — with 5 queries over a 100×
     * corpus that is 5 straggler tasks each holding a corpus-sized
-    * partition. The aggregator's partial (map-side) phase discards
+    * partition. The aggregate's partial (map-side) phase discards
     * non-contenders before the exchange, so the shuffle carries ≤ k rows
-    * per (map task, query) and the final task per query reduces
+    * per (map task, query) and the final task per query merges
     * ≤ k·numPartitions pre-sorted candidates — bounded regardless of
-    * corpus size. Ordering (score desc, id asc) matches the window
-    * formulation exactly, so results are identical. */
+    * corpus size. Ordering is (score desc, id asc). A null score (null or
+    * malformed embedding) never ranks; a NaN score ranks LAST (java
+    * Double order) — the old window's desc order put NaN first, which was
+    * never the wanted answer for a similarity search. */
   private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val top = Udx.topK(k)
     scored
-      // null scores (null/malformed embeddings) can never rank; the
-      // aggregator's Scored.score field is non-nullable, so they must be
-      // dropped here, matching the window formulation's nulls-last-beyond-k
-      // behavior. NaN scores rank LAST here (java Double order) — the old
-      // window's desc order put NaN first, which was never the wanted
-      // answer for a similarity search.
-      .where(col("cosine").isNotNull)
       .groupBy(col("query_id"))
       .agg(top(col("cosine"), col("id")).as("__top"))
       .select(col("query_id"), posexplode(col("__top")))

@@ -222,22 +222,18 @@ object CdcMergeSink {
     // full tuple or sibling rows sharing a leading value would
     // cross-match
     val keys = key +: MutableParquetTable.manifestMoreKeys(toDir)
-    // schema inference costs IO — manifest-embedded schema when present,
-    // and only when a side has no files of its own (the delta never does)
-    lazy val schema = MutableParquetTable.manifestSchema(fromDir)
-      .getOrElse(spark.read.parquet(fromDir).schema)
-    // renamed columns: files on BOTH sides carry the same PHYSICAL names
-    // (the rename is metadata-only), so the whole diff runs under the
-    // CURRENT (to-side) logical names — the dropColumn precedent: the
-    // feed follows the present table shape
+    // both sides read through ONE path under the to-side LOGICAL schema:
+    // files on either side carry the same PHYSICAL names (a rename is
+    // metadata-only), columns the to side dropped read clipped, columns
+    // it added read null, widened ones upcast — the feed follows the
+    // present table shape. Only a manifest without a schema pays an
+    // inference job.
+    lazy val logicalSchema = MutableParquetTable.manifestSchema(toDir)
+      .getOrElse(spark.read.parquet(toDir).schema)
     val renames = MutableParquetTable.manifestRenames(toDir)
-    lazy val logicalSchema =
-      if (renames.isEmpty) schema
-      else MutableParquetTable.manifestSchema(toDir).getOrElse(schema)
     def readPaths(paths: Seq[String]): DataFrame =
       if (paths.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], logicalSchema)
-      else if (renames.isEmpty) spark.read.parquet(paths: _*)
       else MutableParquetTable.readFilesLogical(spark, paths, logicalSchema,
         renames)
     if (fromDir == toDir)

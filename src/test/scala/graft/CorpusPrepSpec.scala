@@ -886,6 +886,81 @@ class CorpusPrepSpec extends SparkSpec with TableDrivenPropertyChecks {
     assert(viewDirs.forall(d => d.matches("v\\d+") || d == "_spec"), viewDirs)
   }
 
+  private val bm25Corpus = Seq(
+    1L -> "data data data merge other words here",
+    2L -> "merge window data something else entirely goes on",
+    3L -> "window window merge data data then more",
+    4L -> "nothing relevant at all in this one",
+    5L -> "data merge window data window tail",
+    6L -> "",
+    7L -> "window data late arrival")
+
+  private def bm25Rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  test("bm25 stats view on a seeded index with no ingest equals the doclen scan") {
+    val corpus = docs(bm25Corpus: _*)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-bm25seedview").toString + "/idx"
+    CorpusPrep.bm25SeedIndex(root, corpus, "text", "doc_id")
+    val q = Seq("data", "merge", "window")
+    val scan = bm25Rows(CorpusPrep.bm25TopKIndexed(spark, root, q, 10))
+    assert(scan.nonEmpty)
+    assert(scan === bm25Rows(CorpusPrep.bm25TopK(corpus, "text", "doc_id", q, 10)))
+    assert(bm25Rows(CorpusPrep.bm25TopKIndexed(spark, root, q, 10,
+      statsFromView = true)) === scan)
+  }
+
+  test("bm25TopKIndexed: three jobs per probe; absent, duplicate and mixed-case terms score exactly") {
+    val corpus = docs(bm25Corpus: _*)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-bm25jobs").toString + "/idx"
+    CorpusPrep.bm25SeedIndex(root,
+      corpus.where(col("doc_id") <= 3), "text", "doc_id")
+    CorpusPrep.bm25IndexIngest(root,
+      corpus.where(col("doc_id") > 3), "text", "doc_id")
+    val q = Seq("data", "merge", "window")
+    val (got, jobs) = JobLog.recording(spark)(
+      bm25Rows(CorpusPrep.bm25TopKIndexed(spark, root, q, 10)))
+    assert(got === bm25Rows(CorpusPrep.bm25TopK(corpus, "text", "doc_id", q, 10)))
+    assert(jobs.size <= 3, s"${jobs.size} jobs: ${jobs.map(_.names)}")
+    // no query term in the index: the stats pass alone, an empty answer
+    val (none, noneJobs) = JobLog.recording(spark)(
+      CorpusPrep.bm25TopKIndexed(spark, root, Seq("absentword"), 10).collect())
+    assert(none.isEmpty)
+    assert(noneJobs.size <= 1, s"${noneJobs.size} jobs: ${noneJobs.map(_.names)}")
+    for (terms <- Seq(Seq("absentword"), Seq("data", "absentword"),
+                      Seq("Data", "data", "WINDOW", "window"), Seq("late"));
+         fromView <- Seq(false, true))
+      assert(bm25Rows(CorpusPrep.bm25TopKIndexed(spark, root, terms, 10,
+          statsFromView = fromView)) ===
+        bm25Rows(CorpusPrep.bm25TopK(corpus, "text", "doc_id", terms, 10)),
+        s"terms $terms, statsFromView = $fromView")
+  }
+
+  test("bm25TopKIndexed: an ingest between the call and collect does not mix snapshots") {
+    val corpus = docs(bm25Corpus: _*)
+    val early = corpus.where(col("doc_id") <= 4)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-bm25pin").toString + "/idx"
+    CorpusPrep.bm25SeedIndex(root, corpus.where(col("doc_id") <= 2),
+      "text", "doc_id")
+    CorpusPrep.bm25IndexIngest(root,
+      corpus.where(col("doc_id") > 2 && col("doc_id") <= 4), "text", "doc_id")
+    val q = Seq("data", "window")
+    val want = bm25Rows(CorpusPrep.bm25TopK(early, "text", "doc_id", q, 10))
+    val pending = Seq(false, true).map(v =>
+      v -> CorpusPrep.bm25TopKIndexed(spark, root, q, 10, statsFromView = v))
+    // the later docs change every term's df, N and avgdl
+    CorpusPrep.bm25IndexIngest(root,
+      corpus.where(col("doc_id") > 4), "text", "doc_id")
+    pending.foreach { case (v, df) =>
+      assert(bm25Rows(df) === want, s"statsFromView = $v")
+    }
+    assert(bm25Rows(CorpusPrep.bm25TopKIndexed(spark, root, q, 10)) ===
+      bm25Rows(CorpusPrep.bm25TopK(corpus, "text", "doc_id", q, 10)))
+  }
+
   test("bm25 index: seed + ingest + indexed probe equals the batch recompute") {
     val corpus = docs(
       1L -> "data data data merge other words here",

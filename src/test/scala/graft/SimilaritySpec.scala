@@ -33,8 +33,8 @@ class SimilaritySpec extends SparkSpec {
     val df = Seq((1L, Option(v)), (2L, Option(w)), (3L, Option.empty[Array[Float]]))
       .toDF("vec_id", "embedding")
     // a corpus row with a null embedding scores null — it must silently
-    // not rank (the old window put nulls last; the aggregator's score
-    // field is non-nullable and would otherwise throw)
+    // not rank (the old window put nulls last; the top-k aggregate skips
+    // null scores)
     val got = Similarity.bruteForceTopK(df, df.where(col("vec_id") === 1),
       "embedding", "vec_id", 5).collect()
     assert(got.map(_.getLong(1)).toSet === Set(2L))
@@ -111,6 +111,55 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).sorted.toSeq
     val b = ref.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).sorted.toSeq
     assert(a === b)
+  }
+
+  test("native top-k aggregate == a reference sort under the (−score, id) order") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // the order TopKAggregate must reproduce exactly: ascending by
+    // (−score under java.lang.Double.compare, id)
+    val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+    def reference(rows: Seq[(Option[Double], Option[Long])], k: Int) =
+      rows.collect { case (Some(s), Some(i)) => (s, i) }
+        .sortBy { case (s, i) => (-s, i) }(ord).take(k)
+    // ties, NaN, ±0.0, ±Infinity, null scores and ids; group 1 exceeds k,
+    // group 2 is smaller than k, group 3 ranks nothing (nulls only)
+    val rnd = new scala.util.Random(7)
+    val specials = Seq(Double.NaN, 0.0, -0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity, 0.5, 0.5, -1.0)
+    val g1 = (0 until 200).map { j =>
+      val s = if (j % 3 == 0) Some(specials(rnd.nextInt(specials.size)))
+        else if (j % 17 == 0) None
+        else Some(rnd.nextInt(20) / 4.0)
+      val i = if (j % 23 == 0) None else Some(rnd.nextInt(60).toLong)
+      (1, s, i)
+    }
+    val g2 = Seq((2, Some(0.0), Some(5L)), (2, Some(-0.0), Some(4L)),
+      (2, Some(Double.NaN), Some(1L)), (2, None, Some(9L)))
+    val g3 = Seq((3, None, Some(1L)), (3, Some(1.0), None))
+    val all = g1 ++ g2 ++ g3
+    val schema = StructType(Seq(StructField("g", IntegerType),
+      StructField("score", DoubleType), StructField("id", LongType)))
+    val input = spark.createDataFrame(spark.sparkContext.parallelize(
+      all.map { case (g, s, i) =>
+        Row(g, s.map(Double.box).orNull, i.map(Long.box).orNull) }), schema)
+    def bits(xs: Seq[(Double, Long)]) =
+      xs.map { case (s, i) => (java.lang.Double.doubleToLongBits(s), i) }
+    for (k <- Seq(1, 3, 10, 250); parts <- Seq(1, 7)) {
+      val top = graft.functions.Udx.topK(k)
+      val got = input.repartition(parts)
+        .groupBy(col("g")).agg(top(col("score"), col("id")).as("top"))
+        .collect().map(r => r.getInt(0) -> r.getSeq[Row](1)
+          .map(e => (e.getDouble(0), e.getLong(1)))).toMap
+      for (g <- Seq(1, 2, 3)) {
+        val want = reference(all.filter(_._1 == g).map(x => (x._2, x._3)), k)
+        assert(bits(got(g)) === bits(want), s"group $g, k=$k, $parts partitions")
+      }
+    }
+    // an empty input still yields one (empty) global top-k
+    val empty = input.where(lit(false))
+      .agg(graft.functions.Udx.topK(3)(col("score"), col("id"))).collect()
+    assert(empty.map(_.getSeq[Row](0).size).toSeq === Seq(0))
   }
 
   test("IVF top-k recall with 4/16 probes beats single-bucket LSH coverage") {

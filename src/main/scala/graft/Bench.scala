@@ -34,6 +34,25 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Best-of-two seconds of one battery lane; a lane that throws
+    * records -1, which the result line lists under `failed`. */
+  private[graft] def timeLane(run: => Unit): Double =
+    try (1 to 2).map(_ => time(run)).min catch { case _: Throwable => -1.0 }
+
+  /** The battery's final JSON line. The headline total sums the query
+    * battery (`q*` lanes) and `failed` names the lanes it leaves out;
+    * experiment entries (ingest, merge scaling, cosine comparison,
+    * rowgroup sweep incl. _mb sizes) are reported individually in
+    * `queries` but not summed. */
+  private[graft] def resultLine(results: collection.Map[String, Double],
+                                sfDir: String): String = {
+    val (ok, failed) = results.filter(_._1.startsWith("q")).partition(_._2 >= 0)
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val fs = failed.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":${ok.values.sum},"unit":"sec","queries":$qs,""" +
+      s""""failed":$fs,"sf":"$sfDir"}"""
+  }
+
   private[graft] def runToNoop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -122,10 +141,7 @@ object Bench {
     var laneIdx = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try runToNoop(fn(spark, warmDir)) catch { case _: Throwable => }
-      val t = try {
-        (1 to 2).map(_ => time(runToNoop(fn(spark, dataDir)))).min
-      } catch { case _: Throwable => -1.0 }
-      results(name) = t
+      results(name) = timeLane(runToNoop(fn(spark, dataDir)))
       // lane isolation: clear any cached plans a lane left behind, and
       // periodically force a GC so the ContextCleaner reclaims
       // superseded localCheckpoint blocks — without this, block-manager
@@ -512,12 +528,7 @@ object Bench {
 
     runTombstoneAndRest(spark, sfDir, workDir, results)
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // headline metric = the query battery; experiment entries (ingest,
-    // merge scaling, cosine comparison, rowgroup sweep incl. _mb sizes)
-    // are reported individually in `queries` but not summed
-    val total = results.collect { case (k, v) if k.startsWith("q") && v >= 0 => v }.sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val json = resultLine(results, sfDir)
     // stdout tail capture can truncate the (long) single line; persist the
     // full artifact to a file as well so timings are never lost. Default
     // lands in the launch CWD (the repo root under the driver) so the

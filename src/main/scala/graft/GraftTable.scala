@@ -739,8 +739,8 @@ final class GraftTable private (val spark: SparkSession, val root: String,
   /** CONTINUOUS replication — the streaming twin of [[replicateTo]]:
     * the persisted change-feed stream (each [[commitWithFeed]] becomes
     * a micro-batch) projected to mutations and applied to the replica
-    * through the exactly-once CDC merge sink (replayed epochs detect
-    * their committed snapshot and no-op, so restarts never double-apply).
+    * through the exactly-once CDC merge sink (a replayed micro-batch
+    * publishes nothing, so restarts never double-apply).
     * The source must commit with [[commitWithFeed]]; seed the replica
     * root from the source's CURRENT base first (shallow [[clone]] or a
     * one-shot [[replicateTo]]) — persisted feeds begin at the first
@@ -936,8 +936,8 @@ final class GraftTable private (val spark: SparkSession, val root: String,
   /** Latest committed view state. */
   def readAggView(): DataFrame = AggView.read(spark, root)
 
-  /** Attach a mutation stream: one CoW snapshot per micro-batch
-    * ([[CdcMergeSink.start]] semantics — replay-idempotent, crash-safe).
+  /** Attach a mutation stream: each micro-batch commits the table's next
+    * version ([[CdcMergeSink.start]] semantics — exactly once, crash-safe).
     * With `aggView` set, the materialized view catches up after every
     * batch commit — a continuously-maintained dashboard aggregate whose
     * per-batch cost is the batch's delta, not the table. */

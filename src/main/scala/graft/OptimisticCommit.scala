@@ -60,8 +60,11 @@ final case class ConcurrentCommit(version: Long, attempts: Int,
   * There is no state a crashed or failed writer can leave that blocks
   * other writers or corrupts a reader — the slot-claim IS the commit.
   * An uncommitted `v<n>` on the slot was not made by this protocol
-  * (a crashed direct `applyBatch` target, foreign debris): every claim
-  * refuses it with a [[BlockedSlotException]] and leaves it untouched.
+  * (foreign debris): every claim refuses it with a
+  * [[BlockedSlotException]] and leaves it untouched.
+  *
+  * Both streaming sinks commit with a `(queryId, epoch)` txn marker, and
+  * [[publish]] lands each epoch exactly once.
   *
   * Serialization semantics: commits linearize in version order; each
   * version's snapshot is its operation applied to the PREDECESSOR
@@ -75,9 +78,9 @@ final case class ConcurrentCommit(version: Long, attempts: Int,
 object OptimisticCommit {
 
   /** The next version slot is occupied by an UNCOMMITTED directory this
-    * protocol did not produce (a crashed direct `applyBatch` target or
-    * foreign debris) — publishing over it could destroy another writer's
-    * in-progress work, so the claim refuses instead. */
+    * protocol did not produce (foreign debris) — publishing over it could
+    * destroy another writer's in-progress work, so the claim refuses
+    * instead. */
   final class BlockedSlotException(msg: String) extends RuntimeException(msg)
 
   /** Publish attempts before a writer gives up on a contended chain. */
@@ -93,8 +96,8 @@ object OptimisticCommit {
   private case object Restage extends OnLost[Nothing]
   /** Publish the same staged dir at the new head's successor slot. */
   private final case class Reaim[A](result: A) extends OnLost[A]
-  /** Give up without publishing (the operation already landed, or no
-    * longer applies to the new head). */
+  /** Give up without publishing (the operation no longer applies to
+    * the new head). */
   private case object Stop extends OnLost[Nothing]
 
   private def restage[A](at: Attempt, a: A, head: Long): OnLost[A] = Restage
@@ -117,17 +120,28 @@ object OptimisticCommit {
     * the staged snapshot is worth against the new head. Every staged dir
     * that does not publish is deleted on every exit, exceptions
     * included — except `callerDir`, which its owner stages into and
-    * cleans up. */
+    * cleans up. `attempts` counts renames tried.
+    *
+    * A `txnMarker` (streaming writer app id, epoch) makes the claim
+    * exactly-once: an epoch the table already holds publishes nothing —
+    * checked before `stage` runs (a replay costs no Spark job) and again
+    * on every lost race, where a zombie twin of the writer may have just
+    * published it (the analog of Delta's SetTransaction conflict check) —
+    * and the marker is stamped into the staged manifest before every
+    * rename, so it is atomic with the version it marks. */
   private def publish[A](tableRoot: String, what: String,
-                         callerDir: Option[String] = None)(
+                         callerDir: Option[String] = None,
+                         txnMarker: Option[(String, Long)] = None)(
       stage: Attempt => Option[A])(
       lost: (Attempt, A, Long) => OnLost[A]): Published[A] = {
+    def landed = txnMarker.exists { case (app, epoch) =>
+      CdcMergeSink.lastTxnEpoch(tableRoot, app).exists(_ >= epoch) }
+    if (landed) return Published(head(tableRoot), None, 0)
     var attempts = 0
     var staged: Option[(Attempt, A)] = None
     var unpublished: Option[String] = None
     try {
       while (attempts < MaxAttempts) {
-        attempts += 1
         val (at, result) = staged match {
           case Some(s) => s
           case None =>
@@ -141,6 +155,9 @@ object OptimisticCommit {
               case None => return Published(base, None, attempts)
             }
         }
+        txnMarker.foreach { case (app, epoch) =>
+          MutableParquetTable.annotateTxn(at.dir, app, epoch) }
+        attempts += 1
         val target = s"$tableRoot/v${at.base + 1}"
         if (tryPublish(at.dir, at.baseDir, target)) {
           unpublished = None
@@ -152,9 +169,10 @@ object OptimisticCommit {
         val now = head(tableRoot)
         if (now <= at.base)
           throw new BlockedSlotException(
-            s"$target exists but is not a committed snapshot — a crashed " +
-              "direct applyBatch target or foreign directory is blocking " +
-              "the version chain; remove it (vacuum) and retry")
+            s"$target exists but is not a committed snapshot — a foreign " +
+              "directory is blocking the version chain; remove it " +
+              "(vacuum) and retry")
+        if (landed) return Published(now, None, attempts)
         lost(at, result, now) match {
           case Restage =>
             unpublished.foreach(deleteQuietly)
@@ -170,28 +188,15 @@ object OptimisticCommit {
     } finally unpublished.foreach(deleteQuietly)
   }
 
-  /** True when a zombie twin of this streaming writer already published
-    * its (app, epoch): exactly-once under WRITER RACES, not just replays.
-    * The pre-commit lastTxnEpoch check is check-then-act, so it is re-run
-    * atomically with every lost race (the analog of Delta's
-    * SetTransaction conflict check) — publishing a second marker past
-    * the winner would apply the epoch twice. */
-  private def epochLanded(tableRoot: String,
-                          txnMarker: Option[(String, Long)]): Boolean =
-    txnMarker.exists { case (app, epoch) =>
-      CdcMergeSink.lastTxnEpoch(tableRoot, app).exists(_ >= epoch) }
-
   /** Commit `batch` as the table's next version, safe under concurrent
     * writers. Returns the landed version (or the current latest for an
-    * empty batch) plus attempt telemetry. `testHookAfterStage` runs
-    * between staging (or a rebase) and publish — a deterministic seam
-    * for conflict tests; production callers leave the default.
-    * `txnMarker` (writer app id, epoch) is stamped into the committed
-    * manifest so a streaming sink's replayed epoch is detectable
-    * ([[graft.streaming.CdcMergeSink.lastTxnEpoch]]) — the marker
-    * survives rebase (re-stamped before every publish attempt). A lost
-    * race rebases metadata-only when it can ([[tryRebase]]), else
-    * re-merges against the new head. */
+    * empty batch or an already-landed epoch) plus attempt telemetry.
+    * `testHookAfterStage` runs between staging (or a rebase) and publish
+    * — a deterministic seam for conflict tests; production callers leave
+    * the default. `txnMarker` (writer app id, epoch) makes the commit
+    * exactly-once per epoch ([[publish]]). A lost race rebases
+    * metadata-only when it can ([[tryRebase]]), else re-merges against
+    * the new head. */
   def commit(spark: SparkSession, tableRoot: String, key: String,
              batch: DataFrame, opCol: String = "op",
              seqCol: Option[String] = None,
@@ -201,28 +206,26 @@ object OptimisticCommit {
              txnMarker: Option[(String, Long)] = None,
              feedPending: Boolean = false): ConcurrentCommit = {
     val collapsed = CdcMergeSink.collapse(batch, key, seqCol)
-    if (collapsed.isEmpty)
-      return ConcurrentCommit(head(tableRoot), 0, 0, None)
-    // stamp before EVERY publish attempt: a rebase rewrites the staged
-    // manifest and would otherwise drop the markers
-    def ready(dir: String, mr: MergeResult): MergeResult = {
-      testHookAfterStage()
-      txnMarker.foreach { case (a, e) =>
-        MutableParquetTable.annotateTxn(dir, a, e) }
-      if (feedPending) MutableParquetTable.annotateFeedPending(dir)
-      mr
-    }
+    lazy val empty = collapsed.isEmpty
+    def hooked(mr: MergeResult): MergeResult = { testHookAfterStage(); mr }
     var rebases = 0
-    val p = publish[MergeResult](tableRoot, "commit") { at =>
-      // the base manifest is read once and handed down: the handle, the
-      // merge and its manifest writer all use this value
-      val base = Manifest.read(at.baseDir)
-      Some(ready(at.dir, MutableParquetTable.opened(spark, at.baseDir, key,
-        passthrough, base).mergeFrom(base, collapsed, opCol, Some(at.dir))))
+    val p = publish[MergeResult](tableRoot, "commit",
+        txnMarker = txnMarker) { at =>
+      if (empty) None
+      else {
+        // the base manifest is read once and handed down: the handle, the
+        // merge and its manifest writer all use this value
+        val base = Manifest.read(at.baseDir)
+        val mr = MutableParquetTable.opened(spark, at.baseDir, key,
+          passthrough, base).mergeFrom(base, collapsed, opCol, Some(at.dir))
+        // a rebase rebuilds the staged manifest from itself, so the flag
+        // stamped once here survives every publish attempt
+        if (feedPending) MutableParquetTable.annotateFeedPending(at.dir)
+        Some(hooked(mr))
+      }
     } { (at, mr, now) =>
-      if (epochLanded(tableRoot, txnMarker)) Stop
-      else tryRebase(tableRoot, at.dir, mr, now, key, passthrough) match {
-        case Some(rebased) => rebases += 1; Reaim(ready(at.dir, rebased))
+      tryRebase(tableRoot, at.dir, mr, now, key, passthrough) match {
+        case Some(rebased) => rebases += 1; Reaim(hooked(rebased))
         case None => Restage
       }
     }
@@ -282,7 +285,8 @@ object OptimisticCommit {
     * or re-merge: the same staged dir is re-aimed at the new head's
     * successor slot ([[reaimed]]: a racing CHECK change is enforced and
     * carried, a racing DEFAULT/GENERATED change fails the replace). An
-    * empty batch commits an empty snapshot (truncate).
+    * empty batch commits an empty snapshot (truncate). `txnMarker` makes
+    * it exactly-once per epoch like [[commit]].
     *
     * `numFiles` 0 sizes the output from the batch plan's statistics at
     * ~128 MB per file (exact when the batch reads staged parquet, as the
@@ -293,7 +297,7 @@ object OptimisticCommit {
               testHookAfterStage: () => Unit = () => ()): Long = {
     val context = s"INSERT OVERWRITE of $tableRoot"
     var emptyBatch = false
-    publish[Contract](tableRoot, "replace") { at =>
+    publish[Contract](tableRoot, "replace", txnMarker = txnMarker) { at =>
       val head = Manifest.read(at.baseDir).getOrElse(Manifest(key))
       val moreKeys = head.moreKeys
       // CHECK constraints and DEFAULT/GENERATED column contracts survive
@@ -333,18 +337,10 @@ object OptimisticCommit {
           // batch schema — no pre-drop file survives, blocklist clears
           .commitManifest(at.dir, Some(batchC.schema), physicalRewrite = true)
       }
-      // re-aims only re-stamp committedAtMs, never the txn fields, so one
-      // marker stamp up front is durable across publish attempts
-      txnMarker.foreach { case (a, e) =>
-        MutableParquetTable.annotateTxn(at.dir, a, e) }
       testHookAfterStage()
       Some(contractOf(Some(head)))
     } { (at, c, now) =>
-      // same writer-race guard as [[commit]]: a zombie twin of this
-      // streaming query may have published this epoch's replace while
-      // we were staged — re-applying it would double the epoch
-      if (epochLanded(tableRoot, txnMarker)) Stop
-      else Reaim(reaimed(snapshotDir(tableRoot, now), at.dir, c,
+      Reaim(reaimed(snapshotDir(tableRoot, now), at.dir, c,
           if (emptyBatch) None else Some(spark.read.parquet(at.dir)), context)
         .getOrElse(throw new IllegalStateException(
           s"concurrent DEFAULT/GENERATED column change on $tableRoot " +

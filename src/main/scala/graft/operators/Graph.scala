@@ -346,6 +346,14 @@ object Graph {
     e.select(col("a").as("node_id")).union(e.select(col("b"))).distinct()
   }
 
+  /** Triangle Bloom size for `edges` items: Spark's optimal bit count
+    * for a 3% false-positive rate, clamped at 2^27 bits (a 16 MB plan
+    * literal, reached at ~18M edges) — past it the false-positive rate
+    * degrades, and the exact semi-join after the filter keeps counts. */
+  private[graft] def triangleBloomBits(edges: Long): Long =
+    math.min((-edges * math.log(0.03) / (math.log(2) * math.log(2))).toLong,
+      1L << 27)
+
   /** Per-node triangle counts by DEGREE-ORDERED edge orientation (the
     * node-iterator++ / Chiba–Nishizeki discipline): undirected edges
     * orient from the (degree, id)-smaller endpoint, every triangle
@@ -396,9 +404,9 @@ object Graph {
       // the exact semi-join below, never a wrong count. Wedges satisfy
       // __u < __v, und satisfies a < b, so the pair keys align with no
       // least/greatest re-derivation.
-      val nUnd = und.count()
+      val nUnd = math.max(1L, und.count())
       val bloom = und.stat.bloomFilter(
-        xxhash64(col("a"), col("b")), math.max(1L, nUnd), 0.03)
+        xxhash64(col("a"), col("b")), nUnd, triangleBloomBits(nUnd))
       val bloomBytes = {
         val bos = new java.io.ByteArrayOutputStream()
         bloom.writeTo(bos)

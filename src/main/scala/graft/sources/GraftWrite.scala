@@ -15,7 +15,6 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.streaming.CdcMergeSink
 
 /** DataSource V2 write path for graft tables: `INSERT INTO` /
   * `df.write.format("graft").mode("append").save(root)` append as ONE
@@ -220,12 +219,11 @@ final class GraftBatchWrite(root: String, key: String, schema: StructType,
   * `commit(epoch)` applies them as ONE CoW merge commit through
   * [[graft.OptimisticCommit]], stamping the committed manifest with a
   * `(queryId, epoch)` TXN MARKER. Exactly-once falls out of the marker:
-  * after a failure the engine replays the epoch, `commit` finds
-  * [[CdcMergeSink.lastTxnEpoch]] >= epoch and skips — the table never
-  * sees a batch twice, without any sink-side log beyond the manifests
-  * the table already writes. The marker survives publish races (it is
-  * re-stamped after a rebase) and is atomic with the commit itself — the
-  * manifest IS both.
+  * after a failure the engine replays the epoch, and the commit finds
+  * it already landed and publishes nothing — the table never sees a
+  * batch twice, without any sink-side log beyond the manifests the table
+  * already writes. The marker is stamped before every publish attempt
+  * and is atomic with the commit itself — the manifest IS both.
   *
   * Stream shapes, chosen by the write schema + options:
   *  - plain rows → every row upserts on the table key (Append mode, and
@@ -258,9 +256,6 @@ final class GraftStreamingWrite(root: String, key: String,
                       messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     try {
-      // replayed epoch after a failure: already committed, skip
-      if (CdcMergeSink.lastTxnEpoch(root, queryId).exists(_ >= epochId))
-        return
       val staged = messages.collect { case GraftFileCommitted(p) => p }
       val marker = Some((queryId, epochId))
       if (replace) {

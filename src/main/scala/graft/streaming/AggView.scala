@@ -12,10 +12,10 @@ import graft.operators.IncrementalAgg
   * by applying that step's change feed to the previous view
   * ([[IncrementalAgg.applyDelta]]) — never by rescanning the table.
   *
-  * Layout: `tableRoot/aggview/v<batchId>` mirrors the table's version dirs;
+  * Layout: `tableRoot/aggview/v<n>` mirrors the table's version dirs;
   * a view version is committed by Spark's `_SUCCESS` marker. Each version
   * is written into a hidden stage dir under `aggview/` and published by
-  * one atomic rename onto `v<batchId>`, so a `v<batchId>` is never seen
+  * one atomic rename onto `v<n>`, so a `v<n>` is never seen
   * half-written. Refresh is idempotent, crash-safe and safe beside a
   * concurrent refresher: an existing committed view version is never
   * rewritten (a refresher that loses the rename adopts the winner's), and
@@ -158,7 +158,9 @@ object AggView {
     checkOrWriteSpec(tableRoot,
       specString(groupCols, sumCols, extremaCols, hllCol, quantileCol))
     val tableVs = CdcMergeSink.versions(tableRoot)
-    var prevAgg: Option[DataFrame] = None
+    // the previous step's view dir, opened only when a step builds on it:
+    // each open is a footer-inference job, and a current view needs none
+    var prevDir: Option[String] = None
     var prevV: Long = -1L // sentinel: resolves to the base snapshot
     var built = 0
     def full(df: DataFrame) = {
@@ -181,14 +183,13 @@ object AggView {
     }
     tableVs.foreach { v =>
       val dir = viewDir(tableRoot, v)
-      if (committed(dir)) {
-        prevAgg = Some(spark.read.parquet(dir)); prevV = v
-      } else {
+      if (!committed(dir)) {
         // base feeds the core delta AND each sketch branch's prev state
         // (up to 3 references; on the first refresh it is a full
         // aggregation) — group-sized, materialize once
-        val base = graft.operators.Materialize.ck(prevAgg.getOrElse(
-          full(CdcMergeSink.readAsOf(spark, tableRoot, prevV))))
+        val base = graft.operators.Materialize.ck(prevDir
+          .map(spark.read.parquet(_))
+          .getOrElse(full(CdcMergeSink.readAsOf(spark, tableRoot, prevV))))
         // ONE materialization of the delta-sized diff serves every
         // maintenance branch (core + hll + quantile each reference the
         // feed several times; an unmaterialized feed would re-run the
@@ -226,8 +227,8 @@ object AggView {
         }
         if (publish(Paths.get(dir))(next.coalesce(1).write.parquet(_)))
           built += 1
-        prevAgg = Some(spark.read.parquet(dir)); prevV = v
       }
+      prevDir = Some(dir); prevV = v
     }
     built
   }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -13,21 +14,23 @@ import graft.sources.{Manifest, MutableParquetTable}
   * merged into a key-sorted Parquet table through the copy-on-write path.
   *
   * This closes the loop on the reference's core scenario: its README
-  * drives a *stream of updates* into a sorted Parquet file
-  * (/root/reference/README.md:36-48) with the caller doing the batching.
+  * drives a *stream of updates* into a sorted Parquet file (its
+  * README.md:36-48) with the caller doing the batching.
   * Here Structured Streaming does the batching — each micro-batch becomes
-  * one [[MutableParquetTable.merge]], producing a manifest-committed
-  * snapshot per batch:
+  * one [[graft.OptimisticCommit.commit]], the table's next version:
   *
-  * {{{ tableRoot/base        — initial snapshot (writeSorted)
-  *     tableRoot/v<batchId>  — snapshot after micro-batch <batchId> }}}
+  * {{{ tableRoot/base  — initial snapshot (writeSorted)
+  *     tableRoot/v<n>  — snapshot after the n-th commit of any writer }}}
   *
-  * Exactly-once without a transaction log: foreachBatch may REPLAY a
-  * batch after a failure, but the snapshot for batch N is committed
-  * atomically (manifest last) at a deterministic directory derived from
-  * the batch id — a replay of a committed batch is a no-op, and a
-  * half-written v<N> (no manifest) is cleaned and rebuilt. Readers only
-  * ever see committed snapshots via [[latestSnapshot]].
+  * Exactly-once without a sink log: foreachBatch may REPLAY a batch
+  * after a failure, but every micro-batch commits with the `(queryId,
+  * batchId)` TXN MARKER the V2 sink stamps too — the query's persistent
+  * id, so a restart from the same checkpoint keeps it — and a commit
+  * whose epoch the table already holds publishes nothing. A batch whose
+  * writer crashed before publish left only an invisible `.tx-` dir, so
+  * its replay lands. Other writers may commit between micro-batches; the
+  * stream's versions interleave with theirs. Readers only ever see
+  * committed snapshots via [[latestSnapshot]].
   *
   * Scale shape: state lives entirely in the table layout (no streaming
   * state store growth); each micro-batch pays one footer-routed CoW merge
@@ -80,16 +83,16 @@ object CdcMergeSink {
 
   /** Highest epoch the streaming writer `app` has committed to this
     * table, from the txn markers its commits stamp into their manifests
-    * — the exactly-once check of the V2 streaming sink
-    * ([[graft.sources.GraftStreamingWrite]]): a restarted query
-    * re-offering epoch <= this has already committed and must skip.
+    * — the exactly-once check every marked commit makes
+    * ([[graft.OptimisticCommit]]): an epoch <= this has already
+    * committed and must skip.
     *
     * Epochs are monotonic per app and commits linearize in version
     * order, so the NEWEST version carrying the app's marker holds its
     * maximum epoch — the scan walks newest-first and stops at the first
     * hit (normally the head version; other writers' interleaved commits
     * only deepen it by their count). Worst case — this app never wrote —
-    * is one manifest read per version, paid once per sink restart.
+    * is one manifest read per version, paid by a query's first epoch.
     *
     * Markers dropped by [[vacuum]] survive in the `_txns.json` sidecar
     * (per-app max epoch, harvested before decommit) — without it, a sink
@@ -424,37 +427,13 @@ object CdcMergeSink {
           .drop("__rn", seq)
     }
 
-  /** Apply one micro-batch. Idempotent in `batchId`: a committed
-    * v<batchId> short-circuits (failure replay), an uncommitted one is
-    * torn down and rebuilt. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, tableRoot: String,
-                 key: String, opCol: String = "op",
-                 seqCol: Option[String] = None, batchId: Long,
-                 passthrough: MutableParquetTable.Passthrough =
-                   MutableParquetTable.Link): Unit = {
-    val target = s"$tableRoot/v$batchId"
-    if (MutableParquetTable.isCommitted(target)) return
-    if (Files.exists(Paths.get(target))) {
-      // crashed half-apply: no manifest, so nothing ever read it — rebuild
-      deleteRecursively(Paths.get(target))
-    }
-    val collapsed = collapse(batch, key, seqCol)
-    if (collapsed.isEmpty) return // empty batch: keep the current snapshot
-    val snap = latestSnapshot(tableRoot)
-    // composite identity is a property of the TABLE, recorded in its
-    // manifest — discovered here so every writer (SQL INSERT, DML rule,
-    // streaming sink, facade commits) merges on the full tuple without
-    // each call site threading it through
-    val t = MutableParquetTable(spark, snap, key, passthrough,
-      MutableParquetTable.manifestMoreKeys(snap))
-    t.merge(collapsed, opCol, Some(target))
-  }
-
   /** Attach the sink to a streaming mutation frame and start it. The
     * frame's schema must be the base table's schema plus `opCol`
-    * ('upsert' | 'delete') and optionally `seqCol`. `afterBatch` runs on
-    * the driver after each batch's snapshot commit (or no-op replay) —
-    * the hook continuous view maintenance plugs into. */
+    * ('upsert' | 'delete') and optionally `seqCol`. Each micro-batch
+    * commits as the table's next version, exactly once per (query,
+    * batch id). `afterBatch` runs on the driver after each batch's commit
+    * (or no-op replay) — the hook continuous view maintenance plugs
+    * into. */
   def start(mutations: DataFrame, tableRoot: String, key: String,
             opCol: String = "op", seqCol: Option[String] = None,
             checkpointDir: Option[String] = None,
@@ -469,7 +448,11 @@ object CdcMergeSink {
       .queryName(queryName)
       .option("checkpointLocation", cp)
       .foreachBatch { (b: Dataset[Row], id: Long) =>
-        applyBatch(spark, b, tableRoot, key, opCol, seqCol, id, passthrough)
+        // set on the micro-batch thread; persistent across restarts
+        val queryId = spark.sparkContext.getLocalProperty(
+          StreamExecution.QUERY_ID_KEY)
+        graft.OptimisticCommit.commit(spark, tableRoot, key, b, opCol, seqCol,
+          passthrough, txnMarker = Some((queryId, id)))
         afterBatch(id)
       }
       .start()

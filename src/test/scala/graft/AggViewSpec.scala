@@ -17,14 +17,12 @@ class AggViewSpec extends SparkSpec {
       (col("id") % 7).cast("double").as("v"))
     ParquetTable.writeSorted(base, s"$root/base", "id", 4)
 
-    CdcMergeSink.applyBatch(spark,
+    OptimisticCommit.commit(spark, root, "id",
       Seq((10L, "g0", 100.0, "upsert"), (11L, "", 0.0, "delete"),
-        (900L, "g7", 1.5, "upsert")).toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 0L)
-    CdcMergeSink.applyBatch(spark,
+        (900L, "g7", 1.5, "upsert")).toDF("id", "cat", "v", "op"))
+    OptimisticCommit.commit(spark, root, "id",
       Seq((900L, "g7", 2.5, "upsert"), (10L, "", 0.0, "delete"))
-        .toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 1L)
+        .toDF("id", "cat", "v", "op"))
 
     assert(AggView.refresh(spark, root, Seq("cat"), Seq("v")) === 2)
     assert(AggView.viewVersions(root) === Seq(0L, 1L))
@@ -42,9 +40,8 @@ class AggViewSpec extends SparkSpec {
     assert(AggView.refresh(spark, root, Seq("cat"), Seq("v")) === 0)
 
     // next batch -> exactly one incremental step
-    CdcMergeSink.applyBatch(spark,
-      Seq((0L, "g0", 50.0, "upsert")).toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 2L)
+    OptimisticCommit.commit(spark, root, "id",
+      Seq((0L, "g0", 50.0, "upsert")).toDF("id", "cat", "v", "op"))
     assert(AggView.refresh(spark, root, Seq("cat"), Seq("v")) === 1)
     assert(rows(AggView.read(spark, root)) === rows(IncrementalAgg.fullAgg(
       CdcMergeSink.readAsOf(spark, root, 2L), Seq("cat"), Seq("v"))))
@@ -55,9 +52,8 @@ class AggViewSpec extends SparkSpec {
     val base = spark.range(0, 20).select(col("id"),
       lit("g").as("cat"), col("id").cast("double").as("v"))
     ParquetTable.writeSorted(base, s"$root/base", "id", 2)
-    CdcMergeSink.applyBatch(spark,
-      Seq((1L, "g", 5.0, "upsert")).toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 0L)
+    OptimisticCommit.commit(spark, root, "id",
+      Seq((1L, "g", 5.0, "upsert")).toDF("id", "cat", "v", "op"))
     AggView.refresh(spark, root, Seq("cat"), Seq("v"))
     val e = intercept[IllegalArgumentException] {
       AggView.refresh(spark, root, Seq("cat"), Seq.empty)
@@ -72,9 +68,8 @@ class AggViewSpec extends SparkSpec {
     val base = spark.range(0, 50).select(col("id"),
       lit("only").as("cat"), col("id").cast("double").as("v"))
     ParquetTable.writeSorted(base, s"$root/base", "id", 2)
-    CdcMergeSink.applyBatch(spark,
-      Seq((1L, "only", 999.0, "upsert")).toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 0L)
+    OptimisticCommit.commit(spark, root, "id",
+      Seq((1L, "only", 999.0, "upsert")).toDF("id", "cat", "v", "op"))
     // fake a crash: dir with junk, no _SUCCESS
     val half = java.nio.file.Paths.get(s"$root/aggview/v0")
     java.nio.file.Files.createDirectories(half)
@@ -93,15 +88,13 @@ class AggViewSpec extends SparkSpec {
       concat(lit("h"), (col("id") % 4).cast("string")).as("cat"),
       concat(lit("v"), (col("id") % 9).cast("string")).as("v"))
     ParquetTable.writeSorted(base, s"$root/base", "id", 4)
-    CdcMergeSink.applyBatch(spark,
+    OptimisticCommit.commit(spark, root, "id",
       Seq((500L, "h0", "vNew", "upsert"),  // insert-only union path
         (3L, "", "", "delete"),            // retraction -> h3 rescans
         (5L, "h9", "v5", "upsert"))        // group move -> h1 dirty too
-        .toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 0L)
-    CdcMergeSink.applyBatch(spark,
-      Seq((501L, "h9", "vZ", "upsert")).toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 1L)
+        .toDF("id", "cat", "v", "op"))
+    OptimisticCommit.commit(spark, root, "id",
+      Seq((501L, "h9", "vZ", "upsert")).toDF("id", "cat", "v", "op"))
 
     assert(AggView.refresh(spark, root, Seq("cat"), Seq.empty,
       hllCol = Some("v")) === 2)
@@ -131,15 +124,13 @@ class AggViewSpec extends SparkSpec {
       concat(lit("g"), (col("id") % 4).cast("string")).as("cat"),
       (col("id") * 13 % 97).cast("double").as("v"))
     ParquetTable.writeSorted(base, s"$root/base", "id", 4)
-    CdcMergeSink.applyBatch(spark,
+    OptimisticCommit.commit(spark, root, "id",
       Seq((500L, "g0", 777.0, "upsert"),   // insert-only merge path
         (3L, "", 0.0, "delete"),           // retraction -> g3 rescans
         (5L, "g9", 5.0, "upsert"))         // group move -> g1 dirty too
-        .toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 0L)
-    CdcMergeSink.applyBatch(spark,
-      Seq((501L, "g9", 1.5, "upsert")).toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 1L)
+        .toDF("id", "cat", "v", "op"))
+    OptimisticCommit.commit(spark, root, "id",
+      Seq((501L, "g9", 1.5, "upsert")).toDF("id", "cat", "v", "op"))
     assert(AggView.refresh(spark, root, Seq("cat"), Seq.empty,
       quantileCol = Some("v")) === 2)
     // the maintained sketch EQUALS the full recompute's, array-exact
@@ -187,14 +178,12 @@ class AggViewSpec extends SparkSpec {
       (col("id") * 13 % 97).cast("double").as("v"),
       concat(lit("t"), (col("id") % 9).cast("string")).as("t"))
     ParquetTable.writeSorted(base, s"$root/base", "id", 4)
-    CdcMergeSink.applyBatch(spark,
+    OptimisticCommit.commit(spark, root, "id",
       Seq((500L, "g0", 777.0, "tNew", "upsert"), (3L, "", 0.0, "", "delete"),
-        (5L, "g9", 5.0, "t5", "upsert")).toDF("id", "cat", "v", "t", "op"),
-      root, "id", batchId = 0L)
-    CdcMergeSink.applyBatch(spark,
+        (5L, "g9", 5.0, "t5", "upsert")).toDF("id", "cat", "v", "t", "op"))
+    OptimisticCommit.commit(spark, root, "id",
       Seq((501L, "g9", 1.5, "tZ", "upsert"), (7L, "g3", 8.0, "t7", "upsert"))
-        .toDF("id", "cat", "v", "t", "op"),
-      root, "id", batchId = 1L)
+        .toDF("id", "cat", "v", "t", "op"))
   }
 
   private def viewEntries(root: String): Seq[String] = {
@@ -248,5 +237,24 @@ class AggViewSpec extends SparkSpec {
     // per step: the previous view and the change feed, once each
     assert(plainCk === 4)
     assert(sketchedCk === plainCk)
+  }
+
+  test("refreshing a current view opens no view version") {
+    val s = spark; import s.implicits._
+    val work = java.nio.file.Files.createTempDirectory("graft-aggcur").toString
+    def currentViewJobs(versions: Int): Int = {
+      val root = s"$work/t$versions"
+      tableWithTwoBatches(root)
+      (2 until versions).foreach(i => OptimisticCommit.commit(spark, root,
+        "id", Seq((600L + i, "g1", 1.0, "tX", "upsert"))
+          .toDF("id", "cat", "v", "t", "op")))
+      assert(CdcMergeSink.versions(root).size === versions)
+      assert(AggView.refresh(spark, root, Seq("cat"), Seq("v")) === versions)
+      val (built, jobs) = JobLog.recording(spark)(
+        AggView.refresh(spark, root, Seq("cat"), Seq("v")))
+      assert(built === 0)
+      jobs.size
+    }
+    assert(currentViewJobs(6) === currentViewJobs(2))
   }
 }

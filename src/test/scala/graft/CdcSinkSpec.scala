@@ -111,8 +111,8 @@ class CdcSinkSpec extends SparkSpec {
         if (rnd.nextBoolean()) (k, rnd.nextInt(1000).toDouble, "upsert")
         else (k, 0.0, "delete")
       }.groupBy(_._1).map(_._2.head).toSeq // one op per key per batch
-      CdcMergeSink.applyBatch(spark, mutations.toDF("id", "v", "op"),
-        root, "id", batchId = b.toLong)
+      OptimisticCommit.commit(spark, root, "id",
+        mutations.toDF("id", "v", "op"))
     }
     for ((from, to) <- Seq((-1L, 0L), (0L, 1L), (1L, 2L), (-1L, 2L), (0L, 2L))) {
       val pruned = CdcMergeSink.changeFeed(spark, root, from, to, "id")
@@ -132,35 +132,147 @@ class CdcSinkSpec extends SparkSpec {
     mkBase(root)
     val batch = Seq((3L, 33.0, "upsert")).toDF("id", "v", "op")
 
-    CdcMergeSink.applyBatch(spark, batch, root, "id", batchId = 0L)
+    OptimisticCommit.commit(spark, root, "id", batch,
+      txnMarker = Some(("q", 0L)))
     val manifest = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/v0", "_manifest.json"))
     // replay with DIFFERENT data: committed snapshot must win untouched
-    CdcMergeSink.applyBatch(spark, Seq((3L, -1.0, "upsert")).toDF("id", "v", "op"),
-      root, "id", batchId = 0L)
+    OptimisticCommit.commit(spark, root, "id",
+      Seq((3L, -1.0, "upsert")).toDF("id", "v", "op"),
+      txnMarker = Some(("q", 0L)))
     assert(java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/v0", "_manifest.json")) === manifest)
+    assert(CdcMergeSink.versions(root) === Seq(0L))
 
-    // crashed half-apply: version dir exists, no manifest → rebuilt cleanly
-    val half = java.nio.file.Paths.get(s"$root/v1")
-    java.nio.file.Files.createDirectories(half)
-    java.nio.file.Files.writeString(half.resolve("junk.parquet"), "not parquet")
-    CdcMergeSink.applyBatch(spark, Seq((4L, 44.0, "upsert")).toDF("id", "v", "op"),
-      root, "id", batchId = 1L)
+    // crash between stage and publish: the dead writer's staged dir
+    // outlives it as `.tx-` debris, and no version slot is touched
+    def txDirs(): Seq[java.nio.file.Path] = {
+      import scala.jdk.CollectionConverters._
+      val l = java.nio.file.Files.list(java.nio.file.Paths.get(root))
+      try l.iterator().asScala
+        .filter(_.getFileName.toString.startsWith(".tx-")).toList
+      finally l.close()
+    }
+    val next = Seq((4L, 44.0, "upsert")).toDF("id", "v", "op")
+    intercept[IllegalStateException] {
+      OptimisticCommit.commit(spark, root, "id", next,
+        txnMarker = Some(("q", 1L)),
+        testHookAfterStage = () => {
+          val staged = txDirs().head
+          val dead = staged.resolveSibling(".tx-crashed")
+          java.nio.file.Files.createDirectories(dead)
+          val l = java.nio.file.Files.list(staged)
+          try l.forEach(f => java.nio.file.Files.copy(f,
+            dead.resolve(f.getFileName)))
+          finally l.close()
+          throw new IllegalStateException("writer crashed before publish")
+        })
+    }
+    assert(txDirs().map(_.getFileName.toString) === Seq(".tx-crashed"))
+    assert(CdcMergeSink.versions(root) === Seq(0L))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$root/v1")))
+    // the replay of the crashed epoch lands
+    OptimisticCommit.commit(spark, root, "id", next,
+      txnMarker = Some(("q", 1L)))
     assert(MutableParquetTable.isCommitted(s"$root/v1"))
     val v1 = MutableParquetTable.readCommitted(spark, s"$root/v1")
     assert(v1.where(col("id") === 4L).head().getDouble(1) === 44.0)
     assert(v1.where(col("id") === 3L).head().getDouble(1) === 33.0)
     assert(v1.count() === 100)
+    assert(CdcMergeSink.lastTxnEpoch(root, "q") === Some(1L))
+  }
+
+  test("a stream on a table with a prior commit applies every batch") {
+    val s = spark; import s.implicits._
+    implicit val ctx = s.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("graft-cdc4").toString
+    mkBase(root)
+    val t = GraftTable(spark, root, "id")
+    t.commit(Seq((1L, 11.0, "upsert")).toDF("id", "v", "op"))
+
+    val in = MemoryStream[(Long, Double, String)]
+    val q = t.stream(in.toDF().toDF("id", "v", "op"))
+    try {
+      in.addData((2L, 222.0, "upsert"))
+      q.processAllAvailable()
+      in.addData((3L, 333.0, "upsert"))
+      q.processAllAvailable()
+    } finally q.stop()
+
+    assert(t.versions === Seq(0L, 1L, 2L))
+    val got = t.read().where(col("id") < 4L).orderBy("id")
+      .as[(Long, Double)].collect().toSeq
+    assert(got === Seq((0L, 0.0), (1L, 11.0), (2L, 222.0), (3L, 333.0)))
+  }
+
+  test("a sink epoch that races another writer's commit lands after it") {
+    val s = spark; import s.implicits._
+    implicit val ctx = s.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("graft-cdc5").toString
+    mkBase(root)
+    val t = GraftTable(spark, root, "id")
+
+    val in = MemoryStream[(Long, Double, String)]
+    val q = CdcMergeSink.start(in.toDF().toDF("id", "v", "op"), root, "id")
+    try {
+      in.addData((2L, 222.0, "upsert"))
+      q.processAllAvailable()
+      // another writer claims the next version between the sink's epochs
+      t.commit(Seq((5L, 55.0, "upsert")).toDF("id", "v", "op"))
+      in.addData((3L, 333.0, "upsert"))
+      q.processAllAvailable()
+    } finally q.stop()
+
+    assert(t.versions === Seq(0L, 1L, 2L), "versions stay dense")
+    val epochs = t.versions.map(v =>
+      MutableParquetTable.manifestTxn(s"$root/v$v").map(_._2))
+    assert(epochs === Seq(Some(0L), None, Some(1L)))
+    val got = t.read().where(col("id").isin(2L, 3L, 5L)).orderBy("id")
+      .as[(Long, Double)].collect().toSeq
+    assert(got === Seq((2L, 222.0), (3L, 333.0), (5L, 55.0)))
+  }
+
+  test("a replayed foreachBatch epoch under the same query id starts no Spark job") {
+    val s = spark; import s.implicits._
+    implicit val ctx = s.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("graft-cdc6").toString
+    mkBase(root)
+    val t = GraftTable(spark, root, "id")
+    t.commit(Seq((1L, 11.0, "upsert")).toDF("id", "v", "op"))
+    val cp = java.nio.file.Files.createTempDirectory("graft-cdc6-cp").toString
+    val in = MemoryStream[(Long, Double, String)]
+    val mut = in.toDF().toDF("id", "v", "op")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    def run(): Unit = {
+      val q = CdcMergeSink.start(mut, root, "id", checkpointDir = Some(cp),
+        afterBatch = id => seen.add(id))
+      try q.processAllAvailable() finally q.stop()
+    }
+    in.addData((2L, 222.0, "upsert"))
+    run()
+    assert(t.versions === Seq(0L, 1L))
+    val manifest = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$root/v1", "_manifest.json"))
+    // a failure after the commit but before the engine logged the batch
+    // done: the restarted query re-runs batch 0 under the same query id
+    Seq("0", ".0.crc").foreach(f => java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(cp, "commits", f)))
+    val (_, jobs) = JobLog.recording(spark)(run())
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSeq === Seq(0L, 0L), "batch 0 must be replayed")
+    assert(jobs.isEmpty, s"the replay started jobs: ${jobs.flatMap(_.names)}")
+    assert(t.versions === Seq(0L, 1L))
+    assert(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$root/v1", "_manifest.json")) === manifest)
+    assert(t.read().where(col("id") === 2L).head().getDouble(1) === 222.0)
   }
 
   test("empty micro-batch leaves the snapshot chain unchanged") {
     val s = spark; import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-cdc3").toString
     mkBase(root)
-    CdcMergeSink.applyBatch(spark,
-      Seq.empty[(Long, Double, String)].toDF("id", "v", "op"),
-      root, "id", batchId = 0L)
+    OptimisticCommit.commit(spark, root, "id",
+      Seq.empty[(Long, Double, String)].toDF("id", "v", "op"))
     assert(CdcMergeSink.latestSnapshot(root).endsWith("/base"))
   }
 }

@@ -210,7 +210,7 @@ class ConcurrentCommitSpec extends SparkSpec {
   test("an uncommitted foreign dir on the next slot fails loudly, not silently") {
     val root = freshRoot()
     mkTable(root, n = 20, files = 2)
-    // a crashed direct applyBatch target: exists, non-empty, no manifest
+    // foreign debris on the slot: exists, non-empty, no manifest
     Files.createDirectories(Paths.get(s"$root/v0"))
     Files.writeString(Paths.get(s"$root/v0/junk.parquet"), "not parquet")
     import spark.implicits._
@@ -343,7 +343,7 @@ class ConcurrentCommitSpec extends SparkSpec {
     import spark.implicits._
     val epoch = Seq((3L, 333L, "upsert")).toDF("k", "v", "op")
     // failover zombie: BOTH drivers of one streaming query offer the same
-    // (app, epoch) — the pre-commit lastTxnEpoch check passes for both
+    // (app, epoch) — the landed check before staging passes for both
     // (check-then-act), so the loser must detect the winner's marker on
     // its publish retry and abort as already-committed
     var fired = false

@@ -131,6 +131,15 @@ class GraphSpec extends SparkSpec {
     assert(ts == 0L)
   }
 
+  test("triangle Bloom sizing: Spark's optimum below the cap, clamped at 10^10 edges") {
+    import org.apache.spark.util.sketch.BloomFilter
+    Seq(1L, 1000L, 1000000L).foreach { n =>
+      assert(BloomFilter.create(n, Graph.triangleBloomBits(n)).bitSize() ===
+        BloomFilter.create(n, 0.03).bitSize(), s"$n edges")
+    }
+    assert(Graph.triangleBloomBits(10000000000L) === (1L << 27))
+  }
+
   test("kCore: triangle core survives, pendant and path peel away") {
     // triangle 1-2-3 with pendant 4 on node 1: 2-core = the triangle
     val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (1L, 4L)).toDF("src", "dst")

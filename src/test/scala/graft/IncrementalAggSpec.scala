@@ -24,19 +24,17 @@ class IncrementalAggSpec extends SparkSpec {
     ParquetTable.writeSorted(base, s"$root/base", "id", 4)
 
     // batch 0: updates move rows ACROSS groups, plus deletes and inserts
-    CdcMergeSink.applyBatch(spark,
+    OptimisticCommit.commit(spark, root, "id",
       Seq(
         (3L, "c9", 1000.0, "upsert"),   // group change c3 -> c9 (new group)
         (8L, "c0", 999.0, "upsert"),    // value change within c0
         (5L, "", 0.0, "delete"),        // delete from c1
         (500L, "c2", 7.0, "upsert"))    // insert into c2
-        .toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 0L)
+        .toDF("id", "cat", "v", "op"))
     // batch 1: empty out a whole group (c9 again removed)
-    CdcMergeSink.applyBatch(spark,
+    OptimisticCommit.commit(spark, root, "id",
       Seq((3L, "", 0.0, "delete"), (500L, "c2", 8.5, "upsert"))
-        .toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 1L)
+        .toDF("id", "cat", "v", "op"))
 
     val agg0 = IncrementalAgg.fullAgg(
       spark.read.parquet(s"$root/base"), Seq("cat"), Seq("v"))
@@ -94,13 +92,12 @@ class IncrementalAggSpec extends SparkSpec {
       (col("id") * 10).cast("double").as("v"))
     ParquetTable.writeSorted(base, s"$root/base", "id", 3)
     // group e0 holds ids 0,3,6..57 -> min v = 0 (id 0), max v = 570 (id 57)
-    CdcMergeSink.applyBatch(spark,
+    OptimisticCommit.commit(spark, root, "id",
       Seq(
         (0L, "", 0.0, "delete"),          // deletes e0's MIN -> rescan path
         (58L, "e1", -500.0, "upsert"),    // new e1 min via insert (free path)
         (4L, "e1", 45.0, "upsert"))       // interior update, no extremum touch
-        .toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 0L)
+        .toDF("id", "cat", "v", "op"))
     val prev = IncrementalAgg.fullAggWithExtrema(
       spark.read.parquet(s"$root/base"), Seq("cat"), Seq("v"), Seq("v"))
     val newState = CdcMergeSink.readAsOf(spark, root, 0L)
@@ -133,8 +130,7 @@ class IncrementalAggSpec extends SparkSpec {
         if (rnd.nextInt(3) == 0) (k, "", 0.0, "delete")
         else (k, s"p${rnd.nextInt(5)}", rnd.nextInt(27) - 13.0, "upsert")
       }.groupBy(_._1).map(_._2.head).toSeq
-      CdcMergeSink.applyBatch(spark, muts.toDF("id", "cat", "v", "op"),
-        root, "id", batchId = b.toLong)
+      OptimisticCommit.commit(spark, root, "id", muts.toDF("id", "cat", "v", "op"))
       val newState = CdcMergeSink.readAsOf(spark, root, b.toLong)
       val feed = CdcMergeSink.changeFeed(spark, root, b - 1L, b.toLong, "id")
       agg = IncrementalAgg.applyDeltaWithExtrema(agg, feed, newState,
@@ -166,7 +162,7 @@ class IncrementalAggSpec extends SparkSpec {
       concat(lit("h"), (col("id") % 3).cast("string")).as("cat"),
       concat(lit("v"), (col("id") % 7).cast("string")).as("v"))
     ParquetTable.writeSorted(base, s"$root/base", "id", 3)
-    CdcMergeSink.applyBatch(spark,
+    OptimisticCommit.commit(spark, root, "id",
       Seq(
         (200L, "h0", "v99", "upsert"),  // pure insert: union path (clean)
         (201L, "h1", "v0", "upsert"),   // insert of an already-seen value
@@ -174,8 +170,7 @@ class IncrementalAggSpec extends SparkSpec {
         (4L, "h4", "v4", "upsert"),     // group move h1 -> h4: h1 dirty
         (5L, "h2", "vX", "upsert"),     // value change in place: h2 dirty
         (7L, "h1", "v0", "upsert"))     // no-op-shaped update: NOT dirty
-        .toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 0L)
+        .toDF("id", "cat", "v", "op"))
     val prev = IncrementalAgg.fullAggWithHll(
       spark.read.parquet(s"$root/base"), Seq("cat"), "v")
     val newState = CdcMergeSink.readAsOf(spark, root, 0L)
@@ -213,10 +208,9 @@ class IncrementalAggSpec extends SparkSpec {
       "insert-only feed must mark no group dirty")
     // second batch chains on the maintained state (sketch state is
     // genuinely incremental, not recomputed from scratch)
-    CdcMergeSink.applyBatch(spark,
+    OptimisticCommit.commit(spark, root, "id",
       Seq((301L, "h0", "vZ", "upsert"), (6L, "", "", "delete"))
-        .toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 1L)
+        .toDF("id", "cat", "v", "op"))
     val state2 = CdcMergeSink.readAsOf(spark, root, 1L)
     val got2 = IncrementalAgg.applyDeltaWithHll(got,
       CdcMergeSink.changeFeed(spark, root, 0L, 1L, "id"),
@@ -233,15 +227,14 @@ class IncrementalAggSpec extends SparkSpec {
       concat(lit("q"), (col("id") % 3).cast("string")).as("cat"),
       (col("id") * 7 % 101).cast("double").as("v"))
     ParquetTable.writeSorted(base, s"$root/base", "id", 3)
-    CdcMergeSink.applyBatch(spark,
+    OptimisticCommit.commit(spark, root, "id",
       Seq(
         (500L, "q0", 999.0, "upsert"),  // pure insert (clean merge path)
         (3L, "", 0.0, "delete"),        // retraction -> q0 dirty
         (4L, "q4", 4.0, "upsert"),      // group move q1 -> q4: q1 dirty
         (5L, "q2", 123.5, "upsert"),    // value change in place: q2 dirty
         (7L, "q1", 49.0, "upsert"))     // no-op-shaped update: NOT dirty
-        .toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 0L)
+        .toDF("id", "cat", "v", "op"))
     val prev = IncrementalAgg.fullAggWithQuantile(
       spark.read.parquet(s"$root/base"), Seq("cat"), "v", "id", k)
     val newState = CdcMergeSink.readAsOf(spark, root, 0L)
@@ -273,10 +266,9 @@ class IncrementalAggSpec extends SparkSpec {
         s"group $c: p50 estimate ${est(c)} at rank $rank of ${vs.length}")
     }
     // second batch chains on the maintained state
-    CdcMergeSink.applyBatch(spark,
+    OptimisticCommit.commit(spark, root, "id",
       Seq((501L, "q0", 7.5, "upsert"), (6L, "", 0.0, "delete"))
-        .toDF("id", "cat", "v", "op"),
-      root, "id", batchId = 1L)
+        .toDF("id", "cat", "v", "op"))
     val state2 = CdcMergeSink.readAsOf(spark, root, 1L)
     val got2 = IncrementalAgg.applyDeltaWithQuantile(got,
       CdcMergeSink.changeFeed(spark, root, 0L, 1L, "id"),

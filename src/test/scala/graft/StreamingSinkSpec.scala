@@ -126,7 +126,11 @@ class StreamingSinkSpec extends SparkSpec {
     assert(CdcMergeSink.lastTxnEpoch(root, "replay-app") === Some(0L))
 
     // failure replay: the engine re-offers epoch 0 — must be a no-op
-    sw.commit(0L, Array(GraftFileCommitted(stage(201L))))
+    // that starts no Spark job
+    val replayed = Array[org.apache.spark.sql.connector.write.WriterCommitMessage](
+      GraftFileCommitted(stage(201L)))
+    val (_, jobs) = JobLog.recording(spark)(sw.commit(0L, replayed))
+    assert(jobs.isEmpty, s"the replay started jobs: ${jobs.flatMap(_.names)}")
     assert(CdcMergeSink.versions(root).size === 1)
     assert(GraftTable(spark, root, "id").read()
       .where(col("id") === 201L).isEmpty)

@@ -42,16 +42,40 @@ object Bench {
   /** The battery's final JSON line. The headline total sums the query
     * battery (`q*` lanes) and `failed` names the lanes it leaves out;
     * experiment entries (ingest, merge scaling, cosine comparison,
-    * rowgroup sweep incl. _mb sizes) are reported individually in
-    * `queries` but not summed. */
+    * rowgroup sweep) are reported individually in `queries` but not
+    * summed. `gauges` repeats the entries that are not seconds (counts,
+    * sizes, ratios — [[isGauge]]), and `failedBlocks` names the
+    * experiment blocks that threw as a whole, whose entries are absent. */
   private[graft] def resultLine(results: collection.Map[String, Double],
-                                sfDir: String): String = {
+                                sfDir: String,
+                                failedBlocks: Seq[String] = Nil): String = {
     val (ok, failed) = results.filter(_._1.startsWith("q")).partition(_._2 >= 0)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val fs = failed.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${ok.values.sum},"unit":"sec","queries":$qs,""" +
-      s""""failed":$fs,"sf":"$sfDir"}"""
+    def obj(kv: collection.Map[String, Double]) =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def arr(xs: Iterable[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":${ok.values.sum},"unit":"sec",""" +
+      s""""queries":${obj(results)},"gauges":${obj(results.filter(e => isGauge(e._1)))},""" +
+      s""""failed":${arr(failed.keys)},"failedBlocks":${arr(failedBlocks)},"sf":"$sfDir"}"""
   }
+
+  /** Whether result `name` is a count, size or ratio rather than seconds:
+    * file and row-group counts (`_files`, `_groups`), sizes (`_mb`) and
+    * the merge ratios. */
+  private[graft] def isGauge(name: String): Boolean =
+    Seq("_files", "_groups", "_mb").exists(name.endsWith) ||
+      name.startsWith("merge_ratio_")
+
+  /** Experiment blocks of this run that threw, in order. */
+  private[graft] val failedBlocks =
+    scala.collection.mutable.ArrayBuffer.empty[String]
+
+  /** Run experiment block `name`; a block that throws is logged and
+    * named in the result line's `failedBlocks`. */
+  private[graft] def experiment(name: String)(body: => Unit): Unit =
+    try body catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      failedBlocks.synchronized(failedBlocks += name)
+    }
 
   private[graft] def runToNoop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
@@ -153,7 +177,7 @@ object Bench {
     }
 
     // ---- HOF vs native-expression cosine on a large pair count ----
-    try {
+    experiment("cosine experiment") {
       graft.plans.CosineSimilarity.register(spark)
       val e = Tables.embeddings(spark, sfDir)
       val q = e.where(col("vec_id") < 200)
@@ -163,12 +187,10 @@ object Bench {
         graft.operators.Similarity.bruteForceTopK(e, q, "embedding", "vec_id", 10)))
       results("cosine_topk_native") = time(runToNoop(
         graft.operators.Similarity.bruteForceTopK(e, q, "embedding", "vec_id", 10, native = true)))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] cosine experiment failed: ${e.getMessage}")
     }
 
     // ---- sketch-kernel comparison: explode/agg vs fused native pass ----
-    try {
+    experiment("sketch experiment") {
       graft.plans.MinHashSignature.register(spark)
       graft.plans.SimHash.register(spark)
       val docs = Tables.documents(spark, dataDir)
@@ -181,8 +203,6 @@ object Bench {
       results("minhash_pairs_native") = time(mh(true))
       results("simhash_pairs_agg") = time(sh(false))
       results("simhash_pairs_native") = time(sh(true))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] sketch experiment failed: ${e.getMessage}")
     }
 
     // ---- text-kernel throughput (round 10): the exact BPE encoder vs
@@ -191,7 +211,7 @@ object Bench {
     //      the exact semi-join it fronts. All map-side; the Bloom
     //      contrast shows the summary (32 KiB over the wire) replacing
     //      a corpus-sized shuffle ----
-    try {
+    experiment("text-kernel experiment") {
       graft.plans.BpeExpressions.register(spark)
       import graft.functions.TextFunctions
       val docs = Tables.documents(spark, dataDir)
@@ -223,14 +243,12 @@ object Bench {
       bloom(); exactJoin() // warm
       results("bloom_membership") = (1 to 2).map(_ => time(bloom())).min
       results("membership_exact_join") = (1 to 2).map(_ => time(exactJoin())).min
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] text-kernel experiment failed: ${e.getMessage}")
     }
 
     // ---- round-10 additions: CDC boundary-scan throughput (map-side,
     //      prices the O(n·window) rolling-hash cut scan) and the CMS
     //      sketch build vs the exact key-count shuffle it replaces ----
-    try {
+    experiment("round-10 kernels") {
       import graft.functions.{TextFunctions, Udx}
       val docs = Tables.documents(spark, dataDir)
       def cdc(): Unit = runToNoop(docs.select(
@@ -246,8 +264,6 @@ object Bench {
       cms(); exactCnt() // warm
       results("cms_build") = (1 to 2).map(_ => time(cms())).min
       results("exact_key_counts") = (1 to 2).map(_ => time(exactCnt())).min
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] round-10 kernels failed: ${e.getMessage}")
     }
 
     // ---- round-11 additions: the byte-level BPE kernel next to the
@@ -256,7 +272,7 @@ object Bench {
     //      the de-amplified candidate path (id-pair dedup before the
     //      texts join back; the gram join shuffles (g, id, len) only,
     //      never Σ(shared grams × string bytes)) ----
-    try {
+    experiment("round-11 kernels") {
       graft.plans.BpeByteExpressions.register(spark)
       val docs = Tables.documents(spark, dataDir)
       def bb(): Unit = runToNoop(docs.agg(
@@ -270,15 +286,13 @@ object Bench {
         long, "k", "doc_id", maxDist = 2, q = 4, maxBucketWidth = 64))
       ed() // warm
       results("edit_distance_long") = (1 to 2).map(_ => time(ed())).min
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] round-11 kernels failed: ${e.getMessage}")
     }
 
     // ---- persisted BM25 index (round 10): seed once, then serve term
     //      probes from the index vs recomputing postings from text —
     //      the recompute re-tokenizes the corpus per query set, the
     //      indexed probe reads term-pruned posting files ----
-    try {
+    experiment("bm25-index experiment") {
       val docs = Tables.documents(spark, dataDir)
       val idxRoot = s"$workDir/bm25/idx"
       val q = Seq("data", "merge", "window")
@@ -305,15 +319,13 @@ object Bench {
         .manifestFileNames(graft.streaming.CdcMergeSink
           .latestSnapshot(s"$idxRoot/postings"))
         .map(_.size).getOrElse(0).toDouble
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] bm25-index experiment failed: ${e.getMessage}")
     }
 
     // ---- perceptual image hashing (round 8): decode+hash narrow map,
     //      then the fingerprint-only Hamming join — the candidate stage
     //      moves 16 bytes per image, payloads never shuffle, so the join
     //      lane should be minhash_pairs-class, not decode-class ----
-    try {
+    experiment("image-hash experiment") {
       import spark.implicits._
       val docs = Tables.documents(spark, dataDir)
         .where(col("doc_id") % 3 === 0)
@@ -339,14 +351,12 @@ object Bench {
         hp() // warm
         results("image_hamming_pairs") = (1 to 2).map(_ => time(hp())).min
       } finally fp.unpersist(blocking = false): Unit
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] image-hash experiment failed: ${e.getMessage}")
     }
 
     // ---- hot-bucket guard overhead (round 8): the capped hyperplane
     //      path vs the uncapped one on a HEALTHY corpus — the guard's
     //      extra width-count pass should be noise, not a tax ----
-    try {
+    experiment("emb-cap experiment") {
       graft.plans.HyperplaneSignature.register(spark)
       graft.plans.CosineSimilarity.register(spark)
       val e = Tables.embeddings(spark, dataDir)
@@ -359,15 +369,13 @@ object Bench {
       und(); cap() // warm
       results("embdedup_uncapped") = (1 to 2).map(_ => time(und())).min
       results("embdedup_capped") = (1 to 2).map(_ => time(cap())).min
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] emb-cap experiment failed: ${e.getMessage}")
     }
 
     // ---- incremental dedup vs full-corpus batch LSH: the probe ingest
     //      (1/3 of docs) against a persisted index should beat
     //      re-sketching the whole corpus (minhash_pairs_native, same
     //      banding/threshold) — the gap widens with corpus/batch ratio ----
-    try {
+    experiment("incdedup experiment") {
       graft.plans.MinHashSignature.register(spark)
       val docs = Tables.documents(spark, dataDir)
         .select(col("doc_id"), lower(col("text")).as("text"))
@@ -405,8 +413,6 @@ object Bench {
         copyDir(seeded, root)
         time(probe(extend = true))
       }.min
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] incdedup experiment failed: ${e.getMessage}")
     }
 
     // ---- dedup-index layout trade, measured both ways on the
@@ -420,7 +426,7 @@ object Bench {
     //      probes-per-band << files-per-band, which is exactly the
     //      100-TB regime (thousands of files, batch-sized probes); the
     //      file counts here are the direct receipt. ----
-    try {
+    experiment("probe-layout experiment") {
       val idxN = 200000L
       val fps = spark.range(0L, idxN)
         .select(col("id").as("media_id"), xxhash64(col("id")).as("dhash"))
@@ -467,12 +473,10 @@ object Bench {
           time(probe(root, extend = true))
         }.min
       }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] probe-layout experiment failed: ${e.getMessage}")
     }
 
     // ---- z-order vs linear layout: secondary-dimension pruning ----
-    try {
+    experiment("zorder experiment") {
       val li = Tables.lineitem(spark, sfDir)
       val ldir = s"$workDir/zorder-linear"
       val zdir = s"$workDir/zorder-curve"
@@ -491,14 +495,12 @@ object Bench {
         .overlappingRowGroups(spark, ldir, "l_suppkey", 2, 4).toDouble
       results("zorder_curve_groups") = graft.sources.ZOrder
         .overlappingRowGroups(spark, zdir, "l_suppkey", 2, 4).toDouble
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] zorder experiment failed: ${e.getMessage}")
     }
 
     // ---- point merge on a z-ordered (fully OVERLAPPED) layout: exact
     //      holder routing rewrites only the files that hold a batch key;
     //      owner-routing would cascade the whole table dirty ----
-    try {
+    experiment("zmerge experiment") {
       val zt = s"$workDir/zmerge"
       val li = Tables.lineitem(spark, sfDir)
         .withColumn("li_key", monotonically_increasing_id())
@@ -519,8 +521,6 @@ object Bench {
         zDirty = r.rewrittenFiles.size
       }).min
       results("zorder_point_merge_files") = zDirty.toDouble
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] zmerge experiment failed: ${e.getMessage}")
     }
 
     // ---- merge-scaling experiment on a ~4.8M-row key-sorted table ----
@@ -528,7 +528,7 @@ object Bench {
 
     runTombstoneAndRest(spark, sfDir, workDir, results)
 
-    val json = resultLine(results, sfDir)
+    val json = resultLine(results, sfDir, failedBlocks.synchronized(failedBlocks.toList))
     // stdout tail capture can truncate the (long) single line; persist the
     // full artifact to a file as well so timings are never lost. Default
     // lands in the launch CWD (the repo root under the driver) so the
@@ -549,7 +549,7 @@ object Bench {
   private[graft] def mergeExperiment(
       spark: SparkSession, sfDir: String, workDir: String,
       results: scala.collection.mutable.LinkedHashMap[String, Double]): Unit = {
-    try {
+    experiment("merge experiment") {
       val baseDir = s"$workDir/merge-base"
       // 4× replicated lineitem (~2.4M rows) with a genuinely UNIQUE key —
       // the fixture's (l_orderkey, l_linenumber) pairs repeat, and merges
@@ -642,14 +642,10 @@ object Bench {
         ratioOf("merge_full_rewrite", "merge_10pct_dirty")
       results("merge_ratio_full_over_50pct") =
         ratioOf("merge_full_rewrite", "merge_50pct_dirty")
-      // NOTE: mergeFineGrained (row-group CoW per dirty file) is NOT
-      // benched here — at sf0.1's ~7 MB files its per-file Spark-job
-      // overhead dominates the decode/encode it saves, so the honest
-      // demonstration of group-granularity savings is the single-fat-file
-      // rgcow_* experiment below; the multi-file orchestration is
-      // correctness-tested in CowMergeSpec
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] merge experiment failed: ${e.getMessage}")
+      // NOTE: these points rewrite whole files — the ingest layout's
+      // files hold one row group each, so the rewrite task's row-group
+      // splice never fires; its savings are measured by the one-file,
+      // 256 KB-group rgcow_* experiment below
     }
   }
 
@@ -662,7 +658,7 @@ object Bench {
     // ~300 keys scattered across all 32 files: the CoW path rewrites
     // every holder file; the tombstone path writes a sidecar + manifest.
     // The ratio is the feature's whole claim — deletes at metadata cost.
-    try {
+    experiment("tombstone experiment") {
       val root = s"$workDir/ts-table"
       val li = Tables.lineitem(spark, sfDir)
         .withColumn("li_key", monotonically_increasing_id())
@@ -690,15 +686,13 @@ object Bench {
         (1 to 3).map(_ => time(scanAgg(s"$workDir/ts-v1"))).min
       results("plain_read_scan") =
         (1 to 3).map(_ => time(scanAgg(s"$root/base"))).min
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] tombstone experiment failed: ${e.getMessage}")
     }
 
     // ---- range-scoped vs whole-table compaction: maintenance priced by
     //      the RANGE — the scoped fold splices only the selected files
     //      and links the rest, so cost tracks the range's bytes while the
     //      full compact pays the whole table every time ----
-    try {
+    experiment("compact-range experiment") {
       val root = s"$workDir/rc-table"
       // ×8 volume (~600 MB): at the bare sf0.1 table both arms were
       // fixed-cost-floored (~0.22 s each); the claim is byte scaling —
@@ -718,8 +712,6 @@ object Bench {
         time(t.compactRange(0L, thr, 32L << 20))).min
       results("compact_full") = (1 to 2).map(_ =>
         time(t.compact(32L << 20))).min
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] compact-range experiment failed: ${e.getMessage}")
     }
 
     rgcowExperiment(spark, sfDir, workDir, results)
@@ -727,41 +719,33 @@ object Bench {
     runRowgroupAndRest(spark, sfDir, workDir, results)
   }
 
-  /** Row-group CoW vs full rewrite of one fat file (README.md:109-111
-    * partial-rewrite scaling, at the reference's own granularity) —
-    * extracted so [[BenchMergeIso]] can pin it in isolation. */
+  /** Row-group CoW against a whole-file rewrite (README.md:109-111
+    * partial-rewrite scaling, at the reference's own granularity): the
+    * same ~10%-of-keys merge into a one-file table of 256 KB row groups,
+    * where the rewrite task copies the clean groups raw, and into the
+    * same rows written as one file of one row group, which it rewrites
+    * whole — extracted so [[BenchMergeIso]] can pin it in isolation. */
   private[graft] def rgcowExperiment(
       spark: SparkSession, sfDir: String, workDir: String,
       results: scala.collection.mutable.LinkedHashMap[String, Double]): Unit = {
-    try {
+    experiment("rgcow experiment") {
       val d = s"$workDir/rgcow"
       val li = Tables.lineitem(spark, sfDir)
         .withColumn("li_key", col("l_orderkey") * 10 + col("l_linenumber"))
-      ParquetTable.writeSorted(li, s"$d/src", "li_key", 1,
+      GraftTable.create(li, s"$d/groups", "li_key", numFiles = 1,
         ParquetLayout(rowGroupBytes = Some(256L * 1024)))
-      val src = {
-        import scala.jdk.CollectionConverters._
-        val s0 = java.nio.file.Files.list(java.nio.file.Paths.get(s"$d/src"))
-        try s0.iterator().asScala.map(_.toString).find(_.endsWith(".parquet")).get
-        finally s0.close()
-      }
+      GraftTable.create(li, s"$d/whole", "li_key", numFiles = 1)
       val maxKey = li.agg(max(col("li_key"))).head().getLong(0)
-      val batch = spark.read.parquet(src)
-        .where(col("li_key") <= maxKey / 10)
+      li.where(col("li_key") <= maxKey / 10)
         .withColumn("l_quantity", col("l_quantity") + 1.0)
         .withColumn("op", lit("upsert"))
-      batch.write.parquet(s"$d/batch")
+        .write.parquet(s"$d/batch")
       val b = spark.read.parquet(s"$d/batch")
-      results("rgcow_10pct_dirty") = (1 to 3).map(i => time(
-        graft.sources.RowGroupCoW.rewriteFile(spark, src, s"$d/out-$i.parquet",
-          "li_key", b))).min
-      results("rgcow_full_rewrite") = (1 to 3).map(i => time {
-        graft.operators.MergeOps.applyMutations(spark.read.parquet(src), b, "li_key")
-          .repartition(1).sortWithinPartitions(col("li_key"))
-          .write.parquet(s"$d/full-$i")
-      }).min
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] rgcow experiment failed: ${e.getMessage}")
+      def merge(table: String, i: Int): Unit =
+        MutableParquetTable(spark, s"$d/$table/base", "li_key")
+          .merge(b, snapshotDir = Some(s"$d/$table-v$i"))
+      results("rgcow_10pct_dirty") = (1 to 3).map(i => time(merge("groups", i))).min
+      results("rgcow_full_rewrite") = (1 to 3).map(i => time(merge("whole", i))).min
     }
   }
 
@@ -771,7 +755,7 @@ object Bench {
       spark: SparkSession, sfDir: String, workDir: String,
       results: scala.collection.mutable.LinkedHashMap[String, Double]): Unit = {
     // ---- row-group-size sweep (README.md:88-101 qualitative shape) ----
-    try {
+    experiment("rowgroup sweep") {
       val li = Tables.lineitem(spark, sfDir)
       Seq(("16k", 16L * 1024), ("256k", 256L * 1024), ("4m", 4L * 1024 * 1024))
         .foreach { case (tag, bytes) =>
@@ -792,15 +776,13 @@ object Bench {
           scan()
           results(s"rowgroup_${tag}_scan") = (1 to 3).map(_ => time(scan())).min
         }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] rowgroup sweep failed: ${e.getMessage}")
     }
 
     // ---- change feed: delta-pruned vs naive full-table diff ----
     // The feed's claim is that its cost tracks the data a merge TOUCHED;
     // the naive alternative (full outer join of both snapshots) pays the
     // whole table twice regardless of how small the change was.
-    try {
+    experiment("change feed experiment") {
       val root = s"$workDir/cdc-table"
       val li = Tables.lineitem(spark, sfDir)
         .withColumn("li_key", monotonically_increasing_id())
@@ -827,15 +809,13 @@ object Bench {
         .write.parquet(s"$workDir/occ-batch")
       val occB = spark.read.parquet(s"$workDir/occ-batch")
       results("occ_commit_5pct") = (1 to 3).map(_ => time(t.commit(occB))).min
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] change feed experiment failed: ${e.getMessage}")
     }
 
     // ---- ORDER BY key LIMIT k: manifest top-k file prune vs the full
     //      sort-limit scan (TakeOrderedAndProject over every file). The
     //      pruned plan's cost is ~one file at any table size; the files
     //      planned are reported alongside the seconds. ----
-    try {
+    experiment("topk/restore experiment") {
       val root = s"$workDir/topk-table"
       val li = Tables.lineitem(spark, sfDir)
         .withColumn("li_key", monotonically_increasing_id())
@@ -859,15 +839,13 @@ object Bench {
         .withColumn("l_quantity", col("l_quantity") + 1.0)
         .withColumn("op", lit("upsert")))
       results("restore_commit") = (1 to 3).map(_ => time(t.restoreTo(-1L))).min
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] topk/restore experiment failed: ${e.getMessage}")
     }
 
     // ---- PQ (product-quantization) ANN vs brute cosine on the same
     //      query load: the PQ scan reads m=8 codes/row instead of 64
     //      floats (the 32× byte story); encode/codebook build is the
     //      one-time index cost, reported separately ----
-    try {
+    experiment("pq experiment") {
       val e = Tables.embeddings(spark, sfDir)
       val q = e.where(col("vec_id") < 200)
       val books = Similarity.pqCodebooks(e, "embedding", "vec_id",
@@ -929,8 +907,6 @@ object Bench {
       buildK(1) // warm
       results("ivf_codebook_iter1") = (1 to 2).map(_ => time(buildK(1))).min
       results("ivf_codebook_iter3") = (1 to 2).map(_ => time(buildK(3))).min
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] pq experiment failed: ${e.getMessage}")
     }
 
     // ---- SQ8 (scalar-quantization) serving: the 4×-fewer-bytes middle
@@ -938,7 +914,7 @@ object Bench {
     //      sq_scan_native (rerank=0) is the apples-to-apples per-pair
     //      cost against cosine_topk_native (byte loads vs float mults);
     //      sq_search_native is the shipped path (rerank pins scores) ----
-    try {
+    experiment("sq8 experiment") {
       graft.plans.Sq8Cosine.register(spark)
       val e = Tables.embeddings(spark, sfDir)
       val q = e.where(col("vec_id") < 200)
@@ -954,8 +930,6 @@ object Bench {
       sqSearch(0); sqSearch(30) // warm
       results("sq_scan_native") = (1 to 2).map(_ => time(sqSearch(0))).min
       results("sq_search_native") = (1 to 2).map(_ => time(sqSearch(30))).min
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] sq8 experiment failed: ${e.getMessage}")
     }
   }
 }

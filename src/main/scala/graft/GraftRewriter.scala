@@ -23,13 +23,13 @@ import graft.sources.{MergeResult, MutableParquetTable, ParquetLayout, ParquetTa
   * requirement (joins are order-free — the reference's monotonicity guard
   * at ParquetRewriter.java:256-258 exists only to enable its single
   * forward pass); the rewrite is copy-on-write at file granularity (clean
-  * files untouched, the S6 passthrough analog), executed once at
+  * files untouched, the S6 passthrough analog) and, inside a dirty file,
+  * at row-group granularity (clean groups copied raw), executed once at
   * `commit()` so any number of buffered upsert/delete calls costs one
   * merge job.
   */
 final class GraftRewriter private (
-    spark: SparkSession, dir: String, keyCol: String,
-    layout: ParquetLayout) {
+    spark: SparkSession, dir: String, keyCol: String) {
 
   private val table = MutableParquetTable(spark, dir, keyCol)
   private var batches: List[DataFrame] = Nil
@@ -84,9 +84,8 @@ final class GraftRewriter private (
 object GraftRewriter {
 
   /** Open an existing key-sorted table for rewriting. */
-  def apply(spark: SparkSession, dir: String, keyCol: String,
-            layout: ParquetLayout = ParquetLayout()): GraftRewriter =
-    new GraftRewriter(spark, dir, keyCol, layout)
+  def apply(spark: SparkSession, dir: String, keyCol: String): GraftRewriter =
+    new GraftRewriter(spark, dir, keyCol)
 
   /** Create a new key-sorted table from a DataFrame, then open it —
     * ≙ writing the reference's initial sorted file
@@ -94,6 +93,6 @@ object GraftRewriter {
   def create(df: DataFrame, dir: String, keyCol: String, numFiles: Int,
              layout: ParquetLayout = ParquetLayout()): GraftRewriter = {
     ParquetTable.writeSorted(df, dir, keyCol, numFiles, layout)
-    new GraftRewriter(df.sparkSession, dir, keyCol, layout)
+    new GraftRewriter(df.sparkSession, dir, keyCol)
   }
 }

@@ -344,8 +344,9 @@ final class GraftTable private (val spark: SparkSession, val root: String,
     * become writable immediately. The column lands on a
     * `widenedColumns` marker while pre-ALTER files survive: byte-splice
     * maintenance must not mix physical shapes in one file, so
-    * compaction switches to the purging rewrite and the row-group merge
-    * falls back to the file-level path; the marker clears once no such
+    * compaction switches to the purging rewrite (a merge's rewrite task
+    * rewrites such a file whole: its parquet schema differs from the
+    * write schema); the marker clears once no such
     * file remains (replace / purging compact / a merge that rewrote
     * everything). Any other retype — narrowing, string↔numeric,
     * decimal — refuses: it would misread committed files. Key columns
@@ -1130,7 +1131,10 @@ object GraftTable {
     * The base is written all-nullable so every file the chain will ever
     * hold (merge rewrites are nullable by construction) shares one
     * physical schema — which keeps raw-concat compaction eligible across
-    * the whole table instead of stopping at schema boundaries. */
+    * the whole table instead of stopping at schema boundaries. `layout`
+    * is recorded in the manifest (all but its file-count cap): every
+    * later rewrite writes under it, so merges keep the codec and row
+    * group size, and a merge's re-encoded groups stay group-sized. */
   def create(df: DataFrame, root: String, key: String, numFiles: Int,
              layout: graft.sources.ParquetLayout =
                graft.sources.ParquetLayout(),
@@ -1177,6 +1181,9 @@ object GraftTable {
       moreKeys = moreKeys).commitManifest(s"$root/base")
     buckets.foreach(n =>
       graft.sources.MutableParquetTable.annotateBuckets(s"$root/base", n))
+    val recorded = layout.copy(maxRecordsPerFile = None)
+    if (recorded != graft.sources.ParquetLayout())
+      graft.sources.Manifest.update(s"$root/base")(_.copy(layout = recorded))
     if (checks.nonEmpty)
       graft.sources.GraftChecks.annotateChecks(s"$root/base", checks)
     if (defaults.nonEmpty || generated.nonEmpty)

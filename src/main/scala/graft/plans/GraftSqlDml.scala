@@ -3,7 +3,7 @@ package graft.plans
 import scala.annotation.tailrec
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Expression, Literal, Not}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Expression, Literal, Not, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -395,9 +395,12 @@ final case class GraftDeleteCommand(delete: DeleteFromTable)
       }
     if (!usedTombstones) {
       val latest = graft.streaming.CdcMergeSink.latestSnapshot(root)
-      val zoneWorthwhile = graft.sources.Manifest.read(latest)
-        .map(graft.sources.ZoneDelete.classify(_, latest, delete.condition))
-        .exists(c => c.total == 0 || c.provenFraction >= 0.5)
+      // the zone rewrite evaluates its predicate row by row inside the
+      // rewrite task, which a subquery cannot be
+      val zoneWorthwhile = !SubqueryExpression.hasSubquery(delete.condition) &&
+        graft.sources.Manifest.read(latest)
+          .map(graft.sources.ZoneDelete.classify(_, latest, delete.condition))
+          .exists(c => c.total == 0 || c.provenFraction >= 0.5)
       if (zoneWorthwhile) {
         GraftDmlRule.lastDeleteStrategy = "zone"
         // re-resolvable form of the statement's own predicate: attribute
@@ -444,9 +447,11 @@ final case class GraftUpdateCommand(update: UpdateTable)
     val assignsKey = update.assignments.exists(a =>
       keys.exists(_.equalsIgnoreCase(assignmentName(a))))
     val latest = graft.streaming.CdcMergeSink.latestSnapshot(root)
-    val zoneWorthwhile = !assignsKey && graft.sources.Manifest.read(latest)
-      .map(graft.sources.ZoneDelete.classify(_, latest, cond))
-      .exists(c => c.total == 0 || c.keep.size * 2 >= c.total)
+    val zoneWorthwhile = !assignsKey &&
+      !(cond +: update.assignments.map(_.value)).exists(SubqueryExpression.hasSubquery) &&
+      graft.sources.Manifest.read(latest)
+        .map(graft.sources.ZoneDelete.classify(_, latest, cond))
+        .exists(c => c.total == 0 || c.keep.size * 2 >= c.total)
     if (zoneWorthwhile) {
       GraftDmlRule.lastUpdateStrategy = "zone"
       def unresolve(e: Expression): Expression = e.transform {

@@ -1,17 +1,23 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.{Partitioner, SparkEnv, TaskContext}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, BoundReference, Expression, GenericInternalRow, GetStructField, InterpretedOrdering, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeSet, BindReferences, BoundReference, Expression, GenericInternalRow, GetStructField, InterpretedOrdering, JoinedRow, Predicate, SortOrder, SubqueryExpression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode, UnsafeExternalRowSorter}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StructField, StructType}
@@ -19,31 +25,47 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 
-/** The key-clustered copy-on-write rewrite: ONE sorted pass per dirty
-  * file — the reference's rewrite loop (a sorted stream of upserts and
-  * deletes merged into a key-sorted file, ParquetRewriter.java:253-322),
-  * one rewriter per file (README.md:45-48), run as one Spark job.
+/** The copy-on-write rewrite: ONE sorted pass per dirty file — the
+  * reference's rewrite loop (a sorted stream of upserts and deletes
+  * merged into a key-sorted file, ParquetRewriter.java:253-322), one
+  * rewriter per file (README.md:45-48), run as one Spark job. It is the
+  * only code that rewrites a data file for a merge on the key-clustered
+  * layout or for a zone-map DELETE/UPDATE.
   *
-  * Only the batch moves. Its rows, plus the snapshot's tombstoned keys
-  * as deletes, are routed to their owner file (the last file whose
+  * A merge moves only its batch. Its rows, plus the snapshot's tombstoned
+  * keys as deletes, are routed to their owner file (the last file whose
   * min <= key), shuffled to that file's task and sorted by (owner, key
   * tuple). Dirty files are packed into at most `defaultParallelism`
   * contiguous groups balanced by bytes, one task per group. Each task
-  * streams its files in key order through Spark's ParquetFileFormat
-  * reader, two-pointer merges the batch rows each file owns, and writes
-  * exactly one output per input through [[GraftDataWriter]]: no output
-  * committer, no table shuffle, no table sort. An output is written
-  * under a hidden temporary name and renamed to a name fixed by (merge,
+  * reads a dirty file's footer once and routes the batch rows the file
+  * owns to its row groups by the same rule ([[RowGroupCoW]]): clean
+  * groups are copied raw, and only the dirty runs stream through Spark's
+  * ParquetFileFormat reader and the two-pointer merge with their batch
+  * rows, re-encoded through [[GraftDataWriter]] under the table's
+  * layout. A file whose parquet schema differs from the write schema
+  * (widened, dropped, evolved or required columns), a file of one row
+  * group and a file whose every group is dirty are rewritten whole.
+  * Tombstoned keys never dirty a group: the carried sidecar keeps hiding
+  * the rows they leave in clean groups.
+  *
+  * A zone-map DELETE/UPDATE is the same job with no batch: its row
+  * filter and projection, bound to the physical schema, run over each
+  * file's rows in the task, and outputs keep a bucketed file's `b<id>-`
+  * name prefix.
+  *
+  * Either way there is no output committer, no table shuffle and no
+  * table sort, and exactly one output per input. An output is written
+  * under a hidden temporary name and renamed to a name fixed by (rewrite,
   * input), so a retried or speculative attempt replaces it instead of
   * adding a second copy. Every task reports its outputs' zone map from
   * the writer's own footer, so the commit sweeps no footers for them.
   *
-  * Semantics equal tombstone subtraction + [[graft.operators.MergeOps]]
+  * Merge semantics equal tombstone subtraction + [[graft.operators.MergeOps]]
   * `applyMutationsMulti`: every batch or tombstoned key removes the base
   * rows with that key tuple (SQL equality, so a key with a null member
   * matches nothing), and the batch's `upsert` rows are written. A file
-  * found out of key order (a bare directory written unsorted) is sorted
-  * inside its task and merged again. */
+  * (or run) found out of key order (a bare directory written unsorted)
+  * is sorted inside its task and merged again. */
 private[sources] object CowRewrite {
 
   /** A dirty input, in table key order, and the name its output takes. */
@@ -54,13 +76,32 @@ private[sources] object CowRewrite {
   final case class Written(file: String, range: Option[ParquetStats.FileKeyRange],
                            bytes: Long)
 
+  /** What a rewrite does to its files' rows. */
+  sealed trait Change
+
+  /** Merge `batch` (logical columns plus `opCol`), routed by the table's
+    * key-ordered zone map `ranges`; `tombstones` is the snapshot's
+    * sidecar (columns `__k0..__kn`). */
+  final case class Merge(ranges: Seq[ParquetStats.FileKeyRange], batch: DataFrame,
+                         opCol: String, tombstones: Option[DataFrame])
+      extends Change
+
+  /** Keep the rows where `keep` holds, written as `project` — both over
+    * the table's logical columns; there is no batch. */
+  final case class Rewrite(keep: Column, project: Seq[Column]) extends Change
+
+  /** A [[Rewrite]] bound to the physical write schema. */
+  final case class RowOp(keep: Expression, project: Seq[Expression])
+
   /** Everything a rewrite task needs. `schema` is the physical write
-    * schema; `owners` maps each table file (key order) to its source
-    * ordinal, -1 for clean files; `mins` are the files' encoded minimum
-    * keys, for routing; `groupOf` is the task of each source. */
+    * schema, `layout` the table's; `owners` maps each table file (key
+    * order) to its source ordinal, -1 for clean files; `mins` are the
+    * files' encoded minimum keys, for routing; `groupOf` is the task of
+    * each source; `rows` is set for a rewrite with no batch. */
   final case class Spec(outDir: String, keys: Seq[String], schema: StructType,
-                        sources: IndexedSeq[Source], groupOf: Array[Int],
-                        owners: Array[Int], mins: Array[Array[Byte]]) {
+                        layout: ParquetLayout, sources: IndexedSeq[Source],
+                        groupOf: Array[Int], owners: Array[Int],
+                        mins: Array[Array[Byte]], rows: Option[RowOp]) {
     def groups: Int = groupOf.lastOption.fold(0)(_ + 1)
   }
 
@@ -74,18 +115,16 @@ private[sources] object CowRewrite {
   private val OutSchema: StructType =
     ParquetStats.keyStatsSchema.add(StructField("bytes", LongType, nullable = false))
 
-  /** Rewrite the `dirty` files (by name) of a key-clustered table whose
-    * key-ordered zone map is `ranges`, writing outputs into `outDir`.
-    * `batch` carries the logical columns of `logical` plus `opCol`;
-    * `tombstones` the snapshot's sidecar (columns `__k0..__kn`);
-    * `recordedBytes` the manifest's per-file sizes by name. */
+  /** Rewrite `files` (the dirty files, in table key order) of a table
+    * whose logical schema is `logical`, writing one output per input
+    * into `outDir` under `layout`. `recordedBytes` holds the manifest's
+    * per-file sizes by name. */
   def run(spark: SparkSession, outDir: String, keys: Seq[String],
-          ranges: Seq[ParquetStats.FileKeyRange], dirty: Set[String],
-          recordedBytes: Map[String, Long], batch: DataFrame, opCol: String,
+          files: Seq[String], recordedBytes: Map[String, Long],
           logical: StructType, renames: Map[String, String],
-          tombstones: Option[DataFrame]): Seq[Written] =
-    plan(spark, outDir, keys, ranges, dirty, recordedBytes, batch, opCol,
-        logical, renames, tombstones)
+          layout: ParquetLayout, change: Change): Seq[Written] =
+    plan(spark, outDir, keys, files, recordedBytes, logical, renames, layout,
+        change)
       .collect().toSeq.groupBy(_.getString(0)).toSeq.map { case (f, groups) =>
         Written(f, ParquetStats.fromGroupRows(f, groups),
           groups.head.getLong(OutSchema.size - 1))
@@ -94,47 +133,73 @@ private[sources] object CowRewrite {
   /** The rewrite as a DataFrame of [[OutSchema]] rows; collecting it
     * runs the one job. */
   private[sources] def plan(spark: SparkSession, outDir: String,
-      keys: Seq[String], ranges: Seq[ParquetStats.FileKeyRange],
-      dirty: Set[String], recordedBytes: Map[String, Long], batch: DataFrame,
-      opCol: String, logical: StructType, renames: Map[String, String],
-      tombstones: Option[DataFrame]): DataFrame = {
+      keys: Seq[String], files: Seq[String], recordedBytes: Map[String, Long],
+      logical: StructType, renames: Map[String, String], layout: ParquetLayout,
+      change: Change): DataFrame = {
     val id = java.util.UUID.randomUUID().toString
     val hc = spark.sparkContext.hadoopConfiguration
-    val sources = ranges.map(_.file).filter(f => dirty(nameOf(f)))
-      .zipWithIndex.map { case (f, i) =>
-        Source(f, recordedBytes.getOrElse(nameOf(f), {
-            val p = new Path(f)
-            p.getFileSystem(hc).getFileStatus(p).getLen
-          }),
-          f"part-$i%05d-$id-c000.snappy.parquet")
-      }.toIndexedSeq
-    val ordinal = sources.map(_.path).zipWithIndex.toMap
-    val spec = Spec(outDir, keys,
-      nullable(MutableParquetTable.physicalSchemaOf(logical, renames))
-        .asInstanceOf[StructType],
-      sources, pack(sources.map(_.bytes), spark.sparkContext.defaultParallelism),
-      ranges.map(r => ordinal.getOrElse(r.file, -1)).toArray,
-      ranges.map(_.minBytes).toArray)
+    val ext = layout.codec.getExtension
+    val sources = files.zipWithIndex.map { case (f, i) =>
+      Source(f, recordedBytes.getOrElse(nameOf(f), {
+          val p = new Path(f)
+          p.getFileSystem(hc).getFileStatus(p).getLen
+        }),
+        f"${MutableParquetTable.bucketPrefixOf(f)}part-$i%05d-$id-c000$ext.parquet")
+    }.toIndexedSeq
+    val physical = nullable(MutableParquetTable.physicalSchemaOf(logical, renames))
+      .asInstanceOf[StructType]
     // [kind, physical columns...]: batch rows, then tombstoned keys
-    def rows(df: DataFrame, kind: Column)(value: StructField => Column) =
-      df.select(kind.as("__kind") +: logical.fields.toSeq.map(f =>
-        value(f).as(renames.getOrElse(f.name, f.name))): _*)
-    val mutations = rows(batch,
-      when(col(opCol) === "upsert", Upsert).otherwise(Delete))(f =>
-      col(s"`${f.name.replace("`", "``")}`"))
-    val child = tombstones.fold(mutations)(ts =>
-      mutations.unionByName(rows(ts, lit(Tombstone))(f =>
-        keys.indexWhere(_.equalsIgnoreCase(f.name)) match {
-          case -1 => lit(null).cast(f.dataType)
-          case i  => col(s"__k$i").cast(f.dataType)
-        })))
+    val kindField = StructField("__kind", IntegerType, nullable = false)
+    val (ranges, child, rowOp) = change match {
+      case Merge(ranges, batch, opCol, tombstones) =>
+        def rows(df: DataFrame, kind: Column)(value: StructField => Column) =
+          df.select(kind.as(kindField.name) +: logical.fields.toSeq.map(f =>
+            value(f).as(renames.getOrElse(f.name, f.name))): _*)
+        val mutations = rows(batch,
+          when(col(opCol) === "upsert", Upsert).otherwise(Delete))(f =>
+          col(s"`${f.name.replace("`", "``")}`"))
+        val all = tombstones.fold(mutations)(ts =>
+          mutations.unionByName(rows(ts, lit(Tombstone))(f =>
+            keys.indexWhere(_.equalsIgnoreCase(f.name)) match {
+              case -1 => lit(null).cast(f.dataType)
+              case i  => col(s"__k$i").cast(f.dataType)
+            })))
+        (ranges, all.queryExecution.analyzed, None)
+      case Rewrite(keep, project) =>
+        (Nil, LocalRelation(DataTypeUtils.toAttributes(
+            StructType(kindField +: physical.fields))),
+          Some(bind(spark, logical, keep, project)))
+    }
+    val ordinal = sources.map(_.path).zipWithIndex.toMap
+    val spec = Spec(outDir, keys, physical, layout, sources,
+      pack(sources.map(_.bytes), spark.sparkContext.defaultParallelism),
+      ranges.map(r => ordinal.getOrElse(r.file, -1)).toArray,
+      ranges.map(_.minBytes).toArray, rowOp)
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val strategies = classic.experimental.extraStrategies
     if (!strategies.contains(Strategy))
       classic.experimental.extraStrategies = strategies :+ Strategy
     org.apache.spark.sql.classic.GraftShims.ofRows(classic,
-      Node(spec, DataTypeUtils.toAttributes(OutSchema),
-        child.queryExecution.analyzed))
+      Node(spec, DataTypeUtils.toAttributes(OutSchema), child))
+  }
+
+  /** `keep` and `project`, resolved against a table of schema `logical`
+    * and bound to column positions — which the physical schema shares. */
+  private def bind(spark: SparkSession, logical: StructType, keep: Column,
+                   project: Seq[Column]): RowOp = {
+    val probe = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], logical)
+    probe.select(keep.as("__keep") +: project: _*).queryExecution.optimizedPlan match {
+      case p @ Project(list, scan) if !p.expressions.exists(SubqueryExpression.hasSubquery) =>
+        val bound = list.map(e => BindReferences.bindReference(e match {
+          case a: Alias => a.child
+          case other => other
+        }, scan.output))
+        RowOp(bound.head, bound.tail)
+      case other => throw new IllegalArgumentException(
+        "a zone-map rewrite needs a row-level condition and assignments " +
+          s"(no subqueries): $other")
+    }
   }
 
   /** Task index of each input: contiguous groups, at most `slots` of
@@ -163,10 +228,11 @@ private[sources] object CowRewrite {
     cut(lo)
   }
 
-  /** Ordinal of the file owning encoded key `kb` among key-ordered
-    * `mins`: the last file whose min <= key, else the first (the
-    * reference's "insert into the current block" rule,
-    * ParquetRewriter.java:263-283). A null key sorts first. */
+  /** Ordinal of the unit (a file of the table, or a row group of a file)
+    * owning encoded key `kb` among key-ordered `mins`: the last unit
+    * whose min <= key, else the first (the reference's "insert into the
+    * current block" rule, ParquetRewriter.java:263-283). A null key
+    * sorts first. */
   def ownerOf(kb: Array[Byte], mins: Array[Array[Byte]]): Int = {
     var lo = 0
     var hi = mins.length - 1
@@ -253,7 +319,11 @@ private[sources] object CowRewrite {
       "numFiles" -> SQLMetrics.createMetric(sparkContext, "number of files rewritten"),
       "filesSize" -> SQLMetrics.createSizeMetric(sparkContext, "size of files rewritten"),
       "rowsWritten" -> SQLMetrics.createMetric(sparkContext, "number of rows written"),
-      "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+      "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+      "groupsSpliced" -> SQLMetrics.createMetric(sparkContext,
+        "number of row groups copied raw"),
+      "groupsReencoded" -> SQLMetrics.createMetric(sparkContext,
+        "number of row groups re-encoded"))
 
     override protected def withNewChildInternal(c: SparkPlan): Exec =
       copy(child = c)
@@ -269,69 +339,75 @@ private[sources] object CowRewrite {
         Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), hc)
       val conf = sparkContext.broadcast(new SerializableConfiguration(hc))
       val mins = sparkContext.broadcast(s.mins)
-      val (files, size, written, outRows) = (longMetric("numFiles"),
-        longMetric("filesSize"), longMetric("rowsWritten"),
-        longMetric("numOutputRows"))
+      val m = Seq("numFiles", "filesSize", "rowsWritten", "numOutputRows",
+        "groupsSpliced", "groupsReencoded").map(n => n -> longMetric(n)).toMap
 
-      // map side: (owner, kind, key tuple) -> physical row
-      val keyed = child.execute().mapPartitions { it =>
-        val lead = keyExpr(s.schema, s.keys.head, 1)
-        val owner = new GenericInternalRow(1)
-        val joined = new JoinedRow
-        val toKey = UnsafeProjection.create(
-          BoundReference(0, IntegerType, nullable = false) +:
-            BoundReference(1, IntegerType, nullable = false) +:
-            s.keys.map(keyExpr(s.schema, _, 2)))
-        val toRow = UnsafeProjection.create(s.schema.fields.toSeq.zipWithIndex
-          .map { case (f, i) => BoundReference(1 + i, f.dataType, nullable = true) })
-        it.flatMap { r =>
-          val d = s.owners(ownerOf(keyBytes(lead.eval(r)), mins.value))
-          if (d >= 0) {
-            owner.update(0, d)
-            Iterator.single((toKey(joined(owner, r)).copy(): InternalRow,
-              toRow(r).copy(): InternalRow))
-          } else if (r.getInt(0) == Tombstone) Iterator.empty // stays in the sidecar
-          else throw new IllegalStateException("a batch key routes to a " +
-            "file the merge did not mark dirty — the batch changed between " +
-            "routing and rewrite (is it deterministic?)")
+      // batch rows by (owner, kind, key tuple), grouped per task; a
+      // rewrite with no batch runs its tasks over nothing
+      val sorted: RDD[(InternalRow, InternalRow)] =
+        if (s.rows.isDefined)
+          sparkContext.parallelize(Seq.empty[(InternalRow, InternalRow)], s.groups)
+        else {
+          val keyed = child.execute().mapPartitions { it =>
+            val lead = keyExpr(s.schema, s.keys.head, 1)
+            val owner = new GenericInternalRow(1)
+            val joined = new JoinedRow
+            val toKey = UnsafeProjection.create(
+              BoundReference(0, IntegerType, nullable = false) +:
+                BoundReference(1, IntegerType, nullable = false) +:
+                s.keys.map(keyExpr(s.schema, _, 2)))
+            val toRow = UnsafeProjection.create(s.schema.fields.toSeq.zipWithIndex
+              .map { case (f, i) => BoundReference(1 + i, f.dataType, nullable = true) })
+            it.flatMap { r =>
+              val d = s.owners(ownerOf(keyBytes(lead.eval(r)), mins.value))
+              if (d >= 0) {
+                owner.update(0, d)
+                Iterator.single((toKey(joined(owner, r)).copy(): InternalRow,
+                  toRow(r).copy(): InternalRow))
+              } else if (r.getInt(0) == Tombstone) Iterator.empty // stays in the sidecar
+              else throw new IllegalStateException("a batch key routes to a " +
+                "file the merge did not mark dirty — the batch changed between " +
+                "routing and rewrite (is it deterministic?)")
+            }
+          }
+          new ShuffledRDD[InternalRow, InternalRow, InternalRow](
+              keyed, new ByGroup(s.groupOf, s.groups))
+            .setKeyOrdering(ascending(
+              BoundReference(0, IntegerType, nullable = false) +:
+                s.keys.zipWithIndex.map { case (k, i) =>
+                  BoundReference(2 + i, keyExpr(s.schema, k, 0).dataType,
+                    nullable = true) }))
         }
-      }
-      val keyTypes = s.keys.map(keyExpr(s.schema, _, 0).dataType)
-      val sorted = new ShuffledRDD[InternalRow, InternalRow, InternalRow](
-          keyed, new ByGroup(s.groupOf, s.groups))
-        .setKeyOrdering(ascending(
-          BoundReference(0, IntegerType, nullable = false) +:
-            keyTypes.zipWithIndex.map { case (t, i) =>
-              BoundReference(2 + i, t, nullable = true) }))
 
       sorted.mapPartitionsWithIndex { (g, it) =>
         val rows = it.buffered
-        val merger = new Merger(s)
+        val hconf = conf.value.value
+        val merger = new Merger(s, hconf, g)
         val toOut = CatalystTypeConverters.createToCatalystConverter(OutSchema)
         val unsafe = UnsafeProjection.create(OutSchema)
         s.groupOf.indices.filter(s.groupOf(_) == g).iterator.flatMap { d =>
           val src = s.sources(d)
-          val owned = new Iterator[(InternalRow, InternalRow)] {
-            def hasNext: Boolean = rows.hasNext && rows.head._1.getInt(0) == d
-            def next(): (InternalRow, InternalRow) = rows.next()
-          }
-          def base(): Iterator[InternalRow] = read(PartitionedFile(
-            InternalRow.empty, SparkPath.fromPathString(src.path), 0L,
-            src.bytes, Array.empty[String], 0L, src.bytes))
+          val owned = scala.collection.mutable.ArrayBuffer.empty[(InternalRow, InternalRow)]
+          while (rows.hasNext && rows.head._1.getInt(0) == d) owned += rows.next()
+          def base(start: Long, length: Long): Iterator[InternalRow] =
+            read(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(src.path),
+              start, length, Array.empty[String], 0L, src.bytes))
           val tmp = s"${s.outDir}/.${src.outName}.${TaskContext.get.taskAttemptId()}.tmp"
-          val (out, n) = merger.rewrite(base, owned, tmp, conf.value.value)
-          files.add(1)
-          size.add(src.bytes)
-          written.add(n)
-          out.toSeq.flatMap { footer =>
+          val out = merger.mergeFile(src, owned, base, tmp)
+          m("numFiles").add(1)
+          m("filesSize").add(src.bytes)
+          m("rowsWritten").add(out.rows)
+          m("groupsSpliced").add(out.spliced)
+          m("groupsReencoded").add(out.reencoded)
+          out.footer.toSeq.flatMap { footer =>
             val dst = new Path(s.outDir, src.outName)
-            val fs = dst.getFileSystem(conf.value.value)
+            val fs = dst.getFileSystem(hconf)
             if (!fs.rename(new Path(tmp), dst) &&
                 !(fs.delete(dst, false) && fs.rename(new Path(tmp), dst)))
               throw new java.io.IOException(s"cannot rename $tmp to $dst")
             val bytes = fs.getFileStatus(dst).getLen
             ParquetStats.footerRows(dst.toString, s.keys.head, footer).map { r =>
-              outRows.add(1)
+              m("numOutputRows").add(1)
               unsafe(toOut(Row.fromSeq(r.toSeq :+ bytes)).asInstanceOf[InternalRow])
                 .copy(): InternalRow
             }
@@ -349,53 +425,139 @@ private[sources] object CowRewrite {
 
   private object OutOfOrder extends RuntimeException(null, null, false, false)
 
-  /** One task's merge kernel; projections and orderings are built once
-    * per task. */
-  private final class Merger(s: Spec) {
+  /** Batch rows as the shuffle delivers them: (owner, kind, key tuple)
+    * and the physical row. */
+  private type Rows = collection.IndexedSeq[(InternalRow, InternalRow)]
+
+  /** One rewritten file: its footer (None when no row survives, and
+    * nothing is written), rows written, and source row groups copied raw
+    * and re-encoded. */
+  private final case class Out(footer: Option[ParquetMetadata], rows: Long,
+                               spliced: Int, reencoded: Int)
+
+  /** One task's rewrite kernel; projections, orderings and the expected
+    * parquet schema are built once per task (`part`). */
+  private final class Merger(s: Spec, conf: Configuration, part: Int) {
     private val keys = s.keys.map(keyExpr(s.schema, _, 0))
     private val order = ascending(keys.indices.map(i =>
       BoundReference(i, keys(i).dataType, nullable = true)))
     private val (baseKeyA, baseKeyB, batchKey) =
       (UnsafeProjection.create(keys), UnsafeProjection.create(keys),
         UnsafeProjection.create(keys))
+    // what GraftDataWriter writes: a file in exactly this schema can take
+    // re-encoded runs between its raw-copied groups
+    private val written = new SparkToParquetSchemaConverter(conf).convert(s.schema)
+    private val rowOp: Iterator[InternalRow] => Iterator[InternalRow] =
+      s.rows.fold(identity[Iterator[InternalRow]] _) { op =>
+        val keep = Predicate.create(op.keep)
+        val project = UnsafeProjection.create(op.project)
+        keep.initialize(part)
+        project.initialize(part)
+        _.filter(keep.eval).map(project)
+      }
 
-    /** Merge one file into `tmp`: returns the written file's footer (None
-      * when no row survives, and nothing is written) and the row count. */
-    def rewrite(base: () => Iterator[InternalRow],
-                owned: Iterator[(InternalRow, InternalRow)], tmp: String,
-                conf: org.apache.hadoop.conf.Configuration)
-        : (Option[org.apache.parquet.hadoop.metadata.ParquetMetadata], Long) = {
-      // batch rows taken while base rows remain are kept: an out-of-order
-      // base file is merged again, sorted, from the start
-      val taken = scala.collection.mutable.ArrayBuffer.empty[(InternalRow, InternalRow)]
-      var keep = true
-      val batch = owned.map { kv => if (keep) taken += kv; kv }.buffered
-      def attempt(rows: Iterator[InternalRow],
-                  batch: BufferedIterator[(InternalRow, InternalRow)]) = {
-        val w = new GraftDataWriter(tmp, s.schema, conf)
+    /** Rewrite `src` with the batch rows it `owned` (sorted by key) into
+      * `tmp`; `base(start, length)` reads the source rows of a split. */
+    def mergeFile(src: Source, owned: Rows,
+                  base: (Long, Long) => Iterator[InternalRow], tmp: String): Out = {
+      val in = HadoopInputFile.fromPath(new Path(src.path), conf)
+      val reader = ParquetFileReader.open(in)
+      try {
+        val footer = reader.getFooter
+        val blocks = footer.getBlocks.asScala.toIndexedSeq
+        def whole(): Out = {
+          val (f, n) = rewrite(() => rowOp(base(0L, src.bytes)), owned, tmp)
+          Out(f, n, 0, blocks.size)
+        }
+        val bounds =
+          if (s.rows.isDefined || blocks.size < 2 ||
+              footer.getFileMetaData.getSchema != written) None
+          else RowGroupCoW.bounds(src.path, s.keys.head, footer)
+        bounds.fold(whole()) { b =>
+          val mins = b.map(_._1).toArray
+          val groupOf = owned.map(kv => ownerOf(keyBytes(kv._1.get(2, keys.head.dataType)), mins))
+          val runs = RowGroupCoW.runs(b, owned.indices
+            .filter(owned(_)._1.getInt(1) != Tombstone).map(groupOf).toSet)
+          if (runs.forall(_._1)) whole()
+          else splice(src, in, reader, blocks, runs, owned, groupOf, base, tmp)
+        }
+      } finally reader.close()
+    }
+
+    /** `runs` of the source written into `tmp` in key order: clean runs
+      * copied raw, dirty runs merged with the batch rows routed to them
+      * and appended. */
+    private def splice(src: Source, in: HadoopInputFile, reader: ParquetFileReader,
+                       blocks: IndexedSeq[BlockMetaData], runs: Seq[(Boolean, Range)],
+                       owned: Rows, groupOf: collection.IndexedSeq[Int],
+                       base: (Long, Long) => Iterator[InternalRow],
+                       tmp: String): Out = {
+      val fs = new Path(tmp).getFileSystem(conf)
+      val out = new ParquetFileWriter(HadoopOutputFile.fromPath(new Path(tmp), conf),
+        written, ParquetFileWriter.Mode.OVERWRITE, ParquetWriter.DEFAULT_BLOCK_SIZE, 0)
+      val stream = in.newStream()
+      var next = 0 // first batch row not yet routed to a run
+      var rows = 0L
+      try {
+        out.start()
+        runs.zipWithIndex.foreach { case ((dirty, groups), k) =>
+          val from = next
+          while (next < owned.size && groupOf(next) <= groups.last) next += 1
+          if (!dirty) { // its tombstoned keys stay hidden by the sidecar
+            RowGroupCoW.copy(reader, stream, groups.map(blocks), out)
+            rows += groups.map(blocks(_).getRowCount).sum
+          } else {
+            val run = s"$tmp.run$k"
+            val (start, length) = RowGroupCoW.span(blocks, groups.head, groups.last)
+            val (footer, n) = rewrite(() => base(start, length), owned.slice(from, next), run)
+            rows += n
+            footer.foreach { f =>
+              val runIn = HadoopInputFile.fromPath(new Path(run), conf)
+              val runReader = ParquetFileReader.open(runIn)
+              val runStream = runIn.newStream()
+              try RowGroupCoW.copy(runReader, runStream, f.getBlocks.asScala.toSeq, out)
+              finally { runStream.close(); runReader.close() }
+              fs.delete(new Path(run), false)
+            }
+          }
+        }
+        out.end(reader.getFooter.getFileMetaData.getKeyValueMetaData)
+      } catch { case e: Throwable =>
+        try out.close() catch { case c: Throwable => e.addSuppressed(c) }
+        runs.indices.foreach(k => fs.delete(new Path(s"$tmp.run$k"), false))
+        fs.delete(new Path(tmp), false)
+        throw e
+      } finally stream.close()
+      val dirtyGroups = runs.collect { case (true, g) => g.size }.sum
+      Out(Some(out.getFooter), rows, blocks.size - dirtyGroups, dirtyGroups)
+    }
+
+    /** Merge key-ordered rows into `tmp`: returns the written file's
+      * footer (None when no row survives, and nothing is written) and the
+      * row count. */
+    private def rewrite(base: () => Iterator[InternalRow], owned: Rows, tmp: String)
+        : (Option[ParquetMetadata], Long) = {
+      def attempt(rows: Iterator[InternalRow]) = {
+        val w = new GraftDataWriter(tmp, s.schema, conf, s.layout)
         var n = 0L
-        try merge(rows, batch, { r => w.write(r); n += 1 }, () => keep = false)
+        try merge(rows, owned.iterator.buffered, { r => w.write(r); n += 1 })
         catch { case e: Throwable => w.abort(); throw e }
         (w.commit() match {
           case GraftFileCommitted(_) => Some(w.footer)
           case _ => None
         }, n)
       }
-      try attempt(base(), batch)
-      catch {
-        case OutOfOrder =>
-          keep = false
-          // `taken` holds every row `batch` fetched, its buffered head too
-          attempt(sort(base()), (taken.iterator ++ owned).buffered)
-      }
+      // an out-of-order base is merged again, sorted, from the start
+      try attempt(base())
+      catch { case OutOfOrder => attempt(sort(base())) }
     }
 
-    /** The two-pointer merge of a key-ordered file with the key-ordered
-      * batch rows it owns. Throws [[OutOfOrder]] on a base row whose key
-      * is below its predecessor's. */
+    /** The two-pointer merge of key-ordered base rows with the
+      * key-ordered batch rows they own. Throws [[OutOfOrder]] on a base
+      * row whose key is below its predecessor's. */
     private def merge(base: Iterator[InternalRow],
                       batch: BufferedIterator[(InternalRow, InternalRow)],
-                      out: InternalRow => Unit, baseDone: () => Unit): Unit = {
+                      out: InternalRow => Unit): Unit = {
       var row: InternalRow = null
       var key: UnsafeRow = null
       var flip = false
@@ -407,7 +569,7 @@ private[sources] object CowRewrite {
           flip = !flip
           if (key != null && order.compare(key, k) > 0) throw OutOfOrder
           key = k
-        } else { row = null; baseDone() }
+        } else row = null
       advance()
       while (batch.hasNext) {
         val bk = batchKey(batch.head._2).copy()

@@ -84,10 +84,8 @@ object GraftBucket {
     val sorted = df.withColumn(bcol, bucketIdCol(col(key), n))
       .repartition(n, col(bcol))
       .sortWithinPartitions((bcol +: key +: moreKeys).map(col): _*)
-    var w = sorted.write.mode("overwrite").partitionBy(bcol)
-    layout.rowGroupBytes.foreach(b => w = w.option("parquet.block.size", b.toString))
-    layout.maxRecordsPerFile.foreach(m => w = w.option("maxRecordsPerFile", m.toString))
-    w = w.option("compression", layout.compression)
+    val w = ParquetTable.withLayout(
+      sorted.write.mode("overwrite").partitionBy(bcol), layout, df.schema)
     ParquetTable.withMicrosTimestamps(df.sparkSession) { w.parquet(staging) }
     Files.createDirectories(Paths.get(outDir))
     import scala.jdk.CollectionConverters._

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{BooleanType, StructType}
 
 /** Table CHECK constraints: named boolean SQL expressions recorded in the
   * snapshot manifest and enforced on EVERY write path (CoW merge upserts,
-  * bucketed merges, row-group merges, INSERT OVERWRITE/replace, zone
+  * bucketed merges, INSERT OVERWRITE/replace, zone
   * UPDATE, the streaming sink and SQL DML — all of which funnel through
   * those entry points). Standard SQL semantics: a row violates a check
   * only when the expression evaluates to FALSE — NULL passes (so

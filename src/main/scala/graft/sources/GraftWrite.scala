@@ -6,7 +6,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
+import org.apache.parquet.column.ParquetProperties
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
@@ -315,11 +316,16 @@ final case class GraftWriterFactory(staging: String, schema: StructType,
 }
 
 /** One staged parquet file per task, written row-at-a-time through
-  * Spark's ParquetWriteSupport. The writer is created lazily so empty
-  * partitions stage nothing. */
-final class GraftDataWriter(path: String, schema: StructType,
-                            conf: Configuration)
+  * Spark's ParquetWriteSupport under the table's recorded `layout`
+  * (codec, row-group and page sizes, dictionary, bloom filters, writer
+  * version). The writer is created lazily so empty partitions stage
+  * nothing. */
+final class GraftDataWriter private[sources] (path: String, schema: StructType,
+    conf: Configuration, layout: ParquetLayout)
     extends DataWriter[InternalRow] {
+
+  def this(path: String, schema: StructType, conf: Configuration) =
+    this(path, schema, conf, ParquetLayout())
 
   private var writer: ParquetWriter[InternalRow] = _
 
@@ -335,10 +341,19 @@ final class GraftDataWriter(path: String, schema: StructType,
       override def getWriteSupport(cc: Configuration)
           : WriteSupport[InternalRow] = new ParquetWriteSupport
     }
-    new B(new Path(path))
+    var b = new B(new Path(path))
       .withConf(c)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
+      .withCompressionCodec(layout.codec)
+      .withDictionaryEncoding(layout.dictionaryEnabled)
+    layout.rowGroupBytes.foreach(n => b = b.withRowGroupSize(n))
+    layout.pageBytes.foreach(n => b = b.withPageSize(n.toInt))
+    layout.dictionaryOverrides(schema).foreach { case (col, on) =>
+      b = b.withDictionaryEncoding(col, on) }
+    layout.bloomFilterColumns.foreach(col => b = b.withBloomFilterEnabled(col, true))
+    layout.bloomFilterNdv.foreach { case (col, n) => b = b.withBloomFilterNDV(col, n) }
+    layout.writerVersion.foreach(v =>
+      b = b.withWriterVersion(ParquetProperties.WriterVersion.fromString(v)))
+    b.build()
   }
 
   override def write(record: InternalRow): Unit = {

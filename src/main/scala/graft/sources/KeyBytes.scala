@@ -83,8 +83,8 @@ private[graft] object KeyBytes {
     * both sides, and a rewrite sliced there would drop or duplicate the
     * straddling rows — so a dirty unit absorbs its straddled neighbor.
     * With unique keys no boundary straddles and this is the identity.
-    * Shared by file-granularity ([[MutableParquetTable]]) and
-    * row-group-granularity ([[RowGroupCoW]]) CoW. */
+    * Shared by the merge's file routing ([[MutableParquetTable]]) and the
+    * rewrite task's row-group routing ([[RowGroupCoW]]). */
   def expandNonCut(n: Int, minBytes: Int => Array[Byte],
                    maxBytes: Int => Array[Byte], dirty0: Set[Int]): Set[Int] = {
     val d = scala.collection.mutable.Set(dirty0.toSeq: _*)

@@ -32,6 +32,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    survivor markers `droppedColumns` / `widenedColumns`;
   *  - `dimRanges`: non-key per-file zone maps ([[MutableParquetTable.attachDimRanges]]);
   *  - `tombstoneRows`: size of the `_tombstones` sidecar (0 = none);
+  *  - `layout`: the parquet layout the table was created with (codec,
+  *    row-group and page sizes, dictionary, bloom filters, writer
+  *    version; never a file-count cap) — every rewrite writes under it,
+  *    so a merge keeps a rewritten file's codec and group size;
   *  - volatile per-commit stamps: `committedAtMs`, the streaming `txn`
   *    marker and `feedPending`;
   *  - `requiredFeatures`: names a reader must implement to read the
@@ -55,7 +59,8 @@ final case class Manifest(
     requiredFeatures: Seq[String] = Nil,
     dimRanges: Seq[Manifest.DimEntry] = Nil,
     txn: Option[(String, Long)] = None,
-    feedPending: Boolean = false) {
+    feedPending: Boolean = false,
+    layout: ParquetLayout = ParquetLayout()) {
 
   import Manifest._
 
@@ -217,6 +222,29 @@ object Manifest {
           .put("dtype", d.dtype).put("dmin", d.min).put("dmax", d.max)
       }
     }
+    if (m.layout != ParquetLayout()) {
+      val l = m.layout
+      val n = o.putObject("layout")
+      l.rowGroupBytes.foreach(n.put("rowGroupBytes", _))
+      n.put("compression", l.compression)
+      n.put("dictionaryEnabled", l.dictionaryEnabled)
+      l.pageBytes.foreach(n.put("pageBytes", _))
+      if (l.columnDictionary.nonEmpty) {
+        val d = n.putObject("columnDictionary")
+        l.columnDictionary.toSeq.sortBy(_._1).foreach { case (c, on) => d.put(c, on) }
+      }
+      if (l.plainTypes.nonEmpty) {
+        val a = n.putArray("plainTypes"); l.plainTypes.toSeq.sorted.foreach(a.add)
+      }
+      if (l.bloomFilterColumns.nonEmpty) {
+        val a = n.putArray("bloomFilterColumns"); l.bloomFilterColumns.foreach(a.add)
+      }
+      if (l.bloomFilterNdv.nonEmpty) {
+        val d = n.putObject("bloomFilterNdv")
+        l.bloomFilterNdv.toSeq.sortBy(_._1).foreach { case (c, v) => d.put(c, v) }
+      }
+      l.writerVersion.foreach(n.put("writerVersion", _))
+    }
     m.committedAtMs.foreach(o.put("committedAtMs", _))
     o.put("fileCount", m.files.size)
     o.put("totalRows", m.totalRows)
@@ -281,7 +309,25 @@ object Manifest {
       txn = for {
         app <- text(o, "txnApp"); epoch <- field("txnEpoch")
       } yield (app, epoch.asLong),
-      feedPending = field("feedPending").exists(_.asBoolean))
+      feedPending = field("feedPending").exists(_.asBoolean),
+      layout = field("layout").fold(ParquetLayout()) { l =>
+        def entries(name: String) =
+          opt(l, name).toSeq.flatMap(_.properties.asScala.toSeq)
+        ParquetLayout(
+          rowGroupBytes = opt(l, "rowGroupBytes").map(_.asLong),
+          compression = text(l, "compression").getOrElse("snappy"),
+          dictionaryEnabled = opt(l, "dictionaryEnabled").forall(_.asBoolean),
+          pageBytes = opt(l, "pageBytes").map(_.asLong),
+          columnDictionary = entries("columnDictionary")
+            .map(e => e.getKey -> e.getValue.asBoolean).toMap,
+          plainTypes = opt(l, "plainTypes").toSeq
+            .flatMap(_.elements.asScala.map(_.asText)).toSet,
+          bloomFilterColumns = opt(l, "bloomFilterColumns").toSeq
+            .flatMap(_.elements.asScala.map(_.asText)),
+          bloomFilterNdv = entries("bloomFilterNdv")
+            .map(e => e.getKey -> e.getValue.asLong).toMap,
+          writerVersion = text(l, "writerVersion"))
+      })
   }
 
   private def opt(n: JsonNode, name: String): Option[JsonNode] =

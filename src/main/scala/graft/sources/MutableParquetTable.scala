@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -80,10 +80,11 @@ final case class MergeResult(
   * (ParquetRewriter.java:29-40): apply upserts/deletes to a key-sorted
   * Parquet dataset while leaving clean data untouched. The reference works
   * at row-group granularity inside one file (raw passthrough,
-  * ParquetRewriter.java:312-322); at cluster scale the natural CoW unit is
+  * ParquetRewriter.java:312-322); at cluster scale the CoW unit is first
   * the *file* — clean files are passed through as metadata-only links and
-  * never opened, and each dirty file is rewritten by ONE sorted pass that
-  * merges in the batch rows it owns ([[CowRewrite]]): at most one task per
+  * never opened — and then the row group: each dirty file is rewritten by
+  * ONE sorted pass that copies its clean groups raw and merges the batch
+  * rows it owns into the dirty ones ([[CowRewrite]]): at most one task per
   * executor slot, and the batch is the only data that is shuffled.
   *
   * Keys may be any numeric type or strings — the reference's canonical key
@@ -295,9 +296,16 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     * copied) without ever being opened; on the key-clustered layout each
     * dirty file is rewritten by one sorted pass that merges in the batch
     * rows it owns ([[CowRewrite]]) — one job of at most
-    * `defaultParallelism` tasks, in which the batch is the only shuffle;
-    * manifest written last as the commit marker, from the zone maps the
-    * rewrite tasks report. Returns the merge summary. */
+    * `defaultParallelism` tasks, in which the batch is the only shuffle.
+    * Inside a dirty file only the row groups the batch routes to are
+    * re-encoded and the clean ones copied raw, so rewrite bytes scale
+    * with dirty groups; a file whose parquet schema differs from the
+    * write schema, or of one row group, is rewritten whole. Every
+    * rewrite writes under the table's recorded [[ParquetLayout]]. The
+    * empty table, the overlapped layout and bucketed tables re-merge
+    * relationally. The manifest is written last as the commit marker,
+    * from the zone maps the rewrite tasks report. Returns the merge
+    * summary. */
   def merge(batch0: DataFrame, opCol: String = "op",
             snapshotDir: Option[String] = None): MergeResult =
     mergeFrom(manifest, batch0, opCol, snapshotDir)
@@ -375,40 +383,9 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     val pt = passThroughClean(clean, outDir)
     phase("link")
 
-    // schema evolution: batch columns beyond the table schema become new
-    // NULLABLE table columns — old files read them as null (parquet's
-    // missing-column semantics), rewritten files carry them physically,
-    // and the manifest commits the evolved schema so readers see one
-    // uniform shape over the mixed-physical snapshot. Batches must still
-    // cover every existing column (partial-row upserts would silently
-    // null the untouched fields).
-    val batchData = batch.drop(opCol)
-    val missingCols = tableSchema.fieldNames
-      .filterNot(batchData.schema.fieldNames.contains)
-    require(missingCols.isEmpty || allFiles.isEmpty,
-      s"batch lacks table columns ${missingCols.mkString(", ")} — " +
-        "upserts replace whole rows, so every existing column is required")
-    // evolution adds columns, never retypes them: a drifted existing
-    // column (e.g. decimal become double after arithmetic) would be
-    // union-coerced into rewritten files whose physical types diverge
-    // from the manifest-embedded schema, failing later vectorized reads
-    val drifted = batchData.schema.fields.filter(f =>
-      tableSchema.fieldNames.contains(f.name) &&
-        MutableParquetTable.stripNullability(tableSchema(f.name).dataType) !=
-          MutableParquetTable.stripNullability(f.dataType))
-    require(drifted.isEmpty || allFiles.isEmpty,
-      "batch column types drift from the table schema: " +
-        drifted.map(f => s"${f.name} ${tableSchema(f.name).dataType
-          .simpleString}->${f.dataType.simpleString}").mkString(", ") +
-        " — cast the batch to the table types before merging")
-    val newFields = batchData.schema.fields
-      .filterNot(f => tableSchema.fieldNames.contains(f.name))
-    if (newFields.nonEmpty)
-      MutableParquetTable.guardResurrected(dir, newFields.map(_.name).toSeq)
-    val mergedSchema =
-      if (allFiles.isEmpty) batchData.schema
-      else if (newFields.isEmpty) tableSchema
-      else StructType(tableSchema.fields ++ newFields.map(_.copy(nullable = true)))
+    val mergedSchema = evolvedSchema(tableSchema, batch.drop(opCol).schema,
+      allFiles.isEmpty)
+    val layout = src.map(_.layout).getOrElse(ParquetLayout())
 
     val tombstones = MutableParquetTable.tombstoneDf(spark, dir, src)
     var inserted = 0
@@ -425,9 +402,10 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       // KEY-CLUSTERED layout: one sorted pass per dirty file; rewritten
       // files carry PHYSICAL column names (renamed tables), and tombstoned
       // keys of dirty files act as deletes
-      written = CowRewrite.run(spark, outDir, keys, ranges, dirtyNames,
-        src.map(_.bytesByName).getOrElse(Map.empty), batch, opCol,
-        mergedSchema, renames, tombstones)
+      written = CowRewrite.run(spark, outDir, keys,
+        ranges.map(_.file).filter(f => dirtyNames(fileName(f))),
+        src.map(_.bytesByName).getOrElse(Map.empty), mergedSchema, renames,
+        layout, CowRewrite.Merge(ranges, batch, opCol, tombstones))
       inserted = written.size
     } else if (needRewrite) {
       // the empty table and the overlapped layout re-merge relationally;
@@ -441,16 +419,15 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
             renames)
         else spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          batchData.schema)
+          batch.drop(opCol).schema)
       val base = tombstones.fold(base0)(withoutKeys(base0, _, keys))
       // rewritten files carry PHYSICAL column names (renamed tables)
       val merged0 = MutableParquetTable.toPhysicalNames(
         MergeOps.applyMutationsMulti(base, batch, keys, opCol), renames)
       if (allFiles.isEmpty) {
-        ParquetTable.withMicrosTimestamps(spark) {
-          merged0.repartition(1).sortWithinPartitions(keys.map(col): _*)
-            .write.mode("append").parquet(outDir)
-        }
+        ParquetTable.write(
+          merged0.repartition(1).sortWithinPartitions(keys.map(col): _*),
+          outDir, layout, SaveMode.Append)
         inserted = 1
       } else {
         // OVERLAPPED layout: rewrite all holder files (plus inserts) as
@@ -463,12 +440,12 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
         val merged = if (nOut > 1)
           merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else merged0
-        try ParquetTable.withMicrosTimestamps(spark) {
+        try ParquetTable.write(
           (if (nOut == 1) merged.repartition(1)
            else merged.repartitionByRange(nOut, keys.map(col): _*))
-            .sortWithinPartitions(keys.map(col): _*)
-            .write.mode("append").parquet(outDir)
-        } finally if (nOut > 1) merged.unpersist(false)
+            .sortWithinPartitions(keys.map(col): _*),
+          outDir, layout, SaveMode.Append)
+        finally if (nOut > 1) merged.unpersist(false)
         inserted += nOut
       }
     }
@@ -556,168 +533,17 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
           MutableParquetTable.readFilesLogical(spark, picked,
             schema.getOrElse(spark.read.parquet(picked: _*).schema), renames),
           renames)
-        ParquetTable.withMicrosTimestamps(spark) {
+        ParquetTable.write(
           (if (n == 1) df.repartition(1)
            else df.repartitionByRange(n, keys.map(col): _*))
-            .sortWithinPartitions(keys.map(col): _*)
-            .write.mode("append").parquet(outDir)
-        }
+            .sortWithinPartitions(keys.map(col): _*),
+          outDir, src.layout, SaveMode.Append)
         writtenFiles(outDir, clean.map(fileName).toSet)
       }
     val cleanNames = clean.map(fileName).toSet
     val carried = sortedRanges().filter(r => cleanNames(fileName(r.file)))
     writeManifest(outDir, carried, newFiles, schema, pt.refNames)
     newFiles.size
-  }
-
-  /** Row-group-granularity CoW merge: like [[merge]], but each dirty
-    * file keeps its identity and only its dirty ROW GROUPS re-encode —
-    * clean groups are spliced byte-for-byte ([[RowGroupCoW]]), clean
-    * files hard-linked as usual. Rewrite bytes scale with dirty *groups*,
-    * not dirty *files*: for scattered point updates (one key per file,
-    * where [[merge]] degenerates to a full rewrite) this touches a few
-    * percent of the data — the reference's partial-rewrite scaling
-    * (README.md:109-111) operating across a whole table. One small Spark
-    * merge job per dirty file, submitted concurrently.
-    *
-    * File key ranges can only be preserved or extended toward a file's
-    * ownership interval (batch keys route into it), so the disjoint-range
-    * invariant and chained merges keep working unchanged.
-    *
-    * PRECONDITION: unique keys (the primary-key contract). Files are
-    * rewritten independently, so a key duplicated ACROSS files cannot
-    * have all its copies replaced in one pass — use [[merge]] (which
-    * rewrites straddling files together) for out-of-contract data. */
-  def mergeFineGrained(batch: DataFrame, opCol: String = "op",
-                       snapshotDir: Option[String] = None): MergeResult = {
-    // case-insensitive name matching, like the rest of the table layer
-    // (drops, renames, path resolution)
-    val extraCols = batch.drop(opCol).schema.fieldNames
-      .filterNot(n => tableSchema.fieldNames.exists(_.equalsIgnoreCase(n)))
-    require(extraCols.isEmpty,
-      s"schema evolution (new columns ${extraCols.mkString(", ")}) needs " +
-        "the file-level merge — the row-group splice keeps each file's " +
-        "source schema byte-for-byte")
-    // the same whole-row upsert contract as merge(): a batch missing an
-    // existing table column would silently null it on replaced rows
-    val missingCols = tableSchema.fieldNames
-      .filterNot(n => batch.schema.fieldNames.exists(_.equalsIgnoreCase(n)))
-    require(missingCols.isEmpty,
-      s"batch lacks table columns ${missingCols.mkString(", ")} — " +
-        "upserts replace whole rows; project the missing columns " +
-        "explicitly (e.g. as nulls) if that is intended")
-    val src = manifest
-    // bucketed layouts rewrite whole buckets — row-group splicing would
-    // break the file-bucket invariant; the file-level merge branches to
-    // the bucketed path itself
-    if (src.exists(_.buckets.isDefined))
-      return merge(batch, opCol, snapshotDir)
-    // deletion tombstones: raw row-group splices copy tombstoned rows
-    // byte-for-byte and this path writes its own manifests per file —
-    // the file-level merge subtracts/carries the sidecar correctly
-    if (src.exists(_.tombstoneRows > 0))
-      return merge(batch, opCol, snapshotDir)
-    // renamed columns: per-file splice merges would have to map the
-    // batch's logical names onto each file's physical schema inside the
-    // row-group writer — the file-level merge already does the mapping
-    // once ([[readFilesLogical]]/[[toPhysicalNames]]), so fall back
-    if (renames.nonEmpty) return merge(batch, opCol, snapshotDir)
-    // widened columns: pre-ALTER files carry the NARROW physical type;
-    // a per-file splice would write the wide batch rows through the
-    // file's narrow source schema (or mix physical shapes) — fall back
-    // until a rewrite clears the marker
-    if (src.exists(_.widenedColumns.nonEmpty))
-      return merge(batch, opCol, snapshotDir)
-    val ranges = sortedRanges()
-    // an empty (or stat-less) table has nothing to splice — the
-    // file-level merge owns the insert-into-empty path; silently
-    // committing an empty snapshot would drop the batch
-    if (ranges.isEmpty) return merge(batch, opCol, snapshotDir)
-    // ANY overlap between file key ranges breaks per-file independence:
-    // a key's true holder need not be the owner-routed file (overlapped
-    // layouts, e.g. post-z-order), and for composite keys a straddling
-    // leading-key value spans files that are rewritten alone. The
-    // file-level merge handles both (exact holder routing / straddling
-    // files rewritten together), so fall back to it.
-    if (ranges.size > 1 && ranges.sliding(2).exists {
-          case Seq(a, b) => KeyBytes.compare(a.maxBytes, b.minBytes) >= 0
-          case _         => false
-        }) return merge(batch, opCol, snapshotDir)
-    // CHECK constraints: validate the batch's upserts before any splice
-    // stages (the file-level merge fallbacks above enforce in merge())
-    val fgChecks = src.map(_.checks).getOrElse(Map.empty)
-    if (fgChecks.nonEmpty)
-      GraftChecks.enforce(batch.where(col(opCol) =!= lit("delete")),
-        fgChecks, s"row-group merge into $dir")
-    val outDir = snapshotDir.getOrElse(s"$dir-v${System.currentTimeMillis()}")
-    Files.createDirectories(Paths.get(outDir))
-    val dirtyNames = routedFiles(ranges, batch.select(key)).map(fileName).toSet
-    val allFiles = MutableParquetTable.tableFiles(dir, src)
-    val (dirty, clean) = allFiles.partition(f => dirtyNames.contains(fileName(f)))
-    val pt = passThroughClean(clean, outDir)
-
-    if (dirty.nonEmpty) {
-      val idxByName = ranges.zipWithIndex
-        .map { case (r, i) => fileName(r.file) -> i }.toMap
-      // batch is re-sliced once per dirty file — persist so the slices
-      // scan a materialized batch, not the caller's arbitrary plan
-      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        // bounds are in the NORMALIZED key domain (epoch days/micros for
-        // date/timestamp keys) — compare the normalized batch column
-        val nk = MutableParquetTable.normalizedKeyCol(
-          MutableParquetTable.fieldTypeAt(batch.schema, key), col(key))
-        val jobs = dirty.map { f => Future {
-          val i = idxByName(fileName(f))
-          val lower = if (i == 0) None else Some(ranges(i).min)
-          val upper = if (i == ranges.size - 1) None else Some(ranges(i + 1).min)
-          val slice = (lower, upper) match {
-            case (Some(lo), Some(up)) =>
-              b.where(nk >= lit(lo) && nk < lit(up))
-            case (Some(lo), None) => b.where(nk >= lit(lo))
-            case (None, Some(up)) => b.where(nk < lit(up))
-            case (None, None)     => b
-          }
-          RowGroupCoW.rewriteFile(spark, f,
-            s"$outDir/${fileName(f)}", key, slice, opCol, moreKeys)
-        }}
-        // settle EVERY per-file job before inspecting failures:
-        // Future.sequence fails fast on the first error while sibling
-        // rewriteFile futures keep writing into outDir — deleting the
-        // staging dir under a still-running splice races a repopulating
-        // directory, and a late finisher could drop a stray parquet file
-        // into a directory the fallback merge has re-committed
-        val settled = Await.result(
-          Future.sequence(jobs.map(_.transform(scala.util.Success(_)))),
-          scala.concurrent.duration.Duration.Inf)
-        settled.collectFirst {
-          case scala.util.Failure(_: RowGroupCoW.SchemaBeyondFileException) =>
-            ()
-        } match {
-          case Some(_) =>
-            // a dirty file's physical schema predates a column the batch
-            // carries (metadata ADD COLUMN / merge evolution left narrow
-            // files behind): the splice would silently drop its values —
-            // rewriteFile fail-fasts before writing, so discard the
-            // (now fully quiesced) staging and run the file-level merge,
-            // which reads files logical and writes the full logical schema
-            MutableParquetTable.deleteDir(Paths.get(outDir))
-            return merge(batch, opCol, snapshotDir)
-          case None =>
-            // any non-schema failure propagates as before
-            settled.foreach(_.get)
-        }
-      } finally b.unpersist(false)
-    }
-
-    val carried = ranges.filter(r => !dirtyNames.contains(fileName(r.file)))
-    writeManifest(outDir, carried, dirty.map(f => s"$outDir/${fileName(f)}"),
-      Some(tableSchema), pt.refNames)
-    MergeResult(outDir, dirty, clean, dirty.size,
-      filesHardLinked = pt.linked, filesReferenced = pt.referenced,
-      filesCopied = pt.copied)
   }
 
   /** `cond` resolved against this table's schema with zero IO, and every
@@ -740,10 +566,12 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     * IO), provably none-matching files pass through untouched (link /
     * manifest reference per this table's passthrough mode), and only the
     * undecidable remainder is rewritten with the row-level residual
-    * filter. A retention delete on the key (`key < horizon`) therefore
-    * costs one manifest commit plus at most one boundary-file rewrite at
-    * ANY table size — against the CoW-merge delete path's full batch
-    * scan + holder rewrite.
+    * filter — every such file in ONE [[CowRewrite]] job of at most
+    * `defaultParallelism` tasks, the filter bound to the physical schema
+    * and applied in the task. A retention delete on the key
+    * (`key < horizon`) therefore costs one manifest commit plus at most
+    * one boundary-file rewrite at ANY table size — against the CoW-merge
+    * delete path's full batch scan + holder rewrite.
     *
     * Rows where `cond` is NULL are kept (SQL `DELETE ... WHERE`
     * semantics). Rewritten files keep their identity and (sub)ranges, so
@@ -770,22 +598,20 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     phase("link")
     // keep-filter: NOT coalesce(cond, false) — a NULL predicate row is
     // not deleted, exactly SQL WHERE semantics (and exactly what the
-    // batch-merge delete path does by filtering TRUE rows into the batch)
-    val keepFilter = !coalesce(cond, lit(false))
+    // batch-merge delete path does by filtering TRUE rows into the batch);
     // a file the residual empties is dropped too
-    val inserted = rewriteEach(cls.rewrite, outDir, "del")(rows =>
-      Some(rows.where(keepFilter)).filterNot(_.isEmpty))
+    val written = rewriteRows(cls.rewrite, outDir, !coalesce(cond, lit(false)),
+      tableSchema.fieldNames.toSeq.map(n => col(s"`${n.replace("`", "``")}`")))
     phase("rewrite")
     val keepNames = cls.keep.map(fileName).toSet
     val carried = sortedRanges().filter(r => keepNames(fileName(r.file)))
-    val newFiles = writtenFiles(outDir, keepNames)
     // tombstoned rows may survive a residual rewrite physically (the
     // keep-filter tests only `cond`) — the carried sidecar keeps hiding
     // them; key membership never changes on this path
-    writeManifest(outDir, carried, newFiles, Some(tableSchema), pt.refNames,
-      tombstones = carryTombstonesVerbatim(outDir))
+    writeManifest(outDir, carried, Nil, Some(tableSchema), pt.refNames,
+      tombstones = carryTombstonesVerbatim(outDir), written = written)
     phase("manifest")
-    MergeResult(outDir, cls.rewrite, cls.keep, inserted, phase.millis,
+    MergeResult(outDir, cls.rewrite, cls.keep, written.size, phase.millis,
       filesHardLinked = pt.linked, filesReferenced = pt.referenced,
       filesCopied = pt.copied, filesDropped = cls.drop.size)
   }
@@ -793,9 +619,11 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
   /** Metadata-priced `UPDATE ... SET ... WHERE`: files the zone maps
     * prove untouched by `cond` ([[ZoneDelete]] NoneTrue) pass through;
     * every other file is rewritten IN PLACE with a per-column CASE
-    * projection (`WHEN cond THEN assignment ELSE current`). No table
-    * scan, no merge machinery: a key-range update touches only the
-    * files the range lives in, at any table size.
+    * projection (`WHEN cond THEN assignment ELSE current`), bound to the
+    * physical schema and applied in the task of the one [[CowRewrite]]
+    * job that rewrites them all. No table scan, no batch: a key-range
+    * update touches only the files the range lives in, at any table
+    * size; a bucketed file's output keeps its `b<id>-` prefix.
     *
     * Merge-key columns (leading + composite) cannot be assigned — rows
     * keep their identity and position, which is exactly why the rewrite
@@ -843,54 +671,33 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
             renames)
           .where(hit).select(projection: _*),
         updChecks, s"UPDATE on $dir")
-    val inserted = rewriteEach(rewrite, outDir, "upd")(rows =>
-      Some(rows.select(projection: _*)))
+    val written = rewriteRows(rewrite, outDir, lit(true), projection)
     phase("rewrite")
     val keepNames = cls.keep.map(fileName).toSet
     val carried = sortedRanges().filter(r => keepNames(fileName(r.file)))
-    val newFiles = writtenFiles(outDir, keepNames)
     // in-place updates never change key membership — carry verbatim
-    writeManifest(outDir, carried, newFiles, Some(tableSchema), pt.refNames,
-      tombstones = carryTombstonesVerbatim(outDir))
+    writeManifest(outDir, carried, Nil, Some(tableSchema), pt.refNames,
+      tombstones = carryTombstonesVerbatim(outDir), written = written)
     phase("manifest")
-    MergeResult(outDir, rewrite, cls.keep, inserted, phase.millis,
+    MergeResult(outDir, rewrite, cls.keep, written.size, phase.millis,
       filesHardLinked = pt.linked, filesReferenced = pt.referenced,
       filesCopied = pt.copied)
   }
 
-  /** Rewrite each of `files` IN PLACE into `outDir`: its logical rows
-    * through `rows` (None = nothing left, the file is dropped), key-sorted
-    * into one file named `<tag><i>-…`. One Spark job per file, run
-    * concurrently, each in its own staging dir (concurrent jobs cannot
-    * share one output dir — committer cleanup races on _temporary). Rows
-    * keep their identity and position, so they also stay in their bucket:
-    * a bucketed file's `b<id>-` name prefix carries over (the file-bucket
-    * invariant). Returns the number of files written. */
-  private def rewriteEach(files: Seq[String], outDir: String, tag: String)(
-      rows: DataFrame => Option[DataFrame]): Int = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val jobs = files.zipWithIndex.map { case (f, i) => Future {
-      rows(MutableParquetTable.readFilesLogical(spark, Seq(f), tableSchema,
-          renames)).fold(0) { out =>
-        val staging = s"$outDir/.staging-$tag-$i"
-        ParquetTable.withMicrosTimestamps(spark) {
-          MutableParquetTable.toPhysicalNames(out, renames)
-            .repartition(1).sortWithinPartitions(keys.map(col): _*)
-            .write.mode("append").parquet(staging)
-        }
-        val parts = dataFiles(staging).map(Paths.get(_))
-        val bp = MutableParquetTable.bucketPrefixOf(f)
-        parts.foreach(p => Files.move(p,
-          Paths.get(outDir, s"$bp$tag$i-${p.getFileName}"),
-          StandardCopyOption.ATOMIC_MOVE))
-        MutableParquetTable.deleteDir(Paths.get(staging))
-        parts.size
-      }
-    }}
-    Await.result(Future.sequence(jobs),
-      scala.concurrent.duration.Duration.Inf).sum
-  }
+  /** Rewrite `files` IN PLACE into `outDir` in one [[CowRewrite]] job:
+    * each file's rows where `keep` holds, written as `project` (both over
+    * the logical columns), one output per file, none for a file left
+    * empty. Rows keep their identity and position, so outputs stay
+    * key-sorted and in their bucket. */
+  private def rewriteRows(files: Seq[String], outDir: String,
+                          keep: org.apache.spark.sql.Column,
+                          project: Seq[org.apache.spark.sql.Column])
+      : Seq[CowRewrite.Written] =
+    if (files.isEmpty) Nil
+    else CowRewrite.run(spark, outDir, keys, files,
+      manifest.map(_.bytesByName).getOrElse(Map.empty), tableSchema, renames,
+      manifest.map(_.layout).getOrElse(ParquetLayout()),
+      CowRewrite.Rewrite(keep, project))
 
   /** MERGE-ON-READ delete: commit `deleteKeys`' key tuples as DELETION
     * TOMBSTONES ([[MutableParquetTable.TombstoneName]]) — every data
@@ -985,6 +792,42 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     }
   }
 
+  /** The schema a merge of rows shaped `batch` into a table of schema
+    * `table` commits — the one schema-evolution contract of every merge.
+    * Batch columns beyond the table schema become new NULLABLE table
+    * columns: old files read them as null (parquet's missing-column
+    * semantics), rewritten files carry them physically, and the manifest
+    * commits the evolved schema so readers see one uniform shape over
+    * the mixed-physical snapshot. A batch must still cover every existing
+    * column (a partial-row upsert would silently null the untouched
+    * fields), and may not retype one: a drifted column (decimal become
+    * double after arithmetic) would be union-coerced into rewritten files
+    * whose physical types diverge from the committed schema, failing
+    * later vectorized reads. An `empty` table takes the batch's schema. */
+  private def evolvedSchema(table: StructType, batch: StructType,
+                            empty: Boolean): StructType = {
+    val newFields = batch.fields.filterNot(f => table.fieldNames.contains(f.name))
+    if (newFields.nonEmpty)
+      MutableParquetTable.guardResurrected(dir, newFields.map(_.name).toSeq)
+    if (empty) batch
+    else {
+      val missing = table.fieldNames.filterNot(batch.fieldNames.contains)
+      require(missing.isEmpty,
+        s"batch lacks table columns ${missing.mkString(", ")} — " +
+          "upserts replace whole rows, so every existing column is required")
+      val drifted = batch.fields.filter(f =>
+        table.fieldNames.contains(f.name) &&
+          MutableParquetTable.stripNullability(table(f.name).dataType) !=
+            MutableParquetTable.stripNullability(f.dataType))
+      require(drifted.isEmpty,
+        "batch column types drift from the table schema: " +
+          drifted.map(f => s"${f.name} ${table(f.name).dataType
+            .simpleString}->${f.dataType.simpleString}").mkString(", ") +
+          " — cast the batch to the table types before merging")
+      StructType(table.fields ++ newFields.map(_.copy(nullable = true)))
+    }
+  }
+
   /** Copy-on-write merge for a HASH-BUCKETED layout ([[GraftBucket]]):
     * bucket granularity instead of key-range granularity. A batch key
     * dirties its bucket (`pmod(murmur3(key), n)` — ≤ n distinct values,
@@ -1018,29 +861,8 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     val pt = passThroughClean(clean, outDir)
     phase("link")
 
-    // schema evolution contract — identical to the range merge
-    val batchData = batch.drop(opCol)
-    val missingCols = tableSchema.fieldNames
-      .filterNot(batchData.schema.fieldNames.contains)
-    require(missingCols.isEmpty || allFiles.isEmpty,
-      s"batch lacks table columns ${missingCols.mkString(", ")} — " +
-        "upserts replace whole rows, so every existing column is required")
-    val drifted = batchData.schema.fields.filter(f =>
-      tableSchema.fieldNames.contains(f.name) &&
-        MutableParquetTable.stripNullability(tableSchema(f.name).dataType) !=
-          MutableParquetTable.stripNullability(f.dataType))
-    require(drifted.isEmpty || allFiles.isEmpty,
-      "batch column types drift from the table schema: " +
-        drifted.map(f => s"${f.name}").mkString(", "))
-    val newFields = batchData.schema.fields
-      .filterNot(f => tableSchema.fieldNames.contains(f.name))
-    if (newFields.nonEmpty)
-      MutableParquetTable.guardResurrected(dir, newFields.map(_.name).toSeq)
-    val mergedSchema =
-      if (allFiles.isEmpty) batchData.schema
-      else if (newFields.isEmpty) tableSchema
-      else org.apache.spark.sql.types.StructType(
-        tableSchema.fields ++ newFields.map(_.copy(nullable = true)))
+    val mergedSchema = evolvedSchema(tableSchema, batch.drop(opCol).schema,
+      allFiles.isEmpty)
 
     val needRewrite = dirty.nonEmpty ||
       !batch.where(col(opCol) =!= lit("delete")).isEmpty
@@ -1052,11 +874,12 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
             renames)
         else spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          batchData.schema)
+          batch.drop(opCol).schema)
       val base = tombstones.fold(base0)(withoutKeys(base0, _, keys))
       val merged = MutableParquetTable.toPhysicalNames(
         MergeOps.applyMutationsMulti(base, batch, keys, opCol), renames)
-      GraftBucket.writeBucketed(merged, outDir, key, moreKeys, n)
+      GraftBucket.writeBucketed(merged, outDir, key, moreKeys, n,
+        src.map(_.layout).getOrElse(ParquetLayout()))
     }
     phase("rewrite")
     val newFiles = writtenFiles(outDir, clean.map(fileName).toSet)
@@ -1248,7 +1071,9 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       // physicalRewrite — whose outputs were written from LOGICAL frames
       // — pins it empty)
       renames = renamesOverride.getOrElse(src.renames),
-      dimRanges = dims))
+      dimRanges = dims,
+      // the table's parquet layout, which every rewrite writes under
+      layout = src.layout))
   }
 }
 
@@ -1432,8 +1257,9 @@ object MutableParquetTable {
     * unaffected — Spark's parquet readers upcast narrow physicals to the
     * requested wider type — but raw byte splices must not mix the two
     * physical shapes in one file, so compaction switches to the purging
-    * rewrite and the row-group merge falls back to the file-level path
-    * while any such file survives. Same survivors lifecycle as
+    * rewrite while any such file survives (a merge rewrites a narrow
+    * file whole — its parquet schema differs from the write schema, so
+    * [[CowRewrite]] never splices it). Same survivors lifecycle as
     * [[manifestDroppedColumns]]: clears once no pre-widen file remains. */
   private[graft] def manifestWidened(snapshotDir: String): Seq[String] =
     Manifest.read(snapshotDir).map(_.widenedColumns).getOrElse(Nil)

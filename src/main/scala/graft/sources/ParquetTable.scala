@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -55,7 +55,27 @@ final case class ParquetLayout(
     bloomFilterNdv: Map[String, Long] = Map.empty,
     // parquet format writer version (PARQUET_1_0 | PARQUET_2_0) — the
     // reference exposes the same switch (ParquetBlockMutator.java:110)
-    writerVersion: Option[String] = None)
+    writerVersion: Option[String] = None) {
+
+  /** The parquet codec `compression` names (Spark's short names). */
+  def codec: org.apache.parquet.hadoop.metadata.CompressionCodecName =
+    org.apache.parquet.hadoop.metadata.CompressionCodecName.valueOf(
+      org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
+        .getParquetCompressionCodecName(compression))
+
+  /** Per-column dictionary switches over a write of `schema`: the PLAIN
+    * type rule expanded to the columns it covers, then the explicit
+    * [[columnDictionary]] entries, which win. */
+  def dictionaryOverrides(schema: StructType): Map[String, Boolean] = {
+    val typePlain: Map[String, Boolean] =
+      if (plainTypes.isEmpty) Map.empty
+      else schema.fields.iterator.collect {
+        case f if ParquetTable.physicalTypeOf(f.dataType).exists(plainTypes) =>
+          f.name -> false
+      }.toMap
+    typePlain ++ columnDictionary
+  }
+}
 
 /** Parquet-backed table: scan + layout-controlled write + footer statistics.
   *
@@ -77,8 +97,8 @@ object ParquetTable {
     * usable min/max statistics, which would break zone-map routing for
     * timestamp merge keys; every engine write path goes through this.
     *
-    * REF-COUNTED per session: merge paths call this from concurrent
-    * Futures (multi-run rewrites, per-dirty-file row-group CoW), and a
+    * REF-COUNTED per session: writers may call this from concurrent
+    * Futures (e.g. the bench's concurrent table re-layout), and a
     * plain set/restore would let one run's finally-restore flip the conf
     * back to INT96 between another run's set and its write-job conf
     * capture — producing stat-less timestamp files that silently break
@@ -110,22 +130,21 @@ object ParquetTable {
 
   /** Write with explicit physical layout. */
   def write(df: DataFrame, path: String, layout: ParquetLayout = ParquetLayout(),
-            mode: SaveMode = SaveMode.Overwrite): Unit = {
-    var w = df.write.mode(mode)
+            mode: SaveMode = SaveMode.Overwrite): Unit =
+    withMicrosTimestamps(df.sparkSession) {
+      withLayout(df.write.mode(mode), layout, df.schema).parquet(path)
+    }
+
+  /** `w` with `layout`'s parquet options for a write of `schema`. */
+  private[sources] def withLayout(w0: DataFrameWriter[Row], layout: ParquetLayout,
+                                  schema: StructType): DataFrameWriter[Row] = {
+    var w = w0
     layout.rowGroupBytes.foreach(b => w = w.option("parquet.block.size", b.toString))
     layout.pageBytes.foreach(b => w = w.option("parquet.page.size", b.toString))
     layout.maxRecordsPerFile.foreach(n => w = w.option("maxRecordsPerFile", n.toString))
     w = w.option("compression", layout.compression)
     w = w.option("parquet.enable.dictionary", layout.dictionaryEnabled.toString)
-    // expand the per-physical-type PLAIN rule over this write's schema,
-    // then let explicit per-column entries override it
-    val typePlain: Map[String, Boolean] =
-      if (layout.plainTypes.isEmpty) Map.empty
-      else df.schema.fields.iterator.collect {
-        case f if physicalTypeOf(f.dataType).exists(layout.plainTypes) =>
-          f.name -> false
-      }.toMap
-    (typePlain ++ layout.columnDictionary).foreach { case (c, on) =>
+    layout.dictionaryOverrides(schema).foreach { case (c, on) =>
       w = w.option(s"parquet.enable.dictionary#$c", on.toString)
     }
     layout.bloomFilterColumns.foreach { c =>
@@ -135,7 +154,7 @@ object ParquetTable {
       w = w.option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
     }
     layout.writerVersion.foreach(v => w = w.option("parquet.writer.version", v))
-    withMicrosTimestamps(df.sparkSession) { w.parquet(path) }
+    w
   }
 
   /** Parquet physical type a Spark column writes as (Spark's standard,

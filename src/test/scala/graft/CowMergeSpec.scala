@@ -301,7 +301,8 @@ class CowMergeSpec extends SparkSpec {
 
   test("duplicate keys straddling row-group boundaries rewrite exactly") {
     // same hazard one level down: parquet cuts row groups by SIZE, mid-key
-    // — RowGroupCoW's non-cut expansion must absorb straddled neighbors
+    // — the rewrite task's row-group routing (non-cut expansion) must
+    // absorb straddled neighbors
     val work = freshDir()
     val li = Tables.lineitem(spark, sf())
       .withColumn("li_key", col("l_orderkey") * 10 + col("l_linenumber")) // repeats!
@@ -320,10 +321,10 @@ class CowMergeSpec extends SparkSpec {
     val batch = base.where(col("li_key").isin(straddleMins: _*))
       .withColumn("l_quantity", lit(999.0)).withColumn("op", lit("upsert"))
       .dropDuplicates("li_key") // batch contract: unique keys per batch
-    val res = graft.sources.RowGroupCoW.rewriteFile(
-      spark, src, s"$work/out.parquet", "li_key", batch)
-    assert(res.passthroughGroups > 0)
-    val got = spark.read.parquet(s"$work/out.parquet")
+    val res = MutableParquetTable(spark, s"$work/src", "li_key").merge(batch)
+    val out = listParquet(res.snapshotDir).head.toString
+    assert(RowGroups.copied(src, out) > 0)
+    val got = spark.read.parquet(res.snapshotDir)
     val expect = MergeOps.applyMutations(base, batch, "li_key")
     assert(got.count() === expect.count())
     assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty)
@@ -373,13 +374,16 @@ class CowMergeSpec extends SparkSpec {
 
   test("fine-grained merge re-encodes only dirty row groups across the table") {
     val dir = freshDir()
-    // UNIQUE key (mergeFineGrained's primary-key precondition): the
-    // fixture's (l_orderkey, l_linenumber) pairs repeat, so rank instead
-    val li = Tables.lineitem(spark, sf())
+    // UNIQUE key: the fixture's (l_orderkey, l_linenumber) pairs repeat,
+    // so rank instead — written nullable, as every engine write is: a
+    // file with `required` columns is rewritten whole
+    val ranked = Tables.lineitem(spark, sf())
       .withColumn("li_key", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(
           col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
           col("l_suppkey"), col("l_extendedprice"))).cast("long"))
+    val li = spark.createDataFrame(ranked.rdd, org.apache.spark.sql.types.StructType(
+      ranked.schema.fields.map(_.copy(nullable = true))))
     ParquetTable.writeSorted(li, dir, "li_key", 3,
       ParquetLayout(rowGroupBytes = Some(24L * 1024)))
     val base = spark.read.parquet(dir)
@@ -394,7 +398,7 @@ class CowMergeSpec extends SparkSpec {
     val batch = base.where(col("li_key").isin(mins: _*))
       .withColumn("l_quantity", col("l_quantity") + 100.0)
       .withColumn("op", lit("upsert"))
-    val res = t.mergeFineGrained(batch)
+    val res = t.merge(batch)
     assert(res.rewrittenFiles.size === 3 && res.passthroughFiles.isEmpty)
     assert(MutableParquetTable.isCommitted(res.snapshotDir))
 
@@ -405,11 +409,12 @@ class CowMergeSpec extends SparkSpec {
 
     // group-level passthrough: narrow upserts keep every file's group
     // count, and most groups must be byte-identical raw copies of the
-    // source (re-encoding everything would change compressed sizes)
-    val srcStats = ParquetStats.rowGroupStats(spark, dir)
-      .collect().map(r => (r.getString(0).split('/').last, r.getInt(1)) -> r.getLong(4)).toMap
-    val outStats = ParquetStats.rowGroupStats(spark, res.snapshotDir)
-      .collect().map(r => (r.getString(0).split('/').last, r.getInt(1)) -> r.getLong(4)).toMap
+    // source (re-encoding everything would change compressed sizes).
+    // Outputs take new names with their source's `part-<ordinal>` prefix
+    def groupSizes(d: String) = ParquetStats.rowGroupStats(spark, d).collect()
+      .map(r => (r.getString(0).split('/').last.take(10), r.getInt(1)) -> r.getLong(4)).toMap
+    val srcStats = groupSizes(dir)
+    val outStats = groupSizes(res.snapshotDir)
     assert(outStats.size === srcStats.size, "group counts must be preserved")
     val identical = outStats.count { case (k, bytes) => srcStats.get(k).contains(bytes) }
     assert(identical >= srcStats.size - 3,
@@ -726,13 +731,9 @@ class CowMergeSpec extends SparkSpec {
     assert(got2.count() === 300)
 
     // a post-evolution batch missing an EXISTING column is rejected
-    // (whole-row upsert contract), as is evolution through the
-    // row-group splice (source schemas are copied byte-for-byte)
+    // (whole-row upsert contract)
     intercept[IllegalArgumentException] {
       t2.merge(Seq((1L, 1L, "upsert")).toDF("k", "v", "op"))
-    }
-    intercept[IllegalArgumentException] {
-      t.mergeFineGrained(batch)
     }
 
     // type DRIFT on an existing column is rejected (evolution adds
@@ -742,6 +743,23 @@ class CowMergeSpec extends SparkSpec {
       t.merge(Seq((1L, 1.5, "upsert")).toDF("k", "v", "op"))
     }
     assert(e.getMessage.contains("drift"), s"unexpected error: $e")
+  }
+
+  test("ranged and bucketed merges share one drift contract: the error names col from->to") {
+    val s = spark; import s.implicits._
+    Seq(None, Some(4)).foreach { buckets =>
+      val root = Files.createTempDirectory("graft-drift").toString
+      val t = GraftTable.create((0L until 100L).map(k => (k, k * 2)).toDF("k", "v"),
+        root, "k", numFiles = 4, buckets = buckets)
+      val e = intercept[IllegalArgumentException] {
+        t.commit(Seq((1L, 1.5, "upsert")).toDF("k", "v", "op"))
+      }
+      assert(e.getMessage.contains("v bigint->double"), s"buckets $buckets: $e")
+      val missing = intercept[IllegalArgumentException] {
+        t.commit(Seq((1L, "upsert")).toDF("k", "op"))
+      }
+      assert(missing.getMessage.contains("lacks table columns v"), s"buckets $buckets")
+    }
   }
 
   test("fine-grained merge vs metadata ADD: narrow files fall back, values survive") {
@@ -756,10 +774,10 @@ class CowMergeSpec extends SparkSpec {
         org.apache.spark.sql.types.LongType, nullable = true))
     val latest = graft.streaming.CdcMergeSink.latestSnapshot(root)
     val t = MutableParquetTable(spark, latest, "k")
-    // a batch CARRYING the new column must not lose its values to the
-    // row-group splice (which re-encodes under the narrow source
-    // schema): rewriteFile fail-fasts and the file-level merge runs
-    val r = t.mergeFineGrained(
+    // a batch CARRYING the new column must not lose its values: the
+    // narrow files' parquet schema differs from the write schema, so the
+    // rewrite task rewrites them whole instead of splicing row groups
+    val r = t.merge(
       Seq((5L, 55L, 77L, "upsert")).toDF("k", "v", "c", "op"))
     val got = MutableParquetTable.readCommitted(spark, r.snapshotDir)
     val hit = got.where(col("k") === 5L).head()
@@ -769,14 +787,13 @@ class CowMergeSpec extends SparkSpec {
     assert(got.count() === 100)
 
     // a batch MISSING the (now-existing) column violates the whole-row
-    // upsert contract — same refusal as merge(), not a confusing
-    // unresolved-column error from inside the splice
+    // upsert contract
     val t2 = MutableParquetTable(spark, r.snapshotDir, "k")
     intercept[IllegalArgumentException] {
-      t2.mergeFineGrained(Seq((7L, -7L, "upsert")).toDF("k", "v", "op"))
+      t2.merge(Seq((7L, -7L, "upsert")).toDF("k", "v", "op"))
     }
     // a whole-row batch through the mixed narrow/wide snapshot: exact
-    val r2 = t2.mergeFineGrained(Seq((7L, -7L, null.asInstanceOf[java.lang.Long],
+    val r2 = t2.merge(Seq((7L, -7L, null.asInstanceOf[java.lang.Long],
       "upsert")).toDF("k", "v", "c", "op"))
     val got2 = MutableParquetTable.readCommitted(spark, r2.snapshotDir)
     assert(got2.where(col("k") === 7L).head().getLong(1) === -7L)

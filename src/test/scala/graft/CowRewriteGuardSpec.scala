@@ -3,16 +3,29 @@ package graft
 import java.nio.file.Files
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.sources.{Manifest, MutableParquetTable}
+import graft.sources.{Manifest, MutableParquetTable, ParquetLayout, ParquetStats}
+import graft.streaming.CdcMergeSink
 
 /** Pins the Spark work of the key-clustered merge's rewrite: one job of
   * at most `defaultParallelism` result tasks, in which only the batch is
-  * shuffled — and no rewrite job at all for a no-op merge. */
+  * shuffled — and no rewrite job at all for a no-op merge. Inside a
+  * dirty file, clean row groups are copied raw and only dirty ones are
+  * re-encoded, under the layout the table was created with. */
 class CowRewriteGuardSpec extends SparkSpec {
 
   /** Jobs, result-stage task counts and shuffle reads of the SQL
@@ -103,5 +116,98 @@ class CowRewriteGuardSpec extends SparkSpec {
       .merge(batch.limit(0)))
     assert(noop.rewrittenFiles.isEmpty)
     assert(rec2.rewriteJobs.isEmpty && rec2.rewrites.isEmpty)
+  }
+
+  /** `body`'s result, the rewrite's jobs, and the rewrite's SQL metrics
+    * summed over the queries `body` runs. */
+  private def withMetrics[A](body: => A): (A, Recorder, Map[String, Long]) = {
+    val sums = mutable.Map.empty[String, Long].withDefaultValue(0L)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        sums.synchronized(nodes(qe.executedPlan).filter(_.nodeName == "CowRewrite")
+          .foreach(_.metrics.foreach { case (k, m) => sums(k) += m.value }))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val (out, rec) = recording(body)
+      (out, rec, sums.synchronized(sums.toMap.withDefaultValue(0L)))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def footer(file: String): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), new Configuration()))
+    try r.getFooter finally r.close()
+  }
+
+  /** A table of 3 key-disjoint files of 256 KB row groups under
+    * `layout` (incompressible payloads, so groups fill by rows). */
+  private def groupedTable(root: String, layout: ParquetLayout): GraftTable = {
+    val df = spark.range(0, 90000).select(col("id").as("k"), (col("id") * 7).as("v"),
+      sha2(col("id").cast("string"), 256).as("s"))
+    GraftTable.create(df, root, "k", numFiles = 3, layout)
+  }
+
+  private def upserts(keys: Seq[Long]): DataFrame = {
+    val s = spark; import s.implicits._
+    keys.map(k => (k, -k, s"new-$k", "upsert")).toDF("k", "v", "s", "op")
+  }
+
+  test("a batch dirtying row groups of one file re-encodes only them, one job, the rest byte-identical") {
+    val root = Files.createTempDirectory("graft-cowguard-rg").toString
+    groupedTable(root, ParquetLayout(rowGroupBytes = Some(256L * 1024)))
+    val base = s"$root/base"
+    val m = Manifest.get(base)
+    assert(m.files.size >= 2, "several files")
+    val ranges = m.ranges(base).get.sortBy(_.minBytes)(graft.sources.KeyBytes.ordering)
+    val src = ranges(1).file
+    // each row group's minimum key
+    val mins = ParquetStats.footerRows(src, "k", footer(src)).map(_.getLong(7))
+    assert(mins.size >= 6, s"want several 256 KB groups, got ${mins.size}")
+
+    // dirty 2 groups, then 4: the re-encoded share follows the dirty groups
+    Seq(Seq(1, 3), Seq(0, 2, 4, 5)).foreach { dirty =>
+      val batch = upserts(dirty.map(g => mins(g) + 1))
+      val (res, rec, metrics) = withMetrics(
+        MutableParquetTable(spark, base, "k").merge(batch))
+      assert(res.rewrittenFiles.map(_.split('/').last) === Seq(src.split('/').last))
+      assert(rec.rewriteJobs.size === 1, s"the rewrite ran as ${rec.rewriteJobs.size} jobs")
+      assert(metrics("groupsReencoded") === dirty.size, s"$metrics")
+      assert(metrics("groupsSpliced") === mins.size - dirty.size, s"$metrics")
+      val out = Manifest.get(res.snapshotDir).fileNames
+        .filterNot(m.fileNames.contains).map(f => s"${res.snapshotDir}/$f")
+      assert(out.size === 1)
+      // every clean group is in the output byte for byte
+      val before = RowGroups.digests(src)
+      val after = RowGroups.digests(out.head).toSet
+      assert(before.indices.filterNot(g => after(before(g))) === dirty,
+        "exactly the dirty groups were re-encoded")
+      val got = MutableParquetTable.readCommitted(spark, res.snapshotDir)
+      assert(got.count() === 90000L)
+      assert(got.where(col("v") < 0).count() === dirty.size)
+    }
+  }
+
+  test("a merge keeps the table's layout: codec and row-group size survive the rewrite") {
+    val root = Files.createTempDirectory("graft-cowguard-layout").toString
+    val t = groupedTable(root, ParquetLayout(rowGroupBytes = Some(256L * 1024),
+      compression = "gzip"))
+    val before = Manifest.get(s"$root/base").fileNames.toSet
+    t.commit(upserts(Seq(30001L)))
+    val latest = CdcMergeSink.latestSnapshot(root)
+    val rewritten = Manifest.get(latest).fileNames.filterNot(before)
+      .map(f => MutableParquetTable.resolvePath(latest, f))
+    assert(rewritten.size === 1)
+    val bs = footer(rewritten.head).getBlocks.asScala.toSeq
+    assert(bs.size > 1, "the rewritten file keeps its row groups")
+    assert(bs.forall(_.getColumns.asScala.forall(_.getCodec == CompressionCodecName.GZIP)),
+      "the rewritten file keeps the table's codec")
+    assert(bs.forall(_.getCompressedSize <= 384L * 1024),
+      s"row groups stay near 256 KB: ${bs.map(_.getCompressedSize)}")
   }
 }

@@ -94,10 +94,10 @@ class CowRewriteSpec extends SparkSpec {
     * row of one file. */
   private def batchOf(t: GraftTable, shape: Shape, rnd: scala.util.Random,
                       step: Int, wipe: Boolean,
-                      extra: Boolean = false): DataFrame = {
+                      extra: Boolean = false, rows: Int = n): DataFrame = {
     val s = spark; import s.implicits._
-    val hi = 8 + 2 * n
-    def live() = 8 + 2 * rnd.nextInt(n)
+    val hi = 8 + 2 * rows
+    def live() = 8 + 2 * rnd.nextInt(rows)
     val wiped =
       if (!wipe) Nil
       else {
@@ -221,6 +221,35 @@ class CowRewriteSpec extends SparkSpec {
       "evolved step 1")
   }
 
+  test("property: batches across row-group boundaries splice clean groups and match applyMutations") {
+    val rows = 6000
+    // (not `nested`: the struct's fields are written `required`, so its
+    // files are rewritten whole — the existing properties cover them)
+    Seq("long" -> single("long"), "string" -> single("string"),
+        "composite" -> composite).zipWithIndex.foreach {
+      case ((label, shape), seedN) =>
+        val rnd = new scala.util.Random(200 + seedN)
+        // 3 files of small row groups, recorded as the table's layout
+        val t = GraftTable.create(rowsOf(shape, spark.range(0, rows).select(
+            (col("id") * 2 + 8).cast("int").as("pos")), 0, Nil),
+          Files.createTempDirectory(s"graft-cowrw-rg-$label").toString,
+          shape.keys.head, numFiles = 3, ParquetLayout(rowGroupBytes = Some(4096)),
+          moreKeys = shape.keys.tail)
+        (0 until 3).foreach { step =>
+          val before = dataFiles(latest(t.root))
+          val old = before.flatMap(graft.RowGroups.digests).toSet
+          assert(before.forall(graft.RowGroups.digests(_).size > 4),
+            s"$label: want several row groups per file")
+          commitAndCheck(t, shape, batchOf(t, shape, rnd, step, wipe = step == 2,
+            rows = rows), s"$label step $step")
+          val written = dataFiles(latest(t.root)).filterNot(f =>
+            before.exists(_.endsWith("/" + f.split('/').last)))
+          assert(written.flatMap(graft.RowGroups.digests).exists(old),
+            s"$label step $step: no clean row group was copied raw")
+        }
+    }
+  }
+
   test("a bare file out of key order is sorted in its task, then merged") {
     val s = spark; import s.implicits._
     val dir = Files.createTempDirectory("graft-cowrw-unsorted").toString
@@ -298,9 +327,9 @@ class CowRewriteSpec extends SparkSpec {
     val s = spark; import s.implicits._
     val batch = rowsOf(shape, (0 until files).map(j => (9 + 80 * j, "upsert"))
       .toDF("pos", "op"), 1, Nil)
-    val df = CowRewrite.plan(spark, out, shape.keys, ranges,
-      ranges.map(_.file.split('/').last).toSet, m.bytesByName, batch, "op",
-      m.schema.get, Map.empty, None)
+    val df = CowRewrite.plan(spark, out, shape.keys, ranges.map(_.file),
+      m.bytesByName, m.schema.get, Map.empty, ParquetLayout(),
+      CowRewrite.Merge(ranges, batch, "op", None))
     val rdd = df.queryExecution.executedPlan.execute()
     def runGroup0(): Int = spark.sparkContext.runJob(rdd,
       (it: Iterator[InternalRow]) => it.size, Seq(0)).head

@@ -7,11 +7,13 @@ import org.apache.spark.sql.SparkSession
 
 /** Test-side record of the Spark jobs a block of code starts: for each
   * job, its stages' short call sites (`name`, e.g. "localCheckpoint at
-  * Materialize.scala:40") and long ones (`details`, the driver stack
-  * that submitted it). Lets a spec pin which code paths run jobs. */
+  * Materialize.scala:40"), long ones (`details`, the driver stack that
+  * submitted it) and task counts. Lets a spec pin which code paths run
+  * jobs. */
 object JobLog {
 
-  final case class Job(id: Int, names: Seq[String], details: Seq[String]) {
+  final case class Job(id: Int, names: Seq[String], details: Seq[String],
+                       tasks: Seq[Int]) {
     /** Whether any stage was submitted from a stack holding `frame`. */
     def calledFrom(frame: String): Boolean =
       details.exists(_.contains(frame))
@@ -31,7 +33,8 @@ object JobLog {
           sentinel = e.jobId
         else {
           val stages = e.stageInfos.sortBy(_.stageId)
-          jobs += Job(e.jobId, stages.map(_.name), stages.map(_.details))
+          jobs += Job(e.jobId, stages.map(_.name), stages.map(_.details),
+            stages.map(_.numTasks))
         }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =

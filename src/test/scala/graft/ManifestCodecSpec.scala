@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{GraftChecks, GraftDefaults, Manifest, MutableParquetTable => MPT}
+import graft.sources.{GraftChecks, GraftDefaults, Manifest, MutableParquetTable => MPT, ParquetLayout}
 
 /** The `_manifest.json` codec: every value round-trips, whatever the
   * names and keys hold; and every manifest the previous hand-built
@@ -52,6 +52,20 @@ class ManifestCodecSpec extends AnyFunSuite {
     Gen.nonEmptyListOf(Gen.zip(hostile, Gen.oneOf(LongType, StringType)))
       .map(fs => StructType(fs.map { case (n, t) => StructField(n, t) }))
 
+  private val layout: Gen[ParquetLayout] = Gen.frequency(1 -> Gen.const(ParquetLayout()),
+    3 -> (for {
+      rowGroup <- Gen.option(Gen.choose(1L, Long.MaxValue))
+      codec <- hostile
+      dictionary <- Gen.oneOf(true, false)
+      page <- Gen.option(Gen.choose(1L, Long.MaxValue))
+      columnDictionary <- Gen.mapOf(Gen.zip(hostile, Gen.oneOf(true, false)))
+      plain <- Gen.listOf(hostile)
+      bloom <- Gen.listOf(hostile)
+      ndv <- Gen.mapOf(Gen.zip(hostile, Gen.choose(0L, Long.MaxValue)))
+      version <- Gen.option(hostile)
+    } yield ParquetLayout(rowGroup, None, codec, dictionary, page, columnDictionary,
+      plain.toSet, bloom, ndv, version)))
+
   private val manifest: Gen[Manifest] = for {
     key <- hostile
     keyType <- Gen.oneOf(Gen.oneOf("long", "string", "binary", "unknown"), hostile)
@@ -71,11 +85,12 @@ class ManifestCodecSpec extends AnyFunSuite {
     dims <- Gen.listOf(dim)
     txn <- Gen.option(Gen.zip(hostile, Gen.choose(Long.MinValue, Long.MaxValue)))
     feed <- Gen.oneOf(true, false)
+    lay <- layout
   } yield Manifest(key, keyType, moreKeys, files, sch, committed, tombstones,
     buckets, checks, defaults, generated, dropped, widened, renames,
     // the writer derives the rename feature stamp from the mapping
     features ++ (if (renames.isEmpty) Nil else Seq("columnRenames")),
-    dims, txn, feed)
+    dims, txn, feed, lay)
 
   private def check(p: Prop): Unit = {
     val r = Test.check(Test.Parameters.default

@@ -11,8 +11,8 @@ import graft.sources.MutableParquetTable
   * z-order (or any non-key clustering) produces. Owner-routing plus
   * non-cut expansion would mark the whole overlapping cluster dirty
   * (full rewrite per merge); the exact holder join must instead rewrite
-  * only the files that really hold a batch key, and `mergeFineGrained`
-  * must refuse per-file independence on such layouts entirely. */
+  * only the files that really hold a batch key, and never treat one
+  * file as owning a key another file holds (a stale duplicate). */
 class OverlapMergeSpec extends SparkSpec {
 
   /** 4 files, file i holding keys ≡ i (mod 4): every file's key range
@@ -84,10 +84,10 @@ class OverlapMergeSpec extends SparkSpec {
     val dir = writeOverlapped()
     // owner-routing (last min <= key) would send key 100 to the file with
     // the GREATEST min (keys ≡ 3 mod 4) — but 100 lives in the ≡ 0 file;
-    // per-file row-group CoW would insert a second copy and leave the old
-    // row behind
+    // rewriting the owner alone would insert a second copy and leave the
+    // old row behind
     val res = MutableParquetTable(spark, dir, "k")
-      .mergeFineGrained(batch(Seq(100L -> -1L), Nil))
+      .merge(batch(Seq(100L -> -1L), Nil))
     val rows = spark.read.parquet(res.snapshotDir)
       .where(col("k") === 100).collect()
     assert(rows.length === 1, s"stale duplicate survived: ${rows.toSeq}")

@@ -2,14 +2,24 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.MergeOps
-import graft.sources.{ParquetLayout, ParquetTable, RowGroupCoW}
+import graft.sources.{MutableParquetTable, ParquetLayout, ParquetTable}
 
-/** Row-group-granularity CoW: only touched row groups re-encode; clean
-  * ones pass through raw, interleaved in key order. */
+/** Row-group-granularity CoW inside the merge's rewrite task: only
+  * touched row groups re-encode; clean ones pass through raw,
+  * interleaved in key order. */
 class RowGroupCoWSpec extends SparkSpec {
+
+  private def parquetIn(dir: String): String = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.map(_.toString)
+      .find(f => f.endsWith(".parquet") && !f.split('/').last.startsWith(".")).get
+    finally s.close()
+  }
 
   private def sortedFile(dir: String): String = {
     val li = Tables.lineitem(spark, sf())
@@ -17,11 +27,22 @@ class RowGroupCoWSpec extends SparkSpec {
     // one file, many small row groups → a real zone map inside the file
     ParquetTable.writeSorted(li, dir, "li_key", 1,
       ParquetLayout(rowGroupBytes = Some(24L * 1024)))
-    import scala.jdk.CollectionConverters._
-    val s = Files.list(java.nio.file.Paths.get(dir))
-    try s.iterator().asScala.map(_.toString)
-      .find(_.endsWith(".parquet")).get
-    finally s.close()
+    parquetIn(dir)
+  }
+
+  /** How a merge treated the source file's row groups, read off the
+    * bytes: groups of the output that are raw copies of a source group
+    * passed through, the rest of the source's groups were re-encoded. */
+  private final case class Groups(outFile: String, sourceGroups: Int,
+      passthroughGroups: Int, rewrittenGroups: Int, outputGroups: Int)
+
+  /** Merge `batch` into the one-file table at `dir` (key `key`). */
+  private def merge(dir: String, key: String, batch: DataFrame): Groups = {
+    val src = parquetIn(dir)
+    val out = parquetIn(MutableParquetTable(spark, dir, key).merge(batch).snapshotDir)
+    val n = RowGroups.digests(src).size
+    val copied = RowGroups.copied(src, out)
+    Groups(out, n, copied, n - copied, RowGroups.digests(out).size)
   }
 
   test("narrow batch rewrites few groups, passes the rest through raw") {
@@ -36,13 +57,13 @@ class RowGroupCoWSpec extends SparkSpec {
       .unionByName(base.where(col("li_key") > maxKey / 20 && col("li_key") <= maxKey / 10)
         .withColumn("op", lit("delete")))
 
-    val res = RowGroupCoW.rewriteFile(spark, src, s"$work/out.parquet", "li_key", batch)
+    val res = merge(s"$work/src", "li_key", batch)
     assert(res.sourceGroups > 10, s"want many groups, got ${res.sourceGroups}")
     assert(res.rewrittenGroups > 0)
     assert(res.passthroughGroups > res.rewrittenGroups * 2,
       s"narrow batch must leave most groups untouched: $res")
 
-    val got = spark.read.parquet(s"$work/out.parquet")
+    val got = spark.read.parquet(res.outFile)
     val oracle = MergeOps.applyMutations(base, batch, "li_key")
     assert(got.count() === oracle.count())
     assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty)
@@ -56,10 +77,10 @@ class RowGroupCoWSpec extends SparkSpec {
     val src = sortedFile(s"$work/src")
     val empty = spark.read.parquet(src)
       .withColumn("op", lit("upsert")).limit(0)
-    val res = RowGroupCoW.rewriteFile(spark, src, s"$work/out.parquet", "li_key", empty)
+    val res = merge(s"$work/src", "li_key", empty)
     assert(res.rewrittenGroups === 0)
     assert(res.outputGroups === res.sourceGroups)
-    assert(spark.read.parquet(s"$work/out.parquet").count() ===
+    assert(spark.read.parquet(res.outFile).count() ===
       spark.read.parquet(src).count())
   }
 
@@ -68,27 +89,26 @@ class RowGroupCoWSpec extends SparkSpec {
     val dir = s"$work/src"
     // enough rows that the small block size yields several row groups
     // (parquet-mr checks the block size every 100 records)
-    val c = spark.sql("""
+    // (nullable, as every engine write: `required` columns are rewritten
+    // whole)
+    val c0 = spark.sql("""
       SELECT md5(CAST(id AS STRING)) AS uuid, id, CAST(id AS DOUBLE) AS c_acctbal
       FROM range(0, 5000)""")
+    val c = spark.createDataFrame(c0.rdd, org.apache.spark.sql.types.StructType(
+      c0.schema.fields.map(_.copy(nullable = true))))
     ParquetTable.writeSorted(c, dir, "uuid", 1,
       ParquetLayout(rowGroupBytes = Some(24L * 1024)))
-    val src = {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(java.nio.file.Paths.get(dir))
-      try s.iterator().asScala.map(_.toString).find(_.endsWith(".parquet")).get
-      finally s.close()
-    }
+    val src = parquetIn(dir)
     val base = spark.read.parquet(src)
     // mutate 4 uuids from the low end of the string order
     val batch = base.orderBy(col("uuid")).limit(4)
       .withColumn("c_acctbal", lit(7.77))
       .withColumn("op", lit("upsert"))
-    val res = RowGroupCoW.rewriteFile(spark, src, s"$work/out.parquet", "uuid", batch)
+    val res = merge(dir, "uuid", batch)
     assert(res.sourceGroups > 3, s"want several groups, got $res")
     assert(res.rewrittenGroups >= 1 && res.passthroughGroups > 0, s"$res")
 
-    val got = spark.read.parquet(s"$work/out.parquet")
+    val got = spark.read.parquet(res.outFile)
     val oracle = MergeOps.applyMutations(base, batch, "uuid")
     assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty)
     val ks = got.select("uuid").collect().map(_.getString(0))
@@ -103,8 +123,8 @@ class RowGroupCoWSpec extends SparkSpec {
     val inserts = base.limit(5)
       .withColumn("li_key", col("li_key") + lit(1000000L))
       .withColumn("op", lit("upsert"))
-    val res = RowGroupCoW.rewriteFile(spark, src, s"$work/out.parquet", "li_key", inserts)
-    val got = spark.read.parquet(s"$work/out.parquet")
+    val res = merge(s"$work/src", "li_key", inserts)
+    val got = spark.read.parquet(res.outFile)
     assert(got.count() === base.count() + 5)
     val ks = got.select("li_key").collect().map(_.getLong(0))
     assert(ks.sameElements(ks.sorted))

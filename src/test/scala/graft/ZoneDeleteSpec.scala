@@ -237,4 +237,39 @@ class ZoneDeleteSpec extends SparkSpec {
       (500L until 1000L).count(_ % 5 != 3))
     spark.sql("DROP TABLE zdel.ns.t")
   }
+
+  test("zone DELETE and UPDATE rewriting 8 files run one rewrite job; buckets keep their prefix") {
+    Seq("ranged" -> None, "bucketed" -> Some(8)).foreach { case (label, buckets) =>
+      val root = freshRoot()
+      val df = (0L until 1000L)
+        .map(k => (k, s"g${k % 4}", k * 3)).toDF("k", "grp", "v")
+      val t = GraftTable.create(df, root, "k", numFiles = 8, buckets = buckets)
+      val files0 = MutableParquetTable.manifestFileNames(s"$root/base").get
+      assert(files0.size === 8, label)
+      val slots = spark.sparkContext.defaultParallelism
+      // a predicate on a column without zone maps: every file undecided
+      val ((_, del), delJobs) = JobLog.recording(spark)(
+        t.deleteWhereResult(col("v") % 7 === 0))
+      val ((_, upd), updJobs) = JobLog.recording(spark)(
+        t.updateWhereResult(col("v") % 5 === 0, "grp" -> lit("upd")))
+      Seq("DELETE" -> (del, delJobs), "UPDATE" -> (upd, updJobs)).foreach {
+        case (what, (res, jobs)) =>
+          assert(res.rewrittenFiles.size === 8, s"$label $what")
+          assert(jobs.size === 1 && jobs.head.calledFrom("CowRewrite"),
+            s"$label $what ran ${jobs.size} jobs: ${jobs.map(_.names)}")
+          assert(jobs.head.tasks.last <= slots, s"$label $what: ${jobs.head.tasks}")
+      }
+      val got = t.read()
+      assert(got.count() === (0L until 1000L).count(k => k * 3 % 7 != 0), label)
+      assert(got.where(col("grp") === "upd").count() ===
+        (0L until 1000L).count(k => k * 3 % 7 != 0 && k * 3 % 5 == 0), label)
+      if (buckets.isDefined) {
+        val prefixes = MutableParquetTable.manifestFileNames(
+          CdcMergeSink.latestSnapshot(root)).get.map(_.split('/').last.take(7))
+        assert(prefixes.sorted === files0.map(_.split('/').last.take(7)).sorted,
+          "every rewritten file keeps its bucket's b<id>- prefix")
+        assert(prefixes.forall(_.matches("b\\d{5}-")), s"$prefixes")
+      }
+    }
+  }
 }

@@ -834,29 +834,21 @@ final class GraftTable private (val spark: SparkSession, val root: String,
     }
 
   /** Rewrite the snapshot at `latest` through its LOGICAL schema into
-    * `target`: hash-bucketed into `buckets` buckets, else key-sorted into
-    * files of ~`targetBytes` (sized from the recorded file bytes). */
+    * `target` under its recorded layout: hash-bucketed into `buckets`
+    * buckets, else key-sorted into files of ~`targetBytes` (sized from the
+    * recorded file bytes). */
   private def writeLogical(latest: String, target: String,
                            buckets: Option[Int], targetBytes: Long,
                            moreKeys: Seq[String]): Unit = {
-    val state = CdcMergeSink.readSnapshot(spark, latest)
-    buckets match {
-      case Some(n) =>
-        graft.sources.GraftBucket.writeBucketed(state, target, key,
-          moreKeys, n)
-      case None =>
-        val recorded =
-          graft.sources.MutableParquetTable.manifestBytesByName(latest)
-        val totalBytes = graft.sources.MutableParquetTable
-          .tableFiles(latest)
-          .map(f => graft.sources.MutableParquetTable
-            .recordedOrStatSize(latest, f, recorded)).sum
-        val n = math.max(1L, math.min(4096L,
-          (totalBytes + targetBytes - 1) / math.max(1L, targetBytes))).toInt
-        ParquetTable.withMicrosTimestamps(spark) {
-          ParquetTable.writeSortedBy(state, target, key +: moreKeys, n)
-        }
-    }
+    val recorded =
+      graft.sources.MutableParquetTable.manifestBytesByName(latest)
+    val totalBytes = graft.sources.MutableParquetTable.tableFiles(latest)
+      .map(f => graft.sources.MutableParquetTable
+        .recordedOrStatSize(latest, f, recorded)).sum
+    ParquetTable.writeTable(CdcMergeSink.readSnapshot(spark, latest), target,
+      graft.sources.Manifest.read(latest).getOrElse(graft.sources.Manifest(key))
+        .copy(key = key, moreKeys = moreKeys, buckets = buckets),
+      ParquetTable.filesFor(totalBytes, targetBytes))
   }
 
   /** Range-scoped [[compact]]: fold ONLY the files whose key interval
@@ -906,7 +898,9 @@ final class GraftTable private (val spark: SparkSession, val root: String,
         // snapshot declaring the new spec (contract carried)
         graft.sources.MutableParquetTable.commitEmpty(target, key,
           schema.getOrElse(state.schema), moreKeys, buckets,
-          graft.sources.GraftChecks.manifestChecks(latest))
+          graft.sources.GraftChecks.manifestChecks(latest),
+          layout = graft.sources.Manifest.read(latest).fold(
+            graft.sources.ParquetLayout())(_.layout))
       else {
         writeLogical(latest, target, buckets, targetBytes, moreKeys)
         graft.sources.MutableParquetTable(spark, latest, key, moreKeys = moreKeys)
@@ -1128,10 +1122,11 @@ object GraftTable {
   }
 
   /** Create the base snapshot from a DataFrame and open the table.
-    * The base is written all-nullable so every file the chain will ever
-    * hold (merge rewrites are nullable by construction) shares one
-    * physical schema — which keeps raw-concat compaction eligible across
-    * the whole table instead of stopping at schema boundaries. `layout`
+    * The base is written nullable at every level, nested fields included,
+    * so every file the chain will ever hold (merge rewrites are nullable
+    * by construction) shares one physical schema — which keeps merges'
+    * row-group splices and raw-concat compaction eligible across the
+    * whole table instead of stopping at schema boundaries. `layout`
     * is recorded in the manifest (all but its file-count cap): every
     * later rewrite writes under it, so merges keep the codec and row
     * group size, and a merge's re-encoded groups stay group-sized. */
@@ -1158,37 +1153,26 @@ object GraftTable {
       graft.sources.GraftChecks.validateExpr(spark, df1.schema, n, e) }
     if (checks.nonEmpty)
       graft.sources.GraftChecks.enforce(df1, checks, s"CREATE of $root")
-    val nullable = spark.createDataFrame(df1.rdd,
-      org.apache.spark.sql.types.StructType(
-        df1.schema.fields.map(_.copy(nullable = true))))
-    buckets match {
-      case Some(n) =>
-        // HASH-BUCKETED layout ([[graft.sources.GraftBucket]]): one file
-        // set per pmod(murmur3(key), n) bucket — graft⋈graft key joins
-        // then elide both shuffles (storage-partitioned joins); merges
-        // rewrite whole dirty buckets and carry the spec forward
-        graft.sources.GraftBucket.writeBucketed(nullable, s"$root/base",
-          key, moreKeys, n, layout)
-      case None =>
-        ParquetTable.writeSortedBy(nullable, s"$root/base", key +: moreKeys,
-          numFiles, layout)
-    }
+    // the table's contract, recorded by the base's one manifest commit
+    val contract = graft.sources.Manifest(key, moreKeys = moreKeys,
+      buckets = buckets, checks = checks, defaults = defaults,
+      generated = generated, layout = layout.copy(maxRecordsPerFile = None))
+    // HASH-BUCKETED layout ([[graft.sources.GraftBucket]]): one file set
+    // per pmod(murmur3(key), n) bucket — graft⋈graft key joins then elide
+    // both shuffles (storage-partitioned joins); else key-sorted files
+    ParquetTable.writeTable(
+      spark.createDataFrame(df1.rdd, graft.sources.MutableParquetTable
+        .allNullable(df1.schema).asInstanceOf[org.apache.spark.sql.types.StructType]),
+      s"$root/base", contract.copy(layout = layout), numFiles)
     // commit the base like every later version: the manifest gives it the
     // stray-file discipline, metadata-only counts/bounds, zone-map reads
     // without footer probes, and records the merge key(s) for SQL writers
-    // — later commits DISCOVER the composite identity from the manifest
-    graft.sources.MutableParquetTable(spark, s"$root/base", key,
-      moreKeys = moreKeys).commitManifest(s"$root/base")
-    buckets.foreach(n =>
-      graft.sources.MutableParquetTable.annotateBuckets(s"$root/base", n))
-    val recorded = layout.copy(maxRecordsPerFile = None)
-    if (recorded != graft.sources.ParquetLayout())
-      graft.sources.Manifest.update(s"$root/base")(_.copy(layout = recorded))
-    if (checks.nonEmpty)
-      graft.sources.GraftChecks.annotateChecks(s"$root/base", checks)
-    if (defaults.nonEmpty || generated.nonEmpty)
-      graft.sources.GraftDefaults.annotate(s"$root/base", defaults,
-        generated)
+    // — later commits DISCOVER the composite identity from the manifest.
+    // The handle opens the base with the contract as its source manifest,
+    // so the one commit carries every field of it
+    graft.sources.MutableParquetTable.opened(spark, s"$root/base", key,
+      graft.sources.MutableParquetTable.Link, Some(contract))
+      .commitManifest(s"$root/base")
     new GraftTable(spark, root, key)
   }
 }

@@ -308,30 +308,17 @@ object OptimisticCommit {
       emptyBatch = batchC.isEmpty
       if (emptyBatch) {
         MutableParquetTable.commitEmpty(at.dir, key, batchC.schema, moreKeys,
-          head.buckets, head.checks, head.defaults, head.generated)
+          head.buckets, head.checks, head.defaults, head.generated, head.layout)
       } else {
         if (head.checks.nonEmpty)
           graft.sources.GraftChecks.enforce(batchC, head.checks, context)
-        // a bucketed table's replace re-buckets: the layout is the
-        // table's join contract, so INSERT OVERWRITE must not silently
-        // drop it
-        head.buckets match {
-          case Some(nb) =>
-            graft.sources.GraftBucket.writeBucketed(batchC, at.dir, key,
-              moreKeys, nb)
-          case None =>
-            val n =
-              if (numFiles > 0) numFiles
-              else {
-                val bytes = batchC.queryExecution.optimizedPlan.stats.sizeInBytes
-                val target = BigInt(128L * 1024 * 1024)
-                ((bytes + target - 1) / target).min(BigInt(4096)).max(BigInt(1)).toInt
-              }
-            graft.sources.ParquetTable.withMicrosTimestamps(spark) {
-              graft.sources.ParquetTable.writeSortedBy(batchC, at.dir,
-                key +: moreKeys, n)
-            }
-        }
+        // under the table's recorded layout; a bucketed table's replace
+        // re-buckets: the layout is the table's join contract, so INSERT
+        // OVERWRITE must not silently drop it
+        graft.sources.ParquetTable.writeTable(batchC, at.dir, head.copy(key = key),
+          if (numFiles > 0) numFiles
+          else graft.sources.ParquetTable.filesFor(
+            batchC.queryExecution.optimizedPlan.stats.sizeInBytes, 128L << 20))
         MutableParquetTable(spark, at.baseDir, key, moreKeys = moreKeys)
           // replace content is entirely new bytes written through the
           // batch schema — no pre-drop file survives, blocklist clears

@@ -1612,7 +1612,7 @@ object SparkEntry {
       numFiles = 4, buckets = Some(8))
     graft.GraftTable.create(ordAgg, s"$work/ns/o", "custkey",
       numFiles = 4, buckets = Some(8))
-    // bucket-granularity CoW merge: zero the balance of every 10th key
+    // per-bucket CoW merge: zero the balance of every 10th key
     tc.commit(custs.where(col("custkey") % 10 === 0)
       .withColumn("c_acctbal", lit(0.0))
       .withColumn("op", lit("upsert")))

@@ -1320,14 +1320,16 @@ object Dedup {
         if (state.isEmpty)
           MutableParquetTable.commitEmpty(target, "idx_key",
             schema.getOrElse(state.schema),
-            checks = graft.sources.GraftChecks.manifestChecks(latest))
+            checks = graft.sources.GraftChecks.manifestChecks(latest),
+            layout = graft.sources.Manifest.read(latest).fold(
+              graft.sources.ParquetLayout())(_.layout))
         else {
           val relaid = state.withColumn("idx_key", idxKey(probeLayout, bucketCol))
           val n = if (files > 0) files else math.max(1,
             MutableParquetTable.manifestFileNames(latest).map(_.size).getOrElse(1))
-          ParquetTable.withMicrosTimestamps(spark) {
-            ParquetTable.writeSortedBy(relaid, target, Seq("idx_key"), n)
-          }
+          ParquetTable.writeTable(relaid, target,
+            graft.sources.Manifest.read(latest).getOrElse(graft.sources.Manifest("idx_key"))
+              .copy(key = "idx_key", moreKeys = Nil), n)
           MutableParquetTable(spark, latest, "idx_key")
             .commitManifest(target, schema, physicalRewrite = true)
           // probe layout declares itself through the dim zone maps (probes

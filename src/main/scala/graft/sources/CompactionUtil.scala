@@ -148,18 +148,24 @@ object CompactionUtil {
     * each bucket's files fold independently — NEVER across buckets — and
     * outputs keep the `b<id>-` name encoding, so the file-bucket
     * invariant (storage-partitioned joins, bucket-routed merges)
-    * survives storage maintenance. Within a bucket files hold
-    * OVERLAPPING key ranges (hash layout scatters the keyspace), so
-    * there is no contiguity to preserve; raw concat carries every
-    * original row group and its stats verbatim, so row-group skipping
-    * inside the folded file is unchanged, and the manifest entry's
-    * [min,max] (from the folded footer) is the inputs' union. One Spark
+    * survives storage maintenance. Within a bucket files are key-sorted
+    * and KEY-DISJOINT (the invariant merges route by), so each bucket's
+    * files are packed contiguously in key order, exactly as
+    * [[compactDirBySize]] packs a key-clustered table: every output is
+    * sorted and still owns a disjoint key range of its bucket. Raw concat
+    * carries every original row group and its stats verbatim, so
+    * row-group skipping inside the folded file is unchanged. One Spark
     * task per output file, pure sequential byte IO. */
   def compactBucketedDir(spark: SparkSession, dir: String, outDir: String,
                          targetBytes: Long): Seq[String] = {
-    val recorded = MutableParquetTable.manifestBytesByName(dir)
-    val files = MutableParquetTable.tableFiles(dir)
+    val m = Manifest.read(dir)
+    val recorded = m.map(_.bytesByName).getOrElse(Map.empty)
+    val mins = m.flatMap(_.ranges(dir)).getOrElse(Nil)
+      .map(r => new Path(r.file).getName -> r.minBytes).toMap
+    val files = MutableParquetTable.tableFiles(dir, m)
       .map(f => f -> MutableParquetTable.recordedOrStatSize(dir, f, recorded))
+      .sortBy(f => mins.getOrElse(new Path(f._1).getName, Array.emptyByteArray))(
+        KeyBytes.ordering)
     require(files.nonEmpty, s"no parquet files in $dir")
     val byBucket = files.groupBy { case (f, _) =>
       GraftBucket.bucketOfName(new Path(f).getName).getOrElse(
@@ -174,7 +180,7 @@ object CompactionUtil {
           .flatMap(run => planBySize(run, targetBytes))
           .zipWithIndex
           .map { case (g, i) =>
-            (g, f"$outDir/b$b%05d-part-$i%05d.parquet")
+            (g, f"$outDir/${GraftBucket.namePrefix(b)}part-$i%05d.parquet")
           }
       }
     val conf = new org.apache.spark.util.SerializableConfiguration(hconf)

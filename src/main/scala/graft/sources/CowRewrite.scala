@@ -12,7 +12,7 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeSet, BindReferences, BoundReference, Expression, GenericInternalRow, GetStructField, InterpretedOrdering, JoinedRow, Predicate, SortOrder, SubqueryExpression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeSet, BindReferences, BoundReference, Expression, GenericInternalRow, GetStructField, InterpretedOrdering, JoinedRow, Literal, Predicate, SortOrder, SubqueryExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode, UnsafeExternalRowSorter}
@@ -20,7 +20,7 @@ import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
@@ -28,14 +28,18 @@ import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 /** The copy-on-write rewrite: ONE sorted pass per dirty file — the
   * reference's rewrite loop (a sorted stream of upserts and deletes
   * merged into a key-sorted file, ParquetRewriter.java:253-322), one
-  * rewriter per file (README.md:45-48), run as one Spark job. It is the
-  * only code that rewrites a data file for a merge on the key-clustered
-  * layout or for a zone-map DELETE/UPDATE.
+  * rewriter per key-sorted shard (README.md:45-48), run as one Spark job.
+  * It is the only code that rewrites a data file for a merge on a
+  * key-disjoint layout — key-clustered, hash-bucketed or empty — or for a
+  * zone-map DELETE/UPDATE.
   *
   * A merge moves only its batch. Its rows, plus the snapshot's tombstoned
-  * keys as deletes, are routed to their owner file (the last file whose
-  * min <= key), shuffled to that file's task and sorted by (owner, key
-  * tuple). Dirty files are packed into at most `defaultParallelism`
+  * keys as deletes, are routed by the table's [[Zone]]: to their bucket
+  * first (an unbucketed table is one bucket), then to the last file of
+  * that bucket whose min <= key. A bucket with no file that receives
+  * upserts takes one new-file source, whose output holds only its batch
+  * rows. Rows are shuffled to their source's task and sorted by (source,
+  * key tuple). Sources are packed into at most `defaultParallelism`
   * contiguous groups balanced by bytes, one task per group. Each task
   * reads a dirty file's footer once and routes the batch rows the file
   * owns to its row groups by the same rule ([[RowGroupCoW]]): clean
@@ -50,15 +54,16 @@ import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
   *
   * A zone-map DELETE/UPDATE is the same job with no batch: its row
   * filter and projection, bound to the physical schema, run over each
-  * file's rows in the task, and outputs keep a bucketed file's `b<id>-`
-  * name prefix.
+  * file's rows in the task.
   *
   * Either way there is no output committer, no table shuffle and no
-  * table sort, and exactly one output per input. An output is written
-  * under a hidden temporary name and renamed to a name fixed by (rewrite,
-  * input), so a retried or speculative attempt replaces it instead of
-  * adding a second copy. Every task reports its outputs' zone map from
-  * the writer's own footer, so the commit sweeps no footers for them.
+  * table sort, and exactly one output per source; a bucketed file's
+  * output keeps its `b<id>-` name prefix, and a new-file source's output
+  * takes its bucket's. An output is written under a hidden temporary
+  * name and renamed to a name fixed by (rewrite, source), so a retried or
+  * speculative attempt replaces it instead of adding a second copy.
+  * Every task reports its outputs' zone map from the writer's own footer,
+  * so the commit sweeps no footers for them.
   *
   * Merge semantics equal tombstone subtraction + [[graft.operators.MergeOps]]
   * `applyMutationsMulti`: every batch or tombstoned key removes the base
@@ -68,21 +73,56 @@ import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
   * is sorted inside its task and merged again. */
 private[sources] object CowRewrite {
 
-  /** A dirty input, in table key order, and the name its output takes. */
-  final case class Source(path: String, bytes: Long, outName: String)
+  /** A dirty input, in zone order, and the name its output takes;
+    * `path` None: a new file for a bucket that has none. */
+  final case class Source(path: Option[String], bytes: Long, outName: String)
 
   /** One output file with the zone-map entry and size its task reported
     * (`range` None: the key column has no stats — every key null). */
   final case class Written(file: String, range: Option[ParquetStats.FileKeyRange],
                            bytes: Long)
 
+  /** The table's zone map as routing sees it: `files` ordered by (bucket,
+    * min key), `starts(b)` the offset of bucket b's first file among them
+    * (one offset per bucket, plus the end). The files of each bucket are
+    * key-disjoint; an unbucketed table is one bucket. */
+  final case class Zone(files: IndexedSeq[ParquetStats.FileKeyRange],
+                        starts: IndexedSeq[Int], bucketed: Boolean) {
+    def buckets: Int = starts.size - 1
+    def bucket(b: Int): IndexedSeq[ParquetStats.FileKeyRange] =
+      files.slice(starts(b), starts(b + 1))
+
+    /** Whether some bucket holds a file whose max reaches the next
+      * file's min: its keys are not owned by one file each. */
+    def overlapped: Boolean = (0 until buckets).exists { b =>
+      val fs = bucket(b)
+      fs.indices.drop(1).exists(i => KeyBytes.compare(fs(i - 1).maxBytes, fs(i).minBytes) >= 0)
+    }
+  }
+
+  object Zone {
+    /** The zone map `ranges` of a table of `buckets` buckets (None:
+      * unbucketed), each file's bucket read from its name. */
+    def apply(ranges: Seq[ParquetStats.FileKeyRange], buckets: Option[Int]): Zone = {
+      val n = buckets.getOrElse(1)
+      val byBucket = ranges.sortBy(_.minBytes)(KeyBytes.ordering).groupBy { r =>
+        if (n == 1) 0
+        else GraftBucket.bucketOfName(nameOf(r.file)).filter(_ < n).getOrElse(
+          throw new IllegalStateException(
+            s"a table of $n buckets holds a file outside them: ${r.file}"))
+      }
+      val slices = (0 until n).map(b => byBucket.getOrElse(b, Nil).toIndexedSeq)
+      Zone(slices.flatten, slices.scanLeft(0)(_ + _.size), buckets.isDefined)
+    }
+  }
+
   /** What a rewrite does to its files' rows. */
   sealed trait Change
 
   /** Merge `batch` (logical columns plus `opCol`), routed by the table's
-    * key-ordered zone map `ranges`; `tombstones` is the snapshot's
-    * sidecar (columns `__k0..__kn`). */
-  final case class Merge(ranges: Seq[ParquetStats.FileKeyRange], batch: DataFrame,
+    * `zone`; each bucket in `fresh` has no file and takes a new one;
+    * `tombstones` is the snapshot's sidecar (columns `__k0..__kn`). */
+  final case class Merge(zone: Zone, fresh: Set[Int], batch: DataFrame,
                          opCol: String, tombstones: Option[DataFrame])
       extends Change
 
@@ -94,14 +134,17 @@ private[sources] object CowRewrite {
   final case class RowOp(keep: Expression, project: Seq[Expression])
 
   /** Everything a rewrite task needs. `schema` is the physical write
-    * schema, `layout` the table's; `owners` maps each table file (key
-    * order) to its source ordinal, -1 for clean files; `mins` are the
-    * files' encoded minimum keys, for routing; `groupOf` is the task of
-    * each source; `rows` is set for a rewrite with no batch. */
+    * schema, `layout` the table's; the routing slots are the zone's files
+    * plus one per new-file bucket, in (bucket, min key) order: `mins` are
+    * their encoded minimum keys (a new file's is empty), `starts` each
+    * bucket's first slot (as [[Zone.starts]]) and `owners` each slot's
+    * source ordinal, -1 for clean files; `groupOf` is the task of each
+    * source; `rows` is set for a rewrite with no batch. */
   final case class Spec(outDir: String, keys: Seq[String], schema: StructType,
                         layout: ParquetLayout, sources: IndexedSeq[Source],
                         groupOf: Array[Int], owners: Array[Int],
-                        mins: Array[Array[Byte]], rows: Option[RowOp]) {
+                        mins: Array[Array[Byte]], starts: Array[Int],
+                        rows: Option[RowOp]) {
     def groups: Int = groupOf.lastOption.fold(0)(_ + 1)
   }
 
@@ -115,9 +158,9 @@ private[sources] object CowRewrite {
   private val OutSchema: StructType =
     ParquetStats.keyStatsSchema.add(StructField("bytes", LongType, nullable = false))
 
-  /** Rewrite `files` (the dirty files, in table key order) of a table
-    * whose logical schema is `logical`, writing one output per input
-    * into `outDir` under `layout`. `recordedBytes` holds the manifest's
+  /** Rewrite `files` (the dirty files, in zone order) of a table whose
+    * logical schema is `logical`, writing one output per source into
+    * `outDir` under `layout`. `recordedBytes` holds the manifest's
     * per-file sizes by name. */
   def run(spark: SparkSession, outDir: String, keys: Seq[String],
           files: Seq[String], recordedBytes: Map[String, Long],
@@ -139,19 +182,42 @@ private[sources] object CowRewrite {
     val id = java.util.UUID.randomUUID().toString
     val hc = spark.sparkContext.hadoopConfiguration
     val ext = layout.codec.getExtension
-    val sources = files.zipWithIndex.map { case (f, i) =>
-      Source(f, recordedBytes.getOrElse(nameOf(f), {
-          val p = new Path(f)
-          p.getFileSystem(hc).getFileStatus(p).getLen
-        }),
-        f"${MutableParquetTable.bucketPrefixOf(f)}part-$i%05d-$id-c000$ext.parquet")
+    // routing slots (min key, file, bucket): a merge's zone plus its new
+    // files; a rewrite with no batch routes nothing
+    val (slots, starts, bucketed) = change match {
+      case Merge(zone, fresh, _, _, _) =>
+        val perBucket = (0 until zone.buckets).map { b =>
+          val fs = zone.bucket(b)
+          if (fs.nonEmpty) fs.map(r => (r.minBytes, Option(r.file), b))
+          else if (fresh(b)) Seq((Array.emptyByteArray, None, b))
+          else Nil
+        }
+        (perBucket.flatten, perBucket.scanLeft(0)(_ + _.size), zone.bucketed)
+      case _: Rewrite =>
+        (files.map(f => (Array.emptyByteArray, Option(f), 0)), Seq(0, 0), false)
+    }
+    // a slot is a source when it is a new file or a dirty one
+    val dirty = files.toSet
+    val sourceSlots = slots.indices.filter(i => slots(i)._2.forall(dirty))
+    val owners = Array.fill(slots.size)(-1)
+    sourceSlots.zipWithIndex.foreach { case (slot, i) => owners(slot) = i }
+    val sources = sourceSlots.map(slots).zipWithIndex.map {
+      case ((_, f, b), i) =>
+        val prefix = f.fold(if (bucketed) GraftBucket.namePrefix(b) else "")(
+          MutableParquetTable.bucketPrefixOf)
+        Source(f, f.fold(0L)(p => recordedBytes.getOrElse(nameOf(p), {
+            val path = new Path(p)
+            path.getFileSystem(hc).getFileStatus(path).getLen
+          })),
+          f"${prefix}part-$i%05d-$id-c000$ext.parquet")
     }.toIndexedSeq
-    val physical = nullable(MutableParquetTable.physicalSchemaOf(logical, renames))
+    val physical = MutableParquetTable.allNullable(
+        MutableParquetTable.physicalSchemaOf(logical, renames))
       .asInstanceOf[StructType]
     // [kind, physical columns...]: batch rows, then tombstoned keys
     val kindField = StructField("__kind", IntegerType, nullable = false)
-    val (ranges, child, rowOp) = change match {
-      case Merge(ranges, batch, opCol, tombstones) =>
+    val (child, rowOp) = change match {
+      case Merge(_, _, batch, opCol, tombstones) =>
         def rows(df: DataFrame, kind: Column)(value: StructField => Column) =
           df.select(kind.as(kindField.name) +: logical.fields.toSeq.map(f =>
             value(f).as(renames.getOrElse(f.name, f.name))): _*)
@@ -164,17 +230,15 @@ private[sources] object CowRewrite {
               case -1 => lit(null).cast(f.dataType)
               case i  => col(s"__k$i").cast(f.dataType)
             })))
-        (ranges, all.queryExecution.analyzed, None)
+        (all.queryExecution.analyzed, None)
       case Rewrite(keep, project) =>
-        (Nil, LocalRelation(DataTypeUtils.toAttributes(
+        (LocalRelation(DataTypeUtils.toAttributes(
             StructType(kindField +: physical.fields))),
           Some(bind(spark, logical, keep, project)))
     }
-    val ordinal = sources.map(_.path).zipWithIndex.toMap
     val spec = Spec(outDir, keys, physical, layout, sources,
       pack(sources.map(_.bytes), spark.sparkContext.defaultParallelism),
-      ranges.map(r => ordinal.getOrElse(r.file, -1)).toArray,
-      ranges.map(_.minBytes).toArray, rowOp)
+      owners, slots.map(_._1).toArray, starts.toArray, rowOp)
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val strategies = classic.experimental.extraStrategies
     if (!strategies.contains(Strategy))
@@ -229,20 +293,40 @@ private[sources] object CowRewrite {
   }
 
   /** Ordinal of the unit (a file of the table, or a row group of a file)
-    * owning encoded key `kb` among key-ordered `mins`: the last unit
-    * whose min <= key, else the first (the reference's "insert into the
-    * current block" rule, ParquetRewriter.java:263-283). A null key
-    * sorts first. */
-  def ownerOf(kb: Array[Byte], mins: Array[Array[Byte]]): Int = {
-    var lo = 0
-    var hi = mins.length - 1
-    var ans = 0
+    * owning encoded key `kb` among key-ordered `mins(from until until)`:
+    * the last unit whose min <= key, else the first (the reference's
+    * "insert into the current block" rule, ParquetRewriter.java:263-283).
+    * A null key sorts first. */
+  def ownerOf(kb: Array[Byte], mins: Array[Array[Byte]], from: Int = 0,
+              until: Int = -1): Int = {
+    var lo = from
+    var hi = (if (until < 0) mins.length else until) - 1
+    var ans = from
     if (kb != null) while (lo <= hi) {
       val mid = (lo + hi) >>> 1
       if (KeyBytes.compare(mins(mid), kb) <= 0) { ans = mid; lo = mid + 1 }
       else hi = mid - 1
     }
     ans
+  }
+
+  /** Routes a batch row by its lead key `lead` to a routing slot among
+    * key-ordered `mins`, bucket by bucket (`starts` as [[Zone.starts]]):
+    * to the row's bucket first, then to the last slot of that bucket
+    * whose min <= key; `-1 - bucket` when the bucket has no slot. The
+    * bucket is `pmod(murmur3(key), n)` ([[GraftBucket.bucketIdExpr]]),
+    * not computed for an unbucketed table. The one rule of the merge's
+    * routing pass and of its rewrite task. */
+  private[sources] final class Router(lead: Expression, starts: Array[Int]) {
+    private val bucket = starts.length - 1 match {
+      case 1 => None
+      case n => Some(GraftBucket.bucketIdExpr(lead, Literal(n)))
+    }
+    def apply(row: InternalRow, mins: Array[Array[Byte]]): Int = {
+      val b = bucket.fold(0)(_.eval(row).asInstanceOf[Int])
+      if (starts(b) == starts(b + 1)) -1 - b
+      else ownerOf(keyBytes(lead.eval(row)), mins, starts(b), starts(b + 1))
+    }
   }
 
   /** A key value as Catalyst holds it, in [[KeyBytes]] encoding: epoch
@@ -273,17 +357,6 @@ private[sources] object CowRewrite {
           GetStructField(e, at(e.dataType.asInstanceOf[StructType], seg), Some(seg))
       }
     }
-  }
-
-  /** `dt` with every level nullable — the shape Spark's own parquet
-    * writes produce, so outputs match the files they replace. */
-  private def nullable(dt: DataType): DataType = dt match {
-    case s: StructType => StructType(s.fields.map(f =>
-      f.copy(dataType = nullable(f.dataType), nullable = true)))
-    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-    case m: MapType =>
-      MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
-    case other => other
   }
 
   private def ascending(es: Seq[Expression]): InterpretedOrdering =
@@ -349,7 +422,7 @@ private[sources] object CowRewrite {
           sparkContext.parallelize(Seq.empty[(InternalRow, InternalRow)], s.groups)
         else {
           val keyed = child.execute().mapPartitions { it =>
-            val lead = keyExpr(s.schema, s.keys.head, 1)
+            val route = new Router(keyExpr(s.schema, s.keys.head, 1), s.starts)
             val owner = new GenericInternalRow(1)
             val joined = new JoinedRow
             val toKey = UnsafeProjection.create(
@@ -359,12 +432,14 @@ private[sources] object CowRewrite {
             val toRow = UnsafeProjection.create(s.schema.fields.toSeq.zipWithIndex
               .map { case (f, i) => BoundReference(1 + i, f.dataType, nullable = true) })
             it.flatMap { r =>
-              val d = s.owners(ownerOf(keyBytes(lead.eval(r)), mins.value))
+              val slot = route(r, mins.value)
+              val d = if (slot >= 0) s.owners(slot) else -1
               if (d >= 0) {
                 owner.update(0, d)
                 Iterator.single((toKey(joined(owner, r)).copy(): InternalRow,
                   toRow(r).copy(): InternalRow))
               } else if (r.getInt(0) == Tombstone) Iterator.empty // stays in the sidecar
+              else if (slot < 0 && r.getInt(0) == Delete) Iterator.empty // no such key
               else throw new IllegalStateException("a batch key routes to a " +
                 "file the merge did not mark dirty — the batch changed between " +
                 "routing and rewrite (is it deterministic?)")
@@ -387,14 +462,20 @@ private[sources] object CowRewrite {
         val unsafe = UnsafeProjection.create(OutSchema)
         s.groupOf.indices.filter(s.groupOf(_) == g).iterator.flatMap { d =>
           val src = s.sources(d)
-          val owned = scala.collection.mutable.ArrayBuffer.empty[(InternalRow, InternalRow)]
-          while (rows.hasNext && rows.head._1.getInt(0) == d) owned += rows.next()
-          def base(start: Long, length: Long): Iterator[InternalRow] =
-            read(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(src.path),
+          // the rows this source owns, as the sorted shuffle delivers
+          // them: a new file streams them into its writer, a dirty file
+          // holds them to route them to its row groups first
+          val owned = new Iterator[(InternalRow, InternalRow)] {
+            def hasNext: Boolean = rows.hasNext && rows.head._1.getInt(0) == d
+            def next(): (InternalRow, InternalRow) = rows.next()
+          }
+          def base(path: String)(start: Long, length: Long): Iterator[InternalRow] =
+            read(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
               start, length, Array.empty[String], 0L, src.bytes))
           val tmp = s"${s.outDir}/.${src.outName}.${TaskContext.get.taskAttemptId()}.tmp"
-          val out = merger.mergeFile(src, owned, base, tmp)
-          m("numFiles").add(1)
+          val out = src.path.fold(merger.mergeNew(owned, tmp))(p =>
+            merger.mergeFile(p, src.bytes, owned.toIndexedSeq, base(p), tmp))
+          if (src.path.isDefined) m("numFiles").add(1)
           m("filesSize").add(src.bytes)
           m("rowsWritten").add(out.rows)
           m("groupsSpliced").add(out.spliced)
@@ -456,30 +537,38 @@ private[sources] object CowRewrite {
         _.filter(keep.eval).map(project)
       }
 
-    /** Rewrite `src` with the batch rows it `owned` (sorted by key) into
-      * `tmp`; `base(start, length)` reads the source rows of a split. */
-    def mergeFile(src: Source, owned: Rows,
+    /** The batch rows a new file `owned` (sorted by key), streamed into
+      * `tmp`: an empty base is never out of order, so they are read once. */
+    def mergeNew(owned: Iterator[(InternalRow, InternalRow)], tmp: String): Out = {
+      val (f, n) = rewrite(() => Iterator.empty, () => owned, tmp)
+      Out(f, n, 0, 0)
+    }
+
+    /** Rewrite the file at `path` (`bytes` long) with the batch rows it
+      * `owned` (sorted by key) into `tmp`; `base(start, length)` reads the
+      * file's rows of a split. */
+    def mergeFile(path: String, bytes: Long, owned: Rows,
                   base: (Long, Long) => Iterator[InternalRow], tmp: String): Out = {
-      val in = HadoopInputFile.fromPath(new Path(src.path), conf)
+      val in = HadoopInputFile.fromPath(new Path(path), conf)
       val reader = ParquetFileReader.open(in)
       try {
         val footer = reader.getFooter
         val blocks = footer.getBlocks.asScala.toIndexedSeq
         def whole(): Out = {
-          val (f, n) = rewrite(() => rowOp(base(0L, src.bytes)), owned, tmp)
+          val (f, n) = rewrite(() => rowOp(base(0L, bytes)), () => owned.iterator, tmp)
           Out(f, n, 0, blocks.size)
         }
         val bounds =
           if (s.rows.isDefined || blocks.size < 2 ||
               footer.getFileMetaData.getSchema != written) None
-          else RowGroupCoW.bounds(src.path, s.keys.head, footer)
+          else RowGroupCoW.bounds(path, s.keys.head, footer)
         bounds.fold(whole()) { b =>
           val mins = b.map(_._1).toArray
           val groupOf = owned.map(kv => ownerOf(keyBytes(kv._1.get(2, keys.head.dataType)), mins))
           val runs = RowGroupCoW.runs(b, owned.indices
             .filter(owned(_)._1.getInt(1) != Tombstone).map(groupOf).toSet)
           if (runs.forall(_._1)) whole()
-          else splice(src, in, reader, blocks, runs, owned, groupOf, base, tmp)
+          else splice(in, reader, blocks, runs, owned, groupOf, base, tmp)
         }
       } finally reader.close()
     }
@@ -487,7 +576,7 @@ private[sources] object CowRewrite {
     /** `runs` of the source written into `tmp` in key order: clean runs
       * copied raw, dirty runs merged with the batch rows routed to them
       * and appended. */
-    private def splice(src: Source, in: HadoopInputFile, reader: ParquetFileReader,
+    private def splice(in: HadoopInputFile, reader: ParquetFileReader,
                        blocks: IndexedSeq[BlockMetaData], runs: Seq[(Boolean, Range)],
                        owned: Rows, groupOf: collection.IndexedSeq[Int],
                        base: (Long, Long) => Iterator[InternalRow],
@@ -509,7 +598,8 @@ private[sources] object CowRewrite {
           } else {
             val run = s"$tmp.run$k"
             val (start, length) = RowGroupCoW.span(blocks, groups.head, groups.last)
-            val (footer, n) = rewrite(() => base(start, length), owned.slice(from, next), run)
+            val (footer, n) = rewrite(() => base(start, length),
+              () => owned.slice(from, next).iterator, run)
             rows += n
             footer.foreach { f =>
               val runIn = HadoopInputFile.fromPath(new Path(run), conf)
@@ -532,15 +622,16 @@ private[sources] object CowRewrite {
       Out(Some(out.getFooter), rows, blocks.size - dirtyGroups, dirtyGroups)
     }
 
-    /** Merge key-ordered rows into `tmp`: returns the written file's
-      * footer (None when no row survives, and nothing is written) and the
-      * row count. */
-    private def rewrite(base: () => Iterator[InternalRow], owned: Rows, tmp: String)
+    /** Merge key-ordered base rows with the key-ordered batch rows they
+      * `owned` into `tmp`: returns the written file's footer (None when no
+      * row survives, and nothing is written) and the row count. */
+    private def rewrite(base: () => Iterator[InternalRow],
+                        owned: () => Iterator[(InternalRow, InternalRow)], tmp: String)
         : (Option[ParquetMetadata], Long) = {
       def attempt(rows: Iterator[InternalRow]) = {
         val w = new GraftDataWriter(tmp, s.schema, conf, s.layout)
         var n = 0L
-        try merge(rows, owned.iterator.buffered, { r => w.write(r); n += 1 })
+        try merge(rows, owned().buffered, { r => w.write(r); n += 1 })
         catch { case e: Throwable => w.abort(); throw e }
         (w.commit() match {
           case GraftFileCommitted(_) => Some(w.footer)

@@ -34,8 +34,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * layout [[graft.GraftTable]] owns (`base` + `v<n>` snapshots), so
   * path-based and name-based access are interchangeable. CREATE TABLE
   * commits an EMPTY base snapshot (schema + merge key in the manifest,
-  * zero data files); the first insert takes the insert-into-empty merge
-  * path. The catalog holds NO state of its own — the filesystem layout
+  * zero data files); the first insert is a merge that writes one new
+  * file per bucket it upserts into. The catalog holds NO state of its own — the filesystem layout
   * is the catalog, so there is nothing extra to replicate or recover. */
 final class GraftCatalog extends TableCatalog with ProcedureCatalog
     with org.apache.spark.sql.connector.catalog.FunctionCatalog

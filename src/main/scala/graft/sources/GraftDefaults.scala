@@ -46,14 +46,6 @@ object GraftDefaults {
   def manifestGenerated(snapshotDir: String): Map[String, String] =
     Manifest.read(snapshotDir).map(_.generated).getOrElse(Map.empty)
 
-  /** Re-stamp a committed/staged manifest's defaults/generated maps in
-    * place (idempotent; empty maps remove the fields). */
-  private[graft] def annotate(snapshotDir: String,
-                              defaults: Map[String, String],
-                              generated: Map[String, String]): Unit =
-    Manifest.update(snapshotDir)(
-      _.copy(defaults = defaults, generated = generated))
-
   /** Validate a DEFAULT expression: parses, deterministic, and
     * CONSTANT — no column references (a default fills omitted input, so
     * there is nothing for it to reference; proven by resolving against
@@ -96,7 +88,7 @@ object GraftDefaults {
         s"$fromDir carries no schema — only committed snapshots can " +
           "change column contracts"))
     MutableParquetTable.stageSchemaChange(fromDir, toDir, schema)
-    annotate(toDir, defaults, generated)
+    Manifest.update(toDir)(_.copy(defaults = defaults, generated = generated))
   }
 
   /** Apply both contracts to a write batch: fill omitted DEFAULT /

@@ -553,7 +553,8 @@ object GraftProcedures {
         (head, target) =>
           val state = CdcMergeSink.readSnapshot(spark, head)
           require(state.limit(1).count() > 0, "cannot z-order an empty table")
-          ZOrder.writeZOrdered(state, target, dims, nFiles)
+          ZOrder.writeZOrdered(state, target, dims, nFiles,
+            Manifest.read(head).fold(ParquetLayout())(_.layout))
           // commit with the SOURCE snapshot as the carry anchor (moreKeys
           // + any prior dim sections), then attach fresh per-file ranges
           // for the union of prior dims and the curve dims

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -94,11 +94,12 @@ final case class MergeResult(
   * order and parquet's UNSIGNED string stats order.
   *
   * Layout invariant (README.md:21): files hold disjoint key ranges, each
-  * internally sorted — produced by [[ParquetTable.writeSorted]] and
-  * PRESERVED by `merge`: a dirty file's output holds its own rows plus the
-  * batch keys it owns (the keys below the next file's minimum), so no
-  * output ever spans another file's range and chained merges keep routing
-  * correct.
+  * internally sorted — within each bucket of a hash-bucketed table
+  * ([[GraftBucket]]), an unbucketed table being one bucket — produced by
+  * [[ParquetTable.writeTable]] and PRESERVED by `merge`: a dirty file's
+  * output holds its own rows plus the batch keys it owns (the keys below
+  * the next file's minimum in its bucket), so no output ever spans
+  * another file's range and chained merges keep routing correct.
   * Dirty-file detection = footer key ranges (the reference's loadStats zone
   * map, ParquetRewriter.java:239-251) binary-searched against the update
   * keys (the seekToKey routing of ParquetRewriter.java:263-283, made
@@ -214,13 +215,6 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       widenedOverride = carried(_.widenedColumns, Nil))
   }
 
-  /** Route update keys to files: a key is owned by the last file (in key
-    * order) whose minKey <= key, or the first file if below all ranges
-    * (the reference's "insert into current block" rule,
-    * ParquetRewriter.java:263-283). Returns the owning files. */
-  def dirtyFiles(updateKeys: DataFrame): Seq[String] =
-    routedFiles(sortedRanges(), updateKeys)
-
   private def sortedRanges(src: Option[Manifest] = manifest)
       : Seq[ParquetStats.FileKeyRange] =
     // committed snapshots carry their zone map in the manifest — trust it
@@ -230,36 +224,46 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       .getOrElse(ParquetStats.fileKeyRangesTyped(spark, dir, key))
       .sortBy(_.minBytes)(KeyBytes.ordering)
 
-  private def routedFiles(ranges: Seq[ParquetStats.FileKeyRange],
-                          updateKeys: DataFrame): Seq[String] = {
-    if (ranges.isEmpty) return Seq.empty
-    val bcast = spark.sparkContext.broadcast(ranges.map(_.minBytes).toArray)
-    val keyName = updateKeys.columns.head
-    import spark.implicits._
-    // per-partition dedup into a local set, then a driver union — one
-    // map-only stage, no shuffle: at most #files distinct owners leave
-    // each partition, so the collect is bounded by partitions × files
-    def routeAll[T](ds: Dataset[T])(enc: T => Array[Byte]): Seq[String] =
-      ds.mapPartitions { it =>
-          val mins = bcast.value
-          val seen = scala.collection.mutable.HashSet.empty[Int]
-          it.foreach(k => seen += CowRewrite.ownerOf(enc(k), mins))
-          seen.iterator
-        }.collect().toSeq.map(i => ranges(i).file)
-    val routed: Seq[String] =
-      updateKeys.schema.head.dataType match {
-        case StringType =>
-          routeAll(updateKeys.select(col(keyName).cast("string")).as[String])(
-            KeyBytes.fromString)
-        case BinaryType =>
-          routeAll(updateKeys.select(col(keyName)).as[Array[Byte]])(
-            KeyBytes.fromBinary)
-        case dt =>
-          routeAll(updateKeys
-            .select(MutableParquetTable.normalizedKeyCol(dt, col(keyName)))
-            .as[Long])(KeyBytes.fromLong)
+  /** The routing pass: the files of `zone` the batch's keys route to
+    * ([[CowRewrite.Router]]: a key's bucket, then the last file of that
+    * bucket whose min <= key — the reference's "insert into the current
+    * block" rule, ParquetRewriter.java:263-283), and the buckets with no
+    * file that receive upserts. One map-only stage over the batch's key
+    * and op columns, no shuffle: at most #files + #buckets distinct codes
+    * leave each partition. An unbucketed empty table needs no pass: its
+    * one bucket takes the new file. */
+  private def routed(zone: CowRewrite.Zone, batch: DataFrame,
+                     opCol: String): (Set[String], Set[Int]) = {
+    if (zone.files.isEmpty && zone.buckets == 1) return (Set.empty, Set(0))
+    val starts = zone.starts.toArray
+    val empty = zone.starts.sliding(2).exists(p => p(0) == p(1))
+    val probe = batch.select(col(key),
+      if (empty) coalesce(col(opCol) === "upsert", lit(false)) else lit(false))
+    val dt = probe.schema.head.dataType
+    dt match {
+      case StringType | BinaryType | DateType | TimestampType | TimestampNTZType |
+           ByteType | ShortType | IntegerType | LongType =>
+      case other => throw new IllegalArgumentException(
+        s"unsupported merge-key type $other — integral, string, binary, " +
+          "date, or timestamp required")
+    }
+    val mins = spark.sparkContext.broadcast(zone.files.map(_.minBytes).toArray)
+    val codes = probe.mapPartitions { it =>
+      import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+      val route = new CowRewrite.Router(BoundReference(0, dt, nullable = true), starts)
+      val toCatalyst =
+        org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dt)
+      val k = new GenericInternalRow(1)
+      val seen = scala.collection.mutable.HashSet.empty[Int]
+      it.foreach { r =>
+        k.update(0, toCatalyst(r.get(0)))
+        val c = route(k, mins.value)
+        if (c >= 0 || r.getBoolean(1)) seen += c
       }
-    routed.distinct.sorted
+      seen.iterator
+    }(org.apache.spark.sql.Encoders.scalaInt).collect().toSet
+    (codes.filter(_ >= 0).map(i => fileName(zone.files(i).file)),
+      codes.filter(_ < 0).map(-1 - _))
   }
 
   /** Exact holder routing for OVERLAPPED layouts (z-order and other
@@ -293,19 +297,21 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
 
   /** Copy-on-write merge. `batch` = base schema + op column.
     * Writes a new snapshot directory: clean files hard-linked (fallback:
-    * copied) without ever being opened; on the key-clustered layout each
+    * copied) without ever being opened. On every key-disjoint layout —
+    * key-clustered, hash-bucketed (key-disjoint within each bucket) or
+    * empty — the batch is routed to its buckets' owner files and each
     * dirty file is rewritten by one sorted pass that merges in the batch
-    * rows it owns ([[CowRewrite]]) — one job of at most
-    * `defaultParallelism` tasks, in which the batch is the only shuffle.
-    * Inside a dirty file only the row groups the batch routes to are
-    * re-encoded and the clean ones copied raw, so rewrite bytes scale
-    * with dirty groups; a file whose parquet schema differs from the
-    * write schema, or of one row group, is rewritten whole. Every
-    * rewrite writes under the table's recorded [[ParquetLayout]]. The
-    * empty table, the overlapped layout and bucketed tables re-merge
-    * relationally. The manifest is written last as the commit marker,
-    * from the zone maps the rewrite tasks report. Returns the merge
-    * summary. */
+    * rows it owns ([[CowRewrite]]); a bucket with no file that receives
+    * upserts gets one new file. One job of at most `defaultParallelism`
+    * tasks, in which the batch is the only shuffle. Inside a dirty file
+    * only the row groups the batch routes to are re-encoded and the clean
+    * ones copied raw, so rewrite bytes scale with dirty groups; a file
+    * whose parquet schema differs from the write schema, or of one row
+    * group, is rewritten whole. Every rewrite writes under the table's
+    * recorded [[ParquetLayout]]. Only the overlapped, unbucketed layout
+    * re-merges relationally. The manifest is written last as the commit
+    * marker, from the zone maps the rewrite tasks report. Returns the
+    * merge summary. */
   def merge(batch0: DataFrame, opCol: String = "op",
             snapshotDir: Option[String] = None): MergeResult =
     mergeFrom(manifest, batch0, opCol, snapshotDir)
@@ -343,17 +349,13 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     val tableSchema = src.flatMap(_.schema)
       .getOrElse(spark.read.parquet(dir).schema)
     val renames = src.map(_.renames).getOrElse(Map.empty[String, String])
-    // HASH-BUCKETED layout: routing is by bucket id, not key ranges —
-    // the range/overlap machinery below assumes key-clustered files
-    src.flatMap(_.buckets).foreach { n =>
-      return mergeBucketed(n, batch, opCol, snapshotDir, src, tableSchema,
-        renames)
-    }
     val outDir = snapshotDir.getOrElse(s"$dir-v${System.currentTimeMillis()}")
     Files.createDirectories(Paths.get(outDir))
 
     val phase = new PhaseClock
+    val buckets = src.flatMap(_.buckets)
     val ranges = sortedRanges(src)
+    val zone = CowRewrite.Zone(ranges, buckets)
     phase("ranges")
     val allFiles = MutableParquetTable.tableFiles(dir, src)
     // OVERLAPPED layouts (z-order or any non-key-clustered file set):
@@ -363,19 +365,21 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     // the true holder files. Files with no zone map entry (no key stats,
     // e.g. INT96 timestamp keys written outside the engine) can hold any
     // key, so owner-routing over the ranged files alone would miss them:
-    // they take the same exact route.
-    val overlapped = ranges.size < allFiles.size ||
-      ranges.size > 1 && (0 until ranges.size - 1).exists(i =>
-        KeyBytes.compare(ranges(i).maxBytes, ranges(i + 1).minBytes) >= 0)
+    // they take the same exact route. No engine write leaves a bucket so.
+    val overlapped = ranges.size < allFiles.size || zone.overlapped
+    if (overlapped && buckets.isDefined)
+      throw new IllegalStateException(s"bucketed table $dir holds a bucket " +
+        "whose files overlap in key range or carry no key statistics — " +
+        "its keys have no owner file to merge into")
     // dirty/clean split by FILE NAME: footer stats yield `file:/…` URIs
     // while the local listing yields the caller's path form (possibly
     // relative) — comparing full paths would silently classify every file
-    // clean AND re-merge the dirty ones (duplicate rows). On the
-    // key-clustered layout every file boundary is a cut (max < next min),
-    // so a key's owner is the one file that can hold it.
-    val dirtyNames =
-      if (overlapped) holderFileNames(batch, allFiles, tableSchema)
-      else routedFiles(ranges, batch.select(key)).map(fileName).toSet
+    // clean AND re-merge the dirty ones (duplicate rows). On a key-
+    // disjoint layout every file boundary of a bucket is a cut (max <
+    // next min), so a key's owner is the one file that can hold it.
+    val (dirtyNames, fresh) =
+      if (overlapped) (holderFileNames(batch, allFiles, tableSchema), Set.empty[Int])
+      else routed(zone, batch, opCol)
     phase("route")
     val (dirty, clean) = allFiles.partition(f => dirtyNames.contains(fileName(f)))
 
@@ -390,29 +394,24 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     val tombstones = MutableParquetTable.tombstoneDf(spark, dir, src)
     var inserted = 0
     var written = Seq.empty[CowRewrite.Written]
-    // overlapped layout with NO holder files: upserts are all genuine
-    // inserts (the exact join proved every batch key absent from every
-    // file) and need a new file; a delete-only probe of absent keys
-    // stays metadata-only
-    val needRewrite =
-      if (overlapped && dirty.isEmpty && clean.nonEmpty)
-        !batch.where(col(opCol) =!= lit("delete")).isEmpty
-      else dirty.nonEmpty || clean.isEmpty
-    if (needRewrite && allFiles.nonEmpty && !overlapped) {
-      // KEY-CLUSTERED layout: one sorted pass per dirty file; rewritten
-      // files carry PHYSICAL column names (renamed tables), and tombstoned
-      // keys of dirty files act as deletes
+    if (!overlapped && (dirty.nonEmpty || fresh.nonEmpty)) {
+      // one sorted pass per dirty file and one new file per fresh bucket;
+      // rewritten files carry PHYSICAL column names (renamed tables), and
+      // tombstoned keys of dirty files act as deletes
       written = CowRewrite.run(spark, outDir, keys,
-        ranges.map(_.file).filter(f => dirtyNames(fileName(f))),
+        zone.files.map(_.file).filter(f => dirtyNames(fileName(f))),
         src.map(_.bytesByName).getOrElse(Map.empty), mergedSchema, renames,
-        layout, CowRewrite.Merge(ranges, batch, opCol, tombstones))
+        layout, CowRewrite.Merge(zone, fresh, batch, opCol, tombstones))
       inserted = written.size
-    } else if (needRewrite) {
-      // the empty table and the overlapped layout re-merge relationally;
-      // explicit schema, so no per-merge footer-inference job runs.
-      // Deletion tombstones are subtracted from the base read: tombstoned
-      // rows must neither survive the rewrite physically nor count as
-      // matched base rows
+    } else if (overlapped &&
+        (dirty.nonEmpty || !batch.where(col(opCol) =!= lit("delete")).isEmpty)) {
+      // OVERLAPPED layout: re-merge the holder files relationally (with
+      // no holder, every upsert is a genuine insert — the exact join
+      // proved its key absent from every file — and a delete-only probe
+      // of absent keys stays metadata-only); explicit schema, so no
+      // per-merge footer-inference job runs. Deletion tombstones are
+      // subtracted from the base read: tombstoned rows must neither
+      // survive the rewrite physically nor count as matched base rows
       val base0 =
         if (dirty.nonEmpty)
           MutableParquetTable.readFilesLogical(spark, dirty, mergedSchema,
@@ -424,30 +423,22 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       // rewritten files carry PHYSICAL column names (renamed tables)
       val merged0 = MutableParquetTable.toPhysicalNames(
         MergeOps.applyMutationsMulti(base, batch, keys, opCol), renames)
-      if (allFiles.isEmpty) {
-        ParquetTable.write(
-          merged0.repartition(1).sortWithinPartitions(keys.map(col): _*),
-          outDir, layout, SaveMode.Append)
-        inserted = 1
-      } else {
-        // OVERLAPPED layout: rewrite all holder files (plus inserts) as
-        // ONE range-partitioned run: output files are key-disjoint among
-        // THEMSELVES (range exchange + in-partition sort); they may still
-        // overlap the untouched files, but routing on an overlapped
-        // layout is always the exact holder join above, which needs no
-        // range invariant.
-        val nOut = math.max(1, dirty.size)
-        val merged = if (nOut > 1)
-          merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else merged0
-        try ParquetTable.write(
-          (if (nOut == 1) merged.repartition(1)
-           else merged.repartitionByRange(nOut, keys.map(col): _*))
-            .sortWithinPartitions(keys.map(col): _*),
-          outDir, layout, SaveMode.Append)
-        finally if (nOut > 1) merged.unpersist(false)
-        inserted += nOut
-      }
+      // all holder files (plus inserts) rewrite as ONE range-partitioned
+      // run: output files are key-disjoint among THEMSELVES (range
+      // exchange + in-partition sort); they may still overlap the
+      // untouched files, but routing on an overlapped layout is always
+      // the exact holder join above, which needs no range invariant.
+      val nOut = math.max(1, dirty.size)
+      val merged = if (nOut > 1)
+        merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else merged0
+      try ParquetTable.write(
+        (if (nOut == 1) merged.repartition(1)
+         else merged.repartitionByRange(nOut, keys.map(col): _*))
+          .sortWithinPartitions(keys.map(col): _*),
+        outDir, layout, SaveMode.Append)
+      finally if (nOut > 1) merged.unpersist(false)
+      inserted += nOut
     }
     phase("rewrite")
 
@@ -510,7 +501,6 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     val (picked, clean) = all.partition(f => selSet(fileName(f)))
     if (picked.isEmpty) return 0
     Files.createDirectories(Paths.get(outDir))
-    val pt = passThroughClean(clean, outDir)
     val schema = src.schema
     val renames = src.renames
     val newFiles: Seq[String] =
@@ -523,23 +513,19 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
         // purge rewrite of the SUBSET through the logical schema: the
         // selected files' stale dropped bytes / narrow physicals are
         // shed; files outside the range still carry theirs, so the
-        // markers persist via writeManifest's survivors rule
-        val recorded = src.bytesByName
+        // markers persist via writeManifest's survivors rule. Written
+        // before the clean files are linked: the write replaces outDir
         val bytes = picked.map(f =>
-          MutableParquetTable.recordedOrStatSize(dir, f, recorded)).sum
-        val n = math.max(1L, math.min(4096L,
-          (bytes + targetBytes - 1) / math.max(1L, targetBytes))).toInt
-        val df = MutableParquetTable.toPhysicalNames(
-          MutableParquetTable.readFilesLogical(spark, picked,
-            schema.getOrElse(spark.read.parquet(picked: _*).schema), renames),
-          renames)
-        ParquetTable.write(
-          (if (n == 1) df.repartition(1)
-           else df.repartitionByRange(n, keys.map(col): _*))
-            .sortWithinPartitions(keys.map(col): _*),
-          outDir, src.layout, SaveMode.Append)
-        writtenFiles(outDir, clean.map(fileName).toSet)
+          MutableParquetTable.recordedOrStatSize(dir, f, src.bytesByName)).sum
+        ParquetTable.writeTable(
+          MutableParquetTable.toPhysicalNames(
+            MutableParquetTable.readFilesLogical(spark, picked,
+              schema.getOrElse(spark.read.parquet(picked: _*).schema), renames),
+            renames),
+          outDir, src, ParquetTable.filesFor(bytes, targetBytes))
+        dataFiles(outDir)
       }
+    val pt = passThroughClean(clean, outDir)
     val cleanNames = clean.map(fileName).toSet
     val carried = sortedRanges().filter(r => cleanNames(fileName(r.file)))
     writeManifest(outDir, carried, newFiles, schema, pt.refNames)
@@ -589,7 +575,8 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
       // schema kept — structurally a truncate
       val src = manifest
       MutableParquetTable.commitEmpty(outDir, key, tableSchema, moreKeys,
-        src.flatMap(_.buckets), src.map(_.checks).getOrElse(Map.empty))
+        src.flatMap(_.buckets), src.map(_.checks).getOrElse(Map.empty),
+        layout = src.map(_.layout).getOrElse(ParquetLayout()))
       phase("manifest")
       return MergeResult(outDir, Nil, Nil, 0, phase.millis,
         filesDropped = cls.drop.size)
@@ -828,73 +815,6 @@ final class MutableParquetTable private (spark: SparkSession, val dir: String,
     }
   }
 
-  /** Copy-on-write merge for a HASH-BUCKETED layout ([[GraftBucket]]):
-    * bucket granularity instead of key-range granularity. A batch key
-    * dirties its bucket (`pmod(murmur3(key), n)` — ≤ n distinct values,
-    * collected driver-side); clean buckets' files pass through, dirty
-    * buckets re-merge and rewrite whole via the bucketed writer, so the
-    * layout invariant SPJ depends on (file bucket = key bucket) survives
-    * every commit. Cost ∝ dirty buckets / n of the table.
-    *
-    * Same whole-row and schema-evolution contract as the range merge;
-    * the zone-map fields in the manifest still carry each file's key
-    * min/max (buckets span the key space, so range pruning degrades —
-    * the trade the layout buys its shuffle-free joins with). */
-  private def mergeBucketed(n: Int, batch: DataFrame, opCol: String,
-                            snapshotDir: Option[String], src: Option[Manifest],
-                            tableSchema: StructType,
-                            renames: Map[String, String]): MergeResult = {
-    val outDir = snapshotDir.getOrElse(s"$dir-v${System.currentTimeMillis()}")
-    Files.createDirectories(Paths.get(outDir))
-    val phase = new PhaseClock
-    val allFiles = MutableParquetTable.tableFiles(dir, src)
-    def bucketOf(f: String): Int =
-      GraftBucket.bucketOfName(fileName(f)).getOrElse(
-        throw new IllegalStateException(
-          s"bucketed table $dir contains a file without a bucket name: $f"))
-    val dirtyBuckets = batch
-      .select(GraftBucket.bucketIdCol(col(key), n).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val (dirty, clean) =
-      allFiles.partition(f => dirtyBuckets.contains(bucketOf(f)))
-    phase("route")
-    val pt = passThroughClean(clean, outDir)
-    phase("link")
-
-    val mergedSchema = evolvedSchema(tableSchema, batch.drop(opCol).schema,
-      allFiles.isEmpty)
-
-    val needRewrite = dirty.nonEmpty ||
-      !batch.where(col(opCol) =!= lit("delete")).isEmpty
-    val tombstones = MutableParquetTable.tombstoneDf(spark, dir, src)
-    if (needRewrite) {
-      val base0 =
-        if (dirty.nonEmpty)
-          MutableParquetTable.readFilesLogical(spark, dirty, mergedSchema,
-            renames)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          batch.drop(opCol).schema)
-      val base = tombstones.fold(base0)(withoutKeys(base0, _, keys))
-      val merged = MutableParquetTable.toPhysicalNames(
-        MergeOps.applyMutationsMulti(base, batch, keys, opCol), renames)
-      GraftBucket.writeBucketed(merged, outDir, key, moreKeys, n,
-        src.map(_.layout).getOrElse(ParquetLayout()))
-    }
-    phase("rewrite")
-    val newFiles = writtenFiles(outDir, clean.map(fileName).toSet)
-    val ranges = sortedRanges(src)
-    val carried = ranges.filter(r => !dirtyBuckets.contains(
-      GraftBucket.bucketOfName(fileName(r.file)).getOrElse(-1)))
-    val ts = carryTombstonesMinus(batch, outDir, tombstones)
-    writeManifest(outDir, carried, newFiles, Some(mergedSchema), pt.refNames,
-      tombstones = ts, source = src)
-    phase("manifest")
-    MergeResult(outDir, dirty, clean, newFiles.size, phase.millis,
-      filesHardLinked = pt.linked, filesReferenced = pt.referenced,
-      filesCopied = pt.copied)
-  }
-
   /** The data files in `outDir` this commit wrote itself: everything
     * but the pass-through names `passed`. */
   private def writtenFiles(outDir: String, passed: Set[String]): List[String] =
@@ -1101,28 +1021,6 @@ object MutableParquetTable {
   case object Link extends Passthrough
   case object Reference extends Passthrough
 
-  /** Key column normalized to the zone-map domain: the SAME values
-    * [[KeyBytes]] encodes and parquet footers store physically — epoch
-    * days for DATE (int32), epoch micros for TIMESTAMP (int64), long for
-    * integrals, raw values for string/binary. Fractional key types are
-    * rejected, not truncated. */
-  private[sources] def normalizedKeyCol(dt: DataType, c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = dt match {
-    case StringType    => c.cast("string")
-    case BinaryType    => c
-    case DateType      => unix_date(c)
-    case TimestampType => unix_micros(c)
-    case TimestampNTZType =>
-      // exact and timezone-independent: NTZ is physically epoch micros of
-      // the wall-clock value (a session-tz cast to TIMESTAMP would shift)
-      timestamp_diff("MICROSECOND",
-        lit("1970-01-01 00:00:00").cast(TimestampNTZType), c)
-    case ByteType | ShortType | IntegerType | LongType => c.cast("long")
-    case other => throw new IllegalArgumentException(
-      s"unsupported merge-key type $other — integral, string, binary, " +
-        "date, or timestamp required")
-  }
-
   /** Field type at a (possibly dotted) key path — the schema-lookup
     * analog of the reference's `ColumnPath` key addressing
     * (ParquetRewriter.java:84): `person.uuid` resolves through the
@@ -1185,20 +1083,21 @@ object MutableParquetTable {
 
   /** Commit `dir` as an EMPTY snapshot: schema + merge key, zero files —
     * what `CREATE TABLE` produces before the first insert. Readers see an
-    * empty relation with the declared schema; the first merge takes the
-    * insert-into-empty path. */
-  def commitEmpty(dir: String, key: String,
+    * empty relation with the declared schema; the first merge writes one
+    * new file per bucket it upserts into, under `layout`. */
+  private[graft] def commitEmpty(dir: String, key: String,
                   schema: org.apache.spark.sql.types.StructType,
                   moreKeys: Seq[String] = Nil,
                   buckets: Option[Int] = None,
                   checks: Map[String, String] = Map.empty,
                   defaults: Map[String, String] = Map.empty,
-                  generated: Map[String, String] = Map.empty): Unit = {
+                  generated: Map[String, String] = Map.empty,
+                  layout: ParquetLayout = ParquetLayout()): Unit = {
     Files.createDirectories(Paths.get(dir))
     Manifest.write(dir, Manifest(key, moreKeys = moreKeys,
       schema = Some(schema), committedAtMs = Some(System.currentTimeMillis()),
       buckets = buckets, checks = checks, defaults = defaults,
-      generated = generated))
+      generated = generated, layout = layout))
   }
 
   /** A snapshot directory is a committed, complete snapshot iff its
@@ -1593,7 +1492,7 @@ object MutableParquetTable {
     * file-bucket invariant (rows never change bucket in place). */
   private[sources] def bucketPrefixOf(file: String): String =
     GraftBucket.bucketOfName(Paths.get(file).getFileName.toString)
-      .map(b => f"b$b%05d-").getOrElse("")
+      .map(GraftBucket.namePrefix).getOrElse("")
 
   /** Copy a snapshot's tombstone sidecar dir into another snapshot. */
   private[sources] def copyTombstoneDir(fromDir: String, toDir: String): Unit = {
@@ -1650,12 +1549,6 @@ object MutableParquetTable {
     * bucket (bucket id in the file name) instead of disjoint key ranges. */
   def manifestBuckets(snapshotDir: String): Option[Int] =
     Manifest.read(snapshotDir).flatMap(_.buckets)
-
-  /** Stamp a committed snapshot's manifest with the bucket spec —
-    * [[graft.GraftTable.create]] uses this right after the base commit
-    * (later merges then CARRY the field via [[writeManifest]]). */
-  private[graft] def annotateBuckets(snapshotDir: String, n: Int): Unit =
-    Manifest.update(snapshotDir)(_.copy(buckets = Some(n)))
 
   /** The streaming transaction marker a committed snapshot carries, if
     * any: (writer app id, epoch). */
@@ -1880,6 +1773,18 @@ object MutableParquetTable {
     * (files resolved to absolute paths). Empty when never attached. */
   def manifestDimRanges(snapshotDir: String): Map[String, Seq[DimRange]] =
     Manifest.read(snapshotDir).map(_.dims(snapshotDir)).getOrElse(Map.empty)
+
+  /** `dt` with every level nullable — the shape Spark's own parquet
+    * writes produce, and the one every table file is written in, so raw
+    * row-group splices between them stay possible. */
+  private[graft] def allNullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = allNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(allNullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(allNullable(m.keyType), allNullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   /** Type with all nested nullability flags (and field metadata)
     * erased — the drift check compares VALUE types only; nullability

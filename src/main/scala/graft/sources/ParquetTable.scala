@@ -203,6 +203,25 @@ object ParquetTable {
     write(sorted, path, layout)
   }
 
+  /** Write `df` as the whole content of the table whose manifest is `m`,
+    * under `m.layout`: hash-bucketed into `m.buckets` buckets
+    * ([[GraftBucket.writeBucketed]]), else key-sorted into `files` files
+    * ([[writeSortedBy]]). The one writer of every whole-table rewrite, so
+    * each keeps the table's recorded layout. */
+  private[graft] def writeTable(df: DataFrame, dir: String, m: Manifest,
+                                files: Int): Unit =
+    m.buckets match {
+      case Some(n) => GraftBucket.writeBucketed(df, dir, m.key, m.moreKeys, n, m.layout)
+      case None => writeSortedBy(df, dir, m.key +: m.moreKeys, files, m.layout)
+    }
+
+  /** Files for `bytes` of data at ~`target` bytes each: the quotient
+    * rounded up, clamped to [1, 4096]. */
+  private[graft] def filesFor(bytes: BigInt, target: Long): Int = {
+    val t = math.max(1L, target)
+    ((bytes + t - 1) / t).max(1).min(4096).toInt
+  }
+
   /** Average row-group size of the source files — the reference's default
     * sizing policy (ParquetRewriter.java:107-112). */
   def inferRowGroupBytes(spark: SparkSession, path: String): Long = {

@@ -21,11 +21,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import graft.sources.{Manifest, MutableParquetTable, ParquetLayout, ParquetStats}
 import graft.streaming.CdcMergeSink
 
-/** Pins the Spark work of the key-clustered merge's rewrite: one job of
-  * at most `defaultParallelism` result tasks, in which only the batch is
-  * shuffled — and no rewrite job at all for a no-op merge. Inside a
-  * dirty file, clean row groups are copied raw and only dirty ones are
-  * re-encoded, under the layout the table was created with. */
+/** Pins the Spark work of the merge's rewrite: one job of at most
+  * `defaultParallelism` result tasks, in which only the batch is
+  * shuffled — and no rewrite job at all for a no-op merge; a bucketed
+  * merge is the routing pass plus that job. Inside a dirty file, clean
+  * row groups are copied raw and only dirty ones are re-encoded, under
+  * the layout the table was created with, which whole-table rewrites
+  * keep too. */
 class CowRewriteGuardSpec extends SparkSpec {
 
   /** Jobs, result-stage task counts and shuffle reads of the SQL
@@ -209,5 +211,100 @@ class CowRewriteGuardSpec extends SparkSpec {
       "the rewritten file keeps the table's codec")
     assert(bs.forall(_.getCompressedSize <= 384L * 1024),
       s"row groups stay near 256 KB: ${bs.map(_.getCompressedSize)}")
+  }
+
+  test("a bucketed merge is the routing pass plus one rewrite job; clean groups stay raw") {
+    val root = Files.createTempDirectory("graft-cowguard-bkt").toString
+    val df = spark.range(0, 40000).select(col("id").as("k"), (col("id") * 7).as("v"),
+      sha2(col("id").cast("string"), 256).as("s"))
+    GraftTable.create(df, root, "k", numFiles = 1,
+      ParquetLayout(rowGroupBytes = Some(64L * 1024)), buckets = Some(4))
+    val base = s"$root/base"
+    val before = Manifest.get(base).fileNames.toSet
+    // one updated key: its bucket's one file is the only dirty file, one
+    // of its groups the only dirty group
+    val (res, jobs) = JobLog.recording(spark)(
+      MutableParquetTable(spark, base, "k").merge(upserts(Seq(20001L))))
+    // no dirty-bucket collect, no bucketed shuffle write, no footer sweep
+    assert(jobs.size === 2 &&
+      jobs.count(_.calledFrom("graft.sources.CowRewrite$.run")) === 1 &&
+      jobs.count(_.calledFrom("MutableParquetTable.routed")) === 1,
+      s"${jobs.size} jobs: ${jobs.map(_.names)}")
+    assert(res.rewrittenFiles.size === 1)
+    val src = res.rewrittenFiles.head
+    val out = Manifest.get(res.snapshotDir).fileNames.filterNot(before)
+      .map(f => s"${res.snapshotDir}/$f")
+    assert(out.size === 1)
+    assert(graft.sources.GraftBucket.bucketOfName(out.head.split('/').last) ===
+      graft.sources.GraftBucket.bucketOfName(src.split('/').last))
+    val groups = RowGroups.digests(src)
+    assert(groups.size >= 4, s"want several row groups per bucket file, got ${groups.size}")
+    assert(RowGroups.copied(src, out.head) === groups.size - 1,
+      "every clean group of the bucket file is copied byte for byte")
+    val got = MutableParquetTable.readCommitted(spark, res.snapshotDir)
+    assert(got.count() === 40000L)
+    assert(got.where(col("v") < 0).select("k").collect().map(_.getLong(0)).toSeq === Seq(20001L))
+  }
+
+  test("whole-table rewrites keep the table's layout: replace, purging compact, zorder, rebucket, truncate") {
+    val wh = Files.createTempDirectory("graft-cowguard-wlayout").toString
+    spark.conf.set("spark.sql.catalog.gwl", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gwl.root", wh)
+    val root = s"$wh/ns/t"
+    val t = groupedTable(root, ParquetLayout(rowGroupBytes = Some(256L * 1024),
+      compression = "gzip"))
+    def assertLayout(what: String): Unit = {
+      val latest = CdcMergeSink.latestSnapshot(root)
+      val bs = Manifest.get(latest).fileNames
+        .map(f => MutableParquetTable.resolvePath(latest, f))
+        .flatMap(f => footer(f).getBlocks.asScala)
+      assert(bs.size > 1, s"$what: one row group")
+      assert(bs.forall(_.getColumns.asScala.forall(_.getCodec == CompressionCodecName.GZIP)),
+        s"$what: the table's codec is lost")
+      assert(bs.forall(_.getCompressedSize <= 384L * 1024),
+        s"$what: row groups outgrow 256 KB: ${bs.map(_.getCompressedSize)}")
+    }
+    t.replace(t.read().localCheckpoint())
+    assertLayout("replace")
+    t.dropColumn("v")
+    t.compact(64L << 20)
+    assertLayout("compact after DROP COLUMN")
+    spark.sql("CALL gwl.system.zorder(table => 'ns.t', dims => 'k')").collect()
+    assertLayout("zorder")
+    t.rebucket(Some(4))
+    assertLayout("rebucket")
+    assert(t.read().count() === 90000L)
+    // an empty replace (TRUNCATE) keeps the layout for the next load,
+    // which writes each bucket's new file under it
+    val rows = t.read().localCheckpoint()
+    t.replace(rows.limit(0))
+    assert(t.read().count() === 0L)
+    t.commit(rows.withColumn("op", lit("upsert")))
+    assertLayout("TRUNCATE then insert")
+    assert(t.read().count() === 90000L)
+  }
+
+  test("a table with a struct key created through create gets clean groups copied raw") {
+    val root = Files.createTempDirectory("graft-cowguard-nested").toString
+    val df = spark.range(0, 30000).select(
+      struct(concat(lit("k"), lpad(col("id").cast("string"), 8, "0")).as("uuid"),
+        col("id").as("age")).as("person"),
+      sha2(col("id").cast("string"), 256).as("s"))
+    GraftTable.create(df, root, "person.uuid", numFiles = 2,
+      ParquetLayout(rowGroupBytes = Some(64L * 1024)))
+    val base = s"$root/base"
+    val before = Manifest.get(base).fileNames.toSet
+    val batch = df.where(col("person.uuid") === "k00012345")
+      .withColumn("s", lit("new")).withColumn("op", lit("upsert"))
+    val res = MutableParquetTable(spark, base, "person.uuid").merge(batch)
+    assert(res.rewrittenFiles.size === 1)
+    val src = res.rewrittenFiles.head
+    val out = Manifest.get(res.snapshotDir).fileNames.filterNot(before)
+      .map(f => s"${res.snapshotDir}/$f")
+    assert(out.size === 1 && RowGroups.digests(src).size > 2)
+    assert(RowGroups.copied(src, out.head) > 0,
+      "a nested-key table must splice its clean row groups")
+    val got = MutableParquetTable.readCommitted(spark, res.snapshotDir)
+    assert(got.count() === 30000L && got.where(col("s") === "new").count() === 1)
   }
 }

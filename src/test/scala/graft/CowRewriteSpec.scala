@@ -13,10 +13,11 @@ import graft.{GraftTable, SparkSpec}
 import graft.operators.MergeOps
 import graft.streaming.CdcMergeSink
 
-/** The key-clustered merge's one-sorted-pass rewrite ([[CowRewrite]])
-  * against the relational oracle (`applyMutationsMulti` over the
-  * tombstone-subtracted snapshot), the zone maps its tasks report
-  * against a footer sweep, and a re-run task against its first run. */
+/** The merge's one-sorted-pass rewrite ([[CowRewrite]]) on key-clustered,
+  * hash-bucketed and empty tables against the relational oracle
+  * (`applyMutationsMulti` over the tombstone-subtracted snapshot), the
+  * zone maps its tasks report against a footer sweep, and a re-run task
+  * against its first run. */
 class CowRewriteSpec extends SparkSpec {
 
   /** Order-preserving keys of every supported type from an int
@@ -94,7 +95,8 @@ class CowRewriteSpec extends SparkSpec {
     * row of one file. */
   private def batchOf(t: GraftTable, shape: Shape, rnd: scala.util.Random,
                       step: Int, wipe: Boolean,
-                      extra: Boolean = false, rows: Int = n): DataFrame = {
+                      extra: Boolean = false, rows: Int = n,
+                      absent: Int = 0): DataFrame = {
     val s = spark; import s.implicits._
     val hi = 8 + 2 * rows
     def live() = 8 + 2 * rnd.nextInt(rows)
@@ -107,6 +109,8 @@ class CowRewriteSpec extends SparkSpec {
       }
     val ops = Seq.fill(6)(live() -> "upsert") ++ Seq.fill(3)(live() -> "delete") ++
       Seq.fill(3)((live() + 1) -> "upsert") ++
+      // deletes of keys no row holds (odd positions are never seeded)
+      Seq.fill(absent)((live() + 1) -> "delete") ++
       Seq(step -> "upsert", (hi + 2 * step + 1) -> "upsert") ++ wiped
     val table = t.read().schema.fields.map(f => f.name -> f.dataType.simpleString)
     val cols = if (extra) table :+ ("extra" -> "string") else table
@@ -114,7 +118,8 @@ class CowRewriteSpec extends SparkSpec {
   }
 
   /** Commit `batch` and check the new snapshot against the oracle, its
-    * disjoint zone map, and the footers of the files this commit wrote. */
+    * zone map (key-disjoint within each bucket), and the footers of the
+    * files this commit wrote. */
   private def commitAndCheck(t: GraftTable, shape: Shape, batch: DataFrame,
                              label: String): Unit = {
     val before = t.read()
@@ -131,11 +136,12 @@ class CowRewriteSpec extends SparkSpec {
     val m = Manifest.get(dir)
     val ranges = m.ranges(dir).get.sortBy(_.minBytes)(KeyBytes.ordering)
     assert(ranges.size === m.files.size, s"$label: stat-less entries")
-    ranges.sliding(2).foreach {
-      case Seq(a, b) => assert(KeyBytes.compare(a.maxBytes, b.minBytes) < 0,
-        s"$label: overlapping files $a / $b")
-      case _ =>
-    }
+    ranges.groupBy(r => GraftBucket.bucketOfName(r.file.split('/').last)).values
+      .foreach(_.sliding(2).foreach {
+        case Seq(a, b) => assert(KeyBytes.compare(a.maxBytes, b.minBytes) < 0,
+          s"$label: overlapping files $a / $b")
+        case _ =>
+      })
     assertReportedZoneMap(dir, shape.keys.head,
       m.fileNames.filterNot(prevFiles), label)
   }
@@ -223,10 +229,8 @@ class CowRewriteSpec extends SparkSpec {
 
   test("property: batches across row-group boundaries splice clean groups and match applyMutations") {
     val rows = 6000
-    // (not `nested`: the struct's fields are written `required`, so its
-    // files are rewritten whole — the existing properties cover them)
     Seq("long" -> single("long"), "string" -> single("string"),
-        "composite" -> composite).zipWithIndex.foreach {
+        "composite" -> composite, "nested" -> nested).zipWithIndex.foreach {
       case ((label, shape), seedN) =>
         val rnd = new scala.util.Random(200 + seedN)
         // 3 files of small row groups, recorded as the table's layout
@@ -248,6 +252,108 @@ class CowRewriteSpec extends SparkSpec {
             s"$label step $step: no clean row group was copied raw")
         }
     }
+  }
+
+  /** Every file of `t`'s latest snapshot carries a `b<id>-` name, and
+    * each of its rows' lead keys hashes to that bucket of `nb`. */
+  private def assertBucketed(t: GraftTable, shape: Shape, nb: Int,
+                             label: String): Unit = {
+    val s = spark; import s.implicits._
+    dataFiles(latest(t.root)).foreach { f =>
+      val b = GraftBucket.bucketOfName(f.split('/').last)
+      assert(b.isDefined, s"$label: $f has no bucket name")
+      val got = spark.read.parquet(f)
+        .select(GraftBucket.bucketIdCol(col(shape.keys.head), nb)).distinct().as[Int]
+        .collect().toSeq
+      assert(got === b.toSeq, s"$label: rows of $f hash to buckets $got")
+    }
+  }
+
+  test("property: bucketed tables (n = 1 and 4) merge per bucket and match applyMutations") {
+    Seq(1, 4).foreach { nb =>
+      Seq("long" -> single("long"), "composite" -> composite).zipWithIndex.foreach {
+        case ((label, shape), seedN) =>
+          val rnd = new scala.util.Random(300 + 10 * nb + seedN)
+          val rows = rowsOf(shape, spark.range(0, n).select(
+            (col("id") * 2 + 8).cast("int").as("pos")), 0, Nil)
+          // about 7 rows per file, several files per bucket: a `composite`
+          // date holds 2 rows, so a cut at exactly 7 rows would split a
+          // date across two files; with 4 buckets the last starts empty
+          val t = GraftTable.create(
+            if (nb == 1) rows
+            else rows.where(GraftBucket.bucketIdCol(col(shape.keys.head), nb) =!= nb - 1),
+            Files.createTempDirectory(s"graft-cowrw-bkt-$label").toString,
+            shape.keys.head, numFiles = 1, ParquetLayout(maxRecordsPerFile = Some(7)),
+            moreKeys = shape.keys.tail, buckets = Some(nb))
+          t.deleteKeys(rows.where(col("pos") % 14 === 8).select(shape.keys.map(col): _*))
+          val files = dataFiles(latest(t.root))
+          assert(files.size >= 4 * nb, s"$label n=$nb: want several files per bucket")
+          (0 until 3).foreach { step =>
+            val tag = s"$label n=$nb step $step"
+            commitAndCheck(t, shape, batchOf(t, shape, rnd, step, wipe = step == 1,
+              absent = 3), tag)
+            assertBucketed(t, shape, nb, tag)
+            // fold each bucket's files a few at a time: the next step's
+            // check sees the outputs still key-disjoint per bucket
+            if (step == 1) {
+              t.materializeTombstones()
+              t.compact(2048L)
+              assertBucketed(t, shape, nb, s"$tag compacted")
+            }
+          }
+      }
+    }
+  }
+
+  test("a bucketed create under a row cap cuts files between leading-key values only") {
+    val s = spark; import s.implicits._
+    val root = Files.createTempDirectory("graft-cowrw-bkt-cap").toString
+    // 20 dates of 3 rows: a cut every 2 rows would split every other date
+    val rows = (0 until 60).map(i => (java.sql.Date.valueOf(
+      java.time.LocalDate.of(2000, 1, 1).plusDays(i / 3)), i.toLong, i)).toDF("d", "id", "v")
+    val t = GraftTable.create(rows, root, "d", numFiles = 1,
+      ParquetLayout(maxRecordsPerFile = Some(2)), moreKeys = Seq("id"), buckets = Some(2))
+    val files = dataFiles(latest(root))
+    val byBucket = files.groupBy(f => GraftBucket.bucketOfName(f.split('/').last))
+    assert(byBucket.keySet === Set(Some(0), Some(1)) && byBucket.values.forall(_.size > 2),
+      s"want several files per bucket: $files")
+    byBucket.values.foreach { fs =>
+      val ds = fs.map(f => spark.read.parquet(f).as[(java.sql.Date, Long, Int)].collect()
+        .map(_._1.toLocalDate).toSet)
+      assert(ds.combinations(2).forall { case Seq(a, b) => (a & b).isEmpty },
+        s"a date spans two files of one bucket: $ds")
+    }
+    t.commit(Seq((java.sql.Date.valueOf("2000-01-04"), 10L, -1, "upsert"),
+        (java.sql.Date.valueOf("2000-01-05"), 12L, 0, "delete"),
+        (java.sql.Date.valueOf("2000-02-01"), 99L, 99, "upsert"))
+      .toDF("d", "id", "v", "op"))
+    val got = t.read().as[(java.sql.Date, Long, Int)].collect().map(r => r._2 -> r._3).toMap
+    assert(got.size === 60 && got(10L) === -1 && !got.contains(12L) && got(99L) === 99)
+  }
+
+  test("a merge into an empty bucketed table writes one file per bucket that received upserts") {
+    val s = spark; import s.implicits._
+    val root = Files.createTempDirectory("graft-cowrw-bkt-empty").toString
+    MutableParquetTable.commitEmpty(s"$root/base", "k",
+      new org.apache.spark.sql.types.StructType().add("k", LongType).add("v", LongType),
+      buckets = Some(4))
+    val byBucket = (0L until 400L).toDF("k")
+      .select(col("k"), GraftBucket.bucketIdCol(col("k"), 4).as("b")).as[(Long, Int)]
+      .collect().groupBy(_._2).map { case (b, ks) => b -> ks.map(_._1).toSeq }
+    // upserts into buckets 0 and 1, deletes of absent keys in bucket 3
+    val ups = byBucket(0).take(5) ++ byBucket(1).take(3)
+    val batch = (ups.map(k => (k, k * 10, "upsert")) ++
+      byBucket(3).take(4).map(k => (k, 0L, "delete"))).toDF("k", "v", "op")
+    val (res, jobs) = graft.JobLog.recording(spark)(
+      MutableParquetTable(spark, s"$root/base", "k").merge(batch))
+    assert(jobs.size === 2 && jobs.count(_.calledFrom("graft.sources.CowRewrite$.run")) === 1,
+      s"${jobs.size} jobs: ${jobs.map(_.names)}")
+    val names = Manifest.get(res.snapshotDir).fileNames
+    assert(names.flatMap(GraftBucket.bucketOfName).sorted === Seq(0, 1), s"$names")
+    assert(res.insertedFileCount === 2)
+    val got = MutableParquetTable.readCommitted(spark, res.snapshotDir).as[(Long, Long)]
+      .collect().toSeq.sorted
+    assert(got === ups.map(k => (k, k * 10)).sorted)
   }
 
   test("a bare file out of key order is sorted in its task, then merged") {
@@ -329,7 +435,7 @@ class CowRewriteSpec extends SparkSpec {
       .toDF("pos", "op"), 1, Nil)
     val df = CowRewrite.plan(spark, out, shape.keys, ranges.map(_.file),
       m.bytesByName, m.schema.get, Map.empty, ParquetLayout(),
-      CowRewrite.Merge(ranges, batch, "op", None))
+      CowRewrite.Merge(CowRewrite.Zone(ranges, None), Set.empty, batch, "op", None))
     val rdd = df.queryExecution.executedPlan.execute()
     def runGroup0(): Int = spark.sparkContext.runJob(rdd,
       (it: Iterator[InternalRow]) => it.size, Seq(0)).head

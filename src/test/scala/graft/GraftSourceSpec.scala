@@ -772,7 +772,7 @@ class GraftSourceSpec extends SparkSpec {
         s"rewritten file lost its bucket name: $n")
     }
     // the invariant is what keeps the table MERGEABLE: a follow-up merge
-    // (mergeBucketed routes by file-name bucket) must succeed
+    // (routed by file-name bucket) must succeed
     t.commit(Seq((5L, 555L, "upsert")).toDF("id", "v", "op"))
     val got = t.read().collect().map(r2 => r2.getLong(0) -> r2.getLong(1)).toMap
     assert(got.size === 1800, s"deleted stratum must be gone: ${got.size}")
